@@ -32,8 +32,6 @@ only touches overlapping mat chunks.
 
 from __future__ import annotations
 
-import json
-import math
 import os
 import time as _time
 from datetime import datetime, timezone as _tz
@@ -41,27 +39,35 @@ from typing import Optional, Sequence, Union
 
 from pyspark.sql import DataFrame, functions as F
 
+from .cagg_families import (
+    BY_KEY,
+    CANDLESTICK,
+    COUNTER,
+    FAMILIES,
+    FREQ,
+    GAUGE,
+    HEARTBEAT,
+    MAXN,
+    SKETCH,
+    STATE_AGG,
+    STATS,
+    TDIGEST,
+    TIME_WEIGHT,
+    _join,
+    _maxn_order,
+    _maxn_params,
+    _over,
+    _q,
+    _top,
+    counter_steps,
+    normalize,
+    partials,
+)
 from .functions.time import DEFAULT_ORIGIN_US, parse_interval
 from .hypertable import Hypertable, _to_internal
 
 INT64_MIN = -(2**63)
 INT64_MAX = 2**63 - 1
-
-
-def _struct_has_field(df: DataFrame, col: str, field: str) -> bool:
-    """True when ``df[col]`` is a struct carrying ``field``.
-
-    Serves consult this so states materialized BEFORE a field was
-    added (counter/gauge ``num_changes``, rounds 13/14) keep working:
-    absent field → the accessor serves NULL instead of failing at
-    analysis time (no forced drop-and-recreate on upgrade)."""
-    from pyspark.sql.types import StructType
-
-    try:
-        dt = df.schema[col].dataType
-    except Exception:
-        return False
-    return isinstance(dt, StructType) and field in dt.names
 
 
 def _grain_floor(us, width: int, origin_us: int):
@@ -186,24 +192,6 @@ def _pbucket(v: int, w: int, origin: int) -> int:
     return v - ((v - origin) % w + w) % w
 
 
-def _q(name: str) -> str:
-    """Backtick-quote a column name for SQL-string expressions."""
-    return f"`{name}`"
-
-
-def _over(partition: Sequence[str], order: Sequence[str]) -> str:
-    """``PARTITION BY … ORDER BY …`` clause text for the SQL-string
-    expression builders (round 17: the state/serve expressions are
-    built as SQL strings — one py4j parse each — instead of thousands
-    of Column round trips per cagg serve; the parsed trees are
-    unchanged)."""
-    p = (
-        "PARTITION BY " + ", ".join(_q(c) for c in partition) + " "
-        if partition
-        else ""
-    )
-    return p + "ORDER BY " + ", ".join(order)
-
 
 class ContinuousAggregate:
     def __init__(self, ts, row: dict):
@@ -227,18 +215,8 @@ class ContinuousAggregate:
         join: Optional[dict] = None,
         window_fns: Optional[dict[str, str]] = None,
         enable_window_functions: bool = False,
-        sketches: Optional[dict[str, dict]] = None,
-        counters: Optional[dict[str, dict]] = None,
-        gauges: Optional[dict[str, dict]] = None,
-        stats_aggs: Optional[dict[str, dict]] = None,
-        time_weights: Optional[dict[str, dict]] = None,
-        candlesticks: Optional[dict[str, dict]] = None,
-        state_aggs: Optional[dict[str, dict]] = None,
-        freq_aggs: Optional[dict[str, dict]] = None,
-        maxn_aggs: Optional[dict[str, dict]] = None,
-        heartbeat_aggs: Optional[dict[str, dict]] = None,
-        tdigest_aggs: Optional[dict[str, dict]] = None,
         mat_chunk_interval: Union[str, int, None] = None,
+        **families: Optional[dict[str, dict]],
     ) -> "ContinuousAggregate":
         """``CREATE MATERIALIZED VIEW .. WITH (timescaledb.continuous)``
         (``tsl/src/continuous_aggs/create.c:600``).
@@ -265,117 +243,24 @@ class ContinuousAggregate:
         that span buckets give unexpected results after partial refresh,
         because each refresh recomputes windows only over its dirty
         ranges. Keep every OVER clause partitioned by the bucket column.
-        ``sketches``: output column -> ``{"value": <expr>, "alpha": a}``:
-        the mat table stores a mergeable DDSketch STATE
-        (``map<int,bigint>`` of log-bucket -> count) per (bucket, group)
-        instead of a finished number — the toolkit
-        ``percentile_agg``/``uddsketch``-inside-a-cagg idiom
-        (timescaledb-toolkit rollup; partial-vs-finalized discussion in
-        ``tsl/src/continuous_aggs/finalize.c``). Because bucket counts
-        ADD losslessly (Masson VLDB'19 §2.3), :meth:`quantiles` can then
-        serve p50/p95/p99 at ANY coarser grain — day/month/whole-table —
-        by merging the stored hourly states, never rescanning raw data;
-        the realtime view unions mat-side states below the watermark
-        with raw-side states computed above it. Spark's binary HLL
-        states need no special support: put ``hll_sketch_agg(col)`` in
-        ``aggs`` and merge with ``hll_union_agg`` at read (see
-        ``tests/test_cagg_sketch.py``).
-        ``counters``: output column -> ``{"value": <expr>,
-        "tiebreak": [cols…]}``: the mat table stores a mergeable
-        COUNTER partial per (bucket, group) — ``struct(n, first_us,
-        last_us, first_val, last_val, delta, num_resets)`` with
-        prometheus reset semantics (the toolkit
-        ``rollup(counter_agg(...))`` idiom). Because cagg buckets
-        partition time disjointly, merging two adjacent partials needs
-        only the one boundary step (reset-adjusted ``B.first_val −
-        A.last_val``), so :meth:`counter_at_grain` serves exact
-        delta/rate/resets at ANY coarser grain from the stored
-        partials — identical to ``counter_agg`` over the raw rows of
-        that grain, with zero raw rescans below the watermark.
-        ``tiebreak`` columns break equal-timestamp ordering like
-        ``counter_agg``'s.
-        ``gauges``: like ``counters`` but for metrics that may
-        legitimately decrease (toolkit ``gauge_agg``): the partial also
-        records the last step and its elapsed time, so
-        :meth:`gauge_at_grain` serves delta/rate AND idelta/irate at
-        any grain, boundary steps included.
-        ``stats_aggs``: output column -> ``{"value": <expr>}``: a
-        moments partial ``struct(n, s, s2, mn, mx)`` (toolkit 1-D
-        ``stats_agg``); :meth:`stats_at_grain` merges by fieldwise
-        add/min/max and serves n/sum/avg/stddev/variance/min/max at
-        any grain. With a ``"y"`` key — ``{"value": <x expr>, "y":
-        <y expr>}`` — the TWO-variable form (toolkit
-        ``stats_agg(y, x)``, PG ``regr_*``) stores comoments
-        ``struct(n, sx, sy, sxx, syy, sxy)`` over the pairs where both
-        are non-NULL, and :meth:`stats2d_at_grain` serves slope/
-        intercept/corr/covariance at any grain.
-        ``time_weights``: output column -> ``{"value": <expr>,
-        "method": "locf" | "linear", "tiebreak": [cols…]}``: a
-        mergeable TIME-WEIGHT partial per (bucket, group) —
-        ``struct(n, first_us, first_val, last_us, last_val,
-        integral)`` where ``integral`` is the within-bucket integral
-        of the LOCF (or linear) interpolant in µs·value (the toolkit
-        ``time_weight('LOCF', ts, value)`` decomposition). Merging
-        two adjacent partials adds exactly one boundary segment
-        (``A.last → B.first``), so :meth:`time_weighted_at_grain`
-        serves the exact time-weighted average of ANY coarser grain
-        from the stored partials — identical to ``time_weight →
-        average`` over the raw rows of that grain, zero raw rescans
-        below the watermark (the toolkit
-        ``average(rollup(time_weight(...)))`` idiom).
-        ``state_aggs``: output column -> ``{"state": <expr>,
-        "tiebreak": [cols…]}``: a mergeable STATE-AGG partial per
-        (bucket, group) — ``struct(n, first_us, last_us, first_state,
-        last_state, durations: map<state, struct(d, n)>)`` with the
-        toolkit ``state_agg(ts, state)`` LOCF semantics (a state holds
-        until the next sample; the final sample holds zero time; NULL
-        states are skipped — strict). Merging adjacent partials adds
-        the boundary gap to the EARLIER partial's last state, so
-        :meth:`state_durations_at_grain` serves exact per-state
-        durations at any coarser grain — the toolkit
-        ``duration_in(state, rollup(state_agg(...)))`` idiom.
-        ``freq_aggs``: output column -> ``{"value": <expr>,
-        "capacity": k}``: a Misra–Gries/SpaceSaving frequency partial
-        per (bucket, group) — ``struct(n, counts: map<string,long>)``
-        of at most ``capacity`` heavy hitters (toolkit
-        ``freq_agg``/``topn_agg``). Lower bounds sum across merged
-        states (Agarwal et al., PODS'12), so :meth:`topn_at_grain`
-        serves "top values per hour, at any grain" — exactly whenever
-        each bucket's distinct count fits the capacity.
-        ``maxn_aggs``: output column -> ``{"value": <expr>, "n": k,
-        "desc": True|False}``: the ``n`` largest (smallest) values per
-        (bucket, group) — ``struct(n, vals: array<double>)`` (toolkit
-        ``max_n``/``min_n``). Top-n candidate lists merge losslessly,
-        so :meth:`max_n_at_grain` is exact at every grain.
-        ``heartbeat_aggs``: output column -> ``{"liveness": <interval>,
-        "tiebreak": [cols…]}``: a liveness partial per (bucket, group)
-        — ``struct(n, first_us, last_us, live_us, ranges)`` where
-        ``live_us`` is the union length of the per-heartbeat
-        ``[t, t+liveness)`` intervals (toolkit ``heartbeat_agg``).
-        Adjacent partials merge with one boundary correction each, so
-        :meth:`heartbeat_at_grain` serves exact
-        live_time/dead_time/num_live_ranges at any grain — the ops
-        analog of the counter family.
-        ``tdigest_aggs``: output column -> ``{"value": <expr>,
-        "delta": d}``: a mergeable T-DIGEST percentile state per
-        (bucket, group) — ``struct(n, min, max, means, weights)`` with
-        ≤ ``delta`` k1-binned centroids (toolkit ``tdigest``, the
-        rank-error sibling of ``sketches``' DDSketch; Dunning & Ertl
-        arXiv:1902.04023). :meth:`tdigest_quantiles_at_grain` serves
-        ``approx_percentile`` at any coarser grain with free
-        regrouping; lossless (exact percentile_cont) while a served
-        group holds ≤ delta values.
-        ``candlesticks``: output column -> ``{"price": <expr>,
-        "volume": <expr> | None, "tiebreak": [cols…]}``: a mergeable
-        OHLC partial per (bucket, group) — ``struct(n, first_us,
-        last_us, open, high, low, close, volume, pv)`` (toolkit
-        ``candlestick_agg``; ``pv`` = Σ price×volume for vwap).
-        open/close merge by the earliest/latest parent bucket
-        (buckets partition time disjointly), high/low/volume/pv merge
-        by max/min/sum, so :meth:`candlestick_at_grain` serves exact
-        OHLC/volume/vwap at any grain — the toolkit
-        ``rollup(candlestick_agg(...))`` idiom.
+        ``mat_chunk_interval``: the materialization hypertable's chunk
+        interval (``WITH (timescaledb.chunk_time_interval=...)``).
+
+        ``**families``: one keyword per partial-state family, named by
+        the family's catalog key — output column -> spec. The mat table
+        then stores a mergeable PARTIAL state per (bucket, group) for the
+        column instead of a finished number, served at any coarser grain
+        by the family's ``*_at_grain`` accessor. Every family's spec is
+        documented on its entry (``doc``) in
+        :data:`timescaledb_spark.cagg_families.FAMILIES`. A spec
+        ``{"rollup_of": parent_col}`` over a cagg's mat table defines a
+        hierarchical child whose states merge the parent's.
         """
+        unknown = sorted(set(families) - set(BY_KEY))
+        if unknown:
+            raise TypeError(
+                f"create() got an unexpected keyword argument {unknown[0]!r}"
+            )
         if isinstance(hypertable, str):
             hypertable = Hypertable.get(ts, hypertable)
         cat = ts.catalog
@@ -459,278 +344,26 @@ class ContinuousAggregate:
                     f"(tsl/src/continuous_aggs/common.c:1384)"
                 )
 
-        if sketches:
-            from .functions.ddsketch import _gamma
-
-            taken = set(aggs) | set(group_by) | {bucket_alias}
+        # a rollup_of child's parent: the cagg whose mat table this is
+        prow = cat.continuous_agg.find_one(mat_table=hypertable.name)
+        taken = set(aggs) | set(group_by) | {bucket_alias}
+        specs: dict[str, Optional[dict]] = {}
+        for fam in FAMILIES:
             norm: dict[str, dict] = {}
-            for col, spec in sketches.items():
+            for col, spec in (families.get(fam.key) or {}).items():
                 if col in taken:
                     raise ValueError(
-                        f"sketch column {col!r} collides with an agg/"
-                        f"group/bucket column"
-                    )
-                spec = dict(spec)
-                if "rollup_of" in spec:
-                    # hierarchical sketch cagg (cagg_on_cagg.sql over
-                    # toolkit rollup): the child's state is a lossless
-                    # merge of the PARENT's stored states — inherit the
-                    # parent sketch's alpha so quantile extraction uses
-                    # the same gamma
-                    prow = ts.catalog.continuous_agg.find_one(
-                        mat_table=hypertable.name
-                    )
-                    if prow is not None:
-                        _check_nesting(col, prow)
-                    if "alpha" not in spec:
-                        psk = ((prow or {}).get("sketches") or {}).get(
-                            spec["rollup_of"]
-                        )
-                        if psk is not None:
-                            spec["alpha"] = psk.get("alpha", 0.01)
-                elif "value" not in spec:
-                    raise ValueError(
-                        f"sketches[{col!r}] needs a 'value' expression "
-                        f"(or 'rollup_of' for a hierarchical rollup)"
-                    )
-                _gamma(float(spec.get("alpha", 0.01)))  # validates range
-                norm[col] = spec
-            sketches = norm
-        taken = set(aggs) | set(group_by) | {bucket_alias} | set(
-            sketches or {}
-        )
-        def _check_rollup(kind_key: str, col: str, spec: dict) -> dict:
-            # hierarchical child over a parent's stored partials
-            # (cagg_on_cagg.sql × the toolkit rollup idiom): the child
-            # bucket's state is the ordered/commutative merge of the
-            # parent's states — inherits the parent spec's method so
-            # serving uses the same interpolation
-            prow = cat.continuous_agg.find_one(mat_table=hypertable.name)
-            pspec = ((prow or {}).get(kind_key) or {}).get(
-                spec["rollup_of"]
-            )
-            if pspec is None:
-                raise ValueError(
-                    f"rollup_of={spec['rollup_of']!r}: the source "
-                    f"hypertable is not a cagg mat table with a "
-                    f"{kind_key} column of that name"
-                )
-            _check_nesting(col, prow)
-            out = dict(spec)
-            if kind_key == "time_weights" and "method" not in out:
-                out["method"] = pspec.get("method", "locf")
-            if kind_key == "stats_aggs":
-                # 2-D-ness is a property of the stored STATE SHAPE —
-                # the child merges whatever the parent stores, so it
-                # inherits the parent's dimensionality; a child spec
-                # declaring "y" over a 1-D parent would dispatch the
-                # comoment merge against (n, s, s2, mn, mx) and die at
-                # refresh with an opaque FIELD_NOT_FOUND
-                if "y" in pspec:
-                    out["y"] = pspec["y"]
-                elif "y" in out:
-                    raise ValueError(
-                        f"rollup_of={col!r}: parent stats column "
-                        f"{spec['rollup_of']!r} is 1-D — a 2-D child "
-                        f"cannot be built from 1-D moments (recreate "
-                        f"the parent with stats_aggs={{..., 'y': ...}})"
-                    )
-            if kind_key == "freq_aggs":
-                if "capacity" not in out:
-                    out["capacity"] = pspec.get("capacity", 256)
-                # a topn_agg parent records its declared n so the SQL
-                # route's bare topn(rollup(col)) serves it — a
-                # hierarchical child must inherit it too, or the child
-                # route silently falls back to the default 10
-                if "n" in pspec:
-                    out.setdefault("n", pspec["n"])
-            if kind_key == "heartbeat_aggs":
-                # stored live times depend on the liveness interval —
-                # a child cannot reinterpret the parent's states.
-                # Compare normalized MICROSECONDS, not spec text:
-                # '5 minutes' == '300 seconds' == 300000000
-                p_liv = pspec.get("liveness")
-
-                def _liv_us(v):
-                    return (
-                        int(v)
-                        if isinstance(v, int)
-                        else parse_interval(v).us
-                    )
-
-                if "liveness" in out and _liv_us(out["liveness"]) != _liv_us(
-                    p_liv
-                ):
-                    raise ValueError(
-                        f"rollup_of={col!r}: child liveness must match "
-                        f"the parent's ({p_liv!r})"
-                    )
-                out["liveness"] = p_liv
-            if kind_key == "tdigest_aggs":
-                # the compression is a state property: a child merging
-                # parent centroids re-bins to its own delta, so it
-                # inherits the parent's unless explicitly (re)set; a
-                # larger child delta cannot invent resolution the
-                # parent states no longer hold, so reject it loudly
-                out.setdefault("delta", pspec.get("delta", 200))
-                if int(out["delta"]) > int(pspec.get("delta", 200)):
-                    raise ValueError(
-                        f"rollup_of={col!r}: child delta "
-                        f"({out['delta']}) cannot exceed the parent's "
-                        f"({pspec.get('delta', 200)}) — the parent "
-                        f"states only keep that many centroids"
-                    )
-            if kind_key == "maxn_aggs":
-                # the candidate-list length and direction are state
-                # properties — a child cannot keep MORE than the parent
-                out.setdefault("n", pspec.get("n", 5))
-                out.setdefault("desc", pspec.get("desc", True))
-                if pspec.get("by") is not None:
-                    # payload presence travels: the child merges the
-                    # parent's (value, data) entries
-                    out.setdefault("by", pspec["by"])
-                if int(out["n"]) > int(pspec.get("n", 5)):
-                    raise ValueError(
-                        f"rollup_of={col!r}: child n ({out['n']}) cannot "
-                        f"exceed the parent's ({pspec.get('n', 5)}) — "
-                        f"the parent states only keep that many values"
-                    )
-                if bool(out["desc"]) != bool(pspec.get("desc", True)):
-                    raise ValueError(
-                        f"rollup_of={col!r}: child direction must match "
-                        f"the parent's (desc={pspec.get('desc', True)})"
-                    )
-            return out
-
-        kind_keys = {
-            "counter": "counters",
-            "gauge": "gauges",
-            "stats": "stats_aggs",
-            "time_weight": "time_weights",
-            "freq": "freq_aggs",
-            "maxn": "maxn_aggs",
-            "tdigest": "tdigest_aggs",
-        }
-        norm_families: dict[str, dict] = {}
-        for kind, d in (
-            ("counter", counters),
-            ("gauge", gauges),
-            ("stats", stats_aggs),
-            ("time_weight", time_weights),
-            ("freq", freq_aggs),
-            ("maxn", maxn_aggs),
-            ("tdigest", tdigest_aggs),
-        ):
-            normd: dict[str, dict] = {}
-            for col, spec in (d or {}).items():
-                if col in taken:
-                    raise ValueError(
-                        f"{kind} column {col!r} collides with another "
+                        f"{fam.kind} column {col!r} collides with another "
                         f"output column"
                     )
                 taken.add(col)
-                if "rollup_of" in spec:
-                    spec = _check_rollup(kind_keys[kind], col, spec)
-                elif "value" not in spec:
-                    raise ValueError(
-                        f"{kind} partial {col!r} needs a 'value' "
-                        f"expression (or 'rollup_of' for a hierarchical "
-                        f"rollup)"
-                    )
-                if kind == "time_weight":
-                    method = str(spec.get("method", "locf")).lower()
-                    if method not in ("locf", "linear"):
-                        raise ValueError(
-                            f"time_weight {col!r}: method must be 'locf' "
-                            f"or 'linear', got {spec.get('method')!r}"
-                        )
-                if kind == "freq" and int(spec.get("capacity", 256)) <= 0:
-                    raise ValueError(
-                        f"freq_agg {col!r}: capacity must be positive"
-                    )
-                if kind == "maxn" and int(spec.get("n", 5)) <= 0:
-                    raise ValueError(
-                        f"max_n {col!r}: n must be positive"
-                    )
-                if kind == "tdigest" and int(spec.get("delta", 200)) < 2:
-                    raise ValueError(
-                        f"tdigest {col!r}: delta (compression) must "
-                        f"be >= 2"
-                    )
-                normd[col] = spec
-            norm_families[kind_keys[kind]] = normd or None
-        counters = norm_families["counters"]
-        gauges = norm_families["gauges"]
-        stats_aggs = norm_families["stats_aggs"]
-        time_weights = norm_families["time_weights"]
-        freq_aggs = norm_families["freq_aggs"]
-        maxn_aggs = norm_families["maxn_aggs"]
-        tdigest_aggs = norm_families["tdigest_aggs"]
-        norm_c: dict[str, dict] = {}
-        for col, spec in (candlesticks or {}).items():
-            if col in taken:
-                raise ValueError(
-                    f"candlestick column {col!r} collides with another "
-                    f"output column"
+                if "rollup_of" in spec and prow is not None:
+                    _check_nesting(col, prow)
+                pspec = ((prow or {}).get(fam.key) or {}).get(
+                    spec.get("rollup_of")
                 )
-            taken.add(col)
-            if "rollup_of" in spec:
-                spec = _check_rollup("candlesticks", col, spec)
-            elif "price" not in spec:
-                raise ValueError(
-                    f"candlestick partial {col!r} needs a 'price' "
-                    f"expression (or 'rollup_of')"
-                )
-            norm_c[col] = spec
-        candlesticks = norm_c or None
-        norm_hb: dict[str, dict] = {}
-        for col, spec in (heartbeat_aggs or {}).items():
-            if col in taken:
-                raise ValueError(
-                    f"heartbeat column {col!r} collides with another "
-                    f"output column"
-                )
-            taken.add(col)
-            if "rollup_of" in spec:
-                spec = _check_rollup("heartbeat_aggs", col, spec)
-            elif "liveness" not in spec:
-                raise ValueError(
-                    f"heartbeat partial {col!r} needs a 'liveness' "
-                    f"interval (or 'rollup_of')"
-                )
-            liv = spec["liveness"]
-            liv_us = (
-                int(liv)
-                if isinstance(liv, int)
-                else parse_interval(liv).us
-            )
-            if liv_us <= 0 or (
-                not isinstance(liv, int) and parse_interval(liv).months
-            ):
-                raise ValueError(
-                    f"heartbeat {col!r}: liveness must be a positive "
-                    f"fixed-width interval"
-                )
-            spec = {**spec, "liveness_us": liv_us}
-            norm_hb[col] = spec
-        heartbeat_aggs = norm_hb or None
-        norm_sa: dict[str, dict] = {}
-        for col, spec in (state_aggs or {}).items():
-            if col in taken:
-                raise ValueError(
-                    f"state_agg column {col!r} collides with another "
-                    f"output column"
-                )
-            taken.add(col)
-            if "rollup_of" in spec:
-                spec = _check_rollup("state_aggs", col, spec)
-            elif "state" not in spec:
-                raise ValueError(
-                    f"state_agg partial {col!r} needs a 'state' "
-                    f"expression (or 'rollup_of')"
-                )
-            norm_sa[col] = spec
-        state_aggs = norm_sa or None
+                norm[col] = normalize(fam, col, spec, pspec)
+            specs[fam.key] = norm or None
         tcol = time_column or hypertable.time_column
         is_uuid = hypertable.row.get("time_type") == "uuid"
         # UUIDv7 dimensions bucket by their embedded timestamp, so the
@@ -760,17 +393,7 @@ class ContinuousAggregate:
             "where": where,
             "join": join,
             "window_fns": window_fns,
-            "sketches": sketches,
-            "counters": counters,
-            "gauges": gauges,
-            "stats_aggs": stats_aggs,
-            "time_weights": time_weights,
-            "candlesticks": candlesticks,
-            "state_aggs": state_aggs,
-            "freq_aggs": freq_aggs,
-            "maxn_aggs": maxn_aggs,
-            "heartbeat_aggs": heartbeat_aggs,
-            "tdigest_aggs": tdigest_aggs,
+            **specs,
             "mat_table": f"_mat_{name}",
             "created_at": _time.time(),
         }
@@ -790,10 +413,7 @@ class ContinuousAggregate:
         # chunk_time_interval=...) analog, create.c:619-623).
         nominal_us = iv.us if not iv.months else iv.months * 31 * 86_400_000_000
         src_interval = int(hypertable.row.get("chunk_interval") or 0)
-        is_hier = (
-            cat.continuous_agg.find_one(mat_table=hypertable.name)
-            is not None
-        )
+        is_hier = prow is not None
         if mat_chunk_interval is not None:
             mat_interval = (
                 int(mat_chunk_interval)
@@ -828,7 +448,6 @@ class ContinuousAggregate:
             raise KeyError(f"no cagg {name!r}")
         return cls(ts, row)
 
-    # ----------------------------------------------------------- plumbing
     @property
     def id(self) -> int:
         return self.row["id"]
@@ -875,7 +494,6 @@ class ContinuousAggregate:
             self.row["bucket_alias"]
         )
 
-    # -- variable-width bucket algebra (continuous_aggs_bucket_function) ---
     def _floor_us(self, v: int) -> int:
         """Bucket start containing internal time ``v``. Fixed widths use
         the closed-form formula; month widths floor the month index
@@ -933,260 +551,47 @@ class ContinuousAggregate:
             if only_cols is None or n in only_cols
         ]
         keys = [self.row["bucket_alias"], *self.row["group_by"]]
-        partials = [
-            (col, spec, self._sketch_state)
-            for col, spec in (self.row.get("sketches") or {}).items()
-        ] + [
-            (col, spec, self._counter_state)
-            for col, spec in (self.row.get("counters") or {}).items()
-        ] + [
-            (col, spec, self._gauge_state)
-            for col, spec in (self.row.get("gauges") or {}).items()
-        ] + [
-            (col, spec, self._stats_state)
-            for col, spec in (self.row.get("stats_aggs") or {}).items()
-        ] + [
-            (col, spec, self._timeweight_state)
-            for col, spec in (self.row.get("time_weights") or {}).items()
-        ] + [
-            (col, spec, self._candlestick_state)
-            for col, spec in (self.row.get("candlesticks") or {}).items()
-        ] + [
-            (col, spec, self._stateagg_state)
-            for col, spec in (self.row.get("state_aggs") or {}).items()
-        ] + [
-            (col, spec, self._freq_state)
-            for col, spec in (self.row.get("freq_aggs") or {}).items()
-        ] + [
-            (col, spec, self._maxn_state)
-            for col, spec in (self.row.get("maxn_aggs") or {}).items()
-        ] + [
-            (col, spec, self._heartbeat_state)
-            for col, spec in (self.row.get("heartbeat_aggs") or {}).items()
-        ] + [
-            (col, spec, self._tdigest_state)
-            for col, spec in (self.row.get("tdigest_aggs") or {}).items()
+        parts = [
+            p for p in partials(self.row) if only_cols is None or p[1] in only_cols
         ]
-        if only_cols is not None:
-            partials = [p for p in partials if p[0] in only_cols]
         agg = None
-        if exprs or not partials:
+        if exprs or not parts:
             agg = raw.groupBy(
                 self._bucket_expr(raw), *self.row["group_by"]
             ).agg(*exprs)
-        for col, spec, builder in partials:
-            # every builder is null-aware internally: it emits a row
-            # for EVERY (bucket, group) of the raw rows, with a NULL
-            # state when the partial's inputs are all NULL (strict PG
-            # aggregate semantics) — so this join chain is always 1:1
-            # and inner, the r10-proven plan shape
-            sk = builder(raw, col, spec)
-            if agg is None:
-                agg = sk
-                continue
-            # null-safe equi-join: group keys can hold NULLs, and both
-            # sides aggregate the same rows over the same keys, so the
-            # join is 1:1; AQE sees two pre-aggregated (small) sides.
-            # Dataset aliases (SubqueryAlias) disambiguate the shared
-            # raw lineage — agg[k]/sk[k] can resolve to the SAME
-            # attribute past two partials, making drop(sk[k]) a no-op
-            # (duplicate key columns), while a rename Project on top of
-            # the partial's struct aggregate trips Spark 4.1.2's
-            # RemoveRedundantAliases (d42cb25)
-            l, r = agg.alias("_pl"), sk.alias("_pr")
-            cond = None
-            for k in keys:
-                c = F.col(f"_pl.{k}").eqNullSafe(F.col(f"_pr.{k}"))
-                cond = c if cond is None else cond & c
-            agg = l.join(r, cond).select("_pl.*", F.col(f"_pr.{col}"))
+        for fam, col, spec in parts:
+            # every state is null-aware: it emits a row for EVERY (bucket,
+            # group) of the raw rows, with a NULL state when the partial's
+            # inputs are all NULL (strict PG aggregate semantics) — so this
+            # join chain is always 1:1 and inner; AQE sees two
+            # pre-aggregated (small) sides
+            sk = self._build_state(fam.for_spec(spec), raw, col, spec)
+            agg = sk if agg is None else _join(agg, sk, keys, "inner", [col])
         if only_cols is None:
             for col, expr in (self.row.get("window_fns") or {}).items():
                 agg = agg.withColumn(col, F.expr(expr))
         return agg
 
-    def _sketch_state(self, raw: DataFrame, col: str, spec: dict) -> DataFrame:
-        """DDSketch STATE per (bucket, group): ``map<int,bigint>`` of
-        log-bucket -> count. Two map-combined groupBys: the first
-        collapses rows to (keys, log-bucket) counts BEFORE the exchange
-        (shuffle = keys x ~2k sketch buckets regardless of row count,
-        functions/ddsketch.py contract), the second packs each group's
-        buckets into one deterministic sorted map entry. No raw row
-        survives past the first partial aggregation."""
-        from .functions.ddsketch import ZERO_BUCKET, _gamma
-
+    def _build_state(self, fam, raw: DataFrame, col: str, spec: dict):
+        """One family column's states per (bucket, group): built from the
+        raw rows, or — for a hierarchical ``rollup_of`` child — the
+        family's merge over the PARENT cagg's stored states written back
+        as a state (cagg_on_cagg.sql × the toolkit rollup idiom). The
+        merge input is ``(bucket, group…, _src, _st)`` with ``_src`` the
+        parent bucket in internal µs; NULL parent states are kept, so an
+        all-NULL child group still gets a row with a NULL state."""
         src = spec.get("rollup_of")
-        if src:
-            # hierarchical rollup: merge the parent's stored states —
-            # explode (keys, map) -> (keys, log-bucket, cnt), sum. Bucket
-            # counts ADD losslessly (Masson VLDB'19 §2.3), so the child
-            # state is bit-identical to one built from the raw rows.
-            # explode_outer: a NULL parent state (strict-NULL group)
-            # yields a NULL _sb row, so the group row survives into the
-            # child with a NULL state instead of vanishing
-            per_bucket = (
-                raw.select(
-                    self._bucket_expr(raw),
-                    *self.row["group_by"],
-                    F.explode_outer(F.col(src)).alias("_sb", "_c"),
-                )
-                .groupBy(
-                    self.row["bucket_alias"], *self.row["group_by"], "_sb"
-                )
-                .agg(F.sum("_c").alias("_cnt"))
-            )
-            ent = F.when(
-                F.col("_sb").isNotNull(), F.struct("_sb", "_cnt")
-            )
-            return per_bucket.groupBy(
-                self.row["bucket_alias"], *self.row["group_by"]
-            ).agg(
-                F.when(
-                    F.count("_sb") > 0,
-                    F.map_from_entries(
-                        F.array_sort(F.collect_list(ent))
-                    ),
-                ).alias(col)
-            )
-        g = _gamma(float(spec.get("alpha", 0.01)))
-        v = F.expr(spec["value"]).cast("double")
-        # strict-aggregate NULL semantics (percentile_agg skips NULLs):
-        # NULL values get a NULL log-bucket, which is dropped before the
-        # map pack (a NULL key would crash map_from_entries) — but the
-        # (bucket, group) row itself survives, with a NULL state when
-        # ALL its inputs are NULL
-        sb = (
-            F.when(v.isNull(), F.lit(None).cast("int"))
-            .when(
-                v < 0,
-                F.raise_error(
-                    F.lit(
-                        f"cagg sketch {col!r}: negative values are not "
-                        f"supported (DDSketch positive store + zero "
-                        f"bucket, like uddsketch)"
-                    )
-                ).cast("int"),
-            )
-            .when(v == 0, F.lit(ZERO_BUCKET))
-            .otherwise(
-                F.ceil(F.log(v) / F.lit(math.log(g))).cast("int")
-            )
-        )
-        per_bucket = (
-            raw.select(
-                self._bucket_expr(raw),
-                *self.row["group_by"],
-                sb.alias("_sb"),
-            )
-            .groupBy(self.row["bucket_alias"], *self.row["group_by"], "_sb")
-            .agg(F.count(F.lit(1)).alias("_cnt"))
-        )
-        # collect_list skips NULL elements, so the NULL-bucket row
-        # (NULL-input samples) never reaches the map; nullif turns an
-        # all-NULL group's empty map into a NULL state
-        ent = F.when(
-            F.col("_sb").isNotNull(), F.struct("_sb", "_cnt")
-        )
-        return per_bucket.groupBy(
-            self.row["bucket_alias"], *self.row["group_by"]
-        ).agg(
-            F.when(
-                F.count("_sb") > 0,
-                F.map_from_entries(F.array_sort(F.collect_list(ent))),
-            ).alias(col)
-        )
-
-    def _counter_state(self, raw: DataFrame, col: str, spec: dict) -> DataFrame:
-        """Mergeable COUNTER partial per (bucket, group):
-        ``struct(n, first_us, last_us, first_val, last_val, delta,
-        num_resets)`` with prometheus reset semantics inside the bucket
-        (functions/counters.py:counter_agg decomposition). One window
-        over (bucket, group) ordered by (time, tiebreak…) computes the
-        within-bucket reset-adjusted increments; the grouped pack is a
-        single exchange. Boundary steps between buckets are NOT counted
-        here — merging adjacent partials adds exactly one boundary step
-        (``counter_at_grain``), which is what makes any-grain serving
-        equal to ``counter_agg`` over the raw rows of that grain."""
-        if spec.get("rollup_of"):
-            return self._merge_counter_states(raw, col, spec["rollup_of"])
-        balias = self.row["bucket_alias"]
+        if not src:
+            return fam.state(self, raw, col, spec)
         gb = list(self.row["group_by"])
-        tb = list(spec.get("tiebreak") or ())
-        us = self._raw_time_us(raw)
-        stepped = raw.select(
+        keys = [self.row["bucket_alias"], *gb]
+        d = raw.select(
             self._bucket_expr(raw),
             *gb,
-            *[F.col(c).alias(f"_tb{i}") for i, c in enumerate(tb)],
-            us.alias("_us"),
-            F.expr(spec["value"]).cast("double").alias("_v"),
+            self._raw_time_us(raw).alias("_src"),
+            F.col(src).alias("_st"),
         )
-        # SQL-string expression build from here down (round 17, see
-        # _over): one py4j parse per expression instead of ~2,000 round
-        # trips; the parsed trees are identical to the Column form.
-        bq, gbq = _q(balias), [_q(g) for g in gb]
-        tbs = [f"_tb{i}" for i in range(len(tb))]
-        wo = _over(
-            [balias, *gb], ["_us ASC", *[f"{t} ASC" for t in tbs]]
-        )
-        # strict-aggregate NULL semantics (counter_agg skips NULLs): the
-        # previous sample is the last NON-NULL value before this row —
-        # lag() would let one NULL sample break two increments — and
-        # NULL samples themselves contribute no increment/reset/count
-        prev = (
-            f"last(_v, true) OVER ({wo} ROWS BETWEEN UNBOUNDED "
-            f"PRECEDING AND 1 PRECEDING)"
-        )
-        step = f"(_v - {prev})"
-        inc = (
-            f"CASE WHEN _v IS NULL THEN CAST(NULL AS DOUBLE) "
-            f"WHEN {prev} IS NULL THEN 0.0D "
-            f"WHEN {step} < 0 THEN _v ELSE {step} END"
-        )
-        # bookend key is NULL for NULL samples so min_by/max_by skip them
-        key = (
-            "CASE WHEN _v IS NOT NULL THEN named_struct('_us', _us"
-            + "".join(f", '{t}', {t}" for t in tbs)
-            + ") END"
-        )
-        stepped = stepped.selectExpr(
-            bq,
-            *gbq,
-            "_us",
-            "_v",
-            f"{inc} AS _inc",
-            f"CASE WHEN _v IS NOT NULL THEN CAST(({step} < 0) AS INT) "
-            f"END AS _reset",
-            f"CASE WHEN _v IS NOT NULL AND {prev} IS NOT NULL THEN "
-            f"CAST((_v != {prev}) AS INT) END AS _change",
-            f"{key} AS _k",
-        )
-        # aggregate FLAT fields, then assemble the struct in a plain
-        # projection: an aliased-field struct inside the aggregate trips
-        # Spark 4.1.2's RemoveRedundantAliases into an unresolved plan
-        # under a dual-partial join + projection (round-10 regression,
-        # d42cb25)
-        flat = stepped.groupBy(balias, *gb).agg(
-            F.expr("count(_v)").alias("_f_n"),
-            F.expr(
-                "min(CASE WHEN _v IS NOT NULL THEN _us END)"
-            ).alias("_f_first_us"),
-            F.expr(
-                "max(CASE WHEN _v IS NOT NULL THEN _us END)"
-            ).alias("_f_last_us"),
-            F.expr("min_by(_v, _k)").alias("_f_first_val"),
-            F.expr("max_by(_v, _k)").alias("_f_last_val"),
-            F.expr("sum(_inc)").alias("_f_delta"),
-            F.expr("coalesce(sum(_reset), 0)").alias("_f_resets"),
-            F.expr("coalesce(sum(_change), 0)").alias("_f_changes"),
-        )
-        return flat.selectExpr(
-            bq,
-            *gbq,
-            "CASE WHEN _f_n > 0 THEN named_struct("
-            "'n', _f_n, 'first_us', _f_first_us, 'last_us', _f_last_us, "
-            "'first_val', _f_first_val, 'last_val', _f_last_val, "
-            "'delta', _f_delta, 'num_resets', _f_resets, "
-            f"'num_changes', _f_changes) END AS {_q(col)}",
-        )
+        return fam.pack(fam.merge(d, keys, spec), d, keys, col, spec)
 
     def _raw_time_us(self, raw: DataFrame):
         """int64 internal units of the cagg's time column on ``raw``."""
@@ -1206,6 +611,176 @@ class ContinuousAggregate:
                 )
             return F.unix_micros(F.col(tcol).cast("timestamp"))
         return F.col(tcol).cast("long")
+
+    # ------------------------------------------------------------ serving
+    def _resolve(self, fam, col: Optional[str]):
+        """``(column, spec)`` of a family column; ``col=None`` picks the
+        cagg's only column of that family."""
+        specs = self.row.get(fam.key) or {}
+        if not specs:
+            raise ValueError(
+                f"cagg {self.name!r} has no {fam.kind} columns (pass "
+                f"{fam.key}= to create_cagg)"
+            )
+        if col is None:
+            if len(specs) > 1:
+                raise ValueError(
+                    f"cagg {self.name!r} has several {fam.kind} columns "
+                    f"{sorted(specs)}; pass the column name"
+                )
+            col = next(iter(specs))
+        if col not in specs:
+            raise KeyError(f"no {fam.kind} column {col!r}")
+        return col, specs[col]
+
+    def _serve(
+        self, fam, col, grain, group_by, realtime, start, end, finalize=None
+    ) -> DataFrame:
+        """Every ``*_at_grain`` accessor: the :meth:`_partial_frame`
+        scaffold, then the family's merge of the parent partials inside
+        each target bucket (the same merge a ``rollup_of`` child stores),
+        then ``finalize`` (default: the family's) into output columns."""
+        col, spec = self._resolve(fam, col)
+        fam = fam.for_spec(spec)
+        if fam.ordered:
+            self._require_full_group_by(group_by, fam)
+        d, keys_gb, bucket, grain_all = self._partial_frame(
+            col, grain, group_by, realtime, start, end
+        )
+        keys = keys_gb if grain_all else ["_tgt", *keys_gb]
+        out = (finalize or fam.finalize)(fam.merge(d, keys, spec), keys, spec)
+        return out if grain_all else out.withColumnRenamed("_tgt", bucket)
+
+    def _require_full_group_by(self, group_by, fam) -> None:
+        """Ordered partials (counter, gauge, time-weight, state-agg,
+        heartbeat) are only mergeable WITHIN one series: regrouping on a
+        subset of the cagg's group columns would merge partials from
+        different series into one ordered-by-``_src`` window, making the
+        boundary math nondeterministic (several partials share each
+        parent bucket) and semantically wrong. Commutative states keep
+        free regrouping."""
+        if group_by is None:
+            return
+        missing = [c for c in self.row["group_by"] if c not in set(group_by)]
+        if missing:
+            raise ValueError(
+                f"{fam.serve}(group_by=...) must include every group "
+                f"column of cagg {self.name!r} (missing {missing}): "
+                f"{fam.kind} partials are only mergeable within a single "
+                f"series"
+            )
+
+    def _partial_frame(
+        self, col: str, grain, group_by, realtime, start, end
+    ):
+        """Shared serving scaffold: read the column (realtime union
+        included), apply bucket-aligned ``[start, end)`` bounds, compute
+        the target bucket, and return ``(frame(_tgt?, group…, _src,
+        _st), group_cols, bucket_alias, grain_is_all)``."""
+        from .functions.time import time_bucket
+
+        bucket = self.row["bucket_alias"]
+        gb = list(self.row["group_by"] if group_by is None else group_by)
+        df = self.read(realtime=realtime, only_cols=[col])
+        if start is not None or end is not None:
+            bc = F.col(bucket)
+            if self.row["time_is_timestamp"]:
+                conv = lambda x: F.lit(x).cast("timestamp")  # noqa: E731
+            else:
+                conv = lambda x: F.lit(int(x))  # noqa: E731
+            if start is not None:
+                df = df.filter(bc >= conv(start))
+            if end is not None:
+                df = df.filter(bc < conv(end))
+        # strict rollup semantics: a NULL state (a group whose partial
+        # inputs were all NULL) is skipped at merge time, like the
+        # toolkit's strict rollup() aggregate. Filter AFTER the rename
+        # select — a filter on the raw state column between the mat
+        # read and the select trips Spark 4.1.2's RemoveRedundantAliases
+        # into an unresolved plan (same bug family as d42cb25).
+        if grain == "all":
+            # no constant target column: a literal group/partition key
+            # trips Catalyst's RemoveRedundantAliases into an unresolved
+            # plan (observed on the gauge accessor) and adds nothing
+            return (
+                df.select(
+                    *gb,
+                    F.col(bucket).alias("_src"),
+                    F.col(col).alias("_st"),
+                ).filter(F.col("_st").isNotNull()),
+                gb,
+                bucket,
+                True,
+            )
+        if grain is not None:
+            if not self.row["time_is_timestamp"]:
+                from .functions.time import time_bucket_int
+
+                tgt = time_bucket_int(int(grain), bucket)
+            else:
+                tgt = time_bucket(grain, bucket)
+        else:
+            tgt = F.col(bucket)
+        return (
+            df.select(
+                tgt.alias("_tgt"),
+                *gb,
+                F.col(bucket).alias("_src"),
+                F.col(col).alias("_st"),
+            ).filter(F.col("_st").isNotNull()),
+            gb,
+            bucket,
+            False,
+        )
+
+    def _interp_frame(self, fam, col, grain, realtime, method: str):
+        """Shared scaffold of the interpolated accessors: the column's
+        non-NULL states ``(group…, _src, _st)`` at the cagg's own grain,
+        ``_src`` in internal µs, plus the target width — a positive
+        multiple of the cagg's fixed bucket width, so that every target
+        edge is a parent edge."""
+        from .functions.time import parse_interval
+
+        col, _spec = self._resolve(fam, col)
+        if grain is None:
+            raise ValueError(f"{method} needs an explicit grain")
+        if self.row["time_is_timestamp"]:
+            iv = parse_interval(grain)
+            if iv.months:
+                raise ValueError("needs a fixed-width grain")
+            width = iv.us
+        else:
+            width = int(grain)
+        pw = int(self.row["bucket_width_us"])
+        if (
+            self.row.get("bucket_width_months")
+            or width <= 0
+            or width % pw != 0
+        ):
+            raise ValueError(
+                "grain must be a positive integer multiple of the "
+                "cagg's fixed bucket width (parent buckets must nest)"
+            )
+        gb = list(self.row["group_by"])
+        bucket = self.row["bucket_alias"]
+        df = self.read(realtime=realtime, only_cols=[col])
+        if self.row["time_is_timestamp"]:
+            src_us = F.unix_micros(F.col(bucket).cast("timestamp"))
+        else:
+            src_us = F.col(bucket).cast("long")
+        base = df.select(
+            *gb, src_us.alias("_src"), F.col(col).alias("_st")
+        ).filter(F.col("_st").isNotNull())
+        return base, gb, width
+
+    def _target_buckets(self, df: DataFrame, gb, *cols) -> DataFrame:
+        """Interpolated output: the int64-µs target bucket ``_b`` back
+        as the cagg's bucket column."""
+        if self.row["time_is_timestamp"]:
+            bcol = F.timestamp_micros(F.col("_b"))
+        else:
+            bcol = F.col("_b")
+        return df.select(bcol.alias(self.row["bucket_alias"]), *gb, *cols)
 
     def counter_at_grain(
         self,
@@ -1228,193 +803,7 @@ class ContinuousAggregate:
         Output: ``(bucket?, group…, n, delta, rate, num_resets,
         first_us, last_us)``; ``grain=None`` keeps the cagg's own grain,
         ``"all"`` collapses to one row per group."""
-        from .functions.time import time_bucket
-
-        counters = self.row.get("counters") or {}
-        if not counters:
-            raise ValueError(
-                f"cagg {self.name!r} has no counter columns (pass "
-                f"counters= to create_cagg)"
-            )
-        if counter_col is None:
-            if len(counters) > 1:
-                raise ValueError(
-                    f"cagg {self.name!r} has several counters "
-                    f"{sorted(counters)}; pass counter_col"
-                )
-            counter_col = next(iter(counters))
-        if counter_col not in counters:
-            raise KeyError(f"no counter column {counter_col!r}")
-        self._require_full_group_by(group_by, "counter")
-        bucket = self.row["bucket_alias"]
-        gb = list(self.row["group_by"] if group_by is None else group_by)
-
-        df = self.read(realtime=realtime, only_cols=[counter_col])
-        if start is not None or end is not None:
-            bc = F.col(bucket)
-            if self.row["time_is_timestamp"]:
-                conv = lambda x: F.lit(x).cast("timestamp")  # noqa: E731
-            else:
-                conv = lambda x: F.lit(int(x))  # noqa: E731
-            if start is not None:
-                df = df.filter(bc >= conv(start))
-            if end is not None:
-                df = df.filter(bc < conv(end))
-        src_bucket = F.col(bucket)
-        grain_all = grain == "all"
-        tcols = [] if grain_all else ["_tgt"]
-        if grain == "all":
-            tgt = None
-            keys: list = list(gb)
-        elif grain is not None:
-            if not self.row["time_is_timestamp"]:
-                from .functions.time import time_bucket_int
-
-                tgt = time_bucket_int(int(grain), bucket)
-            else:
-                tgt = time_bucket(grain, bucket)
-            keys = [bucket, *gb]
-        else:
-            tgt = src_bucket
-            keys = [bucket, *gb]
-        # strict rollup: skip NULL states (all-NULL-input groups); the
-        # filter sits after the rename select, not on the mat read —
-        # see _partial_frame_for_col
-        d = df.select(
-            *([] if tgt is None else [tgt.alias("_tgt")]),
-            src_bucket.alias("_src"),
-            *gb,
-            F.col(counter_col).alias("_st"),
-        ).filter(F.col("_st").isNotNull())
-        # one boundary step per adjacent pair of parent buckets inside a
-        # target bucket: reset-adjusted first-vs-previous-last.
-        # SQL-string expression build (round 17, see _over).
-        gbq = [_q(g) for g in gb]
-        wo = _over([*tcols, *gb], ["_src ASC"])
-        prev_last = f"lag(_st.last_val) OVER ({wo})"
-        bstep = f"(_st.first_val - {prev_last})"
-        binc = (
-            f"CASE WHEN {prev_last} IS NULL THEN 0.0D "
-            f"WHEN {bstep} < 0 THEN _st.first_val ELSE {bstep} END"
-        )
-        d = d.selectExpr(
-            *tcols,
-            *gbq,
-            "_src",
-            "_st",
-            f"{binc} AS _binc",
-            f"CAST(({bstep} < 0) AS INT) AS _breset",
-            f"CASE WHEN {prev_last} IS NOT NULL THEN "
-            f"CAST((_st.first_val != {prev_last}) AS INT) END AS _bchange",
-        )
-        span_s = (
-            "(CAST((max(_st.last_us) - min(_st.first_us)) AS DOUBLE) "
-            "/ 1000000.0D)"
-        )
-        out = d.groupBy(*tcols, *gb).agg(
-            F.expr("sum(_st.n)").alias("n"),
-            F.expr("sum(_st.delta) + sum(_binc)").alias("delta"),
-            F.expr(
-                f"CASE WHEN {span_s} > 0 THEN "
-                f"(sum(_st.delta) + sum(_binc)) / {span_s} END"
-            ).alias("rate"),
-            F.expr(
-                "sum(_st.num_resets) + coalesce(sum(_breset), 0)"
-            ).alias("num_resets"),
-            (
-                F.expr(
-                    "sum(_st.num_changes) + coalesce(sum(_bchange), 0)"
-                )
-                if _struct_has_field(d, "_st", "num_changes")
-                else F.lit(None).cast("long")
-            ).alias("num_changes"),
-            F.expr("min(_st.first_us)").alias("first_us"),
-            F.expr("max(_st.last_us)").alias("last_us"),
-            # toolkit first_val/last_val accessors: bookends from the
-            # earliest/latest parent partial (_src is unique per parent
-            # within a series)
-            F.expr("min_by(_st.first_val, _src)").alias("first_val"),
-            F.expr("max_by(_st.last_val, _src)").alias("last_val"),
-        )
-        if grain_all:
-            return out
-        return out.withColumnRenamed("_tgt", bucket)
-
-    def _gauge_state(self, raw: DataFrame, col: str, spec: dict) -> DataFrame:
-        """Mergeable GAUGE partial per (bucket, group): like the counter
-        partial but without resets, plus ``last_step``/``last_prev_us``
-        (the final within-bucket step and the time of the sample before
-        the last) so idelta/irate survive the rollup — a single-sample
-        bucket's step comes from the previous bucket's last value at
-        merge time."""
-        if spec.get("rollup_of"):
-            return self._merge_gauge_states(raw, col, spec["rollup_of"])
-        balias = self.row["bucket_alias"]
-        gb = list(self.row["group_by"])
-        tb = list(spec.get("tiebreak") or ())
-        us = self._raw_time_us(raw)
-        stepped = raw.select(
-            self._bucket_expr(raw),
-            *gb,
-            *[F.col(c).alias(f"_tb{i}") for i, c in enumerate(tb)],
-            us.alias("_us"),
-            F.expr(spec["value"]).cast("double").alias("_v"),
-        )
-        # SQL-string expression build (round 17, see _over)
-        bq, gbq = _q(balias), [_q(g) for g in gb]
-        tbs = [f"_tb{i}" for i in range(len(tb))]
-        wo = _over(
-            [balias, *gb], ["_us ASC", *[f"{t} ASC" for t in tbs]]
-        )
-        frame = f"{wo} ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING"
-        # strict NULL semantics (gauge_agg skips NULLs): the previous
-        # sample is the last NON-NULL one, its time the matching masked
-        # time — same reasoning as _counter_state
-        prev_v = f"last(_v, true) OVER ({frame})"
-        prev_us = (
-            f"last(CASE WHEN _v IS NOT NULL THEN _us END, true) "
-            f"OVER ({frame})"
-        )
-        key = (
-            "CASE WHEN _v IS NOT NULL THEN named_struct('_us', _us"
-            + "".join(f", '{t}', {t}" for t in tbs)
-            + ") END"
-        )
-        stepped = stepped.selectExpr(
-            bq,
-            *gbq,
-            "_us",
-            "_v",
-            f"(_v - {prev_v}) AS _step",
-            f"{prev_us} AS _prev_us",
-            f"CASE WHEN _v IS NOT NULL AND {prev_v} IS NOT NULL THEN "
-            f"CAST((_v != {prev_v}) AS INT) END AS _change",
-            f"{key} AS _k",
-        )
-        # flat aggregate + struct-in-projection (see _counter_state)
-        flat = stepped.groupBy(balias, *gb).agg(
-            F.expr("count(_v)").alias("_f_n"),
-            F.expr(
-                "min(CASE WHEN _v IS NOT NULL THEN _us END)"
-            ).alias("_f_first_us"),
-            F.expr(
-                "max(CASE WHEN _v IS NOT NULL THEN _us END)"
-            ).alias("_f_last_us"),
-            F.expr("min_by(_v, _k)").alias("_f_first_val"),
-            F.expr("max_by(_v, _k)").alias("_f_last_val"),
-            F.expr("max_by(_step, _k)").alias("_f_last_step"),
-            F.expr("max_by(_prev_us, _k)").alias("_f_last_prev"),
-            F.expr("coalesce(sum(_change), 0)").alias("_f_changes"),
-        )
-        return flat.selectExpr(
-            bq,
-            *gbq,
-            "CASE WHEN _f_n > 0 THEN named_struct("
-            "'n', _f_n, 'first_us', _f_first_us, 'last_us', _f_last_us, "
-            "'first_val', _f_first_val, 'last_val', _f_last_val, "
-            "'last_step', _f_last_step, 'last_prev_us', _f_last_prev, "
-            f"'num_changes', _f_changes) END AS {_q(col)}",
-        )
+        return self._serve(COUNTER, counter_col, grain, group_by, realtime, start, end)
 
     def gauge_at_grain(
         self,
@@ -1434,165 +823,7 @@ class ContinuousAggregate:
 
         Output: ``(bucket?, group…, n, delta, rate, idelta, irate,
         first_us, last_us)``."""
-        from pyspark.sql import Window
-
-        self._require_full_group_by(group_by, "gauge")
-        d, keys_gb, bucket, grain_all = self._partial_frame(
-            "gauges", gauge_col, grain, group_by, realtime, start, end
-        )
-        tcols = [] if grain_all else ["_tgt"]
-        st = F.col("_st")
-        w = Window.partitionBy(*tcols, *keys_gb).orderBy(F.col("_src").asc())
-        prev_last_val = F.lag(st["last_val"]).over(w)
-        prev_last_us = F.lag(st["last_us"]).over(w)
-        cand_idelta = F.coalesce(
-            st["last_step"], st["first_val"] - prev_last_val
-        )
-        cand_prev_us = F.coalesce(st["last_prev_us"], prev_last_us)
-        has_changes = _struct_has_field(d, "_st", "num_changes")
-        d = d.select(
-            *tcols,
-            *keys_gb,
-            "_src",
-            st.alias("_st"),
-            cand_idelta.alias("_cid"),
-            cand_prev_us.alias("_cpu"),
-            # one boundary change per adjacent parent pair (the counter
-            # serve's _bchange; gauge num_changes counts value changes)
-            F.when(
-                prev_last_val.isNotNull(),
-                (st["first_val"] != prev_last_val).cast("int"),
-            ).alias("_bchange"),
-        )
-        # per-component min_by/max_by keyed on the parent bucket (_src,
-        # unique within the target group → all components come from one
-        # row). NO struct bundling here: an aliased-field struct inside
-        # an aggregate over the dual-partial join trips Spark's
-        # RemoveRedundantAliases into an unresolved plan (observed on
-        # 4.1.2 with a projection on top).
-        first_v = F.min_by(st["first_val"], F.col("_src"))
-        last_v = F.max_by(st["last_val"], F.col("_src"))
-        last_cid = F.max_by(F.col("_cid"), F.col("_src"))
-        last_cpu = F.max_by(F.col("_cpu"), F.col("_src"))
-        span_s = (
-            F.max(st["last_us"]) - F.min(st["first_us"])
-        ).cast("double") / 1e6
-        out = d.groupBy(*tcols, *keys_gb).agg(
-            F.sum(st["n"]).alias("n"),
-            (last_v - first_v).alias("delta"),
-            F.when(
-                span_s > 0,
-                (last_v - first_v) / span_s,
-            ).alias("rate"),
-            last_cid.alias("idelta"),
-            F.when(
-                last_cpu.isNotNull()
-                & ((F.max(st["last_us"]) - last_cpu) > 0),
-                last_cid
-                / (
-                    (F.max(st["last_us"]) - last_cpu).cast("double")
-                    / 1e6
-                ),
-            ).alias("irate"),
-            F.min(st["first_us"]).alias("first_us"),
-            F.max(st["last_us"]).alias("last_us"),
-            first_v.alias("first_val"),
-            last_v.alias("last_val"),
-            (
-                (
-                    F.sum(st["num_changes"])
-                    + F.coalesce(F.sum("_bchange"), F.lit(0))
-                )
-                if has_changes
-                else F.lit(None).cast("long")
-            ).alias("num_changes"),
-        )
-        if grain_all:
-            return out
-        return out.withColumnRenamed("_tgt", bucket)
-
-    def _stats_state(self, raw: DataFrame, col: str, spec: dict) -> DataFrame:
-        """Mergeable 1-D STATS partial per (bucket, group):
-        ``struct(n, s, s2, mn, mx)`` — raw moments, the classical
-        parallel-aggregation decomposition (also how Spark's own
-        partial aggregates merge). A spec with a ``"y"`` key builds the
-        TWO-variable form instead (:meth:`_stats2d_state`)."""
-        if spec.get("rollup_of"):
-            return self._merge_stats_states(
-                raw, col, spec["rollup_of"], two_d="y" in spec
-            )
-        if "y" in spec:
-            return self._stats2d_state(raw, col, spec)
-        v = F.expr(spec["value"]).cast("double")
-        # strict NULL semantics: the moments already skip NULLs (count/
-        # sum/min/max are null-skipping); an all-NULL group's state is
-        # NULL instead of struct(0, NULL, …), consistent with the other
-        # partial families — and the group's row always survives.
-        # SQL-string expression build (round 17, see _over).
-        flat = (
-            raw.select(
-                self._bucket_expr(raw), *self.row["group_by"], v.alias("_v")
-            )
-            .groupBy(self.row["bucket_alias"], *self.row["group_by"])
-            .agg(
-                F.expr("count(_v)").alias("_f_n"),
-                F.expr("sum(_v)").alias("_f_s"),
-                F.expr("sum(_v * _v)").alias("_f_s2"),
-                F.expr("min(_v)").alias("_f_mn"),
-                F.expr("max(_v)").alias("_f_mx"),
-            )
-        )
-        return flat.selectExpr(
-            _q(self.row["bucket_alias"]),
-            *[_q(g) for g in self.row["group_by"]],
-            "CASE WHEN _f_n > 0 THEN named_struct('n', _f_n, 's', _f_s, "
-            f"'s2', _f_s2, 'mn', _f_mn, 'mx', _f_mx) END AS {_q(col)}",
-        )
-
-    def _stats2d_state(
-        self, raw: DataFrame, col: str, spec: dict
-    ) -> DataFrame:
-        """Mergeable 2-D STATS partial per (bucket, group):
-        ``struct(n, sx, sy, sxx, syy, sxy)`` — raw (co)moments of the
-        sample pairs where BOTH values are non-NULL (PostgreSQL
-        ``regr_*`` pair semantics; the toolkit two-variable
-        ``stats_agg(y, x)``). Fieldwise sums merge commutatively, so
-        :meth:`stats2d_at_grain` serves slope/intercept/corr/
-        covariance at any coarser grain by the standard parallel-merge
-        comoment corrections — identical to the same formulas over the
-        raw rows of that grain. ``spec['value']`` is the INDEPENDENT
-        variable (x), ``spec['y']`` the dependent one."""
-        x = F.expr(spec["value"]).cast("double")
-        y = F.expr(spec["y"]).cast("double")
-        both = x.isNotNull() & y.isNotNull()
-        base = raw.select(
-            self._bucket_expr(raw),
-            *self.row["group_by"],
-            F.when(both, x).alias("_x"),
-            F.when(both, y).alias("_y"),
-        )
-        # SQL-string expression build (round 17, see _over)
-        flat = base.groupBy(
-            self.row["bucket_alias"], *self.row["group_by"]
-        ).agg(
-            F.expr("count(_x)").alias("_f_n"),
-            F.expr("sum(_x)").alias("_f_sx"),
-            F.expr("sum(_y)").alias("_f_sy"),
-            F.expr("sum(_x * _x)").alias("_f_sxx"),
-            F.expr("sum(_y * _y)").alias("_f_syy"),
-            F.expr("sum(_x * _y)").alias("_f_sxy"),
-        )
-        return flat.selectExpr(
-            _q(self.row["bucket_alias"]),
-            *[_q(g) for g in self.row["group_by"]],
-            "CASE WHEN _f_n > 0 THEN named_struct('n', _f_n, "
-            "'sx', _f_sx, 'sy', _f_sy, 'sxx', _f_sxx, 'syy', _f_syy, "
-            f"'sxy', _f_sxy) END AS {_q(col)}",
-        )
-
-    def _is_stats2d(self, col: str) -> bool:
-        spec = (self.row.get("stats_aggs") or {}).get(col)
-        return bool(spec) and "y" in spec
+        return self._serve(GAUGE, gauge_col, grain, group_by, realtime, start, end)
 
     def stats_at_grain(
         self,
@@ -1609,9 +840,8 @@ class ContinuousAggregate:
         n/sum/avg/stddev/variance (sample)/min/max extraction."""
         if stats_col is None:
             # resolve BEFORE the 2-D guard, or a cagg whose only stats
-            # column is 2-D slips into the 1-D serve and dies with an
-            # opaque FIELD_NOT_FOUND on the comoment struct
-            specs = self.row.get("stats_aggs") or {}
+            # column is 2-D slips into the 1-D serve
+            specs = self.row.get(STATS.key) or {}
             if len(specs) == 1:
                 stats_col = next(iter(specs))
         if stats_col is not None and self._is_stats2d(stats_col):
@@ -1619,31 +849,7 @@ class ContinuousAggregate:
                 f"{stats_col!r} is a 2-D stats partial — use "
                 f"stats2d_at_grain for slope/intercept/corr/covariance"
             )
-        d, keys_gb, bucket, grain_all = self._partial_frame(
-            "stats_aggs", stats_col, grain, group_by, realtime, start, end
-        )
-        tcols = [] if grain_all else ["_tgt"]
-        st = F.col("_st")
-        n = F.sum(st["n"])
-        s = F.sum(st["s"])
-        s2 = F.sum(st["s2"])
-        # sample variance; clamp tiny negative float residue, keep NULL
-        # (not 0) for n <= 1 like stddev_samp
-        var = F.when(
-            n > 1, F.greatest((s2 - s * s / n) / (n - F.lit(1)), F.lit(0.0))
-        )
-        out = d.groupBy(*tcols, *keys_gb).agg(
-            n.alias("n"),
-            s.alias("sum"),
-            F.when(n > 0, s / n).alias("avg"),
-            F.sqrt(var).alias("stddev"),
-            var.alias("variance"),
-            F.min(st["mn"]).alias("min"),
-            F.max(st["mx"]).alias("max"),
-        )
-        if grain_all:
-            return out
-        return out.withColumnRenamed("_tgt", bucket)
+        return self._serve(STATS, stats_col, grain, group_by, realtime, start, end)
 
     def stats2d_at_grain(
         self,
@@ -1673,9 +879,7 @@ class ContinuousAggregate:
         ``regr_slope``/``covar_samp``."""
         if stats_col is None:
             two_d = [
-                c
-                for c, sp in (self.row.get("stats_aggs") or {}).items()
-                if "y" in sp
+                c for c in (self.row.get(STATS.key) or {}) if self._is_stats2d(c)
             ]
             if len(two_d) != 1:
                 raise ValueError(
@@ -1686,137 +890,13 @@ class ContinuousAggregate:
         if not self._is_stats2d(stats_col):
             raise ValueError(
                 f"{stats_col!r} is not a 2-D stats partial (create "
-                f"with stats_aggs={{col: {{'value': x, 'y': y}}}})"
+                f"with {STATS.key}={{col: {{'value': x, 'y': y}}}})"
             )
-        d, keys_gb, bucket, grain_all = self._partial_frame_for_col(
-            stats_col, grain, group_by, realtime, start, end
-        )
-        tcols = [] if grain_all else ["_tgt"]
-        st = F.col("_st")
-        n = F.sum(st["n"])
-        sx = F.sum(st["sx"])
-        sy = F.sum(st["sy"])
-        sxx = F.sum(st["sxx"])
-        syy = F.sum(st["syy"])
-        sxy = F.sum(st["sxy"])
-        # comoment corrections; clamp float residue like stats_at_grain.
-        # nullif denominators, not when-guards: ANSI divide-by-zero
-        # fires even inside an unreached CaseWhen branch under codegen
-        # subexpression elimination, while x / NULL is cleanly NULL —
-        # the same semantics (degenerate x → NULL slope/corr, n ≤ 1 →
-        # NULL covariance, regr_slope/covar_samp behavior)
-        cxx = F.greatest(sxx - sx * sx / n, F.lit(0.0))
-        cyy = F.greatest(syy - sy * sy / n, F.lit(0.0))
-        cxy = sxy - sx * sy / n
-        slope = cxy / F.nullif(cxx, F.lit(0.0))
-        out = d.groupBy(*tcols, *keys_gb).agg(
-            n.alias("n"),
-            (sx / n).alias("average_x"),
-            (sy / n).alias("average_y"),
-            sx.alias("sum_x"),
-            sy.alias("sum_y"),
-            slope.alias("slope"),
-            ((sy - slope * sx) / n).alias("intercept"),
-            (
-                cxy / F.nullif((n - F.lit(1)).cast("double"), F.lit(0.0))
-            ).alias("covariance"),
-            (cxy / F.nullif(F.sqrt(cxx * cyy), F.lit(0.0))).alias("corr"),
-            F.coalesce(
-                cxy * cxy / F.nullif(cxx * cyy, F.lit(0.0)),
-                F.when((cxx > 0) & (cyy == F.lit(0.0)), F.lit(1.0)),
-            ).alias("determination_coefficient"),
-        )
-        if grain_all:
-            return out
-        return out.withColumnRenamed("_tgt", bucket)
+        return self._serve(STATS, stats_col, grain, group_by, realtime, start, end)
 
-    def _timeweight_state(
-        self, raw: DataFrame, col: str, spec: dict
-    ) -> DataFrame:
-        """Mergeable TIME-WEIGHT partial per (bucket, group):
-        ``struct(n, first_us, last_us, first_val, last_val, integral)``
-        — ``integral`` is the within-bucket integral of the LOCF (or
-        linear) interpolant in µs·value, i.e. Σ over consecutive
-        non-null sample pairs of ``v1·Δt`` (LOCF) or ``(v1+v2)/2·Δt``
-        (linear). Cagg buckets partition time disjointly, so merging
-        adjacent partials adds exactly one boundary segment each (the
-        :meth:`counter_at_grain` merge shape) — which makes
-        :meth:`time_weighted_at_grain` equal to the toolkit
-        ``average(rollup(time_weight(...)))`` over the raw rows of the
-        target grain. Strict NULL semantics like the other families
-        (functions/counters.py:time_weighted_avg is the raw-scan
-        analog)."""
-        if spec.get("rollup_of"):
-            return self._merge_timeweight_states(
-                raw,
-                col,
-                spec["rollup_of"],
-                str(spec.get("method", "locf")).lower(),
-            )
-        balias = self.row["bucket_alias"]
-        gb = list(self.row["group_by"])
-        tb = list(spec.get("tiebreak") or ())
-        method = str(spec.get("method", "locf")).lower()
-        us = self._raw_time_us(raw)
-        stepped = raw.select(
-            self._bucket_expr(raw),
-            *gb,
-            *[F.col(c).alias(f"_tb{i}") for i, c in enumerate(tb)],
-            us.alias("_us"),
-            F.expr(spec["value"]).cast("double").alias("_v"),
-        )
-        # SQL-string expression build (round 17, see _over)
-        bq, gbq = _q(balias), [_q(g) for g in gb]
-        tbs = [f"_tb{i}" for i in range(len(tb))]
-        wo = _over(
-            [balias, *gb], ["_us ASC", *[f"{t} ASC" for t in tbs]]
-        )
-        frame = f"{wo} ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING"
-        prev_v = f"last(_v, true) OVER ({frame})"
-        prev_us = (
-            f"last(CASE WHEN _v IS NOT NULL THEN _us END, true) "
-            f"OVER ({frame})"
-        )
-        dt = f"CAST((_us - {prev_us}) AS DOUBLE)"
-        if method == "linear":
-            seg = f"(({prev_v} + _v) / 2.0D * {dt})"
-        else:
-            seg = f"({prev_v} * {dt})"
-        key = (
-            "CASE WHEN _v IS NOT NULL THEN named_struct('_us', _us"
-            + "".join(f", '{t}', {t}" for t in tbs)
-            + ") END"
-        )
-        stepped = stepped.selectExpr(
-            bq,
-            *gbq,
-            "_us",
-            "_v",
-            # a NULL sample closes no segment (its span folds into the
-            # next non-null sample's segment — prev_us skips NULLs)
-            f"CASE WHEN _v IS NOT NULL THEN {seg} END AS _seg",
-            f"{key} AS _k",
-        )
-        flat = stepped.groupBy(balias, *gb).agg(
-            F.expr("count(_v)").alias("_f_n"),
-            F.expr(
-                "min(CASE WHEN _v IS NOT NULL THEN _us END)"
-            ).alias("_f_first_us"),
-            F.expr(
-                "max(CASE WHEN _v IS NOT NULL THEN _us END)"
-            ).alias("_f_last_us"),
-            F.expr("min_by(_v, _k)").alias("_f_first_val"),
-            F.expr("max_by(_v, _k)").alias("_f_last_val"),
-            F.expr("coalesce(sum(_seg), 0.0D)").alias("_f_integral"),
-        )
-        return flat.selectExpr(
-            bq,
-            *gbq,
-            "CASE WHEN _f_n > 0 THEN named_struct("
-            "'n', _f_n, 'first_us', _f_first_us, 'last_us', _f_last_us, "
-            "'first_val', _f_first_val, 'last_val', _f_last_val, "
-            f"'integral', _f_integral) END AS {_q(col)}",
-        )
+    def _is_stats2d(self, col: str) -> bool:
+        spec = (self.row.get(STATS.key) or {}).get(col)
+        return bool(spec) and "y" in spec
 
     def interpolated_average_at_grain(
         self,
@@ -1850,61 +930,16 @@ class ContinuousAggregate:
         """
         from pyspark.sql import Window
 
-        from .functions.time import parse_interval
-
-        tws = self.row.get("time_weights") or {}
-        if not tws:
-            raise ValueError(
-                f"cagg {self.name!r} has no time_weight columns"
-            )
-        if tw_col is None:
-            if len(tws) > 1:
-                raise ValueError(
-                    f"cagg {self.name!r} has several time_weights "
-                    f"{sorted(tws)}; pass tw_col"
-                )
-            tw_col = next(iter(tws))
-        if tw_col not in tws:
-            raise KeyError(f"no time_weight column {tw_col!r}")
-        if str(tws[tw_col].get("method", "locf")).lower() != "locf":
+        _col, spec = self._resolve(TIME_WEIGHT, tw_col)
+        if str(spec.get("method", "locf")).lower() != "locf":
             raise ValueError(
                 "interpolated_average_at_grain needs a LOCF time_weight "
                 "(linear interpolation across gaps is interpolated_delta "
                 "territory)"
             )
-        if grain is None:
-            raise ValueError(
-                "interpolated_average_at_grain needs an explicit grain"
-            )
-        if self.row["time_is_timestamp"]:
-            iv = parse_interval(grain)
-            if iv.months:
-                raise ValueError("needs a fixed-width grain")
-            width = iv.us
-        else:
-            width = int(grain)
-        pw = int(self.row["bucket_width_us"])
-        if (
-            self.row.get("bucket_width_months")
-            or width <= 0
-            or width % pw != 0
-        ):
-            raise ValueError(
-                "grain must be a positive integer multiple of the "
-                "cagg's fixed bucket width (parent buckets must nest)"
-            )
-        gb = list(self.row["group_by"])
-        bucket = self.row["bucket_alias"]
-        df = self.read(realtime=realtime, only_cols=[tw_col])
-        if self.row["time_is_timestamp"]:
-            src_us = F.unix_micros(F.col(bucket).cast("timestamp"))
-        else:
-            src_us = F.col(bucket).cast("long")
-        base = df.select(
-            *gb,
-            src_us.alias("_src"),
-            F.col(tw_col).alias("_st"),
-        ).filter(F.col("_st").isNotNull())
+        base, gb, width = self._interp_frame(
+            TIME_WEIGHT, tw_col, grain, realtime, "interpolated_average_at_grain"
+        )
         st = F.col("_st")
         w = Window.partitionBy(*gb).orderBy(F.col("_src").asc())
         prev_last_us = F.lag(st["last_us"]).over(w)
@@ -1969,14 +1004,9 @@ class ContinuousAggregate:
             )
             .filter(F.col("_den") > 0)
         )
-        if self.row["time_is_timestamp"]:
-            bcol = F.timestamp_micros(F.col("_b")).alias(bucket)
-        else:
-            bcol = F.col("_b").alias(bucket)
-        return out.select(
-            bcol,
-            *gb,
-            (F.col("_num") / F.col("_den")).alias("tw_avg"),
+
+        return self._target_buckets(
+            out, gb, (F.col("_num") / F.col("_den")).alias("tw_avg")
         )
 
     def interpolated_delta_at_grain(
@@ -2005,70 +1035,11 @@ class ContinuousAggregate:
         Output: ``(bucket, group…, delta, rate)``."""
         from pyspark.sql import Window
 
-        from .functions.time import parse_interval
-
-        counters = self.row.get("counters") or {}
-        if not counters:
-            raise ValueError(
-                f"cagg {self.name!r} has no counter columns"
-            )
-        if counter_col is None:
-            if len(counters) > 1:
-                raise ValueError(
-                    f"cagg {self.name!r} has several counters "
-                    f"{sorted(counters)}; pass counter_col"
-                )
-            counter_col = next(iter(counters))
-        if counter_col not in counters:
-            raise KeyError(f"no counter column {counter_col!r}")
-        if grain is None:
-            raise ValueError(
-                "interpolated_delta_at_grain needs an explicit grain"
-            )
-        if self.row["time_is_timestamp"]:
-            iv = parse_interval(grain)
-            if iv.months:
-                raise ValueError("needs a fixed-width grain")
-            width = iv.us
-        else:
-            width = int(grain)
-        pw = int(self.row["bucket_width_us"])
-        if (
-            self.row.get("bucket_width_months")
-            or width <= 0
-            or width % pw != 0
-        ):
-            raise ValueError(
-                "grain must be a positive integer multiple of the "
-                "cagg's fixed bucket width (parent buckets must nest)"
-            )
-        gb = list(self.row["group_by"])
-        bucket = self.row["bucket_alias"]
-        df = self.read(realtime=realtime, only_cols=[counter_col])
-        if self.row["time_is_timestamp"]:
-            src_us = F.unix_micros(F.col(bucket).cast("timestamp"))
-        else:
-            src_us = F.col(bucket).cast("long")
-        base = df.select(
-            *gb,
-            src_us.alias("_src"),
-            F.col(counter_col).alias("_st"),
-        ).filter(F.col("_st").isNotNull())
+        base, gb, width = self._interp_frame(
+            COUNTER, counter_col, grain, realtime, "interpolated_delta_at_grain"
+        )
         st = F.col("_st")
-        w = Window.partitionBy(*gb).orderBy(F.col("_src").asc())
-        prev_last = F.lag(st["last_val"]).over(w)
-        bstep = st["first_val"] - prev_last
-        binc = (
-            F.when(prev_last.isNull(), F.lit(0.0))
-            .when(bstep < 0, st["first_val"])
-            .otherwise(bstep)
-        )
-        knots = base.select(
-            *gb,
-            "_src",
-            st.alias("_st"),
-            binc.alias("_binc"),
-        )
+        knots = counter_steps(base, gb)
         wc = Window.partitionBy(*gb).orderBy(F.col("_src").asc())
         cum_binc = F.sum("_binc").over(
             wc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -2139,11 +1110,8 @@ class ContinuousAggregate:
                 / (F.sum((hi - lo).cast("double")) / F.lit(1e6))
             ).alias("rate"),
         )
-        if self.row["time_is_timestamp"]:
-            bcol = F.timestamp_micros(F.col("_b")).alias(bucket)
-        else:
-            bcol = F.col("_b").alias(bucket)
-        return out.select(bcol, *gb, "delta", "rate")
+
+        return self._target_buckets(out, gb, "delta", "rate")
 
     def time_weighted_at_grain(
         self,
@@ -2166,152 +1134,7 @@ class ContinuousAggregate:
         functions/counters.py:time_weighted_avg).
 
         Output: ``(bucket?, group…, tw_avg, n, first_us, last_us)``."""
-        from pyspark.sql import Window
-
-        tws = self.row.get("time_weights") or {}
-        if not tws:
-            raise ValueError(
-                f"cagg {self.name!r} has no time_weight columns (pass "
-                f"time_weights= to create_cagg)"
-            )
-        if tw_col is None:
-            if len(tws) > 1:
-                raise ValueError(
-                    f"cagg {self.name!r} has several time_weights "
-                    f"{sorted(tws)}; pass tw_col"
-                )
-            tw_col = next(iter(tws))
-        if tw_col not in tws:
-            raise KeyError(f"no time_weight column {tw_col!r}")
-        # LOCF/linear boundary segments are only meaningful within one
-        # series — same mergeability constraint as counters/gauges
-        self._require_full_group_by(group_by, "time_weighted")
-        method = str(tws[tw_col].get("method", "locf")).lower()
-        d, keys_gb, bucket, grain_all = self._partial_frame_for_col(
-            tw_col, grain, group_by, realtime, start, end
-        )
-        tcols = [] if grain_all else ["_tgt"]
-        st = F.col("_st")
-        w = Window.partitionBy(*tcols, *keys_gb).orderBy(F.col("_src").asc())
-        prev_last_val = F.lag(st["last_val"]).over(w)
-        prev_last_us = F.lag(st["last_us"]).over(w)
-        bdt = (st["first_us"] - prev_last_us).cast("double")
-        if method == "linear":
-            bseg = (prev_last_val + st["first_val"]) / F.lit(2.0) * bdt
-        else:
-            bseg = prev_last_val * bdt
-        d = d.select(
-            *tcols,
-            *keys_gb,
-            "_src",
-            st.alias("_st"),
-            F.coalesce(bseg, F.lit(0.0)).alias("_bseg"),
-        )
-        # flat aggregate + compute-in-projection (the state builders'
-        # discipline): a when/otherwise around aggregates inside agg()
-        # trips Spark 4.1.2's RemoveRedundantAliases under the
-        # multi-partial join + projection shape (d42cb25 family)
-        flat = d.groupBy(*tcols, *keys_gb).agg(
-            (F.sum(st["integral"]) + F.sum("_bseg")).alias("_f_integral"),
-            F.min_by(st["first_val"], F.col("_src")).alias("_f_first_val"),
-            F.sum(st["n"]).alias("_f_n"),
-            F.min(st["first_us"]).alias("_f_first_us"),
-            F.max(st["last_us"]).alias("_f_last_us"),
-        )
-        # nullif/coalesce instead of when/otherwise: pruning a CaseWhen
-        # output column through this union+window+aggregate stack is
-        # exactly what flips RemoveRedundantAliases into an unresolved
-        # plan on 4.1.2 (isolated empirically — projecting the sibling
-        # plain columns is fine); x / NULL is NULL under ANSI, so the
-        # semantics are identical
-        span = (F.col("_f_last_us") - F.col("_f_first_us")).cast("double")
-        out = flat.select(
-            *tcols,
-            *keys_gb,
-            F.coalesce(
-                F.col("_f_integral") / F.nullif(span, F.lit(0.0)),
-                F.col("_f_first_val"),
-            ).alias("tw_avg"),
-            F.col("_f_n").alias("n"),
-            F.col("_f_first_us").alias("first_us"),
-            F.col("_f_last_us").alias("last_us"),
-        )
-        if grain_all:
-            return out
-        return out.withColumnRenamed("_tgt", bucket)
-
-    def _candlestick_state(
-        self, raw: DataFrame, col: str, spec: dict
-    ) -> DataFrame:
-        """Mergeable OHLC partial per (bucket, group): ``struct(n,
-        first_us, last_us, open, high, low, close, volume, pv)`` —
-        open/close are bookends on (time, tiebreak…), high/low/volume/
-        pv are plain min/max/sums (``pv`` = Σ price·volume, so vwap
-        survives the rollup). The toolkit ``candlestick_agg``
-        decomposition (functions/stats.py:candlestick_agg is the
-        raw-scan analog); every field merges losslessly across
-        adjacent buckets, making :meth:`candlestick_at_grain` exact at
-        any grain. Strict NULL semantics: NULL prices are skipped."""
-        if spec.get("rollup_of"):
-            return self._merge_candlestick_states(
-                raw, col, spec["rollup_of"]
-            )
-        balias = self.row["bucket_alias"]
-        gb = list(self.row["group_by"])
-        tb = list(spec.get("tiebreak") or ())
-        p = F.expr(spec["price"]).cast("double")
-        vol_expr = spec.get("volume")
-        vol = (
-            F.lit(1.0)
-            if vol_expr is None
-            else F.expr(vol_expr).cast("double")
-        )
-        us = self._raw_time_us(raw)
-        base = raw.select(
-            self._bucket_expr(raw),
-            *gb,
-            *[F.col(c).alias(f"_tb{i}") for i, c in enumerate(tb)],
-            us.alias("_us"),
-            p.alias("_p"),
-            vol.alias("_vol"),
-        )
-        # SQL-string expression build (round 17, see _over)
-        bq, gbq = _q(balias), [_q(g) for g in gb]
-        tbs = [f"_tb{i}" for i in range(len(tb))]
-        key = (
-            "CASE WHEN _p IS NOT NULL THEN named_struct('_us', _us"
-            + "".join(f", '{t}', {t}" for t in tbs)
-            + ") END"
-        )
-        base = base.selectExpr(
-            bq, *gbq, "_us", "_p",
-            "CASE WHEN _p IS NOT NULL THEN _vol END AS _vol",
-            f"{key} AS _k",
-        )
-        flat = base.groupBy(balias, *gb).agg(
-            F.expr("count(_p)").alias("_f_n"),
-            F.expr(
-                "min(CASE WHEN _p IS NOT NULL THEN _us END)"
-            ).alias("_f_first_us"),
-            F.expr(
-                "max(CASE WHEN _p IS NOT NULL THEN _us END)"
-            ).alias("_f_last_us"),
-            F.expr("min_by(_p, _k)").alias("_f_open"),
-            F.expr("max(_p)").alias("_f_high"),
-            F.expr("min(_p)").alias("_f_low"),
-            F.expr("max_by(_p, _k)").alias("_f_close"),
-            F.expr("sum(_vol)").alias("_f_volume"),
-            F.expr("sum(_p * _vol)").alias("_f_pv"),
-        )
-        return flat.selectExpr(
-            bq,
-            *gbq,
-            "CASE WHEN _f_n > 0 THEN named_struct("
-            "'n', _f_n, 'first_us', _f_first_us, 'last_us', _f_last_us, "
-            "'open', _f_open, 'high', _f_high, 'low', _f_low, "
-            "'close', _f_close, 'volume', _f_volume, 'pv', _f_pv"
-            f") END AS {_q(col)}",
-        )
+        return self._serve(TIME_WEIGHT, tw_col, grain, group_by, realtime, start, end)
 
     def candlestick_at_grain(
         self,
@@ -2342,126 +1165,7 @@ class ContinuousAggregate:
 
         Output: ``(bucket?, group…, open, high, low, close, volume,
         vwap, n, first_us, last_us)``."""
-        d, keys_gb, bucket, grain_all = self._partial_frame(
-            "candlesticks", candle_col, grain, group_by, realtime, start, end
-        )
-        tcols = [] if grain_all else ["_tgt"]
-        st = F.col("_st")
-        out = d.groupBy(*tcols, *keys_gb).agg(
-            F.min_by(
-                st["open"], F.struct(st["first_us"], st["open"])
-            ).alias("open"),
-            F.max(st["high"]).alias("high"),
-            F.min(st["low"]).alias("low"),
-            F.max_by(
-                st["close"], F.struct(st["last_us"], st["close"])
-            ).alias("close"),
-            F.sum(st["volume"]).alias("volume"),
-            (F.sum(st["pv"]) / F.sum(st["volume"])).alias("vwap"),
-            F.sum(st["n"]).alias("n"),
-            F.min(st["first_us"]).alias("first_us"),
-            F.max(st["last_us"]).alias("last_us"),
-        )
-        if grain_all:
-            return out
-        return out.withColumnRenamed("_tgt", bucket)
-
-    def _stateagg_state(
-        self, raw: DataFrame, col: str, spec: dict
-    ) -> DataFrame:
-        """Mergeable STATE-AGG partial per (bucket, group): ``struct(n,
-        first_us, last_us, first_state, last_state, durations)`` where
-        ``durations`` maps each state to ``struct(d, n)`` — its
-        within-bucket LOCF held time (µs) and sample count (toolkit
-        ``state_agg`` decomposition;
-        functions/state.py:state_durations is the raw-scan analog).
-        Strict NULL semantics: NULL-state samples are skipped (they
-        neither hold time nor break the LOCF chain); an all-NULL group
-        keeps its row with a NULL state."""
-        if spec.get("rollup_of"):
-            return self._merge_stateagg_states(
-                raw, col, spec["rollup_of"]
-            )
-        balias = self.row["bucket_alias"]
-        gb = list(self.row["group_by"])
-        tb = list(spec.get("tiebreak") or ())
-        us = self._raw_time_us(raw)
-        stepped = raw.select(
-            self._bucket_expr(raw),
-            *gb,
-            *[F.col(c).alias(f"_tb{i}") for i, c in enumerate(tb)],
-            us.alias("_us"),
-            F.expr(spec["state"]).cast("string").alias("_s"),
-        )
-        # SQL-string expression build (round 17, see _over)
-        bq, gbq = _q(balias), [_q(g) for g in gb]
-        tbs = [f"_tb{i}" for i in range(len(tb))]
-        # next NON-NULL sample's time (NULL states are skipped, so the
-        # previous state holds across them). Round 17 (r16 verdict #3):
-        # the ASC `first(…) OVER (1 FOLLOWING .. UNBOUNDED FOLLOWING)`
-        # frame recomputes its scan per row — O(n²) in the bucket's row
-        # count, quadratic on a single hot wide bucket. Since _us is
-        # the LEADING sort key, the lookup is a suffix-min, so the
-        # exact mirror is `last(…ignorenulls) OVER (UNBOUNDED PRECEDING
-        # .. 1 PRECEDING)` under the reversed sort — O(n) running
-        # state. The mirror is only row-identical when the order key is
-        # unique, so _s is appended as the final disambiguator: rows
-        # tied on the full (us, tiebreak…, state) key are
-        # interchangeable for this computation (one of k identical
-        # non-null rows absorbs the forward gap, the rest contribute 0
-        # — the same duration MULTISET in any tie order), which ALSO
-        # makes the per-state durations deterministic under (us,
-        # tiebreak) ties, where the old position-based frame depended
-        # on shuffle order.
-        wo_desc = _over(
-            [balias, *gb],
-            ["_us DESC", *[f"{t} DESC" for t in tbs], "_s DESC"],
-        )
-        nxt_nn = (
-            f"last(CASE WHEN _s IS NOT NULL THEN _us END, true) "
-            f"OVER ({wo_desc} ROWS BETWEEN UNBOUNDED PRECEDING "
-            f"AND 1 PRECEDING)"
-        )
-        key = (
-            "CASE WHEN _s IS NOT NULL THEN named_struct('_us', _us"
-            + "".join(f", '{t}', {t}" for t in tbs)
-            + ") END"
-        )
-        stepped = stepped.selectExpr(
-            bq,
-            *gbq,
-            "_s",
-            f"CASE WHEN _s IS NOT NULL THEN "
-            f"coalesce({nxt_nn}, _us) - _us END AS _dur",
-            f"{key} AS _k",
-        )
-        stage1 = stepped.groupBy(balias, *gb, "_s").agg(
-            F.expr("sum(_dur)").alias("_d"),
-            F.expr("count(_k)").alias("_n"),
-            F.expr("min(_k)").alias("_kmin"),
-            F.expr("max(_k)").alias("_kmax"),
-        )
-        ent = (
-            "CASE WHEN _s IS NOT NULL THEN named_struct("
-            "'_s', _s, 'dn', named_struct('d', _d, 'n', _n)) END"
-        )
-        flat = stage1.groupBy(balias, *gb).agg(
-            F.expr("sum(_n)").alias("_f_n"),
-            F.expr("min(_kmin)").alias("_f_kmin"),
-            F.expr("max(_kmax)").alias("_f_kmax"),
-            F.expr("min_by(_s, _kmin)").alias("_f_first_state"),
-            F.expr("max_by(_s, _kmax)").alias("_f_last_state"),
-            F.expr(f"collect_list({ent})").alias("_f_ents"),
-        )
-        return flat.selectExpr(
-            bq,
-            *gbq,
-            "CASE WHEN _f_n > 0 THEN named_struct("
-            "'n', _f_n, 'first_us', _f_kmin._us, 'last_us', _f_kmax._us, "
-            "'first_state', _f_first_state, 'last_state', _f_last_state, "
-            "'durations', map_from_entries(array_sort(_f_ents))"
-            f") END AS {_q(col)}",
-        )
+        return self._serve(CANDLESTICK, candle_col, grain, group_by, realtime, start, end)
 
     def state_durations_at_grain(
         self,
@@ -2481,221 +1185,7 @@ class ContinuousAggregate:
         target grain exactly.
 
         Output: ``(bucket?, group…, state, duration_us, n)``."""
-        self._require_full_group_by(group_by, "state_durations")
-        d, keys_gb, bucket, grain_all = self._partial_frame(
-            "state_aggs", state_col, grain, group_by, realtime, start, end
-        )
-        tcols = [] if grain_all else ["_tgt"]
-        # SQL-string expression build (round 17, see _over)
-        gbq = [_q(g) for g in keys_gb]
-        wo = _over([*tcols, *keys_gb], ["_src ASC"])
-        gap = f"(_st.first_us - lag(_st.last_us) OVER ({wo}))"
-        d = d.selectExpr(
-            *tcols,
-            *gbq,
-            "_st",
-            f"lag(_st.last_state) OVER ({wo}) AS _bstate",
-            f"CASE WHEN {gap} > 0 THEN {gap} END AS _bgap",
-        )
-        # within-partial per-state rows
-        within = d.selectExpr(
-            *tcols,
-            *gbq,
-            "explode(_st.durations) AS (state, _dn)",
-        ).selectExpr(
-            *tcols,
-            *gbq,
-            "state",
-            "_dn.d AS _d",
-            "_dn.n AS _n",
-        )
-        boundary = d.filter(
-            F.col("_bstate").isNotNull() & F.col("_bgap").isNotNull()
-        ).selectExpr(
-            *tcols,
-            *gbq,
-            "_bstate AS state",
-            "_bgap AS _d",
-            "CAST(0 AS BIGINT) AS _n",
-        )
-        out = (
-            within.unionByName(boundary)
-            .groupBy(*tcols, *keys_gb, "state")
-            .agg(
-                F.sum("_d").alias("duration_us"),
-                F.sum("_n").alias("n"),
-            )
-        )
-        if grain_all:
-            return out
-        return out.withColumnRenamed("_tgt", bucket)
-
-    # ----------------------- frequency (topn) + max_n/min_n partials
-    @staticmethod
-    def _mg_trim_exprs(ents_col: str, cap: int):
-        """Misra–Gries trim of an exact ``array<struct(c, v)>`` count
-        list to ``capacity`` entries: sort by (count desc, value asc),
-        subtract the (capacity+1)-th count from the survivors, drop the
-        non-positive remainder (the offline SpaceSaving construction;
-        error bound per value ≤ N/(capacity+1), and summed lower bounds
-        stay mergeable — Agarwal et al., "Mergeable Summaries",
-        PODS'12). When a bucket's distinct count ≤ capacity the cut is
-        0 and the stored counts are EXACT — the any-grain exactness
-        contract the q_cagg_topn gate checks. Returns (sorted_expr,
-        counts_map_expr over the sorted alias ``_f_se``)."""
-        sorted_expr = F.expr(
-            f"array_sort({ents_col}, (a, b) -> CASE "
-            f"WHEN a.c > b.c THEN -1 WHEN a.c < b.c THEN 1 "
-            f"WHEN a.v < b.v THEN -1 WHEN a.v > b.v THEN 1 ELSE 0 END)"
-        )
-        cut = (
-            f"IF(size(_f_se) > {cap}, "
-            f"element_at(_f_se, {cap + 1}).c, CAST(0 AS BIGINT))"
-        )
-        counts = F.expr(
-            f"map_from_entries(filter(transform(slice(_f_se, 1, {cap}),"
-            f" e -> named_struct('v', e.v, 'c', e.c - {cut})),"
-            f" e -> e.c > 0))"
-        )
-        return sorted_expr, counts
-
-    def _freq_state(self, raw: DataFrame, col: str, spec: dict) -> DataFrame:
-        """Mergeable FREQUENCY partial per (bucket, group):
-        ``struct(n, counts: map<string,long>)`` — a Misra–Gries /
-        SpaceSaving summary of at most ``capacity`` heavy hitters
-        (toolkit ``freq_agg``/``topn_agg`` family;
-        functions/stats.py:freq_sketch_topn is the raw-scan analog).
-        Built from EXACT within-bucket counts (a cagg bucket bounds the
-        group), then trimmed; states merge by summed lower bounds +
-        re-trim, so :meth:`topn_at_grain` serves heavy hitters at any
-        coarser grain with the mergeable-summaries error bound — and
-        exactly when every bucket's distinct count fits the capacity.
-        Strict NULL semantics: NULL values are skipped; n counts
-        non-null samples."""
-        if spec.get("rollup_of"):
-            return self._merge_freq_states(
-                raw, col, spec["rollup_of"], int(spec.get("capacity", 256))
-            )
-        cap = int(spec.get("capacity", 256))
-        balias = self.row["bucket_alias"]
-        gb = list(self.row["group_by"])
-        v = F.expr(spec["value"]).cast("string")
-        # exact (bucket, group, value) counts first — the map-side
-        # combine collapses rows to distinct values before the exchange
-        cnt = (
-            raw.select(self._bucket_expr(raw), *gb, v.alias("_v"))
-            .groupBy(balias, *gb, "_v")
-            .agg(F.expr("count(_v)").alias("_c"))
-        )
-        # bound the per-group state BEFORE collecting: a rank window
-        # keeps only the capacity+1 heaviest values (the trim needs the
-        # (cap+1)-th count as the cut; everything ranked below has
-        # count ≤ cut and would be trimmed to ≤ 0 anyway), and the same
-        # exchange carries the group's total-sample sum — collect_list
-        # is then bounded by capacity+1 entries, never the distinct
-        # cardinality (the unbounded-collect trap _maxn_state avoids
-        # the same way). SQL-string expression build (round 17, see
-        # _over); group total as a FULL frame of the same ordered spec:
-        # one sort, one WindowExec (round 14 — the merge_states trick).
-        bq, gbq = _q(balias), [_q(g) for g in gb]
-        wo = _over([balias, *gb], ["_c DESC", "_v ASC NULLS LAST"])
-        ranked = cnt.selectExpr(
-            bq,
-            *gbq,
-            "_v",
-            "_c",
-            f"row_number() OVER ({wo}) AS _rk",
-            f"sum(_c) OVER ({wo} ROWS BETWEEN UNBOUNDED PRECEDING "
-            f"AND UNBOUNDED FOLLOWING) AS _tot",
-        ).filter(F.col("_rk") <= cap + 1)
-        flat = ranked.groupBy(balias, *gb).agg(
-            F.expr("min(_tot)").alias("_f_n"),
-            F.expr(
-                "collect_list(CASE WHEN _v IS NOT NULL THEN "
-                "named_struct('c', _c, 'v', _v) END)"
-            ).alias("_f_ents"),
-        )
-        sorted_expr, counts = self._mg_trim_exprs("_f_ents", cap)
-        flat = flat.select(balias, *gb, "_f_n", sorted_expr.alias("_f_se"))
-        return flat.select(
-            balias,
-            *gb,
-            F.when(
-                F.col("_f_n") > 0,
-                F.struct(
-                    F.col("_f_n").alias("n"), counts.alias("counts")
-                ),
-            ).alias(col),
-        )
-
-    def _merge_freq_states(
-        self, raw: DataFrame, col: str, src: str, cap: int
-    ) -> DataFrame:
-        """Child frequency state: per-value lower bounds ADD across the
-        parent's states (Misra–Gries union), then one re-trim to the
-        child capacity.
-
-        The collect feeding the re-trim is CAPACITY-bounded, not
-        grain-ratio-bounded: the trim only ever consults the
-        ``capacity + 1`` heaviest summed values (slice 1..cap minus the
-        (cap+1)-th count), so a rank window over the summed counts —
-        the same ``_rk <= cap+1`` trick :meth:`_freq_state` uses on the
-        raw side — drops everything below the cut BEFORE the
-        collect_list. Without it a coarse child (hour→year at capacity
-        256 ≈ 8,760 parents) would build a parents-per-child × capacity
-        struct list per group; with it the state build is ≤ cap+1
-        entries at any grain ratio. The window's total order (count
-        desc, value asc) matches :meth:`_mg_trim_exprs`'s sort, so the
-        pre-trim selects exactly the entries the full trim would."""
-        from pyspark.sql import Window
-
-        d, balias, gb = self._rollup_frame(raw, src)
-        st = F.col("_st")
-        totals = d.groupBy(balias, *gb).agg(
-            F.count("_st").alias("_f_nn"),
-            F.sum(st["n"]).alias("_f_n"),
-        )
-        wrank = Window.partitionBy(balias, *gb).orderBy(
-            F.col("_c").desc(), F.col("_v").asc_nulls_last()
-        )
-        summed = (
-            d.select(
-                balias, *gb, F.explode(st["counts"]).alias("_v", "_c")
-            )
-            .groupBy(balias, *gb, "_v")
-            .agg(F.sum("_c").alias("_c"))
-            .withColumn("_rk", F.row_number().over(wrank))
-            .filter(F.col("_rk") <= cap + 1)
-            .groupBy(balias, *gb)
-            .agg(
-                F.collect_list(
-                    F.struct(F.col("_c").alias("c"), F.col("_v").alias("v"))
-                ).alias("_f_ents")
-            )
-        )
-        keys = [balias, *gb]
-        l, r = totals.alias("_fl"), summed.alias("_fr")
-        cond = None
-        for k in keys:
-            c = F.col(f"_fl.{k}").eqNullSafe(F.col(f"_fr.{k}"))
-            cond = c if cond is None else cond & c
-        j = l.join(r, cond, "left").select(
-            "_fl.*", F.col("_fr._f_ents").alias("_f_ents")
-        )
-        # a NULL _f_ents (every parent state NULL) flows through the
-        # trim as NULL and is masked by the guard below
-        sorted_expr, counts = self._mg_trim_exprs("_f_ents", cap)
-        j = j.select(*keys, "_f_n", "_f_nn", sorted_expr.alias("_f_se"))
-        return j.select(
-            balias,
-            *gb,
-            F.when(
-                (F.col("_f_nn") > 0) & F.col("_f_n").isNotNull(),
-                F.struct(
-                    F.col("_f_n").alias("n"), counts.alias("counts")
-                ),
-            ).alias(col),
-        )
+        return self._serve(STATE_AGG, state_col, grain, group_by, realtime, start, end)
 
     def topn_at_grain(
         self,
@@ -2719,239 +1209,11 @@ class ContinuousAggregate:
         count desc, value asc.
 
         Output: ``(bucket?, group…, value, freq_lb)``."""
-        from pyspark.sql import Window
+        def finalize(m, keys, spec):
+            served = FREQ.finalize(m, keys, spec)
+            return _top(served, keys, ["freq_lb DESC", "value ASC"], n).drop("_rk")
 
-        d, keys_gb, bucket, grain_all = self._partial_frame(
-            "freq_aggs", freq_col, grain, group_by, realtime, start, end
-        )
-        tcols = [] if grain_all else ["_tgt"]
-        merged = (
-            d.select(
-                *tcols,
-                *keys_gb,
-                F.explode(F.col("_st")["counts"]).alias("value", "_c"),
-            )
-            .groupBy(*tcols, *keys_gb, "value")
-            .agg(F.sum("_c").alias("freq_lb"))
-        )
-        order = [F.col("freq_lb").desc(), F.col("value").asc()]
-        if not tcols and not keys_gb:
-            # global top-n: TakeOrderedAndProject, never an all-rows
-            # single-partition window
-            return merged.orderBy(*order).limit(n)
-        w = Window.partitionBy(*tcols, *keys_gb).orderBy(*order)
-        out = (
-            merged.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") <= n)
-            .drop("_rk")
-        )
-        if grain_all:
-            return out
-        return out.withColumnRenamed("_tgt", bucket)
-
-    def _maxn_state(self, raw: DataFrame, col: str, spec: dict) -> DataFrame:
-        """Mergeable MAX-N/MIN-N candidate list per (bucket, group):
-        ``struct(n, vals: array<double>)`` — the ``n`` largest (or
-        smallest) values, sorted. Top-n is an exactly-mergeable
-        summary (top-n of a union = top-n of the concatenated
-        candidate lists), so :meth:`max_n_at_grain` is exact at every
-        grain (toolkit ``max_n``/``min_n``;
-        functions/stats.py:max_n is the raw-scan analog). The
-        candidate list is built with a bounded rank window — never a
-        whole-bucket collect.
-
-        With a ``"by"`` payload expression (toolkit ``max_n_by(value,
-        data, n)``) the state carries a parallel ``data`` array —
-        entries ordered by (value, data) in the list's direction, so
-        value ties resolve deterministically by payload and merges stay
-        exact on the (value, data) total order."""
-        if spec.get("rollup_of"):
-            return self._merge_maxn_states(raw, col, spec)
-        keep = int(spec.get("n", 5))
-        desc = bool(spec.get("desc", True))
-        by = spec.get("by")
-        balias = self.row["bucket_alias"]
-        gb = list(self.row["group_by"])
-        v = F.expr(spec["value"]).cast("double")
-        # SQL-string expression build (round 17, see _over).
-        # NULLS LAST so NULL rows never occupy a kept rank, while still
-        # riding the same window — every (bucket, group) keeps its row,
-        # with a NULL state when all values were NULL (strict)
-        bq, gbq = _q(balias), [_q(g) for g in gb]
-        if by is not None:
-            base = raw.select(
-                self._bucket_expr(raw),
-                *gb,
-                v.alias("_v"),
-                F.expr(by).alias("_d"),
-            )
-            wo = _over(
-                [balias, *gb],
-                ["_v DESC NULLS LAST", "_d DESC NULLS LAST"]
-                if desc
-                else ["_v ASC NULLS LAST", "_d ASC NULLS LAST"],
-            )
-            ranked = base.selectExpr(
-                bq, *gbq, "_v", "_d", f"row_number() OVER ({wo}) AS _rk"
-            )
-            # sort stored entries by the selection rank, not by the
-            # (v, d) struct: struct comparison orders NULL payloads
-            # smallest, which for asc contradicts the window's
-            # *_nulls_last payload order at value-tie keep boundaries
-            flat = ranked.groupBy(balias, *gb).agg(
-                F.expr("count(_v)").alias("_f_n"),
-                F.expr(
-                    f"sort_array(collect_list(CASE WHEN _rk <= {keep} "
-                    f"AND _v IS NOT NULL THEN named_struct("
-                    f"'r', _rk, 'v', _v, 'd', _d) END), true)"
-                ).alias("_f_ents"),
-            )
-            return flat.selectExpr(
-                bq,
-                *gbq,
-                "CASE WHEN _f_n > 0 THEN named_struct('n', _f_n, "
-                "'vals', transform(_f_ents, e -> e.v), "
-                f"'data', transform(_f_ents, e -> e.d)) END AS {_q(col)}",
-            )
-        base = raw.select(self._bucket_expr(raw), *gb, v.alias("_v"))
-        wo = _over(
-            [balias, *gb],
-            ["_v DESC NULLS LAST" if desc else "_v ASC NULLS LAST"],
-        )
-        ranked = base.selectExpr(
-            bq, *gbq, "_v", f"row_number() OVER ({wo}) AS _rk"
-        )
-        flat = ranked.groupBy(balias, *gb).agg(
-            F.expr("count(_v)").alias("_f_n"),
-            F.expr(
-                f"sort_array(collect_list(CASE WHEN _rk <= {keep} "
-                f"AND _v IS NOT NULL THEN _v END), "
-                f"{str(not desc).lower()})"
-            ).alias("_f_vals"),
-        )
-        return flat.selectExpr(
-            bq,
-            *gbq,
-            "CASE WHEN _f_n > 0 THEN named_struct('n', _f_n, "
-            f"'vals', _f_vals) END AS {_q(col)}",
-        )
-
-    def _merge_maxn_states(
-        self, raw: DataFrame, col: str, spec: dict
-    ) -> DataFrame:
-        """Child candidate list: the child's top-n of the union equals
-        the top-n of the concatenated parent lists — selected with a
-        CAPACITY-bounded rank window over the exploded candidates (the
-        same ``_rk <= keep`` trick as :meth:`_merge_freq_states`), never
-        a parents-per-child × n flatten-collect, so the state build is
-        ≤ n values per group at any grain ratio. Equal values are
-        interchangeable, so the rank tie-order never changes the kept
-        multiset."""
-        from pyspark.sql import Window
-
-        keep = int(spec.get("n", 5))
-        desc = bool(spec.get("desc", True))
-        has_by = spec.get("by") is not None
-        d, balias, gb = self._rollup_frame(raw, spec["rollup_of"])
-        st = F.col("_st")
-        totals = d.groupBy(balias, *gb).agg(
-            F.count("_st").alias("_f_nn"),
-            F.sum(st["n"]).alias("_f_n"),
-        )
-        if has_by:
-            ex = d.select(
-                balias,
-                *gb,
-                F.explode(
-                    F.arrays_zip(
-                        st["vals"].alias("v"), st["data"].alias("d")
-                    )
-                ).alias("_e"),
-            ).select(
-                balias,
-                *gb,
-                F.col("_e.v").alias("_v"),
-                F.col("_e.d").alias("_d"),
-            )
-            order = (
-                [F.col("_v").desc(), F.col("_d").desc_nulls_last()]
-                if desc
-                else [F.col("_v").asc(), F.col("_d").asc_nulls_last()]
-            )
-            w = Window.partitionBy(balias, *gb).orderBy(*order)
-            # rank-order the stored entries (see _maxn_state: struct
-            # sort breaks *_nulls_last payload order on asc ties)
-            cand = (
-                ex.withColumn("_rk", F.row_number().over(w))
-                .filter(F.col("_rk") <= keep)
-                .groupBy(balias, *gb)
-                .agg(
-                    F.sort_array(
-                        F.collect_list(
-                            F.struct(
-                                F.col("_rk").alias("r"),
-                                F.col("_v").alias("v"),
-                                F.col("_d").alias("d"),
-                            )
-                        ),
-                        asc=True,
-                    ).alias("_f_ents")
-                )
-            )
-        else:
-            order = F.col("_v").desc() if desc else F.col("_v").asc()
-            w = Window.partitionBy(balias, *gb).orderBy(order)
-            cand = (
-                d.select(balias, *gb, F.explode(st["vals"]).alias("_v"))
-                .withColumn("_rk", F.row_number().over(w))
-                .filter(F.col("_rk") <= keep)
-                .groupBy(balias, *gb)
-                .agg(
-                    F.sort_array(
-                        F.collect_list("_v"), asc=not desc
-                    ).alias("_f_vals")
-                )
-            )
-        keys = [balias, *gb]
-        l, r = totals.alias("_ml"), cand.alias("_mr")
-        cond = None
-        for k in keys:
-            c = F.col(f"_ml.{k}").eqNullSafe(F.col(f"_mr.{k}"))
-            cond = c if cond is None else cond & c
-        if has_by:
-            j = l.join(r, cond, "left").select(
-                "_ml.*", F.col("_mr._f_ents").alias("_f_ents")
-            )
-            return j.select(
-                balias,
-                *gb,
-                F.when(
-                    (F.col("_f_nn") > 0) & (F.col("_f_n") > 0),
-                    F.struct(
-                        F.col("_f_n").alias("n"),
-                        F.expr("transform(_f_ents, e -> e.v)").alias(
-                            "vals"
-                        ),
-                        F.expr("transform(_f_ents, e -> e.d)").alias(
-                            "data"
-                        ),
-                    ),
-                ).alias(col),
-            )
-        j = l.join(r, cond, "left").select(
-            "_ml.*", F.col("_mr._f_vals").alias("_f_vals")
-        )
-        return j.select(
-            balias,
-            *gb,
-            F.when(
-                (F.col("_f_nn") > 0) & (F.col("_f_n") > 0),
-                F.struct(
-                    F.col("_f_n").alias("n"),
-                    F.col("_f_vals").alias("vals"),
-                ),
-            ).alias(col),
-        )
+        return self._serve(FREQ, freq_col, grain, group_by, realtime, start, end, finalize)
 
     def max_n_at_grain(
         self,
@@ -2975,22 +1237,8 @@ class ContinuousAggregate:
         Output: ``(bucket?, group…, value)`` rows, best-first —
         ``(bucket?, group…, value, data)`` for a ``max_n_by`` column
         (value ties ordered by payload in the list's direction)."""
-        from pyspark.sql import Window
-
-        specs = self.row.get("maxn_aggs") or {}
-        if maxn_col is None:
-            if len(specs) != 1:
-                raise ValueError(
-                    f"cagg {self.name!r} has {len(specs)} max_n "
-                    f"columns; pass maxn_col"
-                )
-            maxn_col = next(iter(specs))
-        if maxn_col not in specs:
-            raise KeyError(f"no max_n column {maxn_col!r}")
-        spec = specs[maxn_col]
-        keep = int(spec.get("n", 5))
-        desc = bool(spec.get("desc", True))
-        has_by = spec.get("by") is not None
+        maxn_col, spec = self._resolve(MAXN, maxn_col)
+        keep, desc, has_by = _maxn_params(spec)
         if n is None:
             n = keep
         if n > keep:
@@ -2999,51 +1247,12 @@ class ContinuousAggregate:
                 f"list length ({keep}) — recreate the cagg with a "
                 f"larger n"
             )
-        d, keys_gb, bucket, grain_all = self._partial_frame_for_col(
-            maxn_col, grain, group_by, realtime, start, end
-        )
-        tcols = [] if grain_all else ["_tgt"]
-        if has_by:
-            ex = d.select(
-                *tcols,
-                *keys_gb,
-                F.explode(
-                    F.arrays_zip(
-                        F.col("_st")["vals"].alias("v"),
-                        F.col("_st")["data"].alias("d"),
-                    )
-                ).alias("_e"),
-            ).select(
-                *tcols,
-                *keys_gb,
-                F.col("_e.v").alias("value"),
-                F.col("_e.d").alias("data"),
-            )
-            order = (
-                [F.col("value").desc(), F.col("data").desc_nulls_last()]
-                if desc
-                else [F.col("value").asc(), F.col("data").asc_nulls_last()]
-            )
-        else:
-            ex = d.select(
-                *tcols,
-                *keys_gb,
-                F.explode(F.col("_st")["vals"]).alias("value"),
-            )
-            order = [
-                F.col("value").desc() if desc else F.col("value").asc()
-            ]
-        if not tcols and not keys_gb:
-            return ex.orderBy(*order).limit(n)
-        w = Window.partitionBy(*tcols, *keys_gb).orderBy(*order)
-        out = (
-            ex.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") <= n)
-            .drop("_rk")
-        )
-        if grain_all:
-            return out
-        return out.withColumnRenamed("_tgt", bucket)
+        order = _maxn_order(desc, has_by, "value", "data")
+
+        def finalize(m, keys, spec):
+            return _top(MAXN.finalize(m, keys, spec), keys, order, n).drop("_rk")
+
+        return self._serve(MAXN, maxn_col, grain, group_by, realtime, start, end, finalize)
 
     def interpolated_duration_in_at_grain(
         self,
@@ -3073,54 +1282,9 @@ class ContinuousAggregate:
         ``grain`` must be a multiple of the cagg's bucket width.
 
         Output: ``(bucket, group…, duration_us)``."""
-        from .functions.time import parse_interval
-
-        sas = self.row.get("state_aggs") or {}
-        if not sas:
-            raise ValueError(
-                f"cagg {self.name!r} has no state_agg columns"
-            )
-        if state_col is None:
-            if len(sas) > 1:
-                raise ValueError(
-                    f"cagg {self.name!r} has several state_aggs "
-                    f"{sorted(sas)}; pass state_col"
-                )
-            state_col = next(iter(sas))
-        if state_col not in sas:
-            raise KeyError(f"no state_agg column {state_col!r}")
-        if grain is None:
-            raise ValueError(
-                "interpolated_duration_in_at_grain needs an explicit "
-                "grain"
-            )
-        if self.row["time_is_timestamp"]:
-            iv = parse_interval(grain)
-            if iv.months:
-                raise ValueError("needs a fixed-width grain")
-            width = iv.us
-        else:
-            width = int(grain)
-        pw = int(self.row["bucket_width_us"])
-        if (
-            self.row.get("bucket_width_months")
-            or width <= 0
-            or width % pw != 0
-        ):
-            raise ValueError(
-                "grain must be a positive integer multiple of the "
-                "cagg's fixed bucket width (parent buckets must nest)"
-            )
-        gb = list(self.row["group_by"])
-        bucket = self.row["bucket_alias"]
-        df = self.read(realtime=realtime, only_cols=[state_col])
-        if self.row["time_is_timestamp"]:
-            src_us = F.unix_micros(F.col(bucket).cast("timestamp"))
-        else:
-            src_us = F.col(bucket).cast("long")
-        base = df.select(
-            *gb, src_us.alias("_src"), F.col(state_col).alias("_st")
-        ).filter(F.col("_st").isNotNull())
+        base, gb, width = self._interp_frame(
+            STATE_AGG, state_col, grain, realtime, "interpolated_duration_in_at_grain"
+        )
         # SQL-string expression build (round 17, see _over)
         gbq = [_q(g) for g in gb]
         wo = _over(gb, ["_src ASC"])
@@ -3168,127 +1332,8 @@ class ContinuousAggregate:
         out = pieces.groupBy(*gb, "_b").agg(
             F.expr("sum(_d)").alias("duration_us")
         )
-        if self.row["time_is_timestamp"]:
-            bcol = F.timestamp_micros(F.col("_b")).alias(bucket)
-        else:
-            bcol = F.col("_b").alias(bucket)
-        return out.select(bcol, *gb, "duration_us")
 
-    # ------------------------------------------ heartbeat partials
-    def _heartbeat_state(
-        self, raw: DataFrame, col: str, spec: dict
-    ) -> DataFrame:
-        """Mergeable HEARTBEAT (liveness) partial per (bucket, group):
-        ``struct(n, first_us, last_us, live_us, ranges)`` — every
-        heartbeat asserts liveness for ``liveness`` after it; live_us
-        is the union length of those intervals over the bucket's own
-        heartbeats with the LAST beat contributing its full interval
-        (toolkit ``heartbeat_agg``; functions/state.py:heartbeat_agg
-        is the raw-scan analog). Merging two adjacent partials needs
-        only one boundary correction — the earlier partial's last beat
-        contributed L but should contribute ``min(gap, L)`` — so
-        :meth:`heartbeat_at_grain` serves exact liveness rollups at
-        any grain, the ops analog of the counter family."""
-        if spec.get("rollup_of"):
-            return self._merge_heartbeat_states(raw, col, spec)
-        liv = int(spec["liveness_us"])
-        balias = self.row["bucket_alias"]
-        gb = list(self.row["group_by"])
-        tb = list(spec.get("tiebreak") or ())
-        us = self._raw_time_us(raw)
-        base = raw.select(
-            self._bucket_expr(raw),
-            *gb,
-            *[F.col(c).alias(f"_tb{i}") for i, c in enumerate(tb)],
-            us.alias("_us"),
-        )
-        # SQL-string expression build (round 17, see _over)
-        bq, gbq = _q(balias), [_q(g) for g in gb]
-        tbs = [f"_tb{i}" for i in range(len(tb))]
-        wo = _over(
-            [balias, *gb], ["_us ASC", *[f"{t} ASC" for t in tbs]]
-        )
-        gap = f"(lead(_us) OVER ({wo}) - _us)"
-        stepped = base.selectExpr(
-            bq,
-            *gbq,
-            "_us",
-            f"CASE WHEN {gap} IS NULL THEN {liv} "
-            f"ELSE least({gap}, {liv}) END AS _live",
-            f"CAST(({gap} > {liv}) AS BIGINT) AS _brk",
-        )
-        flat = stepped.groupBy(balias, *gb).agg(
-            F.expr("count(1)").alias("_f_n"),
-            F.expr("min(_us)").alias("_f_first"),
-            F.expr("max(_us)").alias("_f_last"),
-            F.expr("sum(_live)").alias("_f_live"),
-            F.expr("1 + coalesce(sum(_brk), 0)").alias("_f_ranges"),
-        )
-        return flat.selectExpr(
-            bq,
-            *gbq,
-            "CASE WHEN _f_n > 0 THEN named_struct("
-            "'n', _f_n, 'first_us', _f_first, 'last_us', _f_last, "
-            f"'live_us', _f_live, 'ranges', _f_ranges) END AS {_q(col)}",
-        )
-
-    def _merge_heartbeat_states(
-        self, raw: DataFrame, col: str, spec: dict
-    ) -> DataFrame:
-        """Child heartbeat state: ordered merge of the parent's states
-        with one boundary correction per adjacent pair."""
-        from pyspark.sql import Window
-
-        liv = int(spec["liveness_us"])
-        d, balias, gb = self._rollup_frame(raw, spec["rollup_of"])
-        st = F.col("_st")
-        w = Window.partitionBy(balias, *gb).orderBy(F.col("_src").asc())
-        # last NON-NULL preceding state, not plain lag: _rollup_frame
-        # keeps NULL parent states by contract, and a NULL row between
-        # two real partials must not suppress their boundary correction
-        # (the _merge_counter_states discipline)
-        wp = w.rowsBetween(Window.unboundedPreceding, -1)
-        prev_last = F.last(
-            F.when(st.isNotNull(), st["last_us"]), ignorenulls=True
-        ).over(wp)
-        gap = st["first_us"] - prev_last
-        # the earlier partial's last beat contributed the full L; in
-        # the merged sequence it should contribute min(gap, L)
-        corr = F.when(
-            prev_last.isNotNull(), F.lit(liv) - F.least(gap, F.lit(liv))
-        )
-        joined = F.when(
-            prev_last.isNotNull() & (gap <= liv), F.lit(1)
-        ).otherwise(F.lit(0))
-        dd = d.select(
-            balias,
-            *gb,
-            st.alias("_st"),
-            F.coalesce(corr, F.lit(0)).alias("_corr"),
-            joined.alias("_join"),
-        )
-        flat = dd.groupBy(balias, *gb).agg(
-            F.count("_st").alias("_f_nn"),
-            F.sum(st["n"]).alias("_f_n"),
-            F.min(st["first_us"]).alias("_f_first"),
-            F.max(st["last_us"]).alias("_f_last"),
-            (F.sum(st["live_us"]) - F.sum("_corr")).alias("_f_live"),
-            (F.sum(st["ranges"]) - F.sum("_join")).alias("_f_ranges"),
-        )
-        return flat.select(
-            balias,
-            *gb,
-            F.when(
-                F.col("_f_nn") > 0,
-                F.struct(
-                    F.col("_f_n").alias("n"),
-                    F.col("_f_first").alias("first_us"),
-                    F.col("_f_last").alias("last_us"),
-                    F.col("_f_live").alias("live_us"),
-                    F.col("_f_ranges").alias("ranges"),
-                ),
-            ).alias(col),
-        )
+        return self._target_buckets(out, gb, "duration_us")
 
     def heartbeat_at_grain(
         self,
@@ -3325,52 +1370,7 @@ class ContinuousAggregate:
         :meth:`heartbeat_interpolated_at_grain`, which clips each
         bucket to its own span and credits cross-edge tails to the
         next bucket."""
-        self._require_full_group_by(group_by, "heartbeat")
-        specs = self.row.get("heartbeat_aggs") or {}
-        if hb_col is None:
-            if len(specs) != 1:
-                raise ValueError(
-                    f"cagg {self.name!r} has {len(specs)} heartbeat "
-                    f"columns; pass hb_col"
-                )
-            hb_col = next(iter(specs))
-        if hb_col not in specs:
-            raise KeyError(f"no heartbeat column {hb_col!r}")
-        liv = int(specs[hb_col]["liveness_us"])
-        d, keys_gb, bucket, grain_all = self._partial_frame_for_col(
-            hb_col, grain, group_by, realtime, start, end
-        )
-        tcols = [] if grain_all else ["_tgt"]
-        # SQL-string expression build (round 17, see _over)
-        gbq = [_q(g) for g in keys_gb]
-        wo = _over([*tcols, *keys_gb], ["_src ASC"])
-        prev_last = f"lag(_st.last_us) OVER ({wo})"
-        gap = f"(_st.first_us - {prev_last})"
-        dd = d.selectExpr(
-            *tcols,
-            *gbq,
-            "_st",
-            f"coalesce(CASE WHEN {prev_last} IS NOT NULL THEN "
-            f"{liv} - least({gap}, {liv}) END, 0) AS _corr",
-            f"CASE WHEN {prev_last} IS NOT NULL AND {gap} <= {liv} "
-            f"THEN 1 ELSE 0 END AS _join",
-        )
-        live = "(sum(_st.live_us) - sum(_corr))"
-        out = dd.groupBy(*tcols, *keys_gb).agg(
-            F.expr("sum(_st.n)").alias("n"),
-            F.expr(live).alias("live_us"),
-            F.expr(
-                f"max(_st.last_us) + {liv} - min(_st.first_us) - {live}"
-            ).alias("dead_us"),
-            F.expr("sum(_st.ranges) - sum(_join)").alias(
-                "num_live_ranges"
-            ),
-            F.expr("min(_st.first_us)").alias("first_us"),
-            F.expr("max(_st.last_us)").alias("last_us"),
-        )
-        if grain_all:
-            return out
-        return out.withColumnRenamed("_tgt", bucket)
+        return self._serve(HEARTBEAT, hb_col, grain, group_by, realtime, start, end)
 
     def heartbeat_interpolated_at_grain(
         self,
@@ -3405,17 +1405,8 @@ class ContinuousAggregate:
         from .functions.time import parse_interval
         from pyspark.sql import Window
 
-        specs = self.row.get("heartbeat_aggs") or {}
-        if hb_col is None:
-            if len(specs) != 1:
-                raise ValueError(
-                    f"cagg {self.name!r} has {len(specs)} heartbeat "
-                    f"columns; pass hb_col"
-                )
-            hb_col = next(iter(specs))
-        if hb_col not in specs:
-            raise KeyError(f"no heartbeat column {hb_col!r}")
-        liv = int(specs[hb_col]["liveness_us"])
+        _col, spec = self._resolve(HEARTBEAT, hb_col)
+        liv = int(spec["liveness_us"])
         if grain == "all":
             raise ValueError(
                 "interpolated heartbeat needs a fixed-width grain "
@@ -3474,40 +1465,6 @@ class ContinuousAggregate:
             ranges2.alias("num_live_ranges"),
         )
 
-    # ------------------------------------------ t-digest partials
-    def _tdigest_state(self, raw: DataFrame, col: str, spec: dict) -> DataFrame:
-        """Mergeable T-DIGEST partial per (bucket, group):
-        ``struct(n, min, max, means, weights)`` — ≤ ``delta`` centroids
-        binned by the k1 scale function, singletons (lossless) while
-        the bucket holds ≤ ``delta`` values (toolkit ``tdigest``;
-        functions/tdigest.py has the algorithm notes and the raw-scan
-        analog). States merge order-independently (global re-sort +
-        re-bin), so :meth:`tdigest_quantiles_at_grain` serves
-        percentiles at any coarser grain with free regrouping — the
-        rank-error sibling of the DDSketch family."""
-        from .functions.tdigest import build_states, merge_states
-
-        delta = int(spec.get("delta", 200))
-        balias = self.row["bucket_alias"]
-        gb = list(self.row["group_by"])
-        if spec.get("rollup_of"):
-            d, balias, gb = self._rollup_frame(raw, spec["rollup_of"])
-            return merge_states(
-                d.select(balias, *gb, F.col("_st").alias("_tdp")),
-                [balias, *gb],
-                "_tdp",
-                delta,
-                col,
-            )
-        return build_states(
-            raw.select(self._bucket_expr(raw), *gb,
-                       F.expr(spec["value"]).alias("_tdv")),
-            [balias, *gb],
-            F.col("_tdv"),
-            delta,
-            col,
-        )
-
     def tdigest_quantiles_at_grain(
         self,
         qs: Sequence[float],
@@ -3528,41 +1485,12 @@ class ContinuousAggregate:
         contract; rank-error ≲ π/(2·delta) otherwise.
 
         Output: ``(bucket?, group…, n, min_val, max_val, p50, …)``."""
-        from .functions.tdigest import merge_states, tdigest_quantiles
+        from .functions.tdigest import tdigest_quantiles
 
-        specs = self.row.get("tdigest_aggs") or {}
-        if not specs:
-            raise ValueError(
-                f"cagg {self.name!r} has no tdigest columns (pass "
-                f"tdigest_aggs= to create_cagg)"
-            )
-        if td_col is None:
-            if len(specs) > 1:
-                raise ValueError(
-                    f"cagg {self.name!r} has several tdigests "
-                    f"{sorted(specs)}; pass td_col"
-                )
-            td_col = next(iter(specs))
-        if td_col not in specs:
-            raise KeyError(f"no tdigest column {td_col!r}")
-        delta = int(specs[td_col].get("delta", 200))
-        d, keys_gb, bucket, grain_all = self._partial_frame_for_col(
-            td_col, grain, group_by, realtime, start, end
-        )
-        tcols = [] if grain_all else ["_tgt"]
-        merged = merge_states(
-            d.select(*tcols, *keys_gb, "_st"),
-            [*tcols, *keys_gb],
-            "_st",
-            delta,
-            "_td",
-        )
-        out = tdigest_quantiles(
-            merged, list(qs), by=[*tcols, *keys_gb], state_col="_td"
-        )
-        if grain_all:
-            return out
-        return out.withColumnRenamed("_tgt", bucket)
+        def finalize(m, keys, spec):
+            return tdigest_quantiles(m, list(qs), by=keys, state_col="_td")
+
+        return self._serve(TDIGEST, td_col, grain, group_by, realtime, start, end, finalize)
 
     def tdigest_summary_at_grain(
         self,
@@ -3599,524 +1527,12 @@ class ContinuousAggregate:
         :meth:`tdigest_quantiles_at_grain`. Exact while the merged
         digest stays lossless (the oracle-gate contract); standard
         centroid-midpoint CDF interpolation otherwise."""
-        from .functions.tdigest import merge_states, tdigest_rank
+        from .functions.tdigest import tdigest_rank
 
-        specs = self.row.get("tdigest_aggs") or {}
-        if not specs:
-            raise ValueError(
-                f"cagg {self.name!r} has no tdigest columns (pass "
-                f"tdigest_aggs= to create_cagg)"
-            )
-        if td_col is None:
-            if len(specs) > 1:
-                raise ValueError(
-                    f"cagg {self.name!r} has several tdigests "
-                    f"{sorted(specs)}; pass td_col"
-                )
-            td_col = next(iter(specs))
-        if td_col not in specs:
-            raise KeyError(f"no tdigest column {td_col!r}")
-        delta = int(specs[td_col].get("delta", 200))
-        d, keys_gb, bucket, grain_all = self._partial_frame_for_col(
-            td_col, grain, group_by, realtime, start, end
-        )
-        tcols = [] if grain_all else ["_tgt"]
-        merged = merge_states(
-            d.select(*tcols, *keys_gb, "_st"),
-            [*tcols, *keys_gb],
-            "_st",
-            delta,
-            "_td",
-        )
-        res = tdigest_rank(
-            merged, value, by=[*tcols, *keys_gb], state_col="_td", out=out
-        )
-        if grain_all:
-            return res
-        return res.withColumnRenamed("_tgt", bucket)
+        def finalize(m, keys, spec):
+            return tdigest_rank(m, value, by=keys, state_col="_td", out=out)
 
-    # --------------------------- hierarchical state merges (rollup_of)
-    def _rollup_frame(self, raw: DataFrame, src: str):
-        """(child-bucket, group…, _src, _st) over the PARENT cagg's
-        stored states — the input of every hierarchical merge. ``_src``
-        is the parent bucket in internal µs (the ordering key; parent
-        buckets partition time disjointly). NULL parent states are KEPT
-        and masked downstream so an all-NULL child group still gets a
-        row with a NULL state (strict semantics, like the raw
-        builders)."""
-        balias = self.row["bucket_alias"]
-        gb = list(self.row["group_by"])
-        return (
-            raw.select(
-                self._bucket_expr(raw),
-                *gb,
-                self._raw_time_us(raw).alias("_src"),
-                F.col(src).alias("_st"),
-            ),
-            balias,
-            gb,
-        )
-
-    def _merge_counter_states(
-        self, raw: DataFrame, col: str, src: str
-    ) -> DataFrame:
-        """Child counter state = ordered merge of the parent's states:
-        each adjacent non-null pair contributes ONE reset-adjusted
-        boundary step (the :meth:`counter_at_grain` math, emitted as a
-        STATE struct so the child can itself be rolled up / served at
-        any grain)."""
-        from pyspark.sql import Window
-
-        d, balias, gb = self._rollup_frame(raw, src)
-        st = F.col("_st")
-        w = Window.partitionBy(balias, *gb).orderBy(F.col("_src").asc())
-        wp = w.rowsBetween(Window.unboundedPreceding, -1)
-        prev_last = F.last(
-            F.when(st.isNotNull(), st["last_val"]), ignorenulls=True
-        ).over(wp)
-        bstep = st["first_val"] - prev_last
-        binc = (
-            F.when(st.isNull(), F.lit(None).cast("double"))
-            .when(prev_last.isNull(), F.lit(0.0))
-            .when(bstep < 0, st["first_val"])
-            .otherwise(bstep)
-        )
-        d = d.select(
-            balias,
-            *gb,
-            "_st",
-            binc.alias("_binc"),
-            F.when(st.isNotNull(), (bstep < 0).cast("int")).alias(
-                "_breset"
-            ),
-            F.when(
-                st.isNotNull() & prev_last.isNotNull(),
-                (st["first_val"] != prev_last).cast("int"),
-            ).alias("_bchange"),
-            F.when(st.isNotNull(), F.col("_src")).alias("_k"),
-        )
-        flat = d.groupBy(balias, *gb).agg(
-            F.count("_st").alias("_f_nn"),
-            F.sum(st["n"]).alias("_f_n"),
-            F.min(st["first_us"]).alias("_f_first_us"),
-            F.max(st["last_us"]).alias("_f_last_us"),
-            F.min_by(st["first_val"], F.col("_k")).alias("_f_first_val"),
-            F.max_by(st["last_val"], F.col("_k")).alias("_f_last_val"),
-            (
-                F.sum(st["delta"])
-                + F.coalesce(F.sum("_binc"), F.lit(0.0))
-            ).alias("_f_delta"),
-            (
-                F.sum(st["num_resets"])
-                + F.coalesce(F.sum("_breset"), F.lit(0))
-            ).alias("_f_resets"),
-            (
-                (
-                    F.sum(st["num_changes"])
-                    + F.coalesce(F.sum("_bchange"), F.lit(0))
-                )
-                if _struct_has_field(d, "_st", "num_changes")
-                else F.lit(None).cast("long")
-            ).alias("_f_changes"),
-        )
-        return flat.select(
-            balias,
-            *gb,
-            F.when(
-                F.col("_f_nn") > 0,
-                F.struct(
-                    F.col("_f_n").alias("n"),
-                    F.col("_f_first_us").alias("first_us"),
-                    F.col("_f_last_us").alias("last_us"),
-                    F.col("_f_first_val").alias("first_val"),
-                    F.col("_f_last_val").alias("last_val"),
-                    F.col("_f_delta").alias("delta"),
-                    F.col("_f_resets").alias("num_resets"),
-                    F.col("_f_changes").alias("num_changes"),
-                ),
-            ).alias(col),
-        )
-
-    def _merge_gauge_states(
-        self, raw: DataFrame, col: str, src: str
-    ) -> DataFrame:
-        """Child gauge state: bookends merge by earliest/latest parent;
-        the merged last step falls back to the boundary step into the
-        last parent when that parent holds a single sample — exactly
-        :meth:`gauge_at_grain`'s candidates, stored as a state."""
-        from pyspark.sql import Window
-
-        d, balias, gb = self._rollup_frame(raw, src)
-        st = F.col("_st")
-        w = Window.partitionBy(balias, *gb).orderBy(F.col("_src").asc())
-        wp = w.rowsBetween(Window.unboundedPreceding, -1)
-        prev_last_val = F.last(
-            F.when(st.isNotNull(), st["last_val"]), ignorenulls=True
-        ).over(wp)
-        prev_last_us = F.last(
-            F.when(st.isNotNull(), st["last_us"]), ignorenulls=True
-        ).over(wp)
-        cand_step = F.coalesce(
-            st["last_step"], st["first_val"] - prev_last_val
-        )
-        cand_prev = F.coalesce(st["last_prev_us"], prev_last_us)
-        has_changes = _struct_has_field(d, "_st", "num_changes")
-        d = d.select(
-            balias,
-            *gb,
-            "_st",
-            cand_step.alias("_cs"),
-            cand_prev.alias("_cp"),
-            F.when(
-                st.isNotNull() & prev_last_val.isNotNull(),
-                (st["first_val"] != prev_last_val).cast("int"),
-            ).alias("_bchange"),
-            F.when(st.isNotNull(), F.col("_src")).alias("_k"),
-        )
-        flat = d.groupBy(balias, *gb).agg(
-            F.count("_st").alias("_f_nn"),
-            F.sum(st["n"]).alias("_f_n"),
-            F.min(st["first_us"]).alias("_f_first_us"),
-            F.max(st["last_us"]).alias("_f_last_us"),
-            F.min_by(st["first_val"], F.col("_k")).alias("_f_first_val"),
-            F.max_by(st["last_val"], F.col("_k")).alias("_f_last_val"),
-            F.max_by(F.col("_cs"), F.col("_k")).alias("_f_last_step"),
-            F.max_by(F.col("_cp"), F.col("_k")).alias("_f_last_prev"),
-            (
-                (
-                    F.sum(st["num_changes"])
-                    + F.coalesce(F.sum("_bchange"), F.lit(0))
-                )
-                if has_changes
-                else F.lit(None).cast("long")
-            ).alias("_f_changes"),
-        )
-        return flat.select(
-            balias,
-            *gb,
-            F.when(
-                F.col("_f_nn") > 0,
-                F.struct(
-                    F.col("_f_n").alias("n"),
-                    F.col("_f_first_us").alias("first_us"),
-                    F.col("_f_last_us").alias("last_us"),
-                    F.col("_f_first_val").alias("first_val"),
-                    F.col("_f_last_val").alias("last_val"),
-                    F.col("_f_last_step").alias("last_step"),
-                    F.col("_f_last_prev").alias("last_prev_us"),
-                    F.col("_f_changes").alias("num_changes"),
-                ),
-            ).alias(col),
-        )
-
-    def _merge_stats_states(
-        self, raw: DataFrame, col: str, src: str, two_d: bool = False
-    ) -> DataFrame:
-        """Child stats state: fieldwise add/min/max — moments merge
-        commutatively (the classical parallel decomposition). 2-D
-        comoments merge by the same fieldwise sums."""
-        d, balias, gb = self._rollup_frame(raw, src)
-        st = F.col("_st")
-        if two_d:
-            flat = d.groupBy(balias, *gb).agg(
-                F.count("_st").alias("_f_nn"),
-                F.sum(st["n"]).alias("_f_n"),
-                F.sum(st["sx"]).alias("_f_sx"),
-                F.sum(st["sy"]).alias("_f_sy"),
-                F.sum(st["sxx"]).alias("_f_sxx"),
-                F.sum(st["syy"]).alias("_f_syy"),
-                F.sum(st["sxy"]).alias("_f_sxy"),
-            )
-            return flat.select(
-                balias,
-                *gb,
-                F.when(
-                    F.col("_f_nn") > 0,
-                    F.struct(
-                        F.col("_f_n").alias("n"),
-                        F.col("_f_sx").alias("sx"),
-                        F.col("_f_sy").alias("sy"),
-                        F.col("_f_sxx").alias("sxx"),
-                        F.col("_f_syy").alias("syy"),
-                        F.col("_f_sxy").alias("sxy"),
-                    ),
-                ).alias(col),
-            )
-        flat = d.groupBy(balias, *gb).agg(
-            F.count("_st").alias("_f_nn"),
-            F.sum(st["n"]).alias("_f_n"),
-            F.sum(st["s"]).alias("_f_s"),
-            F.sum(st["s2"]).alias("_f_s2"),
-            F.min(st["mn"]).alias("_f_mn"),
-            F.max(st["mx"]).alias("_f_mx"),
-        )
-        return flat.select(
-            balias,
-            *gb,
-            F.when(
-                F.col("_f_nn") > 0,
-                F.struct(
-                    F.col("_f_n").alias("n"),
-                    F.col("_f_s").alias("s"),
-                    F.col("_f_s2").alias("s2"),
-                    F.col("_f_mn").alias("mn"),
-                    F.col("_f_mx").alias("mx"),
-                ),
-            ).alias(col),
-        )
-
-    def _merge_timeweight_states(
-        self, raw: DataFrame, col: str, src: str, method: str
-    ) -> DataFrame:
-        """Child time-weight state: Σ parent integrals + one
-        interpolated boundary segment per adjacent non-null pair (the
-        :meth:`time_weighted_at_grain` merge, stored as a state)."""
-        from pyspark.sql import Window
-
-        d, balias, gb = self._rollup_frame(raw, src)
-        st = F.col("_st")
-        w = Window.partitionBy(balias, *gb).orderBy(F.col("_src").asc())
-        wp = w.rowsBetween(Window.unboundedPreceding, -1)
-        prev_last_val = F.last(
-            F.when(st.isNotNull(), st["last_val"]), ignorenulls=True
-        ).over(wp)
-        prev_last_us = F.last(
-            F.when(st.isNotNull(), st["last_us"]), ignorenulls=True
-        ).over(wp)
-        bdt = (st["first_us"] - prev_last_us).cast("double")
-        if method == "linear":
-            bseg = (prev_last_val + st["first_val"]) / F.lit(2.0) * bdt
-        else:
-            bseg = prev_last_val * bdt
-        d = d.select(
-            balias,
-            *gb,
-            "_st",
-            F.when(st.isNotNull(), F.coalesce(bseg, F.lit(0.0))).alias(
-                "_bseg"
-            ),
-            F.when(st.isNotNull(), F.col("_src")).alias("_k"),
-        )
-        flat = d.groupBy(balias, *gb).agg(
-            F.count("_st").alias("_f_nn"),
-            F.sum(st["n"]).alias("_f_n"),
-            F.min(st["first_us"]).alias("_f_first_us"),
-            F.max(st["last_us"]).alias("_f_last_us"),
-            F.min_by(st["first_val"], F.col("_k")).alias("_f_first_val"),
-            F.max_by(st["last_val"], F.col("_k")).alias("_f_last_val"),
-            (
-                F.sum(st["integral"])
-                + F.coalesce(F.sum("_bseg"), F.lit(0.0))
-            ).alias("_f_integral"),
-        )
-        return flat.select(
-            balias,
-            *gb,
-            F.when(
-                F.col("_f_nn") > 0,
-                F.struct(
-                    F.col("_f_n").alias("n"),
-                    F.col("_f_first_us").alias("first_us"),
-                    F.col("_f_last_us").alias("last_us"),
-                    F.col("_f_first_val").alias("first_val"),
-                    F.col("_f_last_val").alias("last_val"),
-                    F.col("_f_integral").alias("integral"),
-                ),
-            ).alias(col),
-        )
-
-    def _merge_candlestick_states(
-        self, raw: DataFrame, col: str, src: str
-    ) -> DataFrame:
-        """Child OHLC state: open/close by earliest/latest parent
-        sample time (unique within a child bucket — parents partition
-        time), the rest fieldwise."""
-        d, balias, gb = self._rollup_frame(raw, src)
-        st = F.col("_st")
-        flat = d.groupBy(balias, *gb).agg(
-            F.count("_st").alias("_f_nn"),
-            F.sum(st["n"]).alias("_f_n"),
-            F.min(st["first_us"]).alias("_f_first_us"),
-            F.max(st["last_us"]).alias("_f_last_us"),
-            F.min_by(st["open"], st["first_us"]).alias("_f_open"),
-            F.max(st["high"]).alias("_f_high"),
-            F.min(st["low"]).alias("_f_low"),
-            F.max_by(st["close"], st["last_us"]).alias("_f_close"),
-            F.sum(st["volume"]).alias("_f_volume"),
-            F.sum(st["pv"]).alias("_f_pv"),
-        )
-        return flat.select(
-            balias,
-            *gb,
-            F.when(
-                F.col("_f_nn") > 0,
-                F.struct(
-                    F.col("_f_n").alias("n"),
-                    F.col("_f_first_us").alias("first_us"),
-                    F.col("_f_last_us").alias("last_us"),
-                    F.col("_f_open").alias("open"),
-                    F.col("_f_high").alias("high"),
-                    F.col("_f_low").alias("low"),
-                    F.col("_f_close").alias("close"),
-                    F.col("_f_volume").alias("volume"),
-                    F.col("_f_pv").alias("pv"),
-                ),
-            ).alias(col),
-        )
-
-    def _merge_stateagg_states(
-        self, raw: DataFrame, col: str, src: str
-    ) -> DataFrame:
-        """Child state-agg state: duration maps add per state, each
-        boundary gap lands on the earlier parent's last state, bookends
-        merge by earliest/latest parent — the
-        :meth:`state_durations_at_grain` math emitted as a state."""
-        from pyspark.sql import Window
-
-        d, balias, gb = self._rollup_frame(raw, src)
-        st = F.col("_st")
-        w = Window.partitionBy(balias, *gb).orderBy(F.col("_src").asc())
-        wp = w.rowsBetween(Window.unboundedPreceding, -1)
-        prev_last_us = F.last(
-            F.when(st.isNotNull(), st["last_us"]), ignorenulls=True
-        ).over(wp)
-        prev_last_state = F.last(
-            F.when(st.isNotNull(), st["last_state"]), ignorenulls=True
-        ).over(wp)
-        gap = st["first_us"] - prev_last_us
-        d = d.select(
-            balias,
-            *gb,
-            "_st",
-            F.when(st.isNotNull(), prev_last_state).alias("_bstate"),
-            F.when(st.isNotNull() & (gap > 0), gap).alias("_bgap"),
-            F.when(st.isNotNull(), F.col("_src")).alias("_k"),
-        )
-        per_state = d.select(
-            balias,
-            *gb,
-            F.explode_outer(st["durations"]).alias("_s", "_dn"),
-        ).select(
-            balias,
-            *gb,
-            "_s",
-            F.col("_dn")["d"].alias("_d"),
-            F.col("_dn")["n"].alias("_n"),
-        )
-        bnd = d.filter(
-            F.col("_bstate").isNotNull() & F.col("_bgap").isNotNull()
-        ).select(
-            balias,
-            *gb,
-            F.col("_bstate").alias("_s"),
-            F.col("_bgap").alias("_d"),
-            F.lit(0).cast("long").alias("_n"),
-        )
-        merged = (
-            per_state.unionByName(bnd)
-            .groupBy(balias, *gb, "_s")
-            .agg(F.sum("_d").alias("_d"), F.sum("_n").alias("_n"))
-        )
-        ent = F.when(
-            F.col("_s").isNotNull(),
-            F.struct(
-                F.col("_s"),
-                F.struct(
-                    F.col("_d").alias("d"), F.col("_n").alias("n")
-                ).alias("dn"),
-            ),
-        )
-        maps = merged.groupBy(balias, *gb).agg(
-            F.collect_list(ent).alias("_f_ents"),
-        )
-        books = d.groupBy(balias, *gb).agg(
-            F.count("_st").alias("_f_nn"),
-            F.sum(st["n"]).alias("_f_n"),
-            F.min(st["first_us"]).alias("_f_first_us"),
-            F.max(st["last_us"]).alias("_f_last_us"),
-            F.min_by(st["first_state"], F.col("_k")).alias(
-                "_f_first_state"
-            ),
-            F.max_by(st["last_state"], F.col("_k")).alias(
-                "_f_last_state"
-            ),
-        )
-        l, r = books.alias("_ml"), maps.alias("_mr")
-        cond = None
-        for k in [balias, *gb]:
-            c = F.col(f"_ml.{k}").eqNullSafe(F.col(f"_mr.{k}"))
-            cond = c if cond is None else cond & c
-        joined = l.join(r, cond).select("_ml.*", F.col("_mr._f_ents"))
-        return joined.select(
-            balias,
-            *gb,
-            F.when(
-                F.col("_f_nn") > 0,
-                F.struct(
-                    F.col("_f_n").alias("n"),
-                    F.col("_f_first_us").alias("first_us"),
-                    F.col("_f_last_us").alias("last_us"),
-                    F.col("_f_first_state").alias("first_state"),
-                    F.col("_f_last_state").alias("last_state"),
-                    F.map_from_entries(
-                        F.array_sort(F.col("_f_ents"))
-                    ).alias("durations"),
-                ),
-            ).alias(col),
-        )
-
-    def _require_full_group_by(self, group_by, kind: str) -> None:
-        """Counter/gauge partials are only mergeable WITHIN one series:
-        regrouping on a subset of the cagg's group columns would merge
-        partials from different series into one ordered-by-``_src``
-        window, making the boundary-step/lag math nondeterministic
-        (several partials share each parent bucket) and semantically
-        wrong. Sketch/stats/HLL partials are commutative states, so
-        their accessors keep free regrouping."""
-        if group_by is None:
-            return
-        missing = [c for c in self.row["group_by"] if c not in set(group_by)]
-        if missing:
-            raise ValueError(
-                f"{kind}_at_grain(group_by=...) must include every "
-                f"group column of cagg {self.name!r} (missing "
-                f"{missing}): {kind} partials are only mergeable "
-                f"within a single series"
-            )
-
-    def _partial_frame(
-        self,
-        kind: str,
-        col: Optional[str],
-        grain,
-        group_by,
-        realtime,
-        start,
-        end,
-    ):
-        """Shared serving scaffold for the partial-state accessors:
-        resolve the partial column, apply bucket-aligned bounds,
-        compute the target bucket, and return
-        ``(frame(_tgt, group…, _src, _st), group_cols, bucket_alias,
-        grain_is_all)``."""
-        d = self.row.get(kind) or {}
-        if not d:
-            raise ValueError(
-                f"cagg {self.name!r} has no {kind} columns (pass "
-                f"{kind}= to create_cagg)"
-            )
-        if col is None:
-            if len(d) > 1:
-                raise ValueError(
-                    f"cagg {self.name!r} has several {kind} "
-                    f"{sorted(d)}; pass the column name"
-                )
-            col = next(iter(d))
-        if col not in d:
-            raise KeyError(f"no {kind} column {col!r}")
-        return self._partial_frame_for_col(
-            col, grain, group_by, realtime, start, end
-        )
+        return self._serve(TDIGEST, td_col, grain, group_by, realtime, start, end, finalize)
 
     def distinct_at_grain(
         self,
@@ -4138,9 +1554,8 @@ class ContinuousAggregate:
             raise KeyError(
                 f"{hll_col!r} is not an aggs column of cagg {self.name!r}"
             )
-        # reuse the shared scaffold by treating the HLL aggs column as
-        # the partial payload
-        d, keys_gb, bucket, grain_all = self._partial_frame_for_col(
+        # the shared scaffold with the HLL aggs column as the partial payload
+        d, keys_gb, bucket, grain_all = self._partial_frame(
             hll_col, grain, group_by, realtime, start, end
         )
         tcols = [] if grain_all else ["_tgt"]
@@ -4150,67 +1565,6 @@ class ContinuousAggregate:
         if grain_all:
             return out_df
         return out_df.withColumnRenamed("_tgt", bucket)
-
-    def _partial_frame_for_col(
-        self, col: str, grain, group_by, realtime, start, end
-    ):
-        """:meth:`_partial_frame` body for an explicit column name (no
-        kind-dict resolution)."""
-        from .functions.time import time_bucket
-
-        bucket = self.row["bucket_alias"]
-        gb = list(self.row["group_by"] if group_by is None else group_by)
-        df = self.read(realtime=realtime, only_cols=[col])
-        if start is not None or end is not None:
-            bc = F.col(bucket)
-            if self.row["time_is_timestamp"]:
-                conv = lambda x: F.lit(x).cast("timestamp")  # noqa: E731
-            else:
-                conv = lambda x: F.lit(int(x))  # noqa: E731
-            if start is not None:
-                df = df.filter(bc >= conv(start))
-            if end is not None:
-                df = df.filter(bc < conv(end))
-        # strict rollup semantics: a NULL state (a group whose partial
-        # inputs were all NULL) is skipped at merge time, like the
-        # toolkit's strict rollup() aggregate. Filter AFTER the rename
-        # select — a filter on the raw state column between the mat
-        # read and the select trips Spark 4.1.2's RemoveRedundantAliases
-        # into an unresolved plan (same bug family as d42cb25).
-        if grain == "all":
-            # no constant target column: a literal group/partition key
-            # trips Catalyst's RemoveRedundantAliases into an unresolved
-            # plan (observed on the gauge accessor) and adds nothing
-            return (
-                df.select(
-                    *gb,
-                    F.col(bucket).alias("_src"),
-                    F.col(col).alias("_st"),
-                ).filter(F.col("_st").isNotNull()),
-                gb,
-                bucket,
-                True,
-            )
-        if grain is not None:
-            if not self.row["time_is_timestamp"]:
-                from .functions.time import time_bucket_int
-
-                tgt = time_bucket_int(int(grain), bucket)
-            else:
-                tgt = time_bucket(grain, bucket)
-        else:
-            tgt = F.col(bucket)
-        return (
-            df.select(
-                tgt.alias("_tgt"),
-                *gb,
-                F.col(bucket).alias("_src"),
-                F.col(col).alias("_st"),
-            ).filter(F.col("_st").isNotNull()),
-            gb,
-            bucket,
-            False,
-        )
 
     def set_materialized_only(self, flag: bool) -> None:
         """``ALTER MATERIALIZED VIEW .. SET (timescaledb.materialized_only
@@ -4665,13 +2019,13 @@ class ContinuousAggregate:
         """
         from .functions.ddsketch import ddsketch_quantiles
 
-        flat, keys, tmp, alpha = self._merged_sketch(
-            sketch_col, grain, group_by, realtime, start, end
+        def extract(flat, by, alpha):
+            return ddsketch_quantiles(flat, list(qs), by=by, alpha=alpha)
+
+        return self._serve(
+            SKETCH, sketch_col, grain, group_by, realtime, start, end,
+            self._sketch_finalize(extract),
         )
-        out = ddsketch_quantiles(flat, list(qs), by=tmp, alpha=alpha)
-        for k, t in zip(keys, tmp):
-            out = out.withColumnRenamed(t, k)
-        return out
 
     def rank(
         self,
@@ -4690,85 +2044,35 @@ class ContinuousAggregate:
         merge/grain/realtime rules as :meth:`quantiles`."""
         from .functions.ddsketch import ddsketch_rank
 
-        flat, keys, tmp, alpha = self._merged_sketch(
-            sketch_col, grain, group_by, realtime, start, end
+        def extract(flat, by, alpha):
+            return ddsketch_rank(flat, value, by=by, alpha=alpha, out=out)
+
+        return self._serve(
+            SKETCH, sketch_col, grain, group_by, realtime, start, end,
+            self._sketch_finalize(extract),
         )
-        res = ddsketch_rank(flat, value, by=tmp, alpha=alpha, out=out)
-        for k, t in zip(keys, tmp):
-            res = res.withColumnRenamed(t, k)
-        return res
 
-    def _merged_sketch(
-        self,
-        sketch_col: Optional[str],
-        grain: Optional[str],
-        group_by: Optional[Sequence[str]],
-        realtime: Optional[bool],
-        start=None,
-        end=None,
-    ):
-        """Shared state-merge for the sketch accessors: resolve the
-        sketch column, re-bucket to ``grain``, explode states →
-        (keys, sketch-bucket, cnt) and sum — output is keys × ~2k
-        bucket rows, never raw-sized. Keys are renamed internally: the
-        sketch frame contract reserves "bucket"/"cnt", and the cagg's
-        own bucket_alias defaults to "bucket" too."""
-        from .functions.time import time_bucket
+    @staticmethod
+    def _sketch_finalize(extract):
+        """finalize of the DDSketch accessors over the merged ``(keys…,
+        _sb, _cnt)`` bucket counts — keys × ~2k rows, never raw-sized.
+        Keys travel renamed: the sketch frame contract reserves
+        "bucket"/"cnt", and the cagg's own bucket_alias defaults to
+        "bucket" too."""
 
-        sketches = self.row.get("sketches") or {}
-        if not sketches:
-            raise ValueError(
-                f"cagg {self.name!r} has no sketch columns (pass "
-                f"sketches= to create_cagg)"
+        def finalize(m, keys, spec):
+            tmp = [f"_qk{i}" for i in range(len(keys))]
+            flat = m.select(
+                *[F.col(k).alias(t) for k, t in zip(keys, tmp)],
+                F.col("_sb").alias("bucket"),
+                F.col("_cnt").alias("cnt"),
             )
-        if sketch_col is None:
-            if len(sketches) > 1:
-                raise ValueError(
-                    f"cagg {self.name!r} has several sketches "
-                    f"{sorted(sketches)}; pass sketch_col"
-                )
-            sketch_col = next(iter(sketches))
-        if sketch_col not in sketches:
-            raise KeyError(f"no sketch column {sketch_col!r}")
-        alpha = float(sketches[sketch_col].get("alpha", 0.01))
-        bucket = self.row["bucket_alias"]
-        gb = list(self.row["group_by"] if group_by is None else group_by)
+            res = extract(flat, tmp, float(spec.get("alpha", 0.01)))
+            for k, t in zip(keys, tmp):
+                res = res.withColumnRenamed(t, k)
+            return res
 
-        df = self.read(realtime=realtime, only_cols=[sketch_col])
-        # serving bounds ("p95 of the last 7 days"): filter whole parent
-        # buckets BEFORE the merge — [start, end) on the bucket column,
-        # so the window is bucket-aligned like the reference's cagg
-        # range semantics
-        if start is not None or end is not None:
-            bc = F.col(bucket)
-            if self.row["time_is_timestamp"]:
-                conv = lambda v: F.lit(v).cast("timestamp")  # noqa: E731
-            else:
-                conv = lambda v: F.lit(int(v))  # noqa: E731
-            if start is not None:
-                df = df.filter(bc >= conv(start))
-            if end is not None:
-                df = df.filter(bc < conv(end))
-        if grain == "all":
-            keys = gb
-        elif grain is not None:
-            if not self.row["time_is_timestamp"]:
-                from .functions.time import time_bucket_int
-
-                df = df.withColumn(
-                    bucket, time_bucket_int(int(grain), bucket)
-                )
-            else:
-                df = df.withColumn(bucket, time_bucket(grain, bucket))
-            keys = [bucket, *gb]
-        else:
-            keys = [bucket, *gb]
-        tmp = [f"_qk{i}" for i in range(len(keys))]
-        flat = df.select(
-            *[F.col(k).alias(t) for k, t in zip(keys, tmp)],
-            F.explode(F.col(sketch_col)).alias("bucket", "cnt"),
-        ).groupBy(*tmp, "bucket").agg(F.sum("cnt").alias("cnt"))
-        return flat, keys, tmp, alpha
+        return finalize
 
     def drop(self, keep_jobs: bool = False) -> None:
         """``DROP MATERIALIZED VIEW`` teardown. Refuses while a
@@ -4868,13 +2172,7 @@ class ContinuousAggregate:
             join=self.row.get("join"),
             window_fns=self.row.get("window_fns"),
             enable_window_functions=bool(self.row.get("window_fns")),
-            sketches=self.row.get("sketches"),
-            counters=self.row.get("counters"),
-            gauges=self.row.get("gauges"),
-            stats_aggs=self.row.get("stats_aggs"),
-            time_weights=self.row.get("time_weights"),
-            candlesticks=self.row.get("candlesticks"),
-            state_aggs=self.row.get("state_aggs"),
+            **{f.key: self.row.get(f.key) for f in FAMILIES},
         )
         if refresh:
             new.refresh()

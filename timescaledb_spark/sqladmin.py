@@ -32,6 +32,7 @@ from datetime import datetime, timezone as _tz
 
 from pyspark.sql import DataFrame, functions as F
 
+from .cagg_families import BY_CTOR, FAMILIES, family_of
 from .sqlapi import (
     _NAMED,
     _literal_of,
@@ -1687,254 +1688,36 @@ def run_create_cagg(ts, m) -> DataFrame:
     bucket_alias = "bucket"
     group_by: list[str] = []
     aggs: dict[str, str] = {}
-    sketches: dict[str, dict] = {}
-    counters: dict[str, dict] = {}
-    gauges: dict[str, dict] = {}
-    stats_aggs: dict[str, dict] = {}
-    time_weights: dict[str, dict] = {}
-    candlesticks: dict[str, dict] = {}
-    state_aggs: dict[str, dict] = {}
-    freq_aggs: dict[str, dict] = {}
-    maxn_aggs: dict[str, dict] = {}
-    heartbeat_aggs: dict[str, dict] = {}
-    tdigest_aggs: dict[str, dict] = {}
+    specs: dict[str, dict[str, dict]] = {f.key: {} for f in FAMILIES}
     rollups: dict[str, str] = {}  # alias -> parent partial column
     partial_time_args: list[tuple[str, str, str]] = []
     for item in items:
         expr, alias = _alias_of(item)
-        twh = _head_call(expr, {"time_weight", "candlestick_agg"})
-        if twh:
-            # toolkit time-weight / candlestick partials in the cagg
-            # definition (caggs.py time_weights=/candlesticks=; the
-            # average(rollup(time_weight(...))) and
-            # rollup(candlestick_agg(...)) idioms)
+        ph = _head_call(expr, set(BY_CTOR) | {"rollup"})
+        if ph:
+            # a toolkit partial aggregate inside the cagg definition:
+            # store the family's mergeable PARTIAL state instead of a
+            # finished number (the rollup(<agg>(...)) idiom);
+            # rollup(col) defines a hierarchical child over a parent
+            # cagg's stored partial column
             if alias is None:
                 raise ValueError(f"cagg partial needs AS alias: {item!r}")
-            fn, args = twh
-            if fn == "time_weight":
-                # time_weight('LOCF' | 'Linear', ts, value)
-                if len(args) != 3:
-                    raise ValueError("time_weight(method, ts, value)")
-                mk, mv = _literal_of(args[0])
-                if mk != "string" or str(mv).lower() not in (
-                    "locf",
-                    "linear",
-                ):
-                    raise ValueError(
-                        "time_weight method must be the literal 'LOCF' "
-                        "or 'Linear'"
-                    )
-                time_weights[alias] = {
-                    "value": _rw(args[2].strip(), ts),
-                    "method": str(mv).lower(),
-                }
-                partial_time_args.append(
-                    (fn, alias, args[1].strip().split(".")[-1].strip())
-                )
-            else:  # candlestick_agg(ts, price[, volume])
-                if len(args) not in (2, 3):
-                    raise ValueError("candlestick_agg(ts, price[, volume])")
-                spec = {"price": _rw(args[1].strip(), ts)}
-                if len(args) == 3:
-                    spec["volume"] = _rw(args[2].strip(), ts)
-                candlesticks[alias] = spec
-                partial_time_args.append(
-                    (fn, alias, args[0].strip().split(".")[-1].strip())
-                )
-            continue
-        cnh = _head_call(
-            expr,
-            {
-                "counter_agg",
-                "gauge_agg",
-                "stats_agg",
-                "state_agg",
-                "heartbeat_agg",
-                "freq_agg",
-                "topn_agg",
-                "max_n",
-                "min_n",
-                "max_n_by",
-                "min_n_by",
-                "tdigest",
-            },
-        )
-        if cnh:
-            # toolkit partial aggregates inside the cagg definition —
-            # store a mergeable PARTIAL (caggs.py counters=/gauges=/
-            # stats_aggs=; the rollup(counter_agg/gauge_agg/stats_agg)
-            # idiom). counter_agg/gauge_agg(ts, value): the time
-            # argument must be the bucketed time column; stats_agg is
-            # the 1-D form stats_agg(value).
-            if alias is None:
-                raise ValueError(f"cagg partial needs AS alias: {item!r}")
-            fn, args = cnh
-            if fn == "stats_agg":
-                # 1-D stats_agg(value) or 2-D stats_agg(y, x) — the
-                # toolkit/PG argument order puts the DEPENDENT variable
-                # first (regr_slope(y, x))
-                if len(args) == 1:
-                    stats_aggs[alias] = {"value": _rw(args[0].strip(), ts)}
-                elif len(args) == 2:
-                    stats_aggs[alias] = {
-                        "value": _rw(args[1].strip(), ts),
-                        "y": _rw(args[0].strip(), ts),
-                    }
-                else:
-                    raise ValueError(
-                        "stats_agg takes 1 (value) or 2 (y, x) arguments"
-                    )
-                continue
-            if fn == "state_agg":
-                if len(args) != 2:
-                    raise ValueError("state_agg(ts, state)")
-                state_aggs[alias] = {"state": _rw(args[1].strip(), ts)}
-                partial_time_args.append(
-                    (fn, alias, args[0].strip().split(".")[-1].strip())
-                )
-                continue
-            if fn == "heartbeat_agg":
-                # heartbeat_agg(ts, 'liveness interval') — the toolkit
-                # form also takes (start, agg_interval) which the cagg
-                # bucket supplies here
-                if len(args) != 2:
-                    raise ValueError("heartbeat_agg(ts, liveness)")
-                lk, lv = _literal_of(args[1])
-                if lk not in ("interval", "string"):
-                    raise ValueError(
-                        "heartbeat_agg liveness must be an interval "
-                        "literal"
-                    )
-                heartbeat_aggs[alias] = {"liveness": str(lv)}
-                partial_time_args.append(
-                    (fn, alias, args[0].strip().split(".")[-1].strip())
-                )
-                continue
-            if fn in ("freq_agg", "topn_agg"):
-                # toolkit freq_agg(min_freq, value): any value with
-                # frequency > min_freq·N must surface — the Misra–Gries
-                # guarantee with capacity ≥ 1/min_freq. topn_agg(n,
-                # value) sizes generously so top-n stays reliable.
-                if fn == "freq_agg" and len(args) == 1:
-                    freq_aggs[alias] = {"value": _rw(args[0].strip(), ts)}
-                elif len(args) == 2:
-                    try:
-                        fv = float(args[0].strip())
-                    except ValueError:
-                        raise ValueError(
-                            f"{fn} first argument must be a numeric "
-                            f"literal"
-                        ) from None
-                    if fn == "freq_agg" and not (0.0 < fv <= 1.0):
-                        raise ValueError(
-                            "freq_agg min_freq must be in (0, 1]"
-                        )
-                    if fn == "topn_agg" and fv < 1:
-                        raise ValueError("topn_agg n must be >= 1")
-                    import math as _math
-
-                    cap = (
-                        int(_math.ceil(1.0 / fv))
-                        if fn == "freq_agg"
-                        else max(256, int(fv))
-                    )
-                    freq_aggs[alias] = {
-                        "value": _rw(args[1].strip(), ts),
-                        "capacity": cap,
-                    }
-                    if fn == "topn_agg":
-                        # the toolkit's topn(agg) without an explicit n
-                        # serves the agg's own n — record it
-                        freq_aggs[alias]["n"] = int(fv)
-                else:
-                    raise ValueError(f"{fn}([min_freq | n,] value)")
-                continue
-            if fn == "tdigest":
-                # toolkit tdigest(size, value): size is the compression
-                # (max centroids) — the rank-error percentile partial,
-                # percentile_agg/uddsketch's sibling
-                if len(args) != 2:
-                    raise ValueError("tdigest(size, value)")
-                nk, nv = _literal_of(args[0])
-                if nk != "int" or int(nv) < 2:
-                    raise ValueError(
-                        "tdigest size must be an integer literal >= 2"
-                    )
-                tdigest_aggs[alias] = {
-                    "value": _rw(args[1].strip(), ts),
-                    "delta": int(nv),
-                }
-                continue
-            if fn in ("max_n", "min_n"):
-                if len(args) != 2:
-                    raise ValueError(f"{fn}(value, n)")
-                nk, nv = _literal_of(args[1])
-                if nk != "int":
-                    raise ValueError(f"{fn} n must be an integer literal")
-                maxn_aggs[alias] = {
-                    "value": _rw(args[0].strip(), ts),
-                    "n": int(nv),
-                    "desc": fn == "max_n",
-                }
-                continue
-            if fn in ("max_n_by", "min_n_by"):
-                # toolkit max_n_by(value, data, n): the top-n values
-                # with an accompanying payload per entry
-                if len(args) != 3:
-                    raise ValueError(f"{fn}(value, data, n)")
-                nk, nv = _literal_of(args[2])
-                if nk != "int":
-                    raise ValueError(f"{fn} n must be an integer literal")
-                maxn_aggs[alias] = {
-                    "value": _rw(args[0].strip(), ts),
-                    "by": _rw(args[1].strip(), ts),
-                    "n": int(nv),
-                    "desc": fn == "max_n_by",
-                }
-                continue
-            if len(args) != 2:
-                raise ValueError(f"{fn}(ts, value)")
-            dest = counters if fn == "counter_agg" else gauges
-            dest[alias] = {"value": _rw(args[1].strip(), ts)}
-            # the ordering argument must be the cagg's time column —
-            # validated against the time_bucket call after the SELECT
-            # loop (the bucket item may appear later in the list).
-            # NOTE: SQL partials order by time only; equal-timestamp
-            # rows need the Python API's tiebreak= option.
-            partial_time_args.append(
-                (fn, alias, args[0].strip().split(".")[-1].strip())
-            )
-            continue
-        skh = _head_call(expr, {"percentile_agg", "uddsketch", "rollup"})
-        if skh:
-            # toolkit sketch aggregates inside the cagg definition —
-            # materialize a mergeable DDSketch STATE instead of a
-            # finished number (caggs.py sketches=; the
-            # percentile_agg-inside-a-cagg idiom). rollup(col) defines a
-            # hierarchical child over a parent sketch cagg's mat column.
-            if alias is None:
-                raise ValueError(f"cagg sketch needs AS alias: {item!r}")
-            fn, args = skh
-            if fn == "percentile_agg":
-                if len(args) != 1:
-                    raise ValueError("percentile_agg(value)")
-                sketches[alias] = {"value": _rw(args[0].strip(), ts)}
-            elif fn == "uddsketch":
-                # uddsketch(size, max_error, value): size is the
-                # toolkit's bucket cap — log-bucket maps are inherently
-                # bounded here, so only max_error carries over
-                if len(args) != 3:
-                    raise ValueError("uddsketch(size, max_error, value)")
-                sketches[alias] = {
-                    "value": _rw(args[2].strip(), ts),
-                    "alpha": float(args[1]),
-                }
-            else:  # rollup — family resolved against the parent cagg
-                # after the FROM clause is known (sketch kept as the
-                # fallback for pre-r11 compatibility)
+            fn, args = ph
+            if fn == "rollup":
                 if len(args) != 1:
                     raise ValueError("rollup(partial_column)")
                 rollups[alias] = args[0].strip().split(".")[-1]
+                continue
+            fam = BY_CTOR[fn]
+            spec, targ = fam.ctors[fn](args, lambda a: _rw(a.strip(), ts))
+            specs[fam.key][alias] = spec
+            if targ is not None:
+                # the ordering argument must be the cagg's time column
+                # — validated against the time_bucket call after the
+                # SELECT loop (the bucket item may appear later).
+                # NOTE: SQL partials order by time only; equal-timestamp
+                # rows need the Python API's tiebreak= option.
+                partial_time_args.append((fn, alias, targ))
             continue
         head = _head_call(expr, {"time_bucket"})
         if head:
@@ -1987,64 +1770,11 @@ def run_create_cagg(ts, m) -> DataFrame:
     ht_name, ht_alias, join_tbl, j_alias, join_cond = jm.groups()
     quals = {q for q in (ht_name, ht_alias, join_tbl, j_alias) if q}
     aggs = {k: _strip_quals(v, quals) for k, v in aggs.items()}
-    sketches = {
-        k: (
-            {**v, "value": _strip_quals(v["value"], quals)}
-            if "value" in v
-            else v
-        )
-        for k, v in sketches.items()
-    }
-    counters = {
-        k: {**v, "value": _strip_quals(v["value"], quals)}
-        for k, v in counters.items()
-    }
-    gauges = {
-        k: {**v, "value": _strip_quals(v["value"], quals)}
-        for k, v in gauges.items()
-    }
-    stats_aggs = {
-        k: {
-            **v,
-            "value": _strip_quals(v["value"], quals),
-            **(
-                {"y": _strip_quals(v["y"], quals)} if "y" in v else {}
-            ),
-        }
-        for k, v in stats_aggs.items()
-    }
-    time_weights = {
-        k: {**v, "value": _strip_quals(v["value"], quals)}
-        for k, v in time_weights.items()
-    }
-    state_aggs = {
-        k: {**v, "state": _strip_quals(v["state"], quals)}
-        for k, v in state_aggs.items()
-    }
-    freq_aggs = {
-        k: {**v, "value": _strip_quals(v["value"], quals)}
-        for k, v in freq_aggs.items()
-    }
-    maxn_aggs = {
-        k: {**v, "value": _strip_quals(v["value"], quals)}
-        for k, v in maxn_aggs.items()
-    }
-    tdigest_aggs = {
-        k: {**v, "value": _strip_quals(v["value"], quals)}
-        for k, v in tdigest_aggs.items()
-    }
-    candlesticks = {
-        k: {
-            **v,
-            "price": _strip_quals(v["price"], quals),
-            **(
-                {"volume": _strip_quals(v["volume"], quals)}
-                if "volume" in v
-                else {}
-            ),
-        }
-        for k, v in candlesticks.items()
-    }
+    for fam in FAMILIES:
+        for spec in specs[fam.key].values():
+            for f in fam.expr_fields:
+                if f in spec:
+                    spec[f] = _strip_quals(spec[f], quals)
     join = None
     if join_tbl:
         how = "left" if re.search(r"\bleft\b", from_clause, re.I) else "inner"
@@ -2066,32 +1796,17 @@ def run_create_cagg(ts, m) -> DataFrame:
         ht = ts.get_hypertable(crow["mat_table"])
     if rollups:
         # route each rollup(col) to the family the PARENT cagg stores
-        # that column under (sketch fallback keeps pre-r11 behavior for
-        # hll-in-aggs parents)
+        # that column under
         prow = ts.catalog.continuous_agg.find_one(mat_table=ht.name) or {}
-        fam_dicts = {
-            "sketches": sketches,
-            "counters": counters,
-            "gauges": gauges,
-            "stats_aggs": stats_aggs,
-            "time_weights": time_weights,
-            "candlesticks": candlesticks,
-            "state_aggs": state_aggs,
-            "freq_aggs": freq_aggs,
-            "maxn_aggs": maxn_aggs,
-            "heartbeat_aggs": heartbeat_aggs,
-            "tdigest_aggs": tdigest_aggs,
-        }
         for alias, src_col in rollups.items():
-            fam = next(
-                (
-                    f
-                    for f in fam_dicts
-                    if src_col in (prow.get(f) or {})
-                ),
-                "sketches",
-            )
-            fam_dicts[fam][alias] = {"rollup_of": src_col}
+            fam = family_of(prow, src_col)
+            if fam is None:
+                raise ValueError(
+                    f"rollup({src_col}) AS {alias}: {src_col!r} is not a "
+                    f"stored partial state of parent cagg "
+                    f"{prow.get('name', ht_name)!r}"
+                )
+            specs[fam.key][alias] = {"rollup_of": src_col}
     cagg = ts.create_cagg(
         name,
         ht,
@@ -2103,20 +1818,17 @@ def run_create_cagg(ts, m) -> DataFrame:
         where=where,
         join=join,
         materialized_only=mat_only,
-        sketches=sketches or None,
-        counters=counters or None,
-        gauges=gauges or None,
-        stats_aggs=stats_aggs or None,
-        time_weights=time_weights or None,
-        candlesticks=candlesticks or None,
-        state_aggs=state_aggs or None,
-        freq_aggs=freq_aggs or None,
-        maxn_aggs=maxn_aggs or None,
-        heartbeat_aggs=heartbeat_aggs or None,
-        tdigest_aggs=tdigest_aggs or None,
+        **{k: v or None for k, v in specs.items()},
     )
     if not (m.group("data") or "").strip():  # WITH DATA is the PG default
-        cagg.refresh()
+        try:
+            cagg.refresh()
+        except BaseException:
+            # CREATE .. WITH DATA is one statement: a failed initial
+            # refresh leaves no half-created cagg behind (PostgreSQL
+            # rolls the whole CREATE back)
+            cagg.drop()
+            raise
     return _df(ts, [(name, True)], "view string, created boolean")
 
 

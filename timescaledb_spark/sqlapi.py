@@ -34,6 +34,7 @@ from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, functions as F
 
+from .cagg_families import FAMILIES, family_of
 from .functions.time import (
     parse_interval,
     time_bucket_int_sql,
@@ -1330,8 +1331,9 @@ def _try_sketch_quantiles(ts, q: str):
     [GROUP BY …]`` — routed to :meth:`ContinuousAggregate.quantiles`:
     stored DDSketch states merge to the requested grain (lossless,
     Masson VLDB'19 §2.3) and the realtime union computes raw-side
-    states only above the watermark. Matches only caggs created with
-    ``sketches=``; WHERE/HAVING/ORDER/LIMIT fall through (and the
+    states only above the watermark. Matches only columns of the
+    percentile families (DDSketch, t-digest — ``percentile`` in their
+    cagg_families entry); WHERE/HAVING/ORDER/LIMIT fall through (and the
     normal path rejects rollup() over a sketch column with a clear
     analysis error)."""
     from .functions.ddsketch import _qname
@@ -1354,11 +1356,10 @@ def _try_sketch_quantiles(ts, q: str):
     if not re.fullmatch(r"[A-Za-z_]\w*", frm):
         return None
     crow = ts.catalog.continuous_agg.find_one(name=frm)
-    if crow is None or not (
-        crow.get("sketches") or crow.get("tdigest_aggs")
+    if crow is None or not any(
+        f.percentile and crow.get(f.key) for f in FAMILIES
     ):
         return None
-    td_cols = crow.get("tdigest_aggs") or {}
     balias = crow["bucket_alias"]
     groups = list(crow.get("group_by") or [])
     sel: list = []  # ordered (kind, out_alias, payload)
@@ -1400,10 +1401,11 @@ def _try_sketch_quantiles(ts, q: str):
             if inner is None or len(inner) != 1:
                 return None
             col = inner[0].strip()
-            if (
-                col not in (crow.get("sketches") or {})
-                and col not in td_cols
-            ) or sketch_col not in (None, col):
+            fam = family_of(crow, col)
+            if fam is None or not fam.percentile or sketch_col not in (
+                None,
+                col,
+            ):
                 return None
             sketch_col = col
             if head[0] == "approx_percentile_array":
@@ -1453,38 +1455,20 @@ def _try_sketch_quantiles(ts, q: str):
     try:
         cagg = ts.get_cagg(frm)
         qd = None
+        # the family's (quantiles, rank) accessors share one signature
+        q_meth, r_meth = family_of(crow, sketch_col).percentile
         if qs_list:
-            if sketch_col in td_cols:
-                qd = cagg.tdigest_quantiles_at_grain(
-                    qs_list,
-                    sketch_col,
-                    grain=eff_grain,
-                    group_by=want_groups,
-                )
-            else:
-                qd = cagg.quantiles(
-                    qs_list,
-                    sketch_col=sketch_col,
-                    grain=eff_grain,
-                    group_by=want_groups,
-                )
+            qd = getattr(cagg, q_meth)(
+                qs_list, sketch_col, grain=eff_grain, group_by=want_groups
+            )
         for i, v in enumerate(ranks):
-            if sketch_col in td_cols:
-                rdf = cagg.tdigest_rank_at_grain(
-                    v,
-                    sketch_col,
-                    grain=eff_grain,
-                    group_by=want_groups,
-                    out=f"_rk{i}",
-                )
-            else:
-                rdf = cagg.rank(
-                    v,
-                    sketch_col=sketch_col,
-                    grain=eff_grain,
-                    group_by=want_groups,
-                    out=f"_rk{i}",
-                )
+            rdf = getattr(cagg, r_meth)(
+                v,
+                sketch_col,
+                grain=eff_grain,
+                group_by=want_groups,
+                out=f"_rk{i}",
+            )
             if qd is None:
                 qd = rdf
             elif not keys_out:
@@ -1522,133 +1506,16 @@ def _try_sketch_quantiles(ts, q: str):
     return qd.select(*cols)
 
 
-# accessor fn (toolkit name) -> served column, per partial family
-_PARTIAL_ACCESSORS = {
-    "counters": {
-        "delta": "delta",
-        "rate": "rate",
-        "num_resets": "num_resets",
-        "num_changes": "num_changes",
-        "num_vals": "n",
-        "first_val": "first_val",
-        "last_val": "last_val",
-        "first_time": "first_us",
-        "last_time": "last_us",
-    },
-    "gauges": {
-        "delta": "delta",
-        "rate": "rate",
-        "idelta": "idelta",
-        "irate": "irate",
-        "num_changes": "num_changes",
-        "num_vals": "n",
-        "first_val": "first_val",
-        "last_val": "last_val",
-        "first_time": "first_us",
-        "last_time": "last_us",
-    },
-    "stats_aggs": {
-        "average": "avg",
-        "stddev": "stddev",
-        "variance": "variance",
-        "sum": "sum",
-        "num_vals": "n",
-        "min_val": "min",
-        "max_val": "max",
-    },
-    "time_weights": {"average": "tw_avg", "num_vals": "n"},
-    # duration_in(state, rollup(col)) is handled specially below (it
-    # carries a state-literal argument); num_vals is the aggregate's
-    # TOTAL sample count (summed over states before the state filter)
-    "state_aggs": {"num_vals": "n", "duration_in": "duration_us"},
-    "heartbeat_aggs": {
-        "live_time": "live_us",
-        "dead_time": "dead_us",
-        "num_live_ranges": "num_live_ranges",
-        "num_heartbeats": "n",
-        "first_time": "first_us",
-        "last_time": "last_us",
-    },
-    "candlesticks": {
-        "open": "open",
-        "high": "high",
-        "low": "low",
-        "close": "close",
-        "volume": "volume",
-        "vwap": "vwap",
-        "num_vals": "n",
-    },
-    # the t-digest's EXACT scalar accessors; approx_percentile(q,
-    # rollup(td)) carries a quantile argument and is routed by
-    # _try_sketch_quantiles instead (the DDSketch-route sibling)
-    "tdigest_aggs": {
-        "num_vals": "n",
-        "min_val": "min_val",
-        "max_val": "max_val",
-        "mean": "mean",
-    },
-}
-# 2-D stats partials (stats_aggs specs with a "y") serve the regression
-# accessor family instead of the 1-D one — resolved per COLUMN below
-_STATS2D_ACCESSORS = {
-    "slope": "slope",
-    "intercept": "intercept",
-    "corr": "corr",
-    "covariance": "covariance",
-    "determination_coefficient": "determination_coefficient",
-    "average_x": "average_x",
-    "average_y": "average_y",
-    "sum_x": "sum_x",
-    "sum_y": "sum_y",
-    "num_vals": "n",
-}
-_PARTIAL_METHOD = {
-    "counters": "counter_at_grain",
-    "gauges": "gauge_at_grain",
-    "stats_aggs": "stats_at_grain",
-    "time_weights": "time_weighted_at_grain",
-    "candlesticks": "candlestick_at_grain",
-    "state_aggs": "state_durations_at_grain",
-    "heartbeat_aggs": "heartbeat_at_grain",
-    "tdigest_aggs": "tdigest_summary_at_grain",
-}
-# toolkit interpolated accessors — cross-bucket interpolation served
-# from the stored partials (caggs.interpolated_*_at_grain). These need
-# an explicit re-bucketing time_bucket item, serve the cagg's FULL
-# group set only (boundary segments are per-series), and cannot mix
-# with the plain accessors of the same family in one query.
-_INTERP_ACCESSORS = {
-    "time_weights": {"interpolated_average": "tw_avg"},
-    "counters": {
-        "interpolated_delta": "delta",
-        "interpolated_rate": "rate",
-    },
-    "state_aggs": {"interpolated_duration_in": "duration_us"},
-    "heartbeat_aggs": {
-        "interpolated_live_time": "live_us",
-        "interpolated_dead_time": "dead_us",
-    },
-}
-_INTERP_METHOD = {
-    "time_weights": "interpolated_average_at_grain",
-    "counters": "interpolated_delta_at_grain",
-    "state_aggs": "interpolated_duration_in_at_grain",
-    "heartbeat_aggs": "heartbeat_interpolated_at_grain",
-}
-# set-returning accessors — one row PER VALUE per key, so they must be
-# the only accessor in the SELECT: topn(rollup(freq_col)[, n]) serves
-# (keys…, value, freq_lb); into_values(rollup(maxn_col)) serves
-# (keys…, value); into_values(rollup(state_agg_col)) serves
-# (keys…, state, duration_us) — the toolkit per-state durations SRF
-_SRF_ACCESSORS = {
-    "topn": ("freq_aggs",),
-    "into_values": ("maxn_aggs", "state_aggs"),
-}
-_ALL_ACCESSOR_FNS = (
-    frozenset(fn for d in _PARTIAL_ACCESSORS.values() for fn in d)
-    | frozenset(_STATS2D_ACCESSORS)
-    | frozenset(fn for d in _INTERP_ACCESSORS.values() for fn in d)
-    | frozenset(_SRF_ACCESSORS)
+#: set-returning accessors — one row PER VALUE per key, so they must be
+#: the only accessor in the SELECT (topn, into_values)
+_SRF_FNS = frozenset(f.srf[0] for f in FAMILIES if f.srf)
+#: every toolkit accessor name the partial route recognizes: each
+#: family's plain, 2-D, interpolated and set-returning accessors
+_ALL_ACCESSOR_FNS = frozenset(
+    fn
+    for f in FAMILIES
+    for v in (f, f.variant[1] if f.variant else f)
+    for fn in (*v.accessors, *v.interp, *(v.srf[:1] if v.srf else ()))
 )
 
 
@@ -1667,7 +1534,7 @@ def _try_partial_accessors(ts, q: str):
     error. Round 12: ``interpolated_average/delta/rate(rollup(col))``
     route to the interpolated accessors — explicit re-bucket grain and
     the cagg's full group set required, no mixing with the plain
-    accessors (see _INTERP_ACCESSORS)."""
+    accessors (each family's ``interp`` entry)."""
     from .sqlgapfill import (
         _alias_of,
         _clauses_of,
@@ -1705,7 +1572,7 @@ def _try_partial_accessors(ts, q: str):
         head = _head_call(expr, _ALL_ACCESSOR_FNS | {"time_bucket"})
         if head and head[0] in _ALL_ACCESSOR_FNS:
             fn, args = head
-            if fn in _SRF_ACCESSORS:
+            if fn in _SRF_FNS:
                 if srf is not None:
                     return None  # one set-returning accessor per query
                 srf_n = None
@@ -1721,22 +1588,12 @@ def _try_partial_accessors(ts, q: str):
                 if inner is None or len(inner) != 1:
                     return None
                 col = inner[0].strip().split(".")[-1].strip()
-                fam = next(
-                    (
-                        f
-                        for f in _SRF_ACCESSORS[fn]
-                        if col in (crow.get(f) or {})
-                    ),
-                    None,
-                )
-                if fam is None:
+                fam = family_of(crow, col)
+                if fam is None or not fam.srf or fam.srf[0] != fn:
                     return None
-                srf = (fn, fam, col, srf_n)
+                srf = (fam, col, srf_n)
                 n_acc += 1
-                default_alias = (
-                    "state" if fam == "state_aggs" else "value"
-                )
-                sel.append(("s", alias or default_alias, fn))
+                sel.append(("s", alias or fam.srf[2], fn))
                 continue
             if fn in ("duration_in", "interpolated_duration_in"):
                 # duration_in('state', rollup(sa)): the state literal
@@ -1756,24 +1613,13 @@ def _try_partial_accessors(ts, q: str):
             if inner is None or len(inner) != 1:
                 return None
             col = inner[0].strip().split(".")[-1].strip()
-            fam = next(
-                (
-                    f
-                    for f in _PARTIAL_ACCESSORS
-                    if col in (crow.get(f) or {})
-                ),
-                None,
-            )
+            fam = family_of(crow, col)
             if fam is None:
                 return None
             if family not in (None, fam) or part_col not in (None, col):
                 return None
-            acc_map = _PARTIAL_ACCESSORS[fam]
-            if fam == "stats_aggs" and "y" in (
-                (crow.get(fam) or {}).get(col) or {}
-            ):
-                acc_map = _STATS2D_ACCESSORS
-            interp_map = _INTERP_ACCESSORS.get(fam) or {}
+            acc_map = fam.for_spec(crow[fam.key][col]).accessors
+            interp_map = fam.interp
             if fn in interp_map:
                 interp = True
                 acc_map = interp_map
@@ -1820,40 +1666,28 @@ def _try_partial_accessors(ts, q: str):
     try:
         cagg = ts.get_cagg(frm)
         if srf is not None:
-            sfn, sfam, scol, srf_n = srf
-            if sfn == "topn":
-                spec = (crow.get(sfam) or {}).get(scol) or {}
-                n = srf_n if srf_n is not None else int(spec.get("n", 10))
-                served = cagg.topn_at_grain(
-                    scol, n=n, grain=eff_grain, group_by=want_groups
-                )
-            elif sfam == "state_aggs":
-                served = cagg.state_durations_at_grain(
-                    scol, grain=eff_grain, group_by=want_groups
-                )
-            else:
-                served = cagg.max_n_at_grain(
-                    scol, n=srf_n, grain=eff_grain, group_by=want_groups
-                )
+            sfam, scol, srf_n = srf
+            spec = crow[sfam.key][scol]
+            n = srf_n if srf_n is not None else spec.get("n")
+            served = getattr(cagg, sfam.srf[1])(
+                scol,
+                **({} if n is None else {"n": n}),
+                grain=eff_grain,
+                group_by=want_groups,
+            )
+            # the served value columns: the first under the SELECT
+            # alias, the rest (freq_lb, a max_n_by payload, duration_us)
+            # riding along
+            vals = [c for c in sfam.srf[3] if c in served.columns]
             cols = []
             for kind, out_alias, payload in sel:
                 if kind == "b":
                     cols.append(F.col(balias).alias(out_alias))
                 elif kind == "g":
                     cols.append(F.col(payload).alias(out_alias))
-                elif sfam == "state_aggs":
-                    cols.append(F.col("state").alias(out_alias))
-                    cols.append(F.col("duration_us"))
                 else:
-                    cols.append(F.col("value").alias(out_alias))
-                    if sfn == "topn":
-                        cols.append(F.col("freq_lb"))
-                    elif (
-                        ((crow.get(sfam) or {}).get(scol) or {}).get("by")
-                        is not None
-                    ):
-                        # max_n_by: the payload rides along
-                        cols.append(F.col("data"))
+                    cols.append(F.col(vals[0]).alias(out_alias))
+                    cols.extend(F.col(c) for c in vals[1:])
             return served.select(*cols)
         if interp_seen:
             # interpolated accessors need an explicit target grain and
@@ -1863,14 +1697,14 @@ def _try_partial_accessors(ts, q: str):
                 return None
             if sorted(want_groups) != sorted(crow.get("group_by") or []):
                 return None
-            if family == "state_aggs":
+            if family.per_state:
                 if dur_state is None:
                     return None
                 served = cagg.interpolated_duration_in_at_grain(
                     dur_state, part_col, grain=grain
                 )
             else:
-                served = getattr(cagg, _INTERP_METHOD[family])(
+                served = getattr(cagg, family.interp_method)(
                     part_col, grain=grain
                 )
             cols = []
@@ -1880,15 +1714,11 @@ def _try_partial_accessors(ts, q: str):
                 else:
                     cols.append(F.col(payload).alias(out_alias))
             return served.select(*cols)
-        meth = _PARTIAL_METHOD[family]
-        if family == "stats_aggs" and "y" in (
-            (crow.get(family) or {}).get(part_col) or {}
-        ):
-            meth = "stats2d_at_grain"
+        meth = family.for_spec(crow[family.key][part_col]).serve
         served = getattr(cagg, meth)(
             part_col, grain=eff_grain, group_by=want_groups
         )
-        if family == "state_aggs":
+        if family.per_state:
             # toolkit num_vals(state_agg) counts ALL samples in the
             # aggregate, not the duration_in state's — aggregate the
             # per-state frame's n over every state BEFORE any state

@@ -104,9 +104,16 @@ def dimensions(ts) -> DataFrame:
 
 def continuous_aggregates(ts) -> DataFrame:
     """``timescaledb_information.continuous_aggregates`` (sql/views.sql:182)."""
+    from .cagg_families import partials
+
     rows = []
     for c in ts.catalog.continuous_agg.read():
         wm = ts.catalog.cagg_watermark.find_one(cagg_id=c["id"])
+        # the mat table stores mergeable partials for these columns (the
+        # toolkit finalized=false idiom), listed per family view column
+        cols = {"sketch_columns": [], "partial_columns": []}
+        for fam, col, _spec in partials(c):
+            cols[fam.view_column].append(col)
         rows.append(
             {
                 "view_name": c["name"],
@@ -115,21 +122,7 @@ def continuous_aggregates(ts) -> DataFrame:
                 "bucket_width": c["bucket_width_us"],
                 "watermark": wm.get("watermark") if wm else None,
                 "materialization_hypertable_name": c["mat_table"],
-                # round 10: mat table stores mergeable partials for
-                # these columns (the toolkit finalized=false idiom)
-                "sketch_columns": sorted(c.get("sketches") or {}),
-                "partial_columns": sorted(
-                    list(c.get("counters") or {})
-                    + list(c.get("gauges") or {})
-                    + list(c.get("stats_aggs") or {})
-                    + list(c.get("time_weights") or {})
-                    + list(c.get("candlesticks") or {})
-                    + list(c.get("state_aggs") or {})
-                    + list(c.get("freq_aggs") or {})
-                    + list(c.get("maxn_aggs") or {})
-                    + list(c.get("heartbeat_aggs") or {})
-                    + list(c.get("tdigest_aggs") or {})
-                ),
+                **{k: sorted(v) for k, v in cols.items()},
             }
         )
     return _df(

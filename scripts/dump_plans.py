@@ -4,10 +4,12 @@
 The batch form of ``prof_shell.py``'s ``planq``: one Spark session, one
 ``OUT_DIR/<gate>.txt`` per gate. With no gate names it dumps every
 continuous-aggregate gate (``q_cagg_*``, ``q_ddsketch_rollup``,
-``q_hll_rollup``, ``q_sql_join_rollup``).
+``q_hll_rollup``, ``q_sql_join_rollup``); ``--all`` dumps every
+registered gate.
 
 Usage:
     python scripts/dump_plans.py OUT_DIR [GATE ...]
+    python scripts/dump_plans.py --all OUT_DIR
     python scripts/dump_plans.py --diff BEFORE_DIR AFTER_DIR
 
 ``--diff`` compares two dump directories after normalizing what differs
@@ -44,6 +46,7 @@ def normalize(text: str) -> str:
     text = re.sub(r"#\d+L?", "#N", text)
     text = re.sub(r"plan_id=\d+", "plan_id=N", text)
     text = re.sub(r"/tmp/[^/\s,\]]+", "/tmp/D", text)
+    text = re.sub(r"_common_expr_\d+", "_common_expr_N", text)
     return text
 
 
@@ -82,12 +85,14 @@ def diff(before_dir: str, after_dir: str) -> int:
     return 1 if grown else 0
 
 
-def dump(out_dir: str, gates: list[str]) -> int:
+def dump(out_dir: str, gates: list[str], every: bool = False) -> int:
     from timescaledb_spark.queries import queries
     from timescaledb_spark.session import build_spark
 
     qs = queries()
-    if not gates:
+    if every:
+        gates = list(qs)
+    elif not gates:
         gates = [g for g in qs if CAGG_GATES.match(g)]
     unknown = [g for g in gates if g not in qs]
     if unknown:
@@ -120,6 +125,8 @@ def dump(out_dir: str, gates: list[str]) -> int:
 def main(argv: list[str]) -> int:
     if len(argv) == 3 and argv[0] == "--diff":
         return diff(argv[1], argv[2])
+    if len(argv) == 2 and argv[0] == "--all":
+        return dump(argv[1], [], every=True)
     if not argv or argv[0].startswith("-"):
         print(__doc__, file=sys.stderr)
         return 2

@@ -293,15 +293,10 @@ def test_sql_insert_and_prune_plan(ts):
     pruned = ts.sql(
         "SELECT count(*) AS n FROM events WHERE ts >= '2024-01-10' AND ts < '2024-01-20'"
     )
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    import re as _re
+    from timescaledb_spark.plans.inspect import scanned_paths
 
-    m = _re.search(r"(\d+) paths", plan)
     full = ts.sql("SELECT count(*) AS n FROM events")
-    m2 = _re.search(
-        r"(\d+) paths", full._jdf.queryExecution().executedPlan().toString()
-    )
-    assert m and m2 and int(m.group(1)) < int(m2.group(1))
+    assert 0 < scanned_paths(pruned) < scanned_paths(full)
 
 
 def test_sql_approximate_row_count(ts):

@@ -39,10 +39,7 @@ from typing import Callable, Optional, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-
-def _q(name: str) -> str:
-    """Backtick-quote a column name for SQL-string expressions."""
-    return f"`{name}`"
+from .scan import q as _q
 
 
 def _qs(names: Sequence[str]) -> list[str]:
@@ -1115,7 +1112,7 @@ CANDLESTICK = Family(
             ("low", "_f_low"),
             ("close", "_f_close"),
             ("volume", "_f_volume"),
-            ("vwap", "_f_pv / _f_volume"),
+            ("vwap", "_f_pv / nullif(_f_volume, 0)"),
             ("n", "_f_n"),
             ("first_us", "_f_first_us"),
             ("last_us", "_f_last_us"),

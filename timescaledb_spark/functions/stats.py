@@ -97,7 +97,7 @@ def candlestick_agg(
         F.min(p).alias("low"),
         F.max_by(p, key).alias("close"),
         F.sum(vol).alias("volume"),
-        (F.sum(p * vol) / F.sum(vol)).alias("vwap"),
+        (F.sum(p * vol) / F.nullif(F.sum(vol), F.lit(0))).alias("vwap"),
         F.count(F.lit(1)).alias("n"),
     )
 

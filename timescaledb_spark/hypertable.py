@@ -9,11 +9,13 @@ Reference parity:
 - Default chunk interval 7 days (``src/dimension.h:115``); integer defaults
   10k/100k/1M (``src/dimension.h:118-120``)
 - ``show_chunks`` / ``drop_chunks`` (``sql/ddl_api.sql:89-101``)
-- Chunk exclusion: reads prune chunks via the catalog before Spark ever
-  lists files — the plan-time analog of ``src/planner/expand_hypertable.c:1305``
-  + ``src/hypertable_restrict_info.c`` — and additionally emit a partition
-  filter on the ``_chunk`` directory column so Catalyst partition pruning
-  kicks in (``PartitionFilters`` in the scan).
+- Chunk exclusion: reads prune chunks via the catalog — the plan-time
+  analog of ``src/planner/expand_hypertable.c:1305`` +
+  ``src/hypertable_restrict_info.c`` — and express the survivors as a
+  ``_chunk IN (...)`` (and ``_space``) partition predicate over the
+  hypertable's one long-lived scan relation (``scan.py``), which
+  Catalyst's partition pruning applies to the cached file index
+  (``PartitionFilters`` in the scan).
 
 Physical layout (Spark-first, 100 TB-ready):
     <root>/data/<name>/_chunk=<start_internal>[/_space=<k>]/*.parquet
@@ -40,8 +42,7 @@ from .functions.time import (
     parse_interval,
 )
 
-CHUNK_COL = "_chunk"
-SPACE_COL = "_space"
+from .scan import CHUNK_COL, SPACE_COL, Scan, in_list, list_partition, q, sql_literal
 
 #: sentinel emitted by raise_error inside the chunk-routing expression;
 #: translated to the user-facing NOT NULL ValueError at the call sites
@@ -77,6 +78,13 @@ def _to_internal(value: Union[int, str, datetime, date, None]) -> Optional[int]:
             * 1_000_000
         )
     raise TypeError(f"unsupported time value {value!r}")
+
+
+def _uuidv7_boundary_sql(ms: int) -> str:
+    """Literal of the smallest UUIDv7 at unix millisecond ``ms`` — the
+    value ``to_uuidv7_boundary`` gives (zero sub-ms and random bits)."""
+    h = f"{ms:012x}"
+    return f"'{h[:8]}-{h[8:12]}-7000-8000-000000000000'"
 
 
 def _serialized_dml(fn):
@@ -307,32 +315,35 @@ class Hypertable:
         t = self.row.get("time_type") or "timestamp"
         return t in ("timestamp", "timestamp_ntz", "date")
 
-    def _internal_time_expr(
-        self, df: DataFrame, col: Optional[Column] = None
-    ) -> Column:
+    def _internal_time_expr(self, df: DataFrame, col: Optional[str] = None) -> Column:
         """time column -> int64 internal units (µs or verbatim int).
-        ``col`` overrides the source column (e.g. an alias-qualified
-        reference in a join) while ``df`` still supplies the dtype."""
-        dt = dict(df.dtypes)[self.time_column]
-        c = F.col(self.time_column) if col is None else col
+        ``col`` overrides the source column with a SQL reference (e.g. an
+        alias-qualified one in a join) while ``df`` still supplies the
+        dtype."""
+        return F.expr(self._internal_time_sql(dict(df.dtypes)[self.time_column], col))
+
+    def _internal_time_sql(self, dtype: str, ref: Optional[str] = None) -> str:
+        """SQL form of :meth:`_internal_time_expr` for a time column of
+        type ``dtype`` (``ref``: the column reference, default the time
+        column)."""
+        c = ref or q(self.time_column)
         if self.row.get("time_type") == "uuid":
             # UUIDv7 "time" partitioning (src/uuid.c, test/sql/uuid.sql):
             # the embedded unix-ms (+12-bit sub-ms) timestamp IS the
             # dimension value. Non-v7 UUIDs have no timestamp (PG's
             # uuid_timestamp errors on them) — they extract NULL here,
             # so the routing null guard rejects such inserts atomically
-            from .functions.uuid7 import uuid_timestamp_micros, uuid_version
-
-            return F.when(uuid_version(c) == 7, uuid_timestamp_micros(c))
-        if dt.startswith("timestamp"):
-            return F.unix_micros(c.cast(T.TimestampType()))
-        if dt == "date":
             return (
-                F.datediff(c, F.lit("1970-01-01").cast(T.DateType()))
-                .cast(T.LongType())
-                * F.lit(USECS_PER_DAY)
+                f"CASE WHEN CAST(conv(substring({c}, 15, 1), 16, 10) AS INT) = 7 "
+                f"THEN CAST(conv(concat(substring({c}, 1, 8), substring({c}, 10, 4)), "
+                f"16, 10) AS BIGINT) * 1000 + CAST(floor(CAST(conv(substring({c}, 16, 3), "
+                f"16, 10) AS BIGINT) * 1000 / 4096) AS BIGINT) END"
             )
-        return c.cast(T.LongType())
+        if dtype.startswith("timestamp"):
+            return f"unix_micros(CAST({c} AS TIMESTAMP))"
+        if dtype == "date":
+            return f"CAST(datediff({c}, DATE '1970-01-01') AS BIGINT) * {USECS_PER_DAY}"
+        return f"CAST({c} AS BIGINT)"
 
     def _default_interval_for(self, dtype: str) -> int:
         if (
@@ -1618,26 +1629,32 @@ class Hypertable:
     def _apply_fills(self, df: DataFrame, chunks: list[dict]) -> DataFrame:
         """Fill NULLs of added columns with their default, but only for
         rows of chunks whose files predate the ADD COLUMN."""
-        acs = self.added_columns()
-        if not acs or CHUNK_COL not in df.columns:
+        fills = self._fill_sql(chunks)
+        if not fills or CHUNK_COL not in df.columns:
             return df
-        for ac in acs:
+        return df.withColumns({n: F.expr(e) for n, e in fills.items()})
+
+    def _fill_sql(self, chunks: list[dict]) -> dict[str, str]:
+        """Per added column with a default: one ``CASE`` that fills its
+        NULLs in rows of the ``chunks`` whose files predate the ADD."""
+        out = {}
+        for ac in self.added_columns():
             if ac["default"] is None:
                 continue
             need = [
-                c["range_start"] for c in chunks if self._chunk_needs_fill(c, ac)
+                str(c["range_start"])
+                for c in chunks
+                if self._chunk_needs_fill(c, ac)
             ]
             if not need:
                 continue
-            col = F.col(ac["name"])
-            df = df.withColumn(
-                ac["name"],
-                F.when(
-                    F.col(CHUNK_COL).isin(need) & col.isNull(),
-                    F.lit(ac["default"]).cast(ac["type"]),
-                ).otherwise(col),
+            col = q(ac["name"])
+            out[ac["name"]] = (
+                f"CASE WHEN {in_list(q(CHUNK_COL), need)} AND {col} IS NULL "
+                f"THEN CAST({sql_literal(ac['default'])} AS {ac['type']}) "
+                f"ELSE {col} END"
             )
-        return df
+        return out
 
     def _materialize_fills(self, chunks: list) -> None:
         """One-time rewrite of fill-pending chunks with their defaults
@@ -2213,7 +2230,7 @@ class Hypertable:
             clause_idx.isin(upd_idx) if upd_idx else F.lit(False)
         )
 
-        src_time = self._internal_time_expr(src, F.col(f"excluded.{tcol}"))
+        src_time = self._internal_time_expr(src, f"excluded.{q(tcol)}")
         k_ins = ~t_here & s_here & F.lit(bool(insert_not_matched))
         touched = k_ins | (t_here & s_here)
         aggs = [
@@ -2251,7 +2268,7 @@ class Hypertable:
             # gating stats need the clause conditions (arbitrary target
             # columns), so they run on the FULL-WIDTH join; affected
             # target rows widen the invalidation/frozen range
-            tgt_time = self._internal_time_expr(old, F.col(f"target.{tcol}"))
+            tgt_time = self._internal_time_expr(old, f"target.{q(tcol)}")
             affected_any = touched | nmbs_delete | nmbs_update
             t_probe = F.when(touched, src_time).otherwise(
                 F.when(nmbs_delete | nmbs_update, tgt_time)
@@ -2719,10 +2736,12 @@ class Hypertable:
     ) -> DataFrame:
         """Read with chunk exclusion: ``start <= time < end``.
 
-        Prunes twice: (1) driver-side against catalog slices — the
-        plan-time chunk exclusion of ``hypertable_restrict_info.c`` — and
-        (2) a ``_chunk IN (...)`` partition filter so the parquet scan
-        lists only surviving directories, plus the raw row-level predicate.
+        One ``spark.sql`` call over the hypertable's long-lived scan
+        relation (``scan.py``). Chunks are excluded driver-side against
+        the catalog slices — the plan-time chunk exclusion of
+        ``hypertable_restrict_info.c`` — and the survivors become a
+        ``_chunk IN (...)`` partition predicate that Catalyst prunes the
+        relation's file index with, plus the raw row-level predicate.
 
         ``where_stats``: {column: (lo, hi)} — additionally exclude chunks
         whose recorded min/max for that column (``chunk_column_stats``,
@@ -2735,7 +2754,19 @@ class Hypertable:
         only the matching ``_space=k`` sub-partitions are scanned, plus a
         row filter on the raw column.
         """
-        spark = self.ts.spark
+        self._refresh()
+        sc = self._scan(start, end, with_partition_cols, where_stats, space_key)
+        return self.ts.scans.plan([sc], lambda views: sc.text(views[0]))
+
+    def _scan(
+        self,
+        start=None,
+        end=None,
+        with_partition_cols: bool = False,
+        where_stats: Optional[dict] = None,
+        space_key=None,
+    ) -> Scan:
+        """This read as SQL text over the scan relation (see :meth:`read`)."""
         all_chunks = self.chunks()
         chunks = all_chunks
         lo, hi = _to_internal(start), _to_internal(end)
@@ -2747,115 +2778,102 @@ class Hypertable:
                 and (lo is None or c["range_end"] > lo)
             ]
         if where_stats:
-            stats = self.ts.catalog.chunk_column_stats.find(hypertable_id=self.id)
-            by_chunk: dict = {}
-            for srow in stats:
-                by_chunk.setdefault(srow["chunk_id"], {})[srow["column"]] = (
-                    srow["min"],
-                    srow["max"],
-                )
-            kept = []
-            for c in chunks:
-                cstats = by_chunk.get(c["id"])
-                drop = False
-                if cstats:
-                    for col, (qlo, qhi) in where_stats.items():
-                        if col in cstats:
-                            cmin, cmax = cstats[col]
-                            if cmin is not None and qhi is not None and cmin > qhi:
-                                drop = True
-                            if cmax is not None and qlo is not None and cmax < qlo:
-                                drop = True
-                if not drop:
-                    kept.append(c)
-            chunks = kept
+            chunks = self._skip_by_stats(chunks, where_stats)
+        conds = [in_list(q(CHUNK_COL), (str(c["range_start"]) for c in chunks))]
+        if space_key is not None:
+            conds += self._space_conds(space_key, chunks)
+        conds += self._time_bound_sql(lo, hi)
+        fills = self._fill_sql(chunks)
+        schema = self._data_schema()
+        cols = [
+            f"{fills[f.name]} AS {q(f.name)}" if f.name in fills else q(f.name)
+            for f in schema.fields
+        ]
+        if cols and with_partition_cols:
+            cols += [q(c) for c in self._partition_cols]
+        return Scan(
+            name=self.name,
+            root=self.data_dir,
+            schema=schema,
+            has_space=bool(self.row.get("space_column")),
+            row=dict(self.row),  # a copy: add_column etc. mutate self.row
+            chunks=all_chunks,
+            files={
+                d: list_partition(os.path.join(self.data_dir, d))
+                for d in (f"{CHUNK_COL}={c['range_start']}" for c in chunks)
+            },
+            cols=", ".join(cols) or "*",
+            where=" AND ".join(conds),
+        )
+
+    def _skip_by_stats(self, chunks: list[dict], where_stats: dict) -> list[dict]:
+        """Chunks whose recorded min/max can overlap every ``where_stats``
+        range (``chunk_column_stats``)."""
+        stats = self.ts.catalog.chunk_column_stats.find(hypertable_id=self.id)
+        by_chunk: dict = {}
+        for srow in stats:
+            by_chunk.setdefault(srow["chunk_id"], {})[srow["column"]] = (
+                srow["min"],
+                srow["max"],
+            )
+        kept = []
+        for c in chunks:
+            cstats = by_chunk.get(c["id"])
+            drop = False
+            if cstats:
+                for col, (qlo, qhi) in where_stats.items():
+                    if col in cstats:
+                        cmin, cmax = cstats[col]
+                        if cmin is not None and qhi is not None and cmin > qhi:
+                            drop = True
+                        if cmax is not None and qlo is not None and cmax < qlo:
+                            drop = True
+            if not drop:
+                kept.append(c)
+        return kept
+
+    def _space_conds(self, space_key, chunks: list[dict]) -> list[str]:
+        """Space exclusion as partition predicates: per ``space_n`` group
+        of chunks, ``_space IN (pmod(xxhash64(CAST(k AS type)), n), …)`` —
+        the router's own expression (:meth:`_partition_exprs`) over the
+        literal, constant-folded by Catalyst, so no job runs. Each chunk
+        is pruned with the modulus it was WRITTEN with (chunk row
+        ``space_n``; ``set_number_partitions`` changes new chunks only,
+        like the reference's per-chunk dimension slices). Plus the row
+        filter on the raw column."""
+        sc = self.row.get("space_column")
+        if not sc:
+            raise ValueError("hypertable has no space dimension")
+        keys = space_key if isinstance(space_key, (list, tuple)) else [space_key]
+        if not keys:
+            return ["false"]
         if not chunks:
-            df = spark.createDataFrame([], self._schema_or_empty())
-            return df
-        paths = [self._chunk_glob(c) for c in chunks]
-        # Single-root fast path for many-chunk tables: handing Spark N
-        # chunk dirs makes the driver build an N-root file index (the
-        # O(chunks) plan-build cost the r11 probe measured at 3.4s for
-        # 1,460 mat chunks); one table-root read is a single parallel
-        # recursive listing with identical results — PROVIDED the disk
-        # dirs are exactly the catalog chunks (detach_chunk leaves
-        # orphan dirs that a root scan would wrongly resurrect, so
-        # verify with one cheap listdir). Only taken when most chunks
-        # survive pruning — for a narrow window, listing the few
-        # surviving roots beats listing everything and pruning.
-        use_root = False
-        if space_key is None and len(paths) >= 64:
-            if len(chunks) * 4 >= len(all_chunks) * 3:
-                on_disk = set(self._scan_chunk_dirs())
-                if {c["range_start"] for c in all_chunks} == on_disk:
-                    use_root = True
-        if space_key is not None:
-            if not self.row.get("space_column"):
-                raise ValueError("hypertable has no space dimension")
-            keys = space_key if isinstance(space_key, (list, tuple)) else [space_key]
-            cur_n = int(self.row["num_partitions"])
-            # hash the literals with the same function AND column type the
-            # router used (xxhash64 of int32 != int64) — one tiny
-            # driver-side job, no table scan. Each chunk is pruned with
-            # the space modulus it was WRITTEN with (chunk row space_n;
-            # set_number_partitions changes new chunks only, like the
-            # reference's per-chunk dimension slices).
-            sc_type = next(
-                f.dataType
-                for f in self._schema().fields
-                if f.name == self.row["space_column"]
+            return []
+        sc_type = next(
+            f.dataType for f in self._schema().fields if f.name == sc
+        ).simpleString()
+        cur_n = int(self.row["num_partitions"])
+        groups: dict[int, list[str]] = {}
+        for c in chunks:
+            groups.setdefault(int(c.get("space_n") or cur_n), []).append(
+                str(c["range_start"])
             )
-            moduli = sorted({int(c.get("space_n") or cur_n) for c in chunks})
-            hashed = spark.range(1).select(
-                *[
-                    F.xxhash64(F.lit(k).cast(sc_type)).alias(f"h{i}")
-                    for i, k in enumerate(keys)
-                ]
-            ).collect()[0]
-            buckets_for = {
-                n: sorted({int(hashed[i]) % n for i in range(len(keys))})
-                for n in moduli
-            }
-            paths = [
-                os.path.join(self._chunk_glob(c), f"{SPACE_COL}={b}")
-                for c in chunks
-                for b in buckets_for[int(c.get("space_n") or cur_n)]
-            ]
-            paths = [p for p in paths if os.path.isdir(p)]
-            if not paths:
-                return spark.createDataFrame([], self._schema_or_empty())
-        if use_root:
-            df = (
-                self._chunk_reader()
-                .option("basePath", self.data_dir)
-                .parquet(self.data_dir)
+        lits = [sql_literal(k) for k in keys]
+
+        def buckets(n: int) -> str:
+            return in_list(
+                q(SPACE_COL),
+                (f"pmod(xxhash64(CAST({v} AS {sc_type})), {n})" for v in lits),
             )
-            if len(chunks) < len(all_chunks):
-                # partition pruning via the chunk column — resolved
-                # against the one file index at plan time, no extra scan
-                df = df.filter(
-                    F.col(CHUNK_COL).isin(
-                        [c["range_start"] for c in chunks]
-                    )
-                )
+
+        if len(groups) == 1:
+            space = buckets(next(iter(groups)))
         else:
-            df = (
-                self._chunk_reader().option("basePath", self.data_dir)
-                .parquet(*paths)
-            )
-        df = self._apply_fills(df, chunks)
-        if space_key is not None:
-            keys = space_key if isinstance(space_key, (list, tuple)) else [space_key]
-            df = df.filter(F.col(self.row["space_column"]).isin(list(keys)))
-        # Row-level predicate on the raw time column. Compare against a
-        # typed literal (not unix_micros arithmetic) so the predicate
-        # reaches the parquet scan as a PushedFilter → row-group skipping,
-        # the analog of the reference's per-batch minmax sparse index
-        # (tsl/src/compression/batch_metadata_builder_minmax.c).
-        df = self._time_bound_filter(df, lo, hi)
-        if not with_partition_cols:
-            df = df.drop(CHUNK_COL, SPACE_COL)
-        return df
+            space = "(" + " OR ".join(
+                f"({in_list(q(CHUNK_COL), groups[n])} AND {buckets(n)})"
+                for n in sorted(groups)
+            ) + ")"
+        return [space, in_list(q(sc), lits)]
 
     def read_ordered(
         self,
@@ -3540,51 +3558,48 @@ class Hypertable:
         return scanned.union(catalog_df).distinct()
 
     def _time_bound_filter(self, df, lo, hi) -> DataFrame:
-        """Row-level ``lo <= time < hi`` against a TYPED literal (not
-        unix_micros arithmetic) so the predicate reaches the parquet
-        scan as a PushedFilter -> row-group skipping — the analog of the
-        reference's per-batch minmax sparse index
+        """``df`` filtered by :meth:`_time_bound_sql`."""
+        for cond in self._time_bound_sql(lo, hi):
+            df = df.filter(cond)
+        return df
+
+    def _time_bound_sql(self, lo, hi) -> list[str]:
+        """Row-level ``lo <= time < hi`` as SQL conjuncts against a TYPED
+        literal (not unix_micros arithmetic) so the predicate reaches
+        the parquet scan as a PushedFilter -> row-group skipping — the
+        analog of the reference's per-batch minmax sparse index
         (tsl/src/compression/batch_metadata_builder_minmax.c). The one
         place this recipe lives; read() and read_ordered() both use it.
         """
-        dt = dict(df.dtypes).get(self.time_column, "")
-        if self.row.get("time_type") == "uuid":
-            # coarse PUSHABLE string-range filter: canonical UUIDv7 text
-            # orders by its embedded ms timestamp, so boundary UUIDs at
-            # the enclosing ms give a row-group-skipping predicate; the
-            # exact µs bound is the residual expression filter
-            from .functions.uuid7 import to_uuidv7_boundary
+        tc, dt = q(self.time_column), self._time_dtype()
+        internal = self._internal_time_sql(dt)
+        out = []
+        for bound, op in ((lo, ">="), (hi, "<")):
+            if bound is None:
+                continue
+            if self.row.get("time_type") == "uuid":
+                # coarse PUSHABLE string-range filter: canonical UUIDv7
+                # text orders by its embedded ms timestamp, so boundary
+                # UUIDs at the enclosing ms give a row-group-skipping
+                # predicate; the exact µs bound is the residual filter
+                ms = bound // 1000 if op == ">=" else -(-bound // 1000)
+                coarse = 0 <= ms < 1 << 48
+                if coarse:
+                    out.append(f"{tc} {op} {_uuidv7_boundary_sql(ms)}")
+                if not coarse or ms * 1000 != bound:
+                    out.append(f"{internal} {op} {bound}")
+            elif dt.startswith("timestamp"):
+                out.append(f"{tc} {op} timestamp_micros({bound})")
+            else:
+                out.append(f"{internal} {op} {bound}")
+        return out
 
-            tcol = F.col(self.time_column)
-            if lo is not None:
-                ms_lo = (lo // 1000) * 1000
-                df = df.filter(
-                    tcol >= to_uuidv7_boundary(F.timestamp_micros(F.lit(ms_lo)))
-                )
-                if lo != ms_lo:
-                    df = df.filter(self._internal_expr_on(df) >= F.lit(lo))
-            if hi is not None:
-                ms_hi = -(-hi // 1000) * 1000
-                df = df.filter(
-                    tcol < to_uuidv7_boundary(F.timestamp_micros(F.lit(ms_hi)))
-                )
-                if hi != ms_hi:
-                    df = df.filter(self._internal_expr_on(df) < F.lit(hi))
-        elif dt.startswith("timestamp"):
-            tcol = F.col(self.time_column)
-            if lo is not None:
-                df = df.filter(tcol >= F.timestamp_micros(F.lit(lo)))
-            if hi is not None:
-                df = df.filter(tcol < F.timestamp_micros(F.lit(hi)))
-        else:
-            if lo is not None:
-                df = df.filter(self._internal_expr_on(df) >= F.lit(lo))
-            if hi is not None:
-                df = df.filter(self._internal_expr_on(df) < F.lit(hi))
-        return df
-
-    def _internal_expr_on(self, df: DataFrame) -> Column:
-        return self._internal_time_expr(df)
+    def _time_dtype(self) -> str:
+        """The time column's catalog type (``simpleString``), '' if none."""
+        for f in self._schema_or_empty().fields:
+            if f.name == self.time_column:
+                return f.dataType.simpleString()
+        return ""
 
     def _chunk_glob(self, chunk: dict) -> str:
         return os.path.join(self.data_dir, f"{CHUNK_COL}={chunk['range_start']}")
@@ -3593,6 +3608,16 @@ class Hypertable:
         if self.row.get("schema_ddl"):
             return self._schema()
         return T.StructType([])
+
+    def _data_schema(self) -> T.StructType:
+        """The catalog schema without the partition columns."""
+        return T.StructType(
+            [
+                f
+                for f in self._schema_or_empty().fields
+                if f.name not in (CHUNK_COL, SPACE_COL)
+            ]
+        )
 
     def df(self) -> DataFrame:
         """Whole-table read (no pruning)."""

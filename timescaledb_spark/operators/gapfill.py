@@ -23,7 +23,8 @@ Reference: the GapFill custom plan node
 
 Spark-first implementation: one aggregation, a ``sequence()``-exploded
 bucket spine per group, a full-outer join, and window functions — all
-JVM-side; no Python UDFs. The spine explode is per-group and parallel;
+JVM-side; no Python UDFs. Expressions are SQL text, so building the
+plan costs a handful of JVM calls rather than one per Column node. The spine explode is per-group and parallel;
 nothing collects to the driver, so a 100 TB hypertable gapfills at the
 cardinality of (groups × buckets), which is the output size.
 """
@@ -34,8 +35,7 @@ from dataclasses import dataclass
 from datetime import date, datetime
 from typing import Optional, Sequence, Union
 
-from pyspark.sql import Column, DataFrame, Window as W, functions as F
-from pyspark.sql import types as T
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.time import (
     DEFAULT_ORIGIN_MONTHS,
@@ -43,6 +43,7 @@ from ..functions.time import (
     parse_interval,
 )
 from ..hypertable import _to_internal
+from ..scan import q, sql_literal
 
 _BUS = "_ts_bucket_us"
 
@@ -71,19 +72,15 @@ class interpolate:  # noqa: N801
 FillSpec = Union[locf, interpolate, None]
 
 
-def _null_ts_guard(ts_col: Column, bucket: Column) -> Column:
+def _null_ts_guard(ts_sql: str, bucket_sql: str) -> str:
     """Reference parity: a NULL row time errors
     (``gapfill_exec.c:1417`` "ts cannot be NULL") instead of producing a
     NULL bucket."""
-    return F.when(
-        ts_col.isNull(),
-        F.raise_error(
-            F.lit(
-                "invalid time_bucket_gapfill argument: ts cannot be NULL "
-                "(gapfill_exec.c:1417)"
-            )
-        ),
-    ).otherwise(bucket)
+    return (
+        f"CASE WHEN {ts_sql} IS NULL THEN raise_error("
+        "'invalid time_bucket_gapfill argument: ts cannot be NULL "
+        f"(gapfill_exec.c:1417)') ELSE {bucket_sql} END"
+    )
 
 
 def _pbucket(value_us: int, width_us: int, origin_us: int) -> int:
@@ -103,6 +100,34 @@ def _local_us(instant_us: int, tz: str) -> int:
     return instant_us + int(dt.utcoffset().total_seconds()) * 1_000_000
 
 
+def _over(group_by: list, order: str, frame: str = "") -> str:
+    """``OVER (PARTITION BY … ORDER BY …[ frame])`` text."""
+    part = f"PARTITION BY {', '.join(q(g) for g in group_by)} " if group_by else ""
+    return f"OVER ({part}ORDER BY {order}{frame})"
+
+
+def _bucketed(df: DataFrame, group_by: list, bucket_sql: str, aggs: dict) -> DataFrame:
+    """Aggregate ``df`` per (group, bucket); ``aggs`` values are SQL
+    text or Columns."""
+    return (
+        df.groupBy(*group_by, F.expr(bucket_sql).alias(_BUS))
+        .agg(
+            *[
+                F.expr(f"{c} AS {q(n)}") if isinstance(c, str) else c.alias(n)
+                for n, c in aggs.items()
+            ]
+        )
+        .withColumn("_present", F.lit(True))
+    )
+
+
+def _spine(bucketed: DataFrame, b0: int, b_last: int, w: int) -> DataFrame:
+    """The ungrouped bucket spine, one row per bucket in ``[b0, b_last]``."""
+    return bucketed.sparkSession.range(1).selectExpr(
+        f"explode(sequence({b0}, {b_last}, {w})) AS {_BUS}"
+    )
+
+
 def _nullsafe_spine_join(
     spine: DataFrame,
     bucketed: DataFrame,
@@ -111,31 +136,8 @@ def _nullsafe_spine_join(
 ) -> DataFrame:
     """Full-outer join of the bucket spine against the aggregated rows —
     used only for the ungrouped path (a literal one-row spine source;
-    grouped gapfill uses :func:`_expand_gaps`, which needs no join).
-    Plain ``on=[cols]`` equi-join never matches NULL group keys, so a
-    group whose key is NULL would emit BOTH an all-gap spine row and an
-    unjoined actual row per bucket; the join is null-safe on the group
-    columns (the reference treats NULL as an ordinary group value)."""
-    if not group_by:
-        return spine.join(bucketed, on=[_BUS], how="full_outer")
-    # the spine derives FROM bucketed (groups = bucketed.select(...)),
-    # so unqualified column refs are an ambiguous self-join — alias both
-    # sides and qualify every reference
-    s, b = spine.alias("_gf_s"), bucketed.alias("_gf_b")
-    cond = F.col(f"_gf_s.{_BUS}") == F.col(f"_gf_b.{_BUS}")
-    for g in group_by:
-        cond = cond & F.col(f"_gf_s.{g}").eqNullSafe(F.col(f"_gf_b.{g}"))
-    j = s.join(b, on=cond, how="full_outer")
-    sel = [
-        F.coalesce(F.col(f"_gf_s.{g}"), F.col(f"_gf_b.{g}")).alias(g)
-        for g in group_by
-    ]
-    sel.append(
-        F.coalesce(F.col(f"_gf_s.{_BUS}"), F.col(f"_gf_b.{_BUS}")).alias(_BUS)
-    )
-    sel += [F.col(f"_gf_b.{c}").alias(c) for c in value_cols]
-    sel.append(F.col("_gf_b._present").alias("_present"))
-    return j.select(*sel)
+    grouped gapfill uses :func:`_expand_gaps`, which needs no join)."""
+    return spine.join(bucketed, on=[_BUS], how="full_outer")
 
 
 def _expand_gaps(
@@ -162,42 +164,40 @@ def _expand_gaps(
     w`` grid, so ``greatest``/``least`` clamps stay on the grid. Per-row
     sequence arrays are bounded by the spine length — the same bound the
     join formulation's per-group ``sequence()`` spine had."""
-    lb0, lb_last, lw = F.lit(b0), F.lit(b_last), F.lit(w)
-    win = W.partitionBy(*group_by).orderBy(_BUS)
-    bus = F.col(_BUS).cast(T.LongType())
+    groups = [q(g) for g in group_by]
+    vals = [q(c) for c in value_cols]
+    win = _over(group_by, _BUS)
+    bus = f"CAST({_BUS} AS BIGINT)"
     # window exprs must be projected before they can feed a generator
-    staged = bucketed.select(
-        *group_by,
-        bus.alias("_gf_self"),
-        F.lead(bus).over(win).alias("_gf_next"),
-        (F.row_number().over(win) == 1).alias("_gf_first"),
-        *value_cols,
+    staged = bucketed.selectExpr(
+        *groups,
+        f"{bus} AS _gf_self",
+        f"lead({bus}) {win} AS _gf_next",
+        f"(row_number() {win} = 1) AS _gf_first",
+        *vals,
     )
-    self_c, nxt = F.col("_gf_self"), F.col("_gf_next")
+    empty = "CAST(array() AS ARRAY<BIGINT>)"
     # leading gaps (first row only): [b0, min(bus - w, b_last)]
-    lead_hi = F.least(self_c - lw, lb_last)
+    lead_hi = f"least(_gf_self - {w}, {b_last})"
     # trailing gaps: [max(bus + w, b0), min(next - w (or b_last), b_last)]
-    gap_lo = F.greatest(self_c + lw, lb0)
-    gap_hi = F.least(F.coalesce(nxt - lw, lb_last), lb_last)
-    empty = F.array().cast(T.ArrayType(T.LongType()))
-    buses = F.concat(
-        F.when(
-            F.col("_gf_first") & (lb0 <= lead_hi), F.sequence(lb0, lead_hi, lw)
-        ).otherwise(empty),
-        F.array(self_c),
-        F.when(gap_lo <= gap_hi, F.sequence(gap_lo, gap_hi, lw)).otherwise(empty),
+    gap_lo = f"greatest(_gf_self + {w}, {b0})"
+    gap_hi = f"least(coalesce(_gf_next - {w}, {b_last}), {b_last})"
+    buses = (
+        f"concat(CASE WHEN _gf_first AND ({b0} <= {lead_hi}) "
+        f"THEN sequence({b0}, {lead_hi}, {w}) ELSE {empty} END, "
+        f"array(_gf_self), "
+        f"CASE WHEN {gap_lo} <= {gap_hi} "
+        f"THEN sequence({gap_lo}, {gap_hi}, {w}) ELSE {empty} END)"
     )
-    exploded = staged.select(
-        *group_by,
-        "_gf_self",
-        F.explode(buses).alias("_gf_bus"),
-        *value_cols,
+    exploded = staged.selectExpr(
+        *groups, "_gf_self", f"explode({buses}) AS _gf_bus", *vals
     )
-    present = F.col("_gf_bus") == F.col("_gf_self")
-    sel = [*group_by, F.col("_gf_bus").alias(_BUS)]
-    sel += [F.when(present, F.col(c)).alias(c) for c in value_cols]
-    sel.append(present.alias("_present"))
-    return exploded.select(*sel)
+    return exploded.selectExpr(
+        *groups,
+        f"_gf_bus AS {_BUS}",
+        *[f"CASE WHEN _gf_bus = _gf_self THEN {c} END AS {c}" for c in vals],
+        "(_gf_bus = _gf_self) AS _present",
+    )
 
 
 def time_bucket_gapfill(
@@ -207,7 +207,7 @@ def time_bucket_gapfill(
     start: Union[int, str, datetime, date],
     finish: Union[int, str, datetime, date],
     group_by: Sequence[str] = (),
-    aggs: Optional[dict[str, Column]] = None,
+    aggs: Optional[dict[str, Union[Column, str]]] = None,
     fill: Optional[dict[str, FillSpec]] = None,
     bucket_alias: str = "bucket",
     timezone: Optional[str] = None,
@@ -215,7 +215,8 @@ def time_bucket_gapfill(
     """Aggregate ``df`` by time bucket (+ ``group_by``), generating rows for
     missing buckets in ``[start, finish)`` and applying per-column fills.
 
-    ``aggs``: output column name -> aggregate expression.
+    ``aggs``: output column name -> aggregate expression (a Column, or
+    SQL text).
     ``fill``: output column name -> locf(...) / interpolate(...) / None.
     ``timezone``: bucket in local wall-clock time of an IANA zone — the
     reference's ``ts_gapfill_timestamptz_timezone_bucket`` overload
@@ -223,6 +224,10 @@ def time_bucket_gapfill(
     bucket instants are non-uniform in UTC across a DST transition
     (23 h/25 h days) — exactly the reference semantics; locf/interpolate
     window math runs on the local-time axis.
+
+    Expressions are built as SQL text (a few ``selectExpr`` calls), not
+    Column trees, to keep driver-side plan construction to a handful of
+    JVM calls.
     """
     if aggs is None:
         raise ValueError("aggs is required")
@@ -237,6 +242,7 @@ def time_bucket_gapfill(
         raise ValueError("timezone gapfill needs a timestamp column")
 
     # --- bucket grid (all int64 internal units: µs or verbatim ints) ------
+    tc = q(time_col)
     if is_ts:
         iv = parse_interval(width)
         if iv.months:
@@ -246,20 +252,22 @@ def time_bucket_gapfill(
             )
         width_i = iv.us
         origin = DEFAULT_ORIGIN_US
-        ts_col = F.col(time_col).cast(T.TimestampType())
+        ts_col = f"CAST({tc} AS TIMESTAMP)"
         if timezone is not None:
             # _BUS is the LOCAL-wall-clock bucket start in µs; the output
             # converts each local bucket back to its UTC instant.
-            internal = F.unix_micros(F.from_utc_timestamp(ts_col, timezone))
+            internal = (
+                f"unix_micros(from_utc_timestamp({ts_col}, {sql_literal(timezone)}))"
+            )
         else:
-            internal = F.unix_micros(ts_col)
+            internal = f"unix_micros({ts_col})"
     else:
         if not isinstance(width, int):
             width_i = parse_interval(width).us
         else:
             width_i = width
         origin = 0
-        internal = F.col(time_col).cast(T.LongType())
+        internal = f"CAST({tc} AS BIGINT)"
 
     start_i, finish_i = _to_internal(start), _to_internal(finish)
     if start_i is None or finish_i is None:
@@ -281,28 +289,21 @@ def time_bucket_gapfill(
             stacklevel=2,
         )
 
-    bucket_us = internal - F.pmod(internal - F.lit(origin), F.lit(width_i))
     # reference parity (gapfill_exec.c:1417): a NULL row time is an
     # error, not a pass-through — and the window gap expansion below
     # relies on every bucket being non-NULL (a NULL bucket would sort
     # first and re-emit the whole spine as leading gaps)
-    bucket_us = _null_ts_guard(internal, bucket_us)
-    bucketed = (
-        df.groupBy(*group_by, bucket_us.alias(_BUS))
-        .agg(*[c.alias(n) for n, c in aggs.items()])
-        .withColumn("_present", F.lit(True))
+    bucket_us = _null_ts_guard(
+        internal, f"{internal} - pmod({internal} - {origin}, {width_i})"
     )
+    bucketed = _bucketed(df, group_by, bucket_us, aggs)
 
     if group_by:
         joined = _expand_gaps(bucketed, group_by, list(aggs), b0, b_last, width_i)
     else:
-        groups = bucketed.sparkSession.range(1).select(F.lit(1).alias("_g")).drop("_g")
-        spine = groups.select(
-            F.explode(
-                F.sequence(F.lit(b0), F.lit(b_last), F.lit(width_i))
-            ).alias(_BUS),
+        joined = _spine(bucketed, b0, b_last, width_i).join(
+            bucketed, on=[_BUS], how="full_outer"
         )
-        joined = _nullsafe_spine_join(spine, bucketed, group_by, list(aggs))
     if is_ts and timezone is not None:
         axis_of = lambda v: _local_us(_to_internal(v), timezone)  # noqa: E731
     else:
@@ -310,28 +311,25 @@ def time_bucket_gapfill(
     out = _apply_fills(joined, group_by, list(aggs), fill, axis_of=axis_of)
 
     if is_ts and timezone is not None:
+        tz = sql_literal(timezone)
         # DST spring-forward: a nonexistent local hour maps to the same
         # UTC instant as the following hour — drop the phantom spine row
         # (its local time does not survive a local->UTC->local round
         # trip), or downstream consumers see duplicate bucket keys
-        exists = (
-            F.unix_micros(
-                F.from_utc_timestamp(
-                    F.to_utc_timestamp(F.timestamp_micros(F.col(_BUS)), timezone),
-                    timezone,
-                )
-            )
-            == F.col(_BUS)
+        out = out.filter(
+            f"unix_micros(from_utc_timestamp(to_utc_timestamp("
+            f"timestamp_micros({_BUS}), {tz}), {tz})) = {_BUS}"
         )
-        out = out.filter(exists)
-        bucket_out = F.to_utc_timestamp(
-            F.timestamp_micros(F.col(_BUS)), timezone
-        ).alias(bucket_alias)
+        bucket_out = f"to_utc_timestamp(timestamp_micros({_BUS}), {tz})"
     elif is_ts:
-        bucket_out = F.timestamp_micros(F.col(_BUS)).alias(bucket_alias)
+        bucket_out = f"timestamp_micros({_BUS})"
     else:
-        bucket_out = F.col(_BUS).alias(bucket_alias)
-    return out.select(*group_by, bucket_out, *aggs.keys())
+        bucket_out = _BUS
+    return out.selectExpr(
+        *[q(g) for g in group_by],
+        f"{bucket_out} AS {q(bucket_alias)}",
+        *[q(n) for n in aggs],
+    )
 
 
 def _gapfill_month(
@@ -397,38 +395,33 @@ def _gapfill_month(
         m = nxt
     b_last = m
 
-    tcol = F.col(time_col)
+    tcol = q(time_col)
     if timezone is not None:
-        tcol = F.from_utc_timestamp(tcol.cast(T.TimestampType()), timezone)
-    midx = F.year(tcol) * F.lit(12) + F.month(tcol) - F.lit(1)
-    bmidx = midx - F.pmod(midx - F.lit(om), F.lit(w))
-    bmidx = _null_ts_guard(tcol, bmidx)
-    bucketed = (
-        df.groupBy(*group_by, bmidx.alias(_BUS))
-        .agg(*[c.alias(n) for n, c in aggs.items()])
-        .withColumn("_present", F.lit(True))
-    )
+        tcol = f"from_utc_timestamp(CAST({tcol} AS TIMESTAMP), {sql_literal(timezone)})"
+    midx = f"(year({tcol}) * 12 + month({tcol}) - 1)"
+    bmidx = _null_ts_guard(tcol, f"{midx} - pmod({midx} - {om}, {w})")
+    bucketed = _bucketed(df, group_by, bmidx, aggs)
     if group_by:
         joined = _expand_gaps(bucketed, group_by, list(aggs), b0, b_last, w)
     else:
-        groups = bucketed.sparkSession.range(1).select(F.lit(1).alias("_g")).drop("_g")
-        spine = groups.select(
-            F.explode(F.sequence(F.lit(b0), F.lit(b_last), F.lit(w))).alias(_BUS)
+        joined = _spine(bucketed, b0, b_last, w).join(
+            bucketed, on=[_BUS], how="full_outer"
         )
-        joined = _nullsafe_spine_join(spine, bucketed, group_by, list(aggs))
     # interpolate prev/next tuples carry TIMES: the fill axis here is the
     # MONTH INDEX, so convert them onto it (a raw µs x0 against a ~e2
     # month-index x degenerates the linear weights)
     out = _apply_fills(joined, group_by, list(aggs), fill, axis_of=py_midx)
-    b = F.col(_BUS)
-    bucket_ts = F.make_date(
-        F.floor(b / F.lit(12)).cast(T.IntegerType()),
-        (F.pmod(b, F.lit(12)) + F.lit(1)).cast(T.IntegerType()),
-        F.lit(1),
-    ).cast(T.TimestampType())
+    bucket_ts = (
+        f"CAST(make_date(CAST(floor({_BUS} / 12) AS INT), "
+        f"CAST(pmod({_BUS}, 12) + 1 AS INT), 1) AS TIMESTAMP)"
+    )
     if timezone is not None:
-        bucket_ts = F.to_utc_timestamp(bucket_ts, timezone)
-    return out.select(*group_by, bucket_ts.alias(bucket_alias), *aggs.keys())
+        bucket_ts = f"to_utc_timestamp({bucket_ts}, {sql_literal(timezone)})"
+    return out.selectExpr(
+        *[q(g) for g in group_by],
+        f"{bucket_ts} AS {q(bucket_alias)}",
+        *[q(n) for n in aggs],
+    )
 
 
 def _apply_fills(
@@ -438,15 +431,15 @@ def _apply_fills(
     fill: dict[str, FillSpec],
     axis_of=None,
 ) -> DataFrame:
-    """``axis_of``: converts a user-facing prev/next TIME onto the spine
-    axis — internal µs for the plain path, local-wall-clock µs under a
-    timezone, the month index for month widths. Defaults to internal
-    µs."""
+    """One projection that fills every value column (``_present`` is
+    dropped). ``axis_of``: converts a user-facing prev/next TIME onto
+    the spine axis — internal µs for the plain path, local-wall-clock
+    µs under a timezone, the month index for month widths. Defaults to
+    internal µs."""
     if axis_of is None:
         axis_of = _to_internal
-    present = F.col("_present").isNotNull() & F.col("_present")
-    w = W.partitionBy(*group_by).orderBy(_BUS) if group_by else W.orderBy(_BUS)
-    w_upto = w.rowsBetween(W.unboundedPreceding, W.currentRow)
+    present = "(_present IS NOT NULL AND _present)"
+    w_upto = _over(group_by, _BUS, " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW")
     # "next actual row" = first non-null over (1 FOLLOWING, UNBOUNDED
     # FOLLOWING) — but Spark evaluates an UnboundedFollowing frame by
     # RECOMPUTING the aggregate for every row (O(n²) per partition:
@@ -457,87 +450,83 @@ def _apply_fills(
     # mirror is unambiguous) and runs incrementally in O(n). Costs one
     # extra in-partition sort, no exchange. Measured at sf0.1:
     # q_gapfill_interpolate's fill job 2.4s -> see plans/r16.
-    w_desc = (
-        W.partitionBy(*group_by).orderBy(F.col(_BUS).desc())
-        if group_by
-        else W.orderBy(F.col(_BUS).desc())
+    w_after_desc = _over(
+        group_by, f"{_BUS} DESC", " ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING"
     )
-    w_after_desc = w_desc.rowsBetween(W.unboundedPreceding, -1)
 
     out = joined
-    for name, spec in fill.items():
+    dtypes = None
+    items: dict[str, str] = {}
+    for i, (name, spec) in enumerate(fill.items()):
         if spec is None:
             continue
-        col = F.col(name)
+        col = q(name)
         if isinstance(spec, locf):
-            prev_expr = _lit_or_col(spec.prev)
+            prev = spec.prev
+            if isinstance(prev, Column):
+                # an expression seed is projected once, then referenced
+                out = out.withColumn(f"_gf_prev{i}", prev)
+                prev = f"_gf_prev{i}"
+            elif prev is not None:
+                prev = sql_literal(prev)
             if spec.treat_null_as_missing:
-                carried = F.last(
-                    F.when(present & col.isNotNull(), col), ignorenulls=True
-                ).over(w_upto)
-                filled = carried if prev_expr is None else F.coalesce(carried, prev_expr)
-                value = F.when(present & col.isNotNull(), col).otherwise(filled)
+                actual = f"{present} AND {col} IS NOT NULL"
+                carried = f"last(CASE WHEN {actual} THEN {col} END, true) {w_upto}"
+                filled = carried if prev is None else f"coalesce({carried}, {prev})"
+                items[name] = f"CASE WHEN {actual} THEN {col} ELSE {filled} END"
             else:
                 # carry the last ACTUAL row's value, NULL included; the
                 # prev expression only serves rows with no prior actual row
-                last_actual = F.last(
-                    F.when(present, F.struct(col.alias("v"))), ignorenulls=True
-                ).over(w_upto)
-                gap_val = last_actual["v"]
-                if prev_expr is not None:
-                    gap_val = F.when(last_actual.isNull(), prev_expr).otherwise(
-                        last_actual["v"]
+                last_actual = (
+                    f"last(CASE WHEN {present} THEN struct({col} AS v) END, "
+                    f"true) {w_upto}"
+                )
+                gap_val = f"({last_actual}).v"
+                if prev is not None:
+                    gap_val = (
+                        f"CASE WHEN ({last_actual}) IS NULL THEN {prev} "
+                        f"ELSE {gap_val} END"
                     )
-                value = F.when(present, col).otherwise(gap_val)
-            out = out.withColumn(name, value)
+                items[name] = f"CASE WHEN {present} THEN {col} ELSE {gap_val} END"
         elif isinstance(spec, interpolate):
-            dtype = dict(joined.dtypes)[name]
+            if dtypes is None:
+                dtypes = dict(joined.dtypes)
+            dtype = dtypes[name]
             # prev = last actual row; NULL value there → NULL result
             # (interpolate.c:76-88 tuple_returned resets on NULL)
-            last_actual = F.last(
-                F.when(present, F.struct(F.col(_BUS).alias("t"), col.alias("v"))),
-                ignorenulls=True,
-            ).over(w_upto)
-            next_actual = F.last(
-                F.when(present, F.struct(F.col(_BUS).alias("t"), col.alias("v"))),
-                ignorenulls=True,
-            ).over(w_after_desc)
-            prev_t, prev_v = last_actual["t"], last_actual["v"]
-            next_t, next_v = next_actual["t"], next_actual["v"]
-            if spec.prev is not None:
-                pt = F.lit(axis_of(spec.prev[0]))
-                pv = F.lit(spec.prev[1])
-                no_before = last_actual.isNull()
-                prev_t = F.when(no_before, pt).otherwise(prev_t)
-                prev_v = F.when(no_before, pv).otherwise(prev_v)
-            if spec.next is not None:
-                nt = F.lit(axis_of(spec.next[0]))
-                nv = F.lit(spec.next[1])
-                no_after = next_actual.isNull()
-                next_t = F.when(no_after, nt).otherwise(next_t)
-                next_v = F.when(no_after, nv).otherwise(next_v)
-            x = F.col(_BUS).cast(T.DoubleType())
-            x0, x1 = prev_t.cast(T.DoubleType()), next_t.cast(T.DoubleType())
-            y0, y1 = prev_v.cast(T.DoubleType()), next_v.cast(T.DoubleType())
-            interp = (y0 * (x1 - x) + y1 * (x - x0)) / (x1 - x0)
-            if dtype in ("smallint", "int", "bigint", "long", "integer", "short"):
-                interp = F.round(interp).cast(dtype)
-            else:
-                interp = interp.cast(dtype)
-            value = F.when(present, col).otherwise(
-                F.when(prev_v.isNull() | next_v.isNull(), F.lit(None)).otherwise(
-                    interp
-                )
+            actual = (
+                f"CASE WHEN {present} THEN struct({_BUS} AS t, {col} AS v) END"
             )
-            out = out.withColumn(name, value)
+            last_actual = f"(last({actual}, true) {w_upto})"
+            next_actual = f"(last({actual}, true) {w_after_desc})"
+            prev_t, prev_v = f"{last_actual}.t", f"{last_actual}.v"
+            next_t, next_v = f"{next_actual}.t", f"{next_actual}.v"
+            if spec.prev is not None:
+                pt = sql_literal(axis_of(spec.prev[0]))
+                pv = sql_literal(spec.prev[1])
+                prev_t = f"CASE WHEN {last_actual} IS NULL THEN {pt} ELSE {prev_t} END"
+                prev_v = f"CASE WHEN {last_actual} IS NULL THEN {pv} ELSE {prev_v} END"
+            if spec.next is not None:
+                nt = sql_literal(axis_of(spec.next[0]))
+                nv = sql_literal(spec.next[1])
+                next_t = f"CASE WHEN {next_actual} IS NULL THEN {nt} ELSE {next_t} END"
+                next_v = f"CASE WHEN {next_actual} IS NULL THEN {nv} ELSE {next_v} END"
+            x = f"CAST({_BUS} AS DOUBLE)"
+            x0, x1 = f"CAST({prev_t} AS DOUBLE)", f"CAST({next_t} AS DOUBLE)"
+            y0, y1 = f"CAST({prev_v} AS DOUBLE)", f"CAST({next_v} AS DOUBLE)"
+            interp = f"(({y0} * ({x1} - {x}) + {y1} * ({x} - {x0})) / ({x1} - {x0}))"
+            if dtype in ("smallint", "int", "bigint", "long", "integer", "short"):
+                interp = f"CAST(round({interp}) AS {dtype})"
+            else:
+                interp = f"CAST({interp} AS {dtype})"
+            items[name] = (
+                f"CASE WHEN {present} THEN {col} ELSE CASE WHEN ({prev_v}) IS NULL "
+                f"OR ({next_v}) IS NULL THEN NULL ELSE {interp} END END"
+            )
         else:
             raise TypeError(f"unknown fill spec {spec!r} for {name!r}")
-    return out.drop("_present")
-
-
-def _lit_or_col(v) -> Optional[Column]:
-    if v is None:
-        return None
-    if isinstance(v, Column):
-        return v
-    return F.lit(v)
+    return out.selectExpr(
+        *[q(g) for g in group_by],
+        _BUS,
+        *[f"{items[c]} AS {q(c)}" if c in items else q(c) for c in value_cols],
+    )

@@ -35,17 +35,35 @@ def _plan(df: DataFrame) -> str:
             conf.unset(key)
 
 
+def selected_partition_files(df: DataFrame) -> list[str]:
+    """One file path per partition dir the file scans select after
+    partition pruning (empty partitions skipped), over every scan."""
+    out = []
+    # sparkPlan, not executedPlan: AQE hides the scans in one leaf
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    for i in range(leaves.size()):
+        try:
+            dirs = leaves.apply(i).selectedPartitions().partitionDirectories()
+        except Exception:  # not a file scan
+            continue
+        for d in dirs:
+            files = d.files()
+            if not files.isEmpty():
+                out.append(
+                    re.sub(r"^file:(//)?", "", str(files.head().getPath().toString()))
+                )
+    return out
+
+
 def scanned_paths(df: DataFrame) -> int:
-    """Number of data paths the file scans will list (sum over scans).
+    """Number of partition dirs the file scans read (sum over scans).
 
     The Spark analog of "how many chunks survived exclusion": each
-    hypertable chunk dir contributes one path to its scan's
-    InMemoryFileIndex.
+    hypertable chunk dir (or its ``_space=k`` sub-dir) that the scan
+    selects after partition pruning counts once; an unpartitioned read
+    counts one.
     """
-    total = 0
-    for m in re.finditer(r"InMemoryFileIndex(?:\[[^\]]*\])?\((\d+) paths?\)", _plan(df)):
-        total += int(m.group(1))
-    return total
+    return len(selected_partition_files(df))
 
 
 def pushed_filters(df: DataFrame) -> list[str]:

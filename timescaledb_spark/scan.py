@@ -1,0 +1,193 @@
+"""Hypertable scan relations: one long-lived Spark relation per hypertable.
+
+Every read of a hypertable — :meth:`Hypertable.read` and each hypertable
+a ``ts.sql`` statement references — is SQL text over ONE relation per
+hypertable: a root read of its data dir (``basePath`` = the root, the
+catalog schema), registered once as a temp view whose name carries the
+relation's version. Exclusion is written as predicates on the ``_chunk``
+/ ``_space`` partition columns, which Catalyst's partition pruning
+applies to the relation's cached file index at plan time (the scan's
+``PartitionFilters``) — the planner-side analog of the reference's
+``hypertable_restrict_info.c``, with no driver-side job and no per-read
+file listing by Spark.
+
+Validity key: the hypertable's catalog row, its chunk rows, and the
+file names under each partition dir a statement reads. Files are listed
+in Python *before* the relation is built, so a write that lands while
+Spark lists shows up as a difference on the next statement. Any
+difference rebuilds the relation under a new view name and drops the
+superseded view.
+"""
+
+from __future__ import annotations
+
+import itertools
+import math
+import os
+import threading
+from dataclasses import dataclass
+from datetime import date, datetime
+from decimal import Decimal
+from typing import Callable, Optional
+
+from pyspark.sql import DataFrame, types as T
+
+CHUNK_COL = "_chunk"
+SPACE_COL = "_space"
+
+
+def q(name: str) -> str:
+    """Backtick-quote an identifier for SQL text."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_literal(v) -> str:
+    """A Python value as a Spark SQL literal of the type ``F.lit`` gives it."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, float):
+        if not math.isfinite(v):
+            return f"CAST('{v!r}' AS DOUBLE)"
+        return f"{v!r}D"
+    if isinstance(v, Decimal):
+        return f"{v}BD"
+    if isinstance(v, datetime):
+        return f"TIMESTAMP '{v.isoformat(sep=' ')}'"
+    if isinstance(v, date):
+        return f"DATE '{v.isoformat()}'"
+    s = str(v).replace("\\", "\\\\").replace("'", "\\'")
+    return f"'{s}'"
+
+
+def in_list(col: str, values) -> str:
+    """``col IN (v, …)`` over literal SQL texts; ``false`` when empty."""
+    values = list(values)
+    if not values:
+        return "false"
+    return f"{col} IN ({', '.join(values)})"
+
+
+def list_partition(path: str) -> Optional[tuple]:
+    """File names under one chunk dir, ``_space=k/`` sub-dirs included;
+    None when the dir does not exist."""
+    try:
+        names = sorted(os.listdir(path))
+    except FileNotFoundError:
+        return None
+    out = []
+    for n in names:
+        if n.startswith(f"{SPACE_COL}="):
+            try:
+                out.extend(f"{n}/{f}" for f in sorted(os.listdir(os.path.join(path, n))))
+            except FileNotFoundError:
+                pass
+        else:
+            out.append(n)
+    return tuple(out)
+
+
+@dataclass
+class Scan:
+    """One hypertable read, as SQL text over the hypertable's relation:
+    ``SELECT <cols> FROM <relation> WHERE <where>``. ``row``, ``chunks``
+    and ``files`` are the validity key the statement was planned
+    against (``files``: partition dir -> file names, for the dirs this
+    read selects)."""
+
+    name: str
+    root: str
+    schema: T.StructType
+    has_space: bool
+    row: dict
+    chunks: list
+    files: dict
+    cols: str
+    where: str
+
+    def text(self, view: str) -> str:
+        return f"SELECT {self.cols} FROM {q(view)} WHERE {self.where}"
+
+
+@dataclass
+class _Relation:
+    view: str
+    root: str
+    row: dict
+    chunks: list
+    files: dict
+
+
+class ScanRelations:
+    """The per-``TSSession`` registry of hypertable relations.
+
+    :meth:`plan` holds one lock while it checks or rebuilds the
+    relations a statement uses AND while Spark analyzes the statement,
+    so a concurrent rebuild can never drop a view between the two. No
+    catalog access happens under the lock (callers read the catalog
+    while building their :class:`Scan`), so it cannot invert the
+    catalog's lock order."""
+
+    _SESSIONS = itertools.count(1)
+
+    def __init__(self, spark):
+        self.spark = spark
+        self.lock = threading.RLock()
+        self._sid = next(self._SESSIONS)
+        self._version = itertools.count(1)
+        self._rels: dict[str, _Relation] = {}
+
+    def plan(self, scans: list, sql: Callable[[list], str]) -> DataFrame:
+        """``spark.sql(sql(view names of scans))`` with every scan's
+        relation valid for its key."""
+        with self.lock:
+            return self.spark.sql(sql([self._view(s) for s in scans]))
+
+    def _view(self, s: Scan) -> str:
+        rel = self._rels.get(s.name)
+        if (
+            rel is None
+            or rel.root != s.root
+            or rel.row != s.row
+            or rel.chunks != s.chunks
+            or any(rel.files.get(d) != f for d, f in s.files.items())
+        ):
+            rel = self._build(s)
+        return rel.view
+
+    def _build(self, s: Scan) -> _Relation:
+        files = {
+            d: list_partition(os.path.join(s.root, d))
+            for d in (f"{CHUNK_COL}={c['range_start']}" for c in s.chunks)
+        }
+        view = f"_ts_scan_{self._sid}_{s.name}_v{next(self._version)}"
+        # Spark skips '_'/'.'-prefixed files (_SUCCESS, .crc): with no
+        # other file there are no partition columns to discover
+        if any(
+            n.rsplit("/", 1)[-1][0] not in "_."
+            for names in files.values()
+            for n in names or ()
+        ):
+            df = (
+                self.spark.read.schema(s.schema)
+                .option("basePath", s.root)
+                .parquet(s.root)
+            )
+        else:
+            # no data file in any chunk: an empty relation of the same shape
+            fields = list(s.schema.fields)
+            if fields:
+                fields.append(T.StructField(CHUNK_COL, T.LongType()))
+                if s.has_space:
+                    fields.append(T.StructField(SPACE_COL, T.IntegerType()))
+            df = self.spark.createDataFrame([], T.StructType(fields))
+        df.createOrReplaceTempView(view)
+        old = self._rels.get(s.name)
+        if old is not None:
+            self.spark.catalog.dropTempView(old.view)
+        rel = _Relation(view, s.root, s.row, s.chunks, files)
+        self._rels[s.name] = rel
+        return rel

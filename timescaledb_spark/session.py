@@ -128,10 +128,12 @@ class TSSession:
         exclude_broken_rules: bool = True,
     ):
         from .catalog import Catalog
+        from .scan import ScanRelations
 
         self.spark = spark
         self.catalog_root = catalog_root
         self.catalog = Catalog(spark, catalog_root)
+        self.scans = ScanRelations(spark)
         if exclude_broken_rules:
             _exclude_broken_optimizer_rules(spark)
 

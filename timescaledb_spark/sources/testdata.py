@@ -27,20 +27,26 @@ TABLES = (
 ).split()
 
 
-#: inferred parquet schemas per file path — METADATA only (the file's
-#: column types never change within a session); every query still scans
-#: the data itself. Skips the ~50ms footer-inference job Spark runs per
-#: reader open, which sat on every load_table call of every gate
-#: (round 17).
+#: inferred parquet schemas per file path, stamped with the file's
+#: (mtime_ns, size) so a file rewritten in place is re-inferred —
+#: METADATA only; every query still scans the data itself. Skips the
+#: ~50ms footer-inference job Spark runs per reader open, which sat on
+#: every load_table call of every gate (round 17).
 _SCHEMA_CACHE: dict = {}
 
 
+def _file_stamp(path: str) -> tuple:
+    st = os.stat(path)
+    return (st.st_mtime_ns, st.st_size)
+
+
 def _file_schema(spark: SparkSession, path: str) -> T.StructType:
-    sch = _SCHEMA_CACHE.get(path)
-    if sch is None:
-        sch = spark.read.parquet(path).schema
-        _SCHEMA_CACHE[path] = sch
-    return sch
+    stamp = _file_stamp(path)
+    hit = _SCHEMA_CACHE.get(path)
+    if hit is None or hit[0] != stamp:
+        hit = (stamp, spark.read.parquet(path).schema)
+        _SCHEMA_CACHE[path] = hit
+    return hit[1]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

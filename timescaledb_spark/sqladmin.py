@@ -1904,18 +1904,14 @@ def run_insert_on_conflict(ts, head: str, keys, set_items) -> DataFrame:
     """ON CONFLICT routed through Hypertable.merge_into: DO NOTHING keeps
     matched target rows; DO UPDATE recomputes columns from expressions
     over the PG scopes (bare = target row, ``excluded.c`` = incoming)."""
-    from .sqlapi import _INSERT_RE, _drop_views, _register_views, rewrite_sql
+    from .sqlapi import _INSERT_RE, _query_tables, rewrite_sql
 
     m = _INSERT_RE.match(head)
     if not m:
         raise ValueError(f"cannot parse INSERT head {head!r}")
     name, collist, rest = m.group(1), m.group(2), m.group(3)
     ht = ts.get_hypertable(name)
-    rest, views = _register_views(ts, rest)
-    try:
-        src = ts.spark.sql(rewrite_sql(rest, ts))
-    finally:
-        _drop_views(ts, views)
+    src = _query_tables(ts, rest)
     if collist:
         cols = [c.strip() for c in collist.split(",") if c.strip()]
         src = src.toDF(*cols)
@@ -1970,7 +1966,7 @@ def run_merge(ts, q: str) -> DataFrame:
     requirement). Aliases are normalized to the merge scopes ``target``
     and ``excluded`` before expressions reach Spark.
     """
-    from .sqlapi import _register_views, rewrite_sql
+    from .sqlapi import _query_tables, rewrite_sql
 
     q = q.strip().rstrip(";")
     m = _MERGE_HEAD.match(q)
@@ -2014,13 +2010,7 @@ def run_merge(ts, q: str) -> DataFrame:
         src_sql = src_sql[1:-1]
     else:
         src_sql = f"SELECT * FROM {src_sql}"
-    from .sqlapi import _drop_views
-
-    src_sql, views = _register_views(ts, src_sql)
-    try:
-        src = ts.spark.sql(rewrite_sql(src_sql, ts))
-    finally:
-        _drop_views(ts, views)
+    src = _query_tables(ts, src_sql)
     salias = salias or "src"
 
     ht = ts.get_hypertable(tname)

@@ -6,17 +6,21 @@ The reference is SQL-first — every hyperfunction (``time_bucket``,
 ``sql/time_bucket.sql``, ``sql/gapfill.sql``, ``sql/histogram.sql``). This
 module gives a user of the reference the same entry point on Spark:
 
-- hypertables / plain tables / caggs are registered as temp views;
+- each hypertable is bound as a leading CTE over its long-lived scan
+  relation (``scan.py``), so the whole statement is planned in one
+  ``spark.sql`` call; plain tables and caggs are per-statement temp
+  views;
 - hyperfunction calls are **macro-expanded at parse time** into pure
   Spark-SQL expressions (the exact same formulas as the Column API in
   ``functions/`` — no UDFs, fully Catalyst-optimizable / codegen);
-- time predicates in the WHERE clause drive **driver-side chunk
-  exclusion** (the SQL-path analog of plan-time ChunkAppend pruning,
-  reference ``src/planner/hypertable_restrict_info.c``): the view for a
-  hypertable is registered over only the surviving chunk directories.
-  Extraction is conservative — when in doubt (OR terms, ambiguous
-  columns) the full table is registered and correctness falls back to
-  Catalyst's own filter pushdown + parquet row-group skipping;
+- time, space-key and chunk-stats predicates in the WHERE clause drive
+  **chunk exclusion** (the SQL-path analog of plan-time ChunkAppend
+  pruning, reference ``src/planner/hypertable_restrict_info.c``): the
+  hypertable's CTE carries ``_chunk`` / ``_space`` partition predicates
+  that Catalyst prunes the relation's file index with. Extraction is
+  conservative — when in doubt (OR terms, ambiguous columns) every
+  chunk is kept and correctness falls back to Catalyst's own filter
+  pushdown + parquet row-group skipping;
 - ``time_bucket_gapfill`` statements are recognized as a (constrained)
   statement shape and routed through the gapfill operator
   (``operators/gapfill.py``), the analog of the reference's GapFill plan
@@ -29,6 +33,7 @@ only built-in functions, so a 100 TB scan pays zero Python tax.
 from __future__ import annotations
 
 import re
+from dataclasses import dataclass, field
 from datetime import datetime
 from typing import Callable, Optional
 
@@ -869,7 +874,7 @@ _VIEW_SEQ = [0]
 
 def _sub_table_refs(sql: str, mapping: dict[str, str]) -> str:
     """Replace bare table-name identifiers (outside string literals, not
-    behind a '.') with their uniquified view names."""
+    behind a '.') with their statement-unique names."""
     out = []
     i = 0
     low = {k.lower(): v for k, v in mapping.items()}
@@ -895,19 +900,110 @@ def _sub_table_refs(sql: str, mapping: dict[str, str]) -> str:
     return "".join(out)
 
 
-def _register_views(ts, sql: str):
-    """Register every engine table referenced in ``sql`` as a temp view
-    under a statement-unique name (never clobbering same-named session
-    views the caller may own), and rewrite the references. Hypertables
-    get chunk-pruned reads when a time range is extractable. Returns
-    ``(rewritten_sql, view_names)`` — the caller drops the views once the
-    statement's DataFrame is analyzed (views resolve into the plan at
-    analysis; keeping them would leak one catalog entry per statement in
-    long-lived drivers)."""
+#: leading whitespace and comments of a statement
+_LEAD = r"(?:\s+|--[^\n]*(?:\n|$)|/\*.*?\*/)*"
+_WITH_HEAD = re.compile(_LEAD + r"with\s+(?:recursive\s+)?", re.I | re.S)
+_CTE_HEAD = re.compile(r"\s*([A-Za-z_]\w*)\s*(?:\([^()]*\)\s*)?as\s*\(", re.I)
+
+
+def _leading_with(sql: str):
+    """A statement's top-level ``WITH`` list: ``(head_end, [(name,
+    body_start, body_end)])`` — or None when it has none."""
+    st = _strip_strings(sql)
+    m = _WITH_HEAD.match(st)
+    if not m:
+        return None
+    i, ctes = m.end(), []
+    while True:
+        h = _CTE_HEAD.match(st, i)
+        if not h:
+            return None
+        close = _matching_paren(sql, h.end() - 1)
+        ctes.append((h.group(1), h.end(), close))
+        c = re.match(r"\s*,", st[close + 1:])
+        if not c:
+            return m.end(), ctes
+        i = close + 1 + c.end()
+
+
+def _sub_scoped(sql: str, mapping: dict[str, str]) -> str:
+    """:func:`_sub_table_refs` that respects a user ``WITH`` naming a CTE
+    like an engine table: inside that CTE's own body (and earlier
+    ones) the name is still the table; after it, it is the CTE and is
+    left alone. CTE names themselves are never rewritten."""
+    wl = _leading_with(sql)
+    if wl is None:
+        return _sub_table_refs(sql, mapping)
+    head_end, ctes = wl
+    visible = {k.lower(): v for k, v in mapping.items()}
+    out, pos = [sql[:head_end]], head_end
+    for name, b0, b1 in ctes:
+        out.append(sql[pos:b0])
+        out.append(_sub_table_refs(sql[b0:b1], visible))
+        pos = b1
+        visible.pop(name.lower(), None)
+    out.append(_sub_table_refs(sql[pos:], visible))
+    return "".join(out)
+
+
+_QUERY_START = re.compile(_LEAD + r"(?:select|with|values|table|from|\()", re.I | re.S)
+
+
+@dataclass
+class _Bound:
+    """A statement with its engine tables bound. Hypertables become
+    leading CTEs ``_ts_sql_<n>_<table> AS (<scan>)`` over their scan
+    relations (``scan.py``); continuous aggregates and plain tables
+    are temp views under the same names, dropped by :meth:`close`."""
+
+    ts: object
+    sql: str
+    scans: list = field(default_factory=list)  # [(cte name, Scan)]
+    views: list = field(default_factory=list)
+
+    def df(self, body: Optional[str] = None) -> DataFrame:
+        """``spark.sql`` of ``body`` (default: the bound statement) with
+        the hypertable CTEs in front, in one call."""
+        body = self.sql if body is None else body
+        if not self.scans:
+            return self.ts.spark.sql(body)
+        if not _QUERY_START.match(body):
+            raise ValueError(
+                "hypertables can only be read by queries "
+                "(SELECT / WITH / VALUES / TABLE)"
+            )
+        m = _WITH_HEAD.match(body)
+        head, rest, sep = (
+            (body[: m.end()], body[m.end():], ", ") if m else ("WITH ", body, " ")
+        )
+
+        def text(views: list) -> str:
+            ctes = ", ".join(
+                f"{name} AS ({s.text(v)})" for (name, s), v in zip(self.scans, views)
+            )
+            return f"{head}{ctes}{sep}{rest}"
+
+        return self.ts.scans.plan([s for _, s in self.scans], text)
+
+    def close(self) -> None:
+        for v in self.views:
+            try:
+                self.ts.spark.catalog.dropTempView(v)
+            except Exception:
+                pass
+
+
+def _bind_tables(ts, sql: str) -> _Bound:
+    """Bind every engine table referenced in ``sql`` under a
+    statement-unique name ``_ts_sql_<n>_<table>`` (never clobbering
+    same-named session views the caller may own) and rewrite the
+    references. Hypertables get chunk-, space- and stats-pruned scans
+    when the WHERE clause bounds them."""
     mapping: dict[str, str] = {}
     _VIEW_SEQ[0] += 1
     uid = _VIEW_SEQ[0]
     stripped_sql = _strip_strings(sql)
+    bound = _Bound(ts, sql)
     hts = {r["name"]: r for r in ts.catalog.hypertable.read()}
     for name in hts:
         if not _referenced(sql, name):
@@ -916,7 +1012,7 @@ def _register_views(ts, sql: str):
         aliases = _table_aliases(sql, name)
         # a table appearing MORE THAN ONCE as a relation (self-join,
         # including the comma-list spelling `FROM t a, t b`) shares this
-        # single view across all its aliases — a bound extracted from
+        # single binding across all its aliases — a bound extracted from
         # one alias must not prune what another alias scans in full.
         # _relation_refs restricts the comma form to FROM lists, so a
         # select-list column named like the table cannot falsely
@@ -948,30 +1044,42 @@ def _register_views(ts, sql: str):
                     where_stats = where_stats or {}
                     where_stats[sc] = (slo, shi)
         vname = f"_ts_sql_{uid}_{name}"
-        ht.read(
-            start=lo, end=hi, space_key=space_key, where_stats=where_stats
-        ).createOrReplaceTempView(vname)
+        bound.scans.append(
+            (
+                vname,
+                ht._scan(
+                    start=lo, end=hi, space_key=space_key, where_stats=where_stats
+                ),
+            )
+        )
         mapping[name] = vname
     for row in ts.catalog.continuous_agg.read():
         if row["name"] not in mapping and _referenced(sql, row["name"]):
             vname = f"_ts_sql_{uid}_{row['name']}"
             ts.get_cagg(row["name"]).read().createOrReplaceTempView(vname)
             mapping[row["name"]] = vname
+            bound.views.append(vname)
     for row in ts.catalog.plain_table.read():
         if row["name"] not in mapping and _referenced(sql, row["name"]):
             vname = f"_ts_sql_{uid}_{row['name']}"
             ts.read_table(row["name"]).createOrReplaceTempView(vname)
             mapping[row["name"]] = vname
-    out = _sub_table_refs(sql, mapping) if mapping else sql
-    return out, list(mapping.values())
+            bound.views.append(vname)
+    if mapping:
+        bound.sql = _sub_scoped(sql, mapping)
+    return bound
 
 
-def _drop_views(ts, views) -> None:
-    for v in views:
-        try:
-            ts.spark.catalog.dropTempView(v)
-        except Exception:
-            pass
+def _query_tables(ts, sql: str) -> DataFrame:
+    """``sql`` (a query over engine tables) as a DataFrame: bound,
+    macro-expanded and planned in one ``spark.sql`` call."""
+    bound = _bind_tables(ts, sql)
+    try:
+        return bound.df(rewrite_sql(bound.sql, ts))
+    finally:
+        # temp views resolve into the returned DataFrame's analyzed
+        # plan — dropping them here only bounds the session catalog
+        bound.close()
 
 
 _INFO_VIEWS = (
@@ -1007,30 +1115,18 @@ _INSERT_RE = re.compile(
 
 
 
-def _scanned_chunk_dirs(df) -> "set[str] | None":
-    """Chunk dirs the plan's file scans will actually read, from the
-    scans' real file indexes (the rendered plan truncates path lists)."""
-    try:
-        out: set[str] = set()
-        # sparkPlan, not executedPlan: AQE wraps the whole tree in one
-        # AdaptiveSparkPlanExec leaf that hides the scans
-        leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
-        for i in range(leaves.size()):
-            n = leaves.apply(i)
-            if not hasattr(n, "relation"):
-                continue
-            try:
-                files = n.relation().location().inputFiles()
-            except Exception:
-                continue
-            for f in files:
-                f = re.sub(r"^file:(//)?", "", str(f))
-                if "/_chunk=" in f:
-                    root, chunk = f.split("/_chunk=", 1)
-                    out.add(root + "/_chunk=" + chunk.split("/", 1)[0])
-        return out
-    except Exception:
-        return None
+def _scanned_chunk_dirs(df) -> set[str]:
+    """Chunk dirs the plan's file scans will actually read: the
+    partitions each scan selects after partition pruning (a scan
+    relation's file index spans the whole hypertable root)."""
+    from .plans.inspect import selected_partition_files
+
+    out: set[str] = set()
+    for f in selected_partition_files(df):
+        if "/_chunk=" in f:
+            root, chunk = f.split("/_chunk=", 1)
+            out.add(root + "/_chunk=" + chunk.split("/", 1)[0])
+    return out
 
 
 def _run_explain(ts, inner: str) -> DataFrame:
@@ -1038,7 +1134,7 @@ def _run_explain(ts, inner: str) -> DataFrame:
     (ChunkAppend rows print "Chunks excluded during startup: N",
     tsl/src/nodes/chunk_append/explain.c). Returns one row per physical
     plan line, prefixed by a per-hypertable chunk-exclusion summary
-    derived from the scan's file index. Read-only: only SELECT/WITH
+    counted from the partitions the scans select. Read-only: only SELECT/WITH
     statements are explainable (our EXPLAIN never executes the plan;
     DML here would have to run to be planned)."""
     if not re.match(r"(?is)^(select|with)\b", inner.strip()):
@@ -1050,12 +1146,6 @@ def _run_explain(ts, inner: str) -> DataFrame:
     plan = df._jdf.queryExecution().executedPlan().toString()
     header: list[str] = []
     scanned = _scanned_chunk_dirs(df)
-    if scanned is None:
-        # fallback: the rendered plan truncates its file list, so this
-        # undercounts — only used if the py4j walk fails
-        scanned = set(
-            re.findall(r"(?:file:)?(/[^,\]\s]*?/_chunk=[^/,\]\s]+)", plan)
-        )
     by_root: dict[str, int] = {}
     if scanned:
         for p in scanned:
@@ -1825,11 +1915,7 @@ def ts_sql(ts, query: str) -> DataFrame:
         if mr:
             ret_exprs = rest[mr.start(1):].strip()
             rest = rest[: mr.start(0)].rstrip()
-        rest, views = _register_views(ts, rest)
-        try:
-            src = ts.spark.sql(rewrite_sql(rest, ts))
-        finally:
-            _drop_views(ts, views)
+        src = _query_tables(ts, rest)
         if collist:
             cols = [c.strip() for c in collist.split(",") if c.strip()]
             if len(cols) != len(src.columns):
@@ -1930,14 +2016,12 @@ def ts_sql(ts, query: str) -> DataFrame:
     partialq = _try_partial_accessors(ts, q)
     if partialq is not None:
         return partialq
-    q, views = _register_views(ts, q)
-    try:
-        if re.search(r"\btime_bucket_gapfill\b", _strip_strings(q), re.I):
-            from .sqlgapfill import run_gapfill_statement
+    if re.search(r"\btime_bucket_gapfill\b", _strip_strings(q), re.I):
+        from .sqlgapfill import run_gapfill_statement
 
-            return run_gapfill_statement(ts, q)
-        return ts.spark.sql(rewrite_sql(q, ts))
-    finally:
-        # views resolve into the returned DataFrame's analyzed plan —
-        # dropping them here only bounds the session catalog
-        _drop_views(ts, views)
+        bound = _bind_tables(ts, q)
+        try:
+            return run_gapfill_statement(ts, bound)
+        finally:
+            bound.close()
+    return _query_tables(ts, q)

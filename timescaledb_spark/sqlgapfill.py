@@ -198,9 +198,11 @@ def _parse_fill(name: str, args: list[str]):
     return agg, spec
 
 
-def run_gapfill_statement(ts, q: str) -> DataFrame:
-    """Execute a gapfill-shaped statement (views already registered)."""
-    cl = _clauses_of(q)
+def run_gapfill_statement(ts, bound) -> DataFrame:
+    """Execute a gapfill-shaped statement whose engine tables are bound
+    (``sqlapi._bind_tables``): the base query carries the bound
+    hypertable CTEs."""
+    cl = _clauses_of(bound.sql)
     if "having" in cl:
         raise ValueError("HAVING is not supported with time_bucket_gapfill")
     items = _split_select_items(cl["select"])
@@ -226,7 +228,7 @@ def run_gapfill_statement(ts, q: str) -> DataFrame:
             if alias is None:
                 raise ValueError(f"alias required: {item!r} (use AS)")
             agg_sql, spec = _parse_fill(fill_head[0], fill_head[1])
-            aggs[alias] = F.expr(rewrite_sql(agg_sql, ts))
+            aggs[alias] = rewrite_sql(agg_sql, ts)
             fills[alias] = spec
             continue
         if _COLREF.match(expr):
@@ -236,7 +238,7 @@ def run_gapfill_statement(ts, q: str) -> DataFrame:
             continue
         if alias is None:
             raise ValueError(f"alias required: {item!r} (use AS)")
-        aggs[alias] = F.expr(rewrite_sql(expr, ts))
+        aggs[alias] = rewrite_sql(expr, ts)
 
     if gf is None:
         raise ValueError("no top-level time_bucket_gapfill call found")
@@ -306,7 +308,7 @@ def run_gapfill_statement(ts, q: str) -> DataFrame:
     base_sql = "SELECT * FROM " + cl["from"]
     if cl.get("where"):
         base_sql += " WHERE " + cl["where"]
-    base = ts.spark.sql(rewrite_sql(base_sql, ts))
+    base = bound.df(rewrite_sql(base_sql, ts))
 
     # strip qualifiers on group columns (operator works on the joined frame)
     group_cols = [g.split(".")[-1].strip() for g in group_by]
@@ -339,5 +341,9 @@ def run_gapfill_statement(ts, q: str) -> DataFrame:
         _VIEW_SEQ[0] += 1
         vname = f"_ts_gapfill_out_{_VIEW_SEQ[0]}"
         out.createOrReplaceTempView(vname)
-        out = ts.spark.sql(f"SELECT * FROM {vname}" + tail)
+        try:
+            out = ts.spark.sql(f"SELECT * FROM {vname}" + tail)
+        finally:
+            # the view is resolved into ``out`` at analysis
+            ts.spark.catalog.dropTempView(vname)
     return out

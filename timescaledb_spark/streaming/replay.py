@@ -43,20 +43,23 @@ atexit.register(_cleanup_replay_dirs)
 
 
 #: inferred staged-file schema per replay dir — inference is a
-#: footer-sampling Spark job (~0.1s); the staged files never change
-#: after staging, so one inference per dir serves every later gate run
+#: footer-sampling Spark job (~0.1s), so one inference serves every
+#: later gate run; stamped with the staged file's (mtime_ns, size) so a
+#: dir re-staged at the same path is re-inferred
 _REPLAY_SCHEMAS: dict = {}
 
 
 def _read_replay_dir(spark: SparkSession, tmp: str, src: str) -> DataFrame:
     """Build the streaming frame over an already-staged replay dir."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = _REPLAY_SCHEMAS.get(tmp)
-    if schema is None:
-        schema = spark.read.parquet(
-            os.path.join(tmp, "part-000.parquet")
-        ).schema
-        _REPLAY_SCHEMAS[tmp] = schema
+    part = os.path.join(tmp, "part-000.parquet")
+    st = os.stat(part)
+    stamp = (st.st_mtime_ns, st.st_size)
+    hit = _REPLAY_SCHEMAS.get(tmp)
+    if hit is None or hit[0] != stamp:
+        hit = (stamp, spark.read.parquet(part).schema)
+        _REPLAY_SCHEMAS[tmp] = hit
+    schema = hit[1]
     ts_is_ns = {
         f.name: f.dataType.simpleString() for f in schema.fields
     }.get("ts") == "bigint"

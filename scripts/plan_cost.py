@@ -1,15 +1,25 @@
 #!/usr/bin/env python
-"""Plan cost of the TSBS dashboard statements: py4j round trips and
-Spark jobs per ``ts.sql`` call, before any ``collect()``.
+"""Plan cost of the benchmark's read statements: py4j round trips and
+Spark jobs started while a statement is planned (before ``collect()``),
+and for the cagg reads also the Spark jobs ``collect()`` runs.
 
-Builds perfbench's ``tsbs_read`` hypertable (40 hosts x 12 h at 10 s,
-1-hour chunks x 4 ``hostname`` space partitions, all compressed) in a
-temp dir, plans each query type a few times (first pass warms the scan
-relation), and prints one JSON line per query type with the round
-trips and jobs of its last planning, then a summary line.
+``--workload tsbs_read`` (default) builds perfbench's ``tsbs_read``
+hypertable (40 hosts x 12 h at 10 s, 1-hour chunks x 4 ``hostname``
+space partitions, all compressed) in a temp dir, plans each query type
+a few times (first pass warms the scan relation), and prints one JSON
+line per query type with the round trips and jobs of its last planning,
+then a summary line.
+
+``--workload cagg_realtime`` runs perfbench's ``cagg_realtime`` set-up
+(a week of readings, an hourly realtime cagg with max/avg/count and a
+DDSketch, refreshed, plus the warm-up appends and refresh-policy tick)
+and one more append above the watermark, then prints the same figures
+for its two reads — ``daily_max`` (``ts.sql`` over the cagg) and
+``daily_p95`` (``quantiles([0.95], grain="1 day")``) — plus
+``collect_jobs``.
 
 Usage:
-    python scripts/plan_cost.py [--seed N] [--reps N]
+    python scripts/plan_cost.py [--workload W] [--seed N] [--reps N]
 """
 
 from __future__ import annotations
@@ -48,7 +58,12 @@ def main(argv) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--reps", type=int, default=3)
+    ap.add_argument(
+        "--workload", choices=("tsbs_read", "cagg_realtime"), default="tsbs_read"
+    )
     args = ap.parse_args(argv)
+    if args.workload == "cagg_realtime":
+        return cagg_realtime(args)
 
     import numpy as np
     import pyarrow.parquet as pq
@@ -97,6 +112,62 @@ def main(argv) -> int:
         ),
         "gapfill_round_trips": out["gapfill-locf"]["py4j_round_trips"],
     }))
+    spark.stop()
+    return 0
+
+
+class _NoReference:
+    """perfbench's host-speed reference, unused outside the timed loop."""
+
+    samples: list = []
+
+    def sample(self) -> float:
+        return 0.0
+
+
+def cagg_realtime(args) -> int:
+    from harness import Harness
+    from workloads import DAILY_MAX, CaggRealtime
+
+    from timescaledb_spark import TSSession, build_spark
+
+    spark = build_spark(app_name="ts_plan_cost")
+    spark.sparkContext.setLogLevel("ERROR")
+    root = tempfile.mkdtemp(prefix="ts_plan_cost_")
+    ts = TSSession(spark, os.path.join(root, "root"))
+    w = CaggRealtime(
+        spark, ts, Harness(ts, _NoReference()), args.seed, 13, os.path.join(root, "data")
+    )
+    w.setup()
+    w.insert(w.ht, 1 + w.WARMUP, "append")
+    reads = {
+        "daily_max": lambda: ts.sql(DAILY_MAX),
+        "daily_p95": lambda: w.cagg.quantiles([0.95], grain="1 day", realtime=True),
+    }
+    tracker = spark.sparkContext.statusTracker()
+    rt = RoundTrips(spark)
+
+    def jobs_since(j0):
+        return len([j for j in tracker.getJobIdsForGroup(None) if j > j0])
+
+    out = {}
+    for _ in range(args.reps):
+        for name, plan in reads.items():
+            j0 = max(tracker.getJobIdsForGroup(None), default=-1)
+            n0 = rt.n
+            df = plan()
+            trips, plan_jobs = rt.n - n0, jobs_since(j0)
+            j1 = max(tracker.getJobIdsForGroup(None), default=-1)
+            rows = len(df.collect())
+            out[name] = {
+                "query": name,
+                "py4j_round_trips": trips,
+                "plan_jobs": plan_jobs,
+                "collect_jobs": jobs_since(j1),
+                "rows": rows,
+            }
+    for row in out.values():
+        print(json.dumps(row))
     spark.stop()
     return 0
 

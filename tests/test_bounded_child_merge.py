@@ -17,6 +17,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from timescaledb_spark.scan import Ctes
 from timescaledb_spark.session import TSSession
 
 
@@ -158,8 +159,9 @@ class TestBoundedChildMerge:
         """The child refresh plan filters on a row_number rank BEFORE
         the collect_list — the O(capacity) state-build guarantee."""
         ts, parent, child = env
-        src = ts.get_hypertable("_mat_bp")
-        agg = child._aggregate(src.read())
+        c = Ctes()
+        raw = c.scan(ts.get_hypertable("_mat_bp")._scan())
+        agg = c.plan(ts, f"SELECT * FROM {child._aggregate(c, raw)}")
         plan = agg._jdf.queryExecution().optimizedPlan().toString()
         assert "row_number" in plan
         # the pre-trim predicates for both families (cap+1 = 9, n = 3)

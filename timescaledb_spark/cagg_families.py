@@ -21,14 +21,15 @@ toolkit ``rollup(<agg>(...))`` idiom; partial-vs-finalized discussion in
 - ``finalize``/``accessors`` — the served output columns and the
   toolkit accessor names that map onto them.
 
-``ContinuousAggregate`` drives the table through three generic paths:
-build (``_aggregate``, also the realtime union), merge (a ``rollup_of``
-child is ``pack(merge(parent states))``) and serve (every ``*_at_grain``
-is ``finalize(merge(_partial_frame(...)))``). So rollup children and
-at-grain serving share one merge per family.
-
-Expressions are SQL strings — one py4j parse each instead of thousands
-of Column round trips per cagg serve (the round-17 lever).
+Every step is a SQL-text builder: it appends ``SELECT`` CTEs over its
+input relation to a :class:`~timescaledb_spark.scan.Ctes` chain and
+returns the name of its output relation. ``ContinuousAggregate`` drives
+the table through three generic paths — build (``_aggregate``, also the
+realtime tail), merge (a ``rollup_of`` child is ``pack(merge(parent
+states))``) and serve (every ``*_at_grain`` is
+``finalize(merge(_partial_frame(...)))``) — and plans each read as ONE
+``spark.sql`` call over the hypertable scan relations, so rollup
+children, refresh and at-grain serving share one text per family.
 """
 
 from __future__ import annotations
@@ -37,9 +38,13 @@ import math
 from dataclasses import dataclass, field
 from typing import Callable, Optional, Sequence
 
-from pyspark.sql import DataFrame, functions as F
+from .scan import q as _q, sql_literal
 
-from .scan import q as _q
+#: spec key carrying the field names of the STORED state struct a merge
+#: reads (set by the caller from the mat table's schema); states
+#: materialized before a field was added (counter/gauge
+#: ``num_changes``) then serve NULL for it instead of failing analysis
+STORED_FIELDS = "_stored_fields"
 
 
 def _qs(names: Sequence[str]) -> list[str]:
@@ -62,53 +67,43 @@ def _over(partition: Sequence[str], order: Sequence[str]) -> str:
 _PRECEDING = "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING"
 
 
-def _sort_col(order: str):
-    """Column form of one ``col [ASC [NULLS LAST] | DESC [NULLS LAST]]``
-    order item."""
-    name, _, rest = order.partition(" ")
-    c, rest = F.col(name), rest.upper()
-    if "DESC" in rest:
-        return c.desc()  # NULLS LAST, Spark's default for DESC
-    return c.asc_nulls_last() if "NULLS LAST" in rest else c.asc()
+def select(c, src: str, cols: Sequence[str], where=None, group=None) -> str:
+    """Append ``SELECT cols FROM src [WHERE] [GROUP BY]`` to ``c``;
+    ``group`` lists SQL group items (empty: a global aggregate)."""
+    body = f"SELECT {', '.join(cols)} FROM {src}"
+    if where:
+        body += f" WHERE {where}"
+    if group:
+        body += " GROUP BY " + ", ".join(group)
+    return c.add(body)
 
 
-def _top(df: DataFrame, keys: Sequence[str], order: Sequence[str], k: int):
-    """The ``k`` first rows per ``keys`` group under ``order``, with
-    their ``_rk``. Without keys: TakeOrderedAndProject, never an
-    all-rows single-partition window."""
+def top(c, src: str, keys: Sequence[str], order: Sequence[str], k: int) -> str:
+    """The ``k`` first rows of ``src`` per ``keys`` group under
+    ``order``, with their ``_rk``. Without keys: ORDER BY … LIMIT
+    (TakeOrderedAndProject, never an all-rows single-partition
+    window) and no ``_rk``."""
     if not keys:
-        return df.orderBy(*[_sort_col(o) for o in order]).limit(k)
-    return df.selectExpr(
-        "*", f"row_number() OVER ({_over(keys, order)}) AS _rk"
-    ).filter(F.col("_rk") <= k)
+        return c.add(f"SELECT * FROM {src} ORDER BY {', '.join(order)} LIMIT {k}")
+    r = c.add(f"SELECT *, row_number() OVER ({_over(keys, order)}) AS _rk FROM {src}")
+    return c.add(f"SELECT * FROM {r} WHERE _rk <= {k}")
 
 
-def _join(left: DataFrame, right: DataFrame, keys, how: str, cols):
+def join(c, left: str, right: str, keys, how: str, cols) -> str:
     """Null-safe equi-join on ``keys`` (group keys can hold NULLs),
-    keeping the left side plus ``cols`` of the right. Dataset aliases
-    disambiguate the shared lineage of the two sides."""
-    lq, rq = left.alias("_jl"), right.alias("_jr")
-    cond = None
-    for k in keys:
-        c = F.col(f"_jl.{k}").eqNullSafe(F.col(f"_jr.{k}"))
-        cond = c if cond is None else cond & c
-    return lq.join(rq, cond, how).select(
-        "_jl.*", *[F.col(f"_jr.{c}") for c in cols]
+    keeping the left side plus ``cols`` of the right."""
+    on = " AND ".join(f"_jl.{_q(k)} <=> _jr.{_q(k)}" for k in keys) or "true"
+    sel = ", ".join(["_jl.*", *[f"_jr.{_q(x)}" for x in cols]])
+    return c.add(f"SELECT {sel} FROM {left} _jl {how} JOIN {right} _jr ON {on}")
+
+
+def union(c, rels: Sequence[str], cols: str = "*", where=None, name=None) -> str:
+    """``UNION ALL`` of ``SELECT cols FROM rel [WHERE where]`` over
+    relations with the same column order."""
+    cond = f" WHERE {where}" if where else ""
+    return c.add(
+        " UNION ALL ".join(f"SELECT {cols} FROM {r}{cond}" for r in rels), name
     )
-
-
-def _struct_has_field(df: DataFrame, col: str, name: str) -> bool:
-    """True when ``df[col]`` is a struct carrying ``name``. States
-    materialized before a field was added (counter/gauge
-    ``num_changes``) then serve NULL for it instead of failing at
-    analysis time."""
-    from pyspark.sql.types import StructType
-
-    try:
-        dt = df.schema[col].dataType
-    except Exception:
-        return False
-    return isinstance(dt, StructType) and name in dt.names
 
 
 # ------------------------------------------------------------ shared parts
@@ -119,28 +114,28 @@ def _pack_sql(fields: Sequence[str], out: str) -> str:
     return f"CASE WHEN _f_n > 0 THEN named_struct({body}) END AS {_q(out)}"
 
 
-def _flat(df: DataFrame, keys, aggs) -> DataFrame:
+def _flat(c, src: str, keys, aggs) -> str:
     """Aggregate FLAT ``_f_<field>`` columns; the struct is assembled in
-    a plain projection afterwards — an aliased-field struct inside the
-    aggregate trips Spark 4.1.2's RemoveRedundantAliases into an
-    unresolved plan under the partial join chain (d42cb25)."""
-    return df.groupBy(*keys).agg(
-        *[F.expr(sql).alias(f"_f_{f}") for f, sql in aggs]
+    a plain projection afterwards (:func:`_agg_pack`) — an aliased-field
+    struct inside the aggregate trips Spark 4.1.2's
+    RemoveRedundantAliases into an unresolved plan under the partial
+    join chain (d42cb25)."""
+    return select(
+        c, src, [*_qs(keys), *[f"{sql} AS _f_{f}" for f, sql in aggs]], group=_qs(keys)
     )
 
 
-def _agg_pack(df: DataFrame, keys, col: str, aggs) -> DataFrame:
-    return _flat(df, keys, aggs).selectExpr(
-        *_qs(keys), _pack_sql([f for f, _ in aggs], col)
-    )
+def _agg_pack(c, src: str, keys, col: str, aggs) -> str:
+    f = _flat(c, src, keys, aggs)
+    return select(c, f, [*_qs(keys), _pack_sql([n for n, _ in aggs], col)])
 
 
 def _struct_pack(fields: Sequence[str]):
     """``pack`` of the struct families: the merge's flat fields are the
     child's state."""
 
-    def pack(m: DataFrame, d, keys, col: str, spec: dict) -> DataFrame:
-        return m.selectExpr(*_qs(keys), _pack_sql(fields, col))
+    def pack(c, m: str, d: str, keys, col: str, spec: dict) -> str:
+        return select(c, m, [*_qs(keys), _pack_sql(fields, col)])
 
     return pack
 
@@ -150,29 +145,41 @@ def _outputs(cols):
     fields; ``cols`` is ``[(output, sql)]`` or ``spec -> [(output,
     sql)]``."""
 
-    def finalize(m: DataFrame, keys, spec: dict) -> DataFrame:
+    def finalize(c, m: str, keys, spec: dict) -> str:
         outs = cols(spec) if callable(cols) else cols
-        return m.selectExpr(
-            *_qs(keys), *[f"{sql} AS {_q(o)}" for o, sql in outs]
-        )
+        return select(c, m, [*_qs(keys), *[f"{sql} AS {_q(o)}" for o, sql in outs]])
 
     return finalize
 
 
-def _ordered_input(cagg, raw: DataFrame, spec: dict, *cols):
+def _base(c, cagg, raw: str, *cols: str) -> tuple[str, list]:
+    """``(bucket, group…, cols…)`` over the raw rows; returns the
+    relation and the key names."""
+    gb = list(cagg.row["group_by"])
+    bucket = cagg.row["bucket_alias"]
+    rel = select(c, raw, [f"{cagg._bucket_sql()} AS {_q(bucket)}", *_qs(gb), *cols])
+    return rel, [bucket, *gb]
+
+
+def _ordered_input(c, cagg, raw: str, spec: dict, *cols: str):
     """``(bucket, group…, _tb0…, _us, cols…)`` for the builders that
     order samples by (time, tiebreak…) within a bucket; returns the
-    frame, the key names and the tiebreak column names."""
+    relation, the key names and the tiebreak column names."""
     tb = list(spec.get("tiebreak") or ())
-    gb = list(cagg.row["group_by"])
-    base = raw.select(
-        cagg._bucket_expr(raw),
-        *gb,
-        *[F.col(c).alias(f"_tb{i}") for i, c in enumerate(tb)],
-        cagg._raw_time_us(raw).alias("_us"),
+    tbs = [f"_tb{i}" for i in range(len(tb))]
+    rel, keys = _base(
+        c,
+        cagg,
+        raw,
+        *[f"{_q(t)} AS {n}" for t, n in zip(tb, tbs)],
+        f"{cagg._raw_time_us_sql()} AS _us",
         *cols,
     )
-    return base, [cagg.row["bucket_alias"], *gb], [f"_tb{i}" for i in range(len(tb))]
+    return rel, keys, tbs
+
+
+def _double(expr: str, name: str) -> str:
+    return f"CAST(({expr}) AS DOUBLE) AS {name}"
 
 
 def _bookend_key(v: str, tbs) -> str:
@@ -212,10 +219,11 @@ def _merged_bookends(first: str, last: str):
     ]
 
 
-def _changes(d: DataFrame) -> str:
+def _changes(spec: dict) -> str:
+    stored = spec.get(STORED_FIELDS)
     return (
         "sum(_st.num_changes) + coalesce(sum(_bchange), 0)"
-        if _struct_has_field(d, "_st", "num_changes")
+        if stored is None or "num_changes" in stored
         else "CAST(NULL AS BIGINT)"
     )
 
@@ -253,7 +261,14 @@ def _liveness_us(v) -> int:
 # ----------------------------------------------------------- the entry
 @dataclass(frozen=True)
 class Family:
-    """One partial-state family (see the module docstring)."""
+    """One partial-state family (see the module docstring). The
+    builders' signatures, each returning its output relation's name:
+
+    - ``state(c, cagg, raw, col, spec)`` -> ``(bucket, group…, col)``
+    - ``merge(c, d, keys, spec)`` over ``d`` = ``(keys…, _src, _st)``
+    - ``pack(c, m, d, keys, col, spec)`` -> ``(keys…, col)``
+    - ``finalize(c, m, keys, spec)`` -> ``(keys…, outputs…)``
+    """
 
     key: str
     kind: str
@@ -262,6 +277,13 @@ class Family:
     merge: Callable
     pack: Callable
     finalize: Optional[Callable] = None
+    #: a LOSSLESS family's state rows before the pack: ``unpacked(c,
+    #: cagg, raw, col, spec)`` -> ``(bucket, group…, *rows)``. A
+    #: realtime serve hands the raw tail to ``merge(…, tail=…)`` in
+    #: this form (re-keyed, rows with a NULL first row column dropped)
+    #: instead of packing it only to unpack it again
+    unpacked: Optional[Callable] = None
+    rows: tuple = ()
     required: str = "value"
     expr_fields: tuple = ("value",)
     ctors: dict = field(default_factory=dict)
@@ -292,67 +314,84 @@ class Family:
 
 
 # =========================================================== sketch
-def _sketch_state(cagg, raw, col, spec):
-    """DDSketch STATE per (bucket, group): ``map<int,bigint>`` of
-    log-bucket -> count. Two map-combined groupBys: the first collapses
-    rows to (keys, log-bucket) counts BEFORE the exchange (shuffle =
-    keys x ~2k sketch buckets regardless of row count,
-    functions/ddsketch.py contract), the second packs each group's
-    buckets into one deterministic sorted map entry."""
+def _sketch_unpacked(c, cagg, raw, col, spec):
+    """(bucket, group…, log-bucket ``_sb``, ``_cnt``) counts — a
+    map-combined groupBy collapses rows to (keys, log-bucket) counts
+    BEFORE the exchange (shuffle = keys x ~2k sketch buckets regardless
+    of row count, functions/ddsketch.py contract)."""
     from .functions.ddsketch import ZERO_BUCKET, _gamma
 
-    gb = list(cagg.row["group_by"])
-    keys = [cagg.row["bucket_alias"], *gb]
     g = _gamma(float(spec.get("alpha", 0.01)))
-    v = F.expr(spec["value"]).cast("double")
+    v = f"CAST(({spec['value']}) AS DOUBLE)"
+    msg = sql_literal(
+        f"cagg sketch {col!r}: negative values are not supported "
+        f"(DDSketch positive store + zero bucket, like uddsketch)"
+    )
     # strict-aggregate NULL semantics (percentile_agg skips NULLs):
     # NULL values get a NULL log-bucket, which is dropped before the
     # map pack — but the (bucket, group) row itself survives, with a
     # NULL state when ALL its inputs are NULL
     sb = (
-        F.when(v.isNull(), F.lit(None).cast("int"))
-        .when(
-            v < 0,
-            F.raise_error(
-                F.lit(
-                    f"cagg sketch {col!r}: negative values are not "
-                    f"supported (DDSketch positive store + zero "
-                    f"bucket, like uddsketch)"
-                )
-            ).cast("int"),
-        )
-        .when(v == 0, F.lit(ZERO_BUCKET))
-        .otherwise(F.ceil(F.log(v) / F.lit(math.log(g))).cast("int"))
+        f"CASE WHEN {v} IS NULL THEN CAST(NULL AS INT) "
+        f"WHEN {v} < 0 THEN CAST(raise_error({msg}) AS INT) "
+        f"WHEN {v} = 0 THEN CAST({ZERO_BUCKET} AS INT) "
+        f"ELSE CAST(ceil(ln({v}) / {math.log(g)!r}D) AS INT) END"
     )
-    per_bucket = (
-        raw.select(cagg._bucket_expr(raw), *gb, sb.alias("_sb"))
-        .groupBy(*keys, "_sb")
-        .agg(F.count(F.lit(1)).alias("_cnt"))
-    )
-    return _sketch_pack(per_bucket, None, keys, col, spec)
-
-
-def _sketch_merge(d, keys, spec):
-    """Bucket counts ADD losslessly (Masson VLDB'19 §2.3): explode the
-    states to (keys, log-bucket, count) and sum. ``explode_outer`` keeps
-    a NULL state's group as one NULL log-bucket row."""
-    return (
-        d.selectExpr(*_qs(keys), "explode_outer(_st) AS (_sb, _c)")
-        .groupBy(*keys, "_sb")
-        .agg(F.expr("sum(_c)").alias("_cnt"))
+    base, keys = _base(c, cagg, raw, f"{sb} AS _sb")
+    return select(
+        c, base, [*_qs(keys), "_sb", "count(1) AS _cnt"], group=[*_qs(keys), "_sb"]
     )
 
 
-def _sketch_pack(m, d, keys, col, spec):
-    # collect_list skips the NULL-bucket entry, and an all-NULL group
-    # keeps a NULL state instead of an empty map
-    return m.groupBy(*keys).agg(
-        F.expr(
+def _sketch_state(c, cagg, raw, col, spec):
+    """DDSketch STATE per (bucket, group): ``map<int,bigint>`` of
+    log-bucket -> count — the collected :func:`_sketch_unpacked`
+    rows."""
+    keys = [cagg.row["bucket_alias"], *cagg.row["group_by"]]
+    return _sketch_collect(c, _sketch_unpacked(c, cagg, raw, col, spec), keys, col)
+
+
+def _sketch_merge(c, d, keys, spec, tail=None):
+    """Bucket counts ADD losslessly (Masson VLDB'19 §2.3), so the merge
+    is the BAG of ``(keys…, _sb, _cnt)`` rows — the exploded states
+    plus the unpacked realtime ``tail`` — and every consumer sums per
+    log-bucket itself: the quantile finalize with a RANGE window frame
+    (one exchange for the merge and the extraction), the pack with a
+    group-by. ``explode_outer`` keeps a NULL state's group as one NULL
+    log-bucket row."""
+    ks = ", ".join(_qs(keys))
+    parts = []
+    if d is not None:
+        parts.append(select(c, d, [*_qs(keys), "explode_outer(_st) AS (_sb, _cnt)"]))
+    if tail is not None:
+        parts.append(tail)
+    if len(parts) == 1:
+        return parts[0]
+    return union(c, parts, f"{ks + ', ' if ks else ''}_sb, _cnt")
+
+
+def _sketch_collect(c, rows, keys, col):
+    """The state map over rows unique per (keys, ``_sb``). collect_list
+    skips the NULL-bucket entry, and an all-NULL group keeps a NULL
+    state instead of an empty map."""
+    return select(
+        c,
+        rows,
+        [
+            *_qs(keys),
             "CASE WHEN count(_sb) > 0 THEN map_from_entries(array_sort("
             "collect_list(CASE WHEN _sb IS NOT NULL THEN "
-            "named_struct('_sb', _sb, '_cnt', _cnt) END))) END"
-        ).alias(col)
+            f"named_struct('_sb', _sb, '_cnt', _cnt) END))) END AS {_q(col)}",
+        ],
+        group=_qs(keys),
     )
+
+
+def _sketch_pack(c, m, d, keys, col, spec):
+    summed = select(
+        c, m, [*_qs(keys), "_sb", "sum(_cnt) AS _cnt"], group=[*_qs(keys), "_sb"]
+    )
+    return _sketch_collect(c, summed, keys, col)
 
 
 def _sketch_validate(col, spec):
@@ -400,6 +439,8 @@ SKETCH = Family(
     state=_sketch_state,
     merge=_sketch_merge,
     pack=_sketch_pack,
+    unpacked=_sketch_unpacked,
+    rows=("_sb", "_cnt"),
     ctors={
         "percentile_agg": _sketch_ctor_percentile_agg,
         "uddsketch": _sketch_ctor_uddsketch,
@@ -411,37 +452,42 @@ SKETCH = Family(
 )
 
 
+
+
 # ========================================================== counter
-def _counter_state(cagg, raw, col, spec):
+def _counter_state(c, cagg, raw, col, spec):
     """Mergeable COUNTER partial with prometheus reset semantics inside
     the bucket (functions/counters.py:counter_agg decomposition). One
     window over (bucket, group) ordered by (time, tiebreak…) computes
     the within-bucket reset-adjusted increments. Boundary steps between
     buckets are NOT counted here — the merge adds exactly one per
     adjacent pair."""
-    base, keys, tbs = _ordered_input(
-        cagg, raw, spec, F.expr(spec["value"]).cast("double").alias("_v")
-    )
+    base, keys, tbs = _ordered_input(c, cagg, raw, spec, _double(spec["value"], "_v"))
     wo = _over(keys, ["_us ASC", *[f"{t} ASC" for t in tbs]])
     # strict NULL semantics (counter_agg skips NULLs): the previous
     # sample is the last NON-NULL value before this row — lag() would
     # let one NULL sample break two increments
     prev = f"last(_v, true) OVER ({wo} {_PRECEDING})"
     step = f"(_v - {prev})"
-    stepped = base.selectExpr(
-        *_qs(keys),
-        "_us",
-        "_v",
-        f"CASE WHEN _v IS NULL THEN CAST(NULL AS DOUBLE) "
-        f"WHEN {prev} IS NULL THEN 0.0D "
-        f"WHEN {step} < 0 THEN _v ELSE {step} END AS _inc",
-        f"CASE WHEN _v IS NOT NULL THEN CAST(({step} < 0) AS INT) "
-        f"END AS _reset",
-        f"CASE WHEN _v IS NOT NULL AND {prev} IS NOT NULL THEN "
-        f"CAST((_v != {prev}) AS INT) END AS _change",
-        f"{_bookend_key('_v', tbs)} AS _k",
+    stepped = select(
+        c,
+        base,
+        [
+            *_qs(keys),
+            "_us",
+            "_v",
+            f"CASE WHEN _v IS NULL THEN CAST(NULL AS DOUBLE) "
+            f"WHEN {prev} IS NULL THEN 0.0D "
+            f"WHEN {step} < 0 THEN _v ELSE {step} END AS _inc",
+            f"CASE WHEN _v IS NOT NULL THEN CAST(({step} < 0) AS INT) "
+            f"END AS _reset",
+            f"CASE WHEN _v IS NOT NULL AND {prev} IS NOT NULL THEN "
+            f"CAST((_v != {prev}) AS INT) END AS _change",
+            f"{_bookend_key('_v', tbs)} AS _k",
+        ],
     )
     return _agg_pack(
+        c,
         stepped,
         keys,
         col,
@@ -456,7 +502,7 @@ def _counter_state(cagg, raw, col, spec):
     )
 
 
-def counter_steps(d, keys):
+def counter_steps(c, d, keys):
     """Each partial's reset-adjusted boundary step from the previous
     partial of its group (``B.first_val − A.last_val``, or
     ``B.first_val`` after a reset): ``_binc`` with its ``_breset`` and
@@ -465,30 +511,34 @@ def counter_steps(d, keys):
     ``interpolated_delta_at_grain`` accumulates."""
     prev = _prev("last_val", keys)
     bstep = f"(_st.first_val - {prev})"
-    return d.selectExpr(
-        *_qs(keys),
-        "_src",
-        "_st",
-        f"CASE WHEN {prev} IS NULL THEN 0.0D WHEN {bstep} < 0 THEN "
-        f"_st.first_val ELSE {bstep} END AS _binc",
-        f"CAST(({bstep} < 0) AS INT) AS _breset",
-        f"CASE WHEN {prev} IS NOT NULL THEN "
-        f"CAST((_st.first_val != {prev}) AS INT) END AS _bchange",
+    return select(
+        c,
+        d,
+        [
+            *_qs(keys),
+            "_src",
+            "_st",
+            f"CASE WHEN {prev} IS NULL THEN 0.0D WHEN {bstep} < 0 THEN "
+            f"_st.first_val ELSE {bstep} END AS _binc",
+            f"CAST(({bstep} < 0) AS INT) AS _breset",
+            f"CASE WHEN {prev} IS NOT NULL THEN "
+            f"CAST((_st.first_val != {prev}) AS INT) END AS _bchange",
+        ],
     )
 
 
-def _counter_merge(d, keys, spec):
+def _counter_merge(c, d, keys, spec):
     """Partials add up plus ONE boundary step per adjacent pair."""
-    d = counter_steps(d, keys)
     return _flat(
-        d,
+        c,
+        counter_steps(c, d, keys),
         keys,
         _MERGED_SPAN
         + _merged_bookends("first_val", "last_val")
         + [
             ("delta", "sum(_st.delta) + coalesce(sum(_binc), 0.0D)"),
             ("num_resets", "sum(_st.num_resets) + coalesce(sum(_breset), 0)"),
-            ("num_changes", _changes(d)),
+            ("num_changes", _changes(spec)),
         ],
     )
 
@@ -553,32 +603,35 @@ COUNTER = Family(
 
 
 # ============================================================ gauge
-def _gauge_state(cagg, raw, col, spec):
+def _gauge_state(c, cagg, raw, col, spec):
     """Mergeable GAUGE partial: like the counter partial but without
     resets, plus ``last_step``/``last_prev_us`` (the final within-bucket
     step and the time of the sample before the last) so idelta/irate
     survive the rollup — a single-sample bucket's step comes from the
     previous bucket's last value at merge time."""
-    base, keys, tbs = _ordered_input(
-        cagg, raw, spec, F.expr(spec["value"]).cast("double").alias("_v")
-    )
+    base, keys, tbs = _ordered_input(c, cagg, raw, spec, _double(spec["value"], "_v"))
     wo = _over(keys, ["_us ASC", *[f"{t} ASC" for t in tbs]])
     frame = f"{wo} {_PRECEDING}"
     # strict NULL semantics (gauge_agg skips NULLs): the previous
     # sample is the last NON-NULL one, its time the matching masked time
     prev_v = f"last(_v, true) OVER ({frame})"
     prev_us = f"last(CASE WHEN _v IS NOT NULL THEN _us END, true) OVER ({frame})"
-    stepped = base.selectExpr(
-        *_qs(keys),
-        "_us",
-        "_v",
-        f"(_v - {prev_v}) AS _step",
-        f"{prev_us} AS _prev_us",
-        f"CASE WHEN _v IS NOT NULL AND {prev_v} IS NOT NULL THEN "
-        f"CAST((_v != {prev_v}) AS INT) END AS _change",
-        f"{_bookend_key('_v', tbs)} AS _k",
+    stepped = select(
+        c,
+        base,
+        [
+            *_qs(keys),
+            "_us",
+            "_v",
+            f"(_v - {prev_v}) AS _step",
+            f"{prev_us} AS _prev_us",
+            f"CASE WHEN _v IS NOT NULL AND {prev_v} IS NOT NULL THEN "
+            f"CAST((_v != {prev_v}) AS INT) END AS _change",
+            f"{_bookend_key('_v', tbs)} AS _k",
+        ],
     )
     return _agg_pack(
+        c,
         stepped,
         keys,
         col,
@@ -593,20 +646,25 @@ def _gauge_state(cagg, raw, col, spec):
     )
 
 
-def _gauge_merge(d, keys, spec):
+def _gauge_merge(c, d, keys, spec):
     """Bookends merge by earliest/latest parent; the merged last step
     falls back to the boundary step into the last parent when that
     parent holds a single sample."""
     pv, pu = _prev("last_val", keys), _prev("last_us", keys)
-    d = d.selectExpr(
-        *_qs(keys),
-        "_st",
-        f"coalesce(_st.last_step, _st.first_val - {pv}) AS _cs",
-        f"coalesce(_st.last_prev_us, {pu}) AS _cp",
-        f"CASE WHEN {pv} IS NOT NULL THEN "
-        f"CAST((_st.first_val != {pv}) AS INT) END AS _bchange",
+    d = select(
+        c,
+        d,
+        [
+            *_qs(keys),
+            "_st",
+            f"coalesce(_st.last_step, _st.first_val - {pv}) AS _cs",
+            f"coalesce(_st.last_prev_us, {pu}) AS _cp",
+            f"CASE WHEN {pv} IS NOT NULL THEN "
+            f"CAST((_st.first_val != {pv}) AS INT) END AS _bchange",
+        ],
     )
     return _flat(
+        c,
         d,
         keys,
         _MERGED_SPAN
@@ -614,7 +672,7 @@ def _gauge_merge(d, keys, spec):
         + [
             ("last_step", "max_by(_cs, _st.last_us)"),
             ("last_prev_us", "max_by(_cp, _st.last_us)"),
-            ("num_changes", _changes(d)),
+            ("num_changes", _changes(spec)),
         ],
     )
 
@@ -679,15 +737,13 @@ GAUGE = Family(
 
 
 # ============================================================ stats
-def _stats_state(cagg, raw, col, spec):
+def _stats_state(c, cagg, raw, col, spec):
     """1-D moments ``struct(n, s, s2, mn, mx)`` — the classical
     parallel-aggregation decomposition. count/sum/min/max skip NULLs;
     an all-NULL group keeps its row with a NULL state."""
-    gb = list(cagg.row["group_by"])
-    keys = [cagg.row["bucket_alias"], *gb]
-    v = F.expr(spec["value"]).cast("double")
-    base = raw.select(cagg._bucket_expr(raw), *gb, v.alias("_v"))
+    base, keys = _base(c, cagg, raw, _double(spec["value"], "_v"))
     return _agg_pack(
+        c,
         base,
         keys,
         col,
@@ -701,9 +757,10 @@ def _stats_state(cagg, raw, col, spec):
     )
 
 
-def _stats_merge(d, keys, spec):
+def _stats_merge(c, d, keys, spec):
     """Moments merge fieldwise: add/min/max."""
     return _flat(
+        c,
         d,
         keys,
         [
@@ -716,23 +773,23 @@ def _stats_merge(d, keys, spec):
     )
 
 
-def _stats2d_state(cagg, raw, col, spec):
+def _stats2d_state(c, cagg, raw, col, spec):
     """2-D comoments ``struct(n, sx, sy, sxx, syy, sxy)`` over the
     sample pairs where BOTH values are non-NULL (PostgreSQL ``regr_*``
     pair semantics). ``spec['value']`` is the independent variable
     (x), ``spec['y']`` the dependent one."""
-    gb = list(cagg.row["group_by"])
-    keys = [cagg.row["bucket_alias"], *gb]
-    x = F.expr(spec["value"]).cast("double")
-    y = F.expr(spec["y"]).cast("double")
-    both = x.isNotNull() & y.isNotNull()
-    base = raw.select(
-        cagg._bucket_expr(raw),
-        *gb,
-        F.when(both, x).alias("_x"),
-        F.when(both, y).alias("_y"),
+    x = f"CAST(({spec['value']}) AS DOUBLE)"
+    y = f"CAST(({spec['y']}) AS DOUBLE)"
+    both = f"{x} IS NOT NULL AND {y} IS NOT NULL"
+    base, keys = _base(
+        c,
+        cagg,
+        raw,
+        f"CASE WHEN {both} THEN {x} END AS _x",
+        f"CASE WHEN {both} THEN {y} END AS _y",
     )
     return _agg_pack(
+        c,
         base,
         keys,
         col,
@@ -750,9 +807,9 @@ def _stats2d_state(cagg, raw, col, spec):
 _STATS2D_FIELDS = "n sx sy sxx syy sxy".split()
 
 
-def _stats2d_merge(d, keys, spec):
+def _stats2d_merge(c, d, keys, spec):
     """Comoments merge by fieldwise sums."""
-    return _flat(d, keys, [(f, f"sum(_st.{f})") for f in _STATS2D_FIELDS])
+    return _flat(c, d, keys, [(f, f"sum(_st.{f})") for f in _STATS2D_FIELDS])
 
 
 # sample variance; greatest() clamps tiny negative float residue,
@@ -882,15 +939,13 @@ def _tw_method(spec) -> str:
     return str(spec.get("method", "locf")).lower()
 
 
-def _tw_state(cagg, raw, col, spec):
+def _tw_state(c, cagg, raw, col, spec):
     """``integral`` is the within-bucket integral of the LOCF (or
     linear) interpolant in µs·value: Σ over consecutive non-NULL sample
     pairs of ``v1·Δt`` (LOCF) or ``(v1+v2)/2·Δt`` (linear)
     (functions/counters.py:time_weighted_avg is the raw-scan
     analog)."""
-    base, keys, tbs = _ordered_input(
-        cagg, raw, spec, F.expr(spec["value"]).cast("double").alias("_v")
-    )
+    base, keys, tbs = _ordered_input(c, cagg, raw, spec, _double(spec["value"], "_v"))
     wo = _over(keys, ["_us ASC", *[f"{t} ASC" for t in tbs]])
     frame = f"{wo} {_PRECEDING}"
     prev_v = f"last(_v, true) OVER ({frame})"
@@ -900,16 +955,21 @@ def _tw_state(cagg, raw, col, spec):
         seg = f"(({prev_v} + _v) / 2.0D * {dt})"
     else:
         seg = f"({prev_v} * {dt})"
-    stepped = base.selectExpr(
-        *_qs(keys),
-        "_us",
-        "_v",
-        # a NULL sample closes no segment (its span folds into the next
-        # non-null sample's segment — prev_us skips NULLs)
-        f"CASE WHEN _v IS NOT NULL THEN {seg} END AS _seg",
-        f"{_bookend_key('_v', tbs)} AS _k",
+    stepped = select(
+        c,
+        base,
+        [
+            *_qs(keys),
+            "_us",
+            "_v",
+            # a NULL sample closes no segment (its span folds into the
+            # next non-null sample's segment — prev_us skips NULLs)
+            f"CASE WHEN _v IS NOT NULL THEN {seg} END AS _seg",
+            f"{_bookend_key('_v', tbs)} AS _k",
+        ],
     )
     return _agg_pack(
+        c,
         stepped,
         keys,
         col,
@@ -922,7 +982,7 @@ def _tw_state(cagg, raw, col, spec):
     )
 
 
-def _tw_merge(d, keys, spec):
+def _tw_merge(c, d, keys, spec):
     """Σ parent integrals + one interpolated boundary segment per
     adjacent pair (LOCF: ``A.last_val·Δt``; linear:
     ``(A.last_val+B.first_val)/2·Δt``)."""
@@ -932,8 +992,9 @@ def _tw_merge(d, keys, spec):
         bseg = f"(({pv} + _st.first_val) / 2.0D * {bdt})"
     else:
         bseg = f"({pv} * {bdt})"
-    d = d.selectExpr(*_qs(keys), "_st", f"coalesce({bseg}, 0.0D) AS _bseg")
+    d = select(c, d, [*_qs(keys), "_st", f"coalesce({bseg}, 0.0D) AS _bseg"])
     return _flat(
+        c,
         d,
         keys,
         _MERGED_SPAN
@@ -1014,29 +1075,33 @@ TIME_WEIGHT = Family(
 
 
 # ====================================================== candlestick
-def _candle_state(cagg, raw, col, spec):
+def _candle_state(c, cagg, raw, col, spec):
     """open/close are bookends on (time, tiebreak…), high/low/volume/pv
     plain min/max/sums (``pv`` = Σ price·volume, so vwap survives the
     rollup; functions/stats.py:candlestick_agg is the raw-scan analog).
     Strict NULL semantics: NULL prices are skipped."""
     vol = spec.get("volume")
     base, keys, tbs = _ordered_input(
+        c,
         cagg,
         raw,
         spec,
-        F.expr(spec["price"]).cast("double").alias("_p"),
-        (F.lit(1.0) if vol is None else F.expr(vol).cast("double")).alias(
-            "_vol"
-        ),
+        _double(spec["price"], "_p"),
+        "1.0D AS _vol" if vol is None else _double(vol, "_vol"),
     )
-    base = base.selectExpr(
-        *_qs(keys),
-        "_us",
-        "_p",
-        "CASE WHEN _p IS NOT NULL THEN _vol END AS _vol",
-        f"{_bookend_key('_p', tbs)} AS _k",
+    base = select(
+        c,
+        base,
+        [
+            *_qs(keys),
+            "_us",
+            "_p",
+            "CASE WHEN _p IS NOT NULL THEN _vol END AS _vol",
+            f"{_bookend_key('_p', tbs)} AS _k",
+        ],
     )
     return _agg_pack(
+        c,
         base,
         keys,
         col,
@@ -1052,7 +1117,7 @@ def _candle_state(cagg, raw, col, spec):
     )
 
 
-def _candle_merge(d, keys, spec):
+def _candle_merge(c, d, keys, spec):
     """open/close from the earliest/latest parent partial, the rest
     fieldwise — commutative, so subset regrouping is allowed. Where a
     subset regrouping merges SERIES sharing a first/last sample time,
@@ -1066,6 +1131,7 @@ def _candle_merge(d, keys, spec):
         )
 
     return _flat(
+        c,
         d,
         keys,
         _MERGED_SPAN
@@ -1135,14 +1201,14 @@ CANDLESTICK = Family(
 
 
 # ======================================================== state agg
-def _stateagg_state(cagg, raw, col, spec):
+def _stateagg_state(c, cagg, raw, col, spec):
     """``durations`` maps each state to ``struct(d, n)`` — its
     within-bucket LOCF held time (µs) and sample count
     (functions/state.py:state_durations is the raw-scan analog).
     NULL-state samples are skipped: they neither hold time nor break
     the LOCF chain."""
     base, keys, tbs = _ordered_input(
-        cagg, raw, spec, F.expr(spec["state"]).cast("string").alias("_s")
+        c, cagg, raw, spec, f"CAST(({spec['state']}) AS STRING) AS _s"
     )
     # next NON-NULL sample's time. The ASC `first(…) OVER (1 FOLLOWING
     # .. UNBOUNDED FOLLOWING)` frame recomputes its scan per row — O(n²)
@@ -1159,19 +1225,31 @@ def _stateagg_state(cagg, raw, col, spec):
         f"last(CASE WHEN _s IS NOT NULL THEN _us END, true) "
         f"OVER ({wo_desc} {_PRECEDING})"
     )
-    stepped = base.selectExpr(
-        *_qs(keys),
-        "_s",
-        f"CASE WHEN _s IS NOT NULL THEN coalesce({nxt}, _us) - _us END AS _dur",
-        f"{_bookend_key('_s', tbs)} AS _k",
+    stepped = select(
+        c,
+        base,
+        [
+            *_qs(keys),
+            "_s",
+            f"CASE WHEN _s IS NOT NULL THEN coalesce({nxt}, _us) - _us END AS _dur",
+            f"{_bookend_key('_s', tbs)} AS _k",
+        ],
     )
-    per_state = stepped.groupBy(*keys, "_s").agg(
-        F.expr("sum(_dur)").alias("_d"),
-        F.expr("count(_k)").alias("_n"),
-        F.expr("min(_k)").alias("_kmin"),
-        F.expr("max(_k)").alias("_kmax"),
+    per_state = select(
+        c,
+        stepped,
+        [
+            *_qs(keys),
+            "_s",
+            "sum(_dur) AS _d",
+            "count(_k) AS _n",
+            "min(_k) AS _kmin",
+            "max(_k) AS _kmax",
+        ],
+        group=[*_qs(keys), "_s"],
     )
     flat = _flat(
+        c,
         per_state,
         keys,
         [
@@ -1183,8 +1261,8 @@ def _stateagg_state(cagg, raw, col, spec):
             ("ents", _STATE_ENTS),
         ],
     )
-    return flat.selectExpr(
-        *_qs(keys), _stateagg_pack_sql(col, "_f_kmin._us", "_f_kmax._us")
+    return select(
+        c, flat, [*_qs(keys), _stateagg_pack_sql(col, "_f_kmin._us", "_f_kmax._us")]
     )
 
 
@@ -1206,42 +1284,47 @@ def _stateagg_pack_sql(
     )
 
 
-def _stateagg_merge(d, keys, spec):
+def _stateagg_merge(c, d, keys, spec):
     """Per-state held time: the partials' duration maps add per state,
     and each boundary gap lands on the EARLIER partial's last state
     (LOCF). Output ``(keys…, _s, _d, _n)``."""
     gap = f"(_st.first_us - {_prev('last_us', keys)})"
-    d = d.selectExpr(
-        *_qs(keys),
-        "_st",
-        f"{_prev('last_state', keys)} AS _bstate",
-        f"CASE WHEN {gap} > 0 THEN {gap} END AS _bgap",
+    d = select(
+        c,
+        d,
+        [
+            *_qs(keys),
+            "_st",
+            f"{_prev('last_state', keys)} AS _bstate",
+            f"CASE WHEN {gap} > 0 THEN {gap} END AS _bgap",
+        ],
     )
     # explode_outer: a NULL state keeps its group as one NULL-state row
-    within = d.selectExpr(
-        *_qs(keys), "explode_outer(_st.durations) AS (_s, _dn)"
-    ).selectExpr(*_qs(keys), "_s", "_dn.d AS _d", "_dn.n AS _n")
-    boundary = d.filter(
-        F.col("_bstate").isNotNull() & F.col("_bgap").isNotNull()
-    ).selectExpr(
-        *_qs(keys), "_bstate AS _s", "_bgap AS _d", "CAST(0 AS BIGINT) AS _n"
-    )
-    return (
-        within.unionByName(boundary)
-        .groupBy(*keys, "_s")
-        .agg(F.expr("sum(_d)").alias("_d"), F.expr("sum(_n)").alias("_n"))
-    )
-
-
-def _stateagg_pack(m, d, keys, col, spec):
-    maps = m.groupBy(*keys).agg(F.expr(_STATE_ENTS).alias("_f_ents"))
-    books = _flat(
+    ex = select(c, d, [*_qs(keys), "explode_outer(_st.durations) AS (_s, _dn)"])
+    within = select(c, ex, [*_qs(keys), "_s", "_dn.d AS _d", "_dn.n AS _n"])
+    boundary = select(
+        c,
         d,
-        keys,
-        _MERGED_SPAN + _merged_bookends("first_state", "last_state"),
+        [*_qs(keys), "_bstate AS _s", "_bgap AS _d", "CAST(0 AS BIGINT) AS _n"],
+        where="_bstate IS NOT NULL AND _bgap IS NOT NULL",
     )
-    return _join(books, maps, keys, "inner", ["_f_ents"]).selectExpr(
-        *_qs(keys), _stateagg_pack_sql(col)
+    return select(
+        c,
+        union(c, [within, boundary]),
+        [*_qs(keys), "_s", "sum(_d) AS _d", "sum(_n) AS _n"],
+        group=[*_qs(keys), "_s"],
+    )
+
+
+def _stateagg_pack(c, m, d, keys, col, spec):
+    maps = select(c, m, [*_qs(keys), f"{_STATE_ENTS} AS _f_ents"], group=_qs(keys))
+    books = _flat(
+        c, d, keys, _MERGED_SPAN + _merged_bookends("first_state", "last_state")
+    )
+    return select(
+        c,
+        join(c, books, maps, keys, "INNER", ["_f_ents"]),
+        [*_qs(keys), _stateagg_pack_sql(col)],
     )
 
 
@@ -1289,7 +1372,7 @@ def _freq_cap(spec) -> int:
     return int(spec.get("capacity", 256))
 
 
-def _mg_pack(flat: DataFrame, keys, col: str, cap: int) -> DataFrame:
+def _mg_pack(c, flat: str, keys, col: str, cap: int) -> str:
     """Misra–Gries trim of an exact ``array<struct(c, v)>`` count list
     ``_f_ents`` to ``cap`` entries: sort by (count desc, value asc),
     subtract the (cap+1)-th count from the survivors, drop the
@@ -1298,20 +1381,28 @@ def _mg_pack(flat: DataFrame, keys, col: str, cap: int) -> DataFrame:
     — Agarwal et al., "Mergeable Summaries", PODS'12). When a bucket's
     distinct count ≤ cap the cut is 0 and the stored counts are
     EXACT."""
-    se = flat.selectExpr(
-        *_qs(keys),
-        "_f_n",
-        "array_sort(_f_ents, (a, b) -> CASE "
-        "WHEN a.c > b.c THEN -1 WHEN a.c < b.c THEN 1 "
-        "WHEN a.v < b.v THEN -1 WHEN a.v > b.v THEN 1 ELSE 0 END) AS _f_se",
+    se = select(
+        c,
+        flat,
+        [
+            *_qs(keys),
+            "_f_n",
+            "array_sort(_f_ents, (a, b) -> CASE "
+            "WHEN a.c > b.c THEN -1 WHEN a.c < b.c THEN 1 "
+            "WHEN a.v < b.v THEN -1 WHEN a.v > b.v THEN 1 ELSE 0 END) AS _f_se",
+        ],
     )
     cut = f"IF(size(_f_se) > {cap}, element_at(_f_se, {cap + 1}).c, CAST(0 AS BIGINT))"
-    return se.selectExpr(
-        *_qs(keys),
-        "CASE WHEN _f_n > 0 THEN named_struct('n', _f_n, 'counts', "
-        f"map_from_entries(filter(transform(slice(_f_se, 1, {cap}), "
-        f"e -> named_struct('v', e.v, 'c', e.c - {cut})), e -> e.c > 0))) "
-        f"END AS {_q(col)}",
+    return select(
+        c,
+        se,
+        [
+            *_qs(keys),
+            "CASE WHEN _f_n > 0 THEN named_struct('n', _f_n, 'counts', "
+            f"map_from_entries(filter(transform(slice(_f_se, 1, {cap}), "
+            f"e -> named_struct('v', e.v, 'c', e.c - {cut})), e -> e.c > 0))) "
+            f"END AS {_q(col)}",
+        ],
     )
 
 
@@ -1321,66 +1412,69 @@ def _mg_pack(flat: DataFrame, keys, col: str, cap: int) -> DataFrame:
 _FREQ_ORDER = ["_c DESC", "_v ASC NULLS LAST"]
 
 
-def _freq_state(cagg, raw, col, spec):
+def _freq_state(c, cagg, raw, col, spec):
     """``struct(n, counts: map<string,long>)`` — a Misra–Gries /
     SpaceSaving summary of at most ``capacity`` heavy hitters, built
     from EXACT within-bucket counts, then trimmed
     (functions/stats.py:freq_sketch_topn is the raw-scan analog). NULL
     values are skipped; n counts non-NULL samples."""
     cap = _freq_cap(spec)
-    gb = list(cagg.row["group_by"])
-    keys = [cagg.row["bucket_alias"], *gb]
-    v = F.expr(spec["value"]).cast("string")
+    base, keys = _base(c, cagg, raw, f"CAST(({spec['value']}) AS STRING) AS _v")
     # exact (bucket, group, value) counts — the map-side combine
     # collapses rows to distinct values before the exchange
-    cnt = (
-        raw.select(cagg._bucket_expr(raw), *gb, v.alias("_v"))
-        .groupBy(*keys, "_v")
-        .agg(F.expr("count(_v)").alias("_c"))
+    cnt = select(
+        c, base, [*_qs(keys), "_v", "count(_v) AS _c"], group=[*_qs(keys), "_v"]
     )
     # bound the per-group state BEFORE collecting; the same ordered
     # window carries the group's total-sample sum as a FULL frame — one
     # sort, one WindowExec
     wo = _over(keys, _FREQ_ORDER)
-    ranked = cnt.selectExpr(
-        *_qs(keys),
-        "_v",
-        "_c",
-        f"row_number() OVER ({wo}) AS _rk",
-        f"sum(_c) OVER ({wo} ROWS BETWEEN UNBOUNDED PRECEDING "
-        f"AND UNBOUNDED FOLLOWING) AS _tot",
-    ).filter(F.col("_rk") <= cap + 1)
-    flat = ranked.groupBy(*keys).agg(
-        F.expr("min(_tot)").alias("_f_n"),
-        F.expr(
-            "collect_list(CASE WHEN _v IS NOT NULL THEN "
-            "named_struct('c', _c, 'v', _v) END)"
-        ).alias("_f_ents"),
+    ranked = select(
+        c,
+        cnt,
+        [
+            *_qs(keys),
+            "_v",
+            "_c",
+            f"row_number() OVER ({wo}) AS _rk",
+            f"sum(_c) OVER ({wo} ROWS BETWEEN UNBOUNDED PRECEDING "
+            f"AND UNBOUNDED FOLLOWING) AS _tot",
+        ],
     )
-    return _mg_pack(flat, keys, col, cap)
+    flat = select(
+        c,
+        ranked,
+        [
+            *_qs(keys),
+            "min(_tot) AS _f_n",
+            "collect_list(CASE WHEN _v IS NOT NULL THEN "
+            "named_struct('c', _c, 'v', _v) END) AS _f_ents",
+        ],
+        where=f"_rk <= {cap + 1}",
+        group=_qs(keys),
+    )
+    return _mg_pack(c, flat, keys, col, cap)
 
 
-def _freq_merge(d, keys, spec):
+def _freq_merge(c, d, keys, spec):
     """Per-value lower bounds ADD across states (Misra–Gries union):
     ``(keys…, _v, _c)``."""
-    return (
-        d.selectExpr(*_qs(keys), "explode(_st.counts) AS (_v, _c)")
-        .groupBy(*keys, "_v")
-        .agg(F.expr("sum(_c)").alias("_c"))
-    )
+    ex = select(c, d, [*_qs(keys), "explode(_st.counts) AS (_v, _c)"])
+    return select(c, ex, [*_qs(keys), "_v", "sum(_c) AS _c"], group=[*_qs(keys), "_v"])
 
 
-def _freq_pack(m, d, keys, col, spec):
+def _freq_pack(c, m, d, keys, col, spec):
     cap = _freq_cap(spec)
-    ents = (
-        _top(m, keys, _FREQ_ORDER, cap + 1)
-        .groupBy(*keys)
-        .agg(F.expr("collect_list(named_struct('c', _c, 'v', _v))").alias("_f_ents"))
+    ents = select(
+        c,
+        top(c, m, keys, _FREQ_ORDER, cap + 1),
+        [*_qs(keys), "collect_list(named_struct('c', _c, 'v', _v)) AS _f_ents"],
+        group=_qs(keys),
     )
-    totals = _flat(d, keys, [("n", "sum(_st.n)")])
+    totals = _flat(c, d, keys, [("n", "sum(_st.n)")])
     # a NULL _f_ents (every parent state NULL) flows through the trim as
     # NULL and is masked by the n guard
-    return _mg_pack(_join(totals, ents, keys, "left", ["_f_ents"]), keys, col, cap)
+    return _mg_pack(c, join(c, totals, ents, keys, "LEFT", ["_f_ents"]), keys, col, cap)
 
 
 def _freq_ctor(fn):
@@ -1469,7 +1563,25 @@ def _maxn_pack_sql(col: str, has_by: bool) -> str:
     return f"CASE WHEN _f_n > 0 THEN named_struct('n', _f_n, {vals}) END AS {_q(col)}"
 
 
-def _maxn_state(cagg, raw, col, spec):
+def _maxn_collect(kept: str, has_by: bool, desc: bool) -> str:
+    """The sorted candidate list of the rows where ``kept`` holds:
+    ``_f_ents`` (by the selection rank ``_rk``) with a payload, else
+    ``_f_vals``."""
+    if has_by:
+        # sort stored entries by the selection rank, not by the (v, d)
+        # struct: struct comparison orders NULL payloads smallest, which
+        # for asc contradicts the window's NULLS LAST payload order
+        return (
+            f"sort_array(collect_list(CASE WHEN {kept} THEN named_struct("
+            f"'r', _rk, 'v', _v, 'd', _d) END), true) AS _f_ents"
+        )
+    return (
+        f"sort_array(collect_list(CASE WHEN {kept} THEN _v END), "
+        f"{str(not desc).lower()}) AS _f_vals"
+    )
+
+
+def _maxn_state(c, cagg, raw, col, spec):
     """The ``n`` largest (smallest) values, sorted — top-n of a union is
     the top-n of the concatenated candidate lists, so every grain is
     exact (functions/stats.py:max_n is the raw-scan analog). Built with
@@ -1477,69 +1589,59 @@ def _maxn_state(cagg, raw, col, spec):
     payload the state carries a parallel ``data`` array ordered by
     (value, data), so value ties resolve deterministically."""
     keep, desc, has_by = _maxn_params(spec)
-    gb = list(cagg.row["group_by"])
-    keys = [cagg.row["bucket_alias"], *gb]
-    cols = [F.expr(spec["value"]).cast("double").alias("_v")]
+    cols = [_double(spec["value"], "_v")]
     if has_by:
-        cols.append(F.expr(spec["by"]).alias("_d"))
-    base = raw.select(cagg._bucket_expr(raw), *gb, *cols)
+        cols.append(f"({spec['by']}) AS _d")
+    base, keys = _base(c, cagg, raw, *cols)
     # every (bucket, group) keeps its row, with a NULL state when all
     # values were NULL (strict)
     order = _maxn_order(desc, has_by)
-    ranked = base.selectExpr(
-        "*", f"row_number() OVER ({_over(keys, order)}) AS _rk"
+    ranked = c.add(
+        f"SELECT *, row_number() OVER ({_over(keys, order)}) AS _rk FROM {base}"
     )
-    kept = f"_rk <= {keep} AND _v IS NOT NULL"
-    if has_by:
-        # sort stored entries by the selection rank, not by the (v, d)
-        # struct: struct comparison orders NULL payloads smallest, which
-        # for asc contradicts the window's NULLS LAST payload order
-        agg = (
-            f"sort_array(collect_list(CASE WHEN {kept} THEN named_struct("
-            f"'r', _rk, 'v', _v, 'd', _d) END), true)",
-            "_f_ents",
-        )
-    else:
-        agg = (
-            f"sort_array(collect_list(CASE WHEN {kept} THEN _v END), "
-            f"{str(not desc).lower()})",
-            "_f_vals",
-        )
-    flat = ranked.groupBy(*keys).agg(
-        F.expr("count(_v)").alias("_f_n"), F.expr(agg[0]).alias(agg[1])
+    flat = select(
+        c,
+        ranked,
+        [
+            *_qs(keys),
+            "count(_v) AS _f_n",
+            _maxn_collect(f"_rk <= {keep} AND _v IS NOT NULL", has_by, desc),
+        ],
+        group=_qs(keys),
     )
-    return flat.selectExpr(*_qs(keys), _maxn_pack_sql(col, has_by))
+    return select(c, flat, [*_qs(keys), _maxn_pack_sql(col, has_by)])
 
 
-def _maxn_merge(d, keys, spec):
+def _maxn_merge(c, d, keys, spec):
     """The concatenated candidate lists ``(keys…, _v[, _d])``; equal
     values are interchangeable, so rank tie-order never changes the
     kept multiset."""
     if not _maxn_params(spec)[2]:
-        return d.selectExpr(*_qs(keys), "explode(_st.vals) AS _v")
-    return d.selectExpr(
-        *_qs(keys), "explode(arrays_zip(_st.vals, _st.data)) AS _e"
-    ).selectExpr(*_qs(keys), "_e.vals AS _v", "_e.data AS _d")
+        return select(c, d, [*_qs(keys), "explode(_st.vals) AS _v"])
+    ex = select(c, d, [*_qs(keys), "explode(arrays_zip(_st.vals, _st.data)) AS _e"])
+    return select(c, ex, [*_qs(keys), "_e.vals AS _v", "_e.data AS _d"])
 
 
-def _maxn_pack(m, d, keys, col, spec):
+def _maxn_pack(c, m, d, keys, col, spec):
     keep, desc, has_by = _maxn_params(spec)
-    ranked = _top(m, keys, _maxn_order(desc, has_by), keep)
-    if has_by:
-        agg = ("sort_array(collect_list(named_struct('r', _rk, 'v', _v, 'd', _d)), true)", "_f_ents")
-    else:
-        agg = (f"sort_array(collect_list(_v), {str(not desc).lower()})", "_f_vals")
-    cand = ranked.groupBy(*keys).agg(F.expr(agg[0]).alias(agg[1]))
-    totals = _flat(d, keys, [("n", "sum(_st.n)")])
-    return _join(totals, cand, keys, "left", [agg[1]]).selectExpr(
-        *_qs(keys), _maxn_pack_sql(col, has_by)
+    cand = select(
+        c,
+        top(c, m, keys, _maxn_order(desc, has_by), keep),
+        [*_qs(keys), _maxn_collect("true", has_by, desc)],
+        group=_qs(keys),
+    )
+    totals = _flat(c, d, keys, [("n", "sum(_st.n)")])
+    return select(
+        c,
+        join(c, totals, cand, keys, "LEFT", ["_f_ents" if has_by else "_f_vals"]),
+        [*_qs(keys), _maxn_pack_sql(col, has_by)],
     )
 
 
-def _maxn_finalize(m, keys, spec):
+def _maxn_finalize(c, m, keys, spec):
     has_by = _maxn_params(spec)[2]
-    return m.selectExpr(
-        *_qs(keys), "_v AS value", *(["_d AS data"] if has_by else [])
+    return select(
+        c, m, [*_qs(keys), "_v AS value", *(["_d AS data"] if has_by else [])]
     )
 
 
@@ -1616,22 +1718,27 @@ MAXN = Family(
 
 
 # ======================================================== heartbeat
-def _hb_state(cagg, raw, col, spec):
+def _hb_state(c, cagg, raw, col, spec):
     """``live_us`` is the union length of the per-heartbeat ``[t,
     t+liveness)`` intervals over the bucket's own heartbeats, the LAST
     beat contributing its full interval (functions/state.py:
     heartbeat_agg is the raw-scan analog)."""
     liv = int(spec["liveness_us"])
-    base, keys, tbs = _ordered_input(cagg, raw, spec)
+    base, keys, tbs = _ordered_input(c, cagg, raw, spec)
     wo = _over(keys, ["_us ASC", *[f"{t} ASC" for t in tbs]])
     gap = f"(lead(_us) OVER ({wo}) - _us)"
-    stepped = base.selectExpr(
-        *_qs(keys),
-        "_us",
-        f"CASE WHEN {gap} IS NULL THEN {liv} ELSE least({gap}, {liv}) END AS _live",
-        f"CAST(({gap} > {liv}) AS BIGINT) AS _brk",
+    stepped = select(
+        c,
+        base,
+        [
+            *_qs(keys),
+            "_us",
+            f"CASE WHEN {gap} IS NULL THEN {liv} ELSE least({gap}, {liv}) END AS _live",
+            f"CAST(({gap} > {liv}) AS BIGINT) AS _brk",
+        ],
     )
     return _agg_pack(
+        c,
         stepped,
         keys,
         col,
@@ -1645,7 +1752,7 @@ def _hb_state(cagg, raw, col, spec):
     )
 
 
-def _hb_merge(d, keys, spec):
+def _hb_merge(c, d, keys, spec):
     """One boundary correction per adjacent pair: the earlier partial's
     last beat contributed the full liveness L but in the merged sequence
     contributes ``min(gap, L)``, and a gap ≤ L joins two live
@@ -1653,15 +1760,20 @@ def _hb_merge(d, keys, spec):
     liv = int(spec["liveness_us"])
     prev = _prev("last_us", keys)
     gap = f"(_st.first_us - {prev})"
-    d = d.selectExpr(
-        *_qs(keys),
-        "_st",
-        f"coalesce(CASE WHEN {prev} IS NOT NULL THEN "
-        f"{liv} - least({gap}, {liv}) END, 0) AS _corr",
-        f"CASE WHEN {prev} IS NOT NULL AND {gap} <= {liv} "
-        f"THEN 1 ELSE 0 END AS _join",
+    d = select(
+        c,
+        d,
+        [
+            *_qs(keys),
+            "_st",
+            f"coalesce(CASE WHEN {prev} IS NOT NULL THEN "
+            f"{liv} - least({gap}, {liv}) END, 0) AS _corr",
+            f"CASE WHEN {prev} IS NOT NULL AND {gap} <= {liv} "
+            f"THEN 1 ELSE 0 END AS _join",
+        ],
     )
     return _flat(
+        c,
         d,
         keys,
         _MERGED_SPAN
@@ -1768,32 +1880,26 @@ def _td_delta(spec) -> int:
     return int(spec.get("delta", 200))
 
 
-def _td_state(cagg, raw, col, spec):
+def _td_state(c, cagg, raw, col, spec):
     """``struct(n, min, max, means, weights)`` — ≤ ``delta`` centroids
     binned by the k1 scale function, singletons (lossless) while the
     bucket holds ≤ ``delta`` values (functions/tdigest.py has the
     algorithm notes)."""
-    from .functions.tdigest import build_states
+    from .functions.tdigest import build_states_sql
 
-    gb = list(cagg.row["group_by"])
-    return build_states(
-        raw.select(cagg._bucket_expr(raw), *gb, F.expr(spec["value"]).alias("_tdv")),
-        [cagg.row["bucket_alias"], *gb],
-        F.col("_tdv"),
-        _td_delta(spec),
-        col,
-    )
+    base, keys = _base(c, cagg, raw, f"({spec['value']}) AS _tdv")
+    return build_states_sql(c, base, keys, "_tdv", _td_delta(spec), col)
 
 
-def _td_merge(d, keys, spec):
+def _td_merge(c, d, keys, spec):
     """Order-independent global re-sort + re-bin of the centroids."""
-    from .functions.tdigest import merge_states
+    from .functions.tdigest import merge_states_sql
 
-    return merge_states(d.select(*keys, "_st"), keys, "_st", _td_delta(spec), "_td")
+    return merge_states_sql(c, d, keys, "_st", _td_delta(spec), "_td")
 
 
-def _td_pack(m, d, keys, col, spec):
-    return m.withColumnRenamed("_td", col)
+def _td_pack(c, m, d, keys, col, spec):
+    return select(c, m, [*_qs(keys), f"_td AS {_q(col)}"])
 
 
 def _td_ctor(args, rw):

@@ -51,43 +51,45 @@ from .cagg_families import (
     SKETCH,
     STATE_AGG,
     STATS,
+    STORED_FIELDS,
     TDIGEST,
     TIME_WEIGHT,
-    _join,
     _maxn_order,
     _maxn_params,
     _over,
     _q,
-    _top,
     counter_steps,
+    join,
     normalize,
     partials,
+    select,
+    top,
+    union,
 )
-from .functions.time import DEFAULT_ORIGIN_US, parse_interval
+from .functions.time import (
+    DEFAULT_ORIGIN_US,
+    Interval,
+    parse_interval,
+    time_bucket_int_sql,
+    time_bucket_sql,
+)
 from .hypertable import Hypertable, _to_internal
+from .scan import Ctes
 
 INT64_MIN = -(2**63)
 INT64_MAX = 2**63 - 1
 
 
-def _grain_floor(us, width: int, origin_us: int):
-    """Origin-aligned bucket floor on an int64-µs column — the column
+def _grain_floor_sql(us: str, width: int, origin_us: int) -> str:
+    """Origin-aligned bucket floor on an int64-µs expression — the
     analog of ``time_bucket``'s fixed-width formula
-    (``functions/time.py:_bucket_us_expr``). Every at-grain accessor
+    (``functions/time.py:_bucket_us_sql``). Every at-grain accessor
     must bucket with the CAGG'S origin (2000-01-03 for timestamps, 0
     for integer time), never epoch ``DIV``: DIV mislabels widths whose
     grid is not epoch-anchored (weeks: Thursday- vs Monday-aligned)
     and truncates toward zero for pre-epoch timestamps, and — worse —
     puts target edges strictly inside parent bucket spans, breaking
     the partial accessors' exactness premise."""
-    return us - F.pmod(
-        us - F.lit(int(origin_us)).cast("long"),
-        F.lit(int(width)).cast("long"),
-    )
-
-
-def _grain_floor_sql(us: str, width: int, origin_us: int) -> str:
-    """SQL-string form of :func:`_grain_floor` (round 17, see _over)."""
     return (
         f"({us} - pmod({us} - CAST({int(origin_us)} AS BIGINT), "
         f"CAST({int(width)} AS BIGINT)))"
@@ -190,6 +192,15 @@ def _pbucket(v: int, w: int, origin: int) -> int:
     if v >= INT64_MAX - w:
         return v
     return v - ((v - origin) % w + w) % w
+
+
+def _stored_fields(ht: Hypertable, col: str) -> Optional[list]:
+    """Field names of the state struct ``col`` as stored in ``ht``; None
+    when ``ht`` has no such struct column (yet)."""
+    for f in ht._schema_or_empty().fields:
+        if f.name == col:
+            return list(getattr(f.dataType, "names", None) or []) or None
+    return None
 
 
 
@@ -470,29 +481,19 @@ class ContinuousAggregate:
     def _mat(self) -> Hypertable:
         return Hypertable.get(self.ts, self.row["mat_table"])
 
-    def _bucket_expr(self, df: DataFrame):
-        from .functions.time import time_bucket, time_bucket_int
-
+    def _bucket_sql(self) -> str:
+        """The cagg's bucket of a raw row, as SQL text over the time
+        column."""
+        tcol = _q(self.row["time_column"])
+        if not self.row["time_is_timestamp"]:
+            return time_bucket_int_sql(self.width, tcol)
+        months = int(self.row.get("bucket_width_months") or 0)
+        iv = Interval(months=months) if months else Interval(us=self.width)
         if self.row.get("time_is_uuid"):
-            from .functions.time import Interval
-            from .functions.uuid7 import time_bucket_uuid
-
-            months = int(self.row.get("bucket_width_months") or 0)
-            iv = Interval(months=months) if months else Interval(us=self.width)
-            return time_bucket_uuid(iv, self.row["time_column"]).alias(
-                self.row["bucket_alias"]
-            )
-        if self.row["time_is_timestamp"]:
-            from .functions.time import Interval
-
-            months = int(self.row.get("bucket_width_months") or 0)
-            iv = Interval(months=months) if months else Interval(us=self.width)
-            return time_bucket(iv, self.row["time_column"]).alias(
-                self.row["bucket_alias"]
-            )
-        return time_bucket_int(self.width, self.row["time_column"]).alias(
-            self.row["bucket_alias"]
-        )
+            # UUIDv7 dimensions bucket by their embedded timestamp
+            # (time_bucket_uuid)
+            tcol = f"timestamp_micros({self._raw_time_us_sql()})"
+        return time_bucket_sql(iv, tcol)
 
     def _floor_us(self, v: int) -> int:
         """Bucket start containing internal time ``v``. Fixed widths use
@@ -527,52 +528,81 @@ class ContinuousAggregate:
         y, mo = divmod(midx, 12)
         return int(datetime(y, mo + 1, 1, tzinfo=_tz.utc).timestamp() * 1_000_000)
 
-    def _aggregate(
-        self, raw: DataFrame, only_cols: Optional[Sequence[str]] = None
-    ) -> DataFrame:
-        """The 'partial view' query:
-        [join dim] + [where] + bucket + group_by + aggs + [sketch
-        states] + [window_fns]. ``only_cols`` restricts the build to
-        the named output columns — the single-family realtime serve
-        path (:meth:`read`): untouched families' partial builds (and
-        their 1:1 joins) are never planned at all."""
+    def _ceil_us(self, v: int) -> int:
+        """Start of the first bucket at or after internal time ``v``."""
+        f = self._floor_us(v)
+        return f if f == v else self._next_us(f)
+
+    def _time_lit(self, v: int) -> str:
+        """Internal time ``v`` as a literal of the bucket column's type."""
+        if self.row["time_is_timestamp"]:
+            return f"timestamp_micros({int(v)})"
+        return str(int(v))
+
+    def _prepared(self, c: Ctes, raw: str) -> str:
+        """The raw rows of the defining query: ``raw`` [joined with the
+        dim table] [filtered by the cagg's WHERE]."""
         j = self.row.get("join")
         if j:
-            dim = self.ts.read_table(j["table"])
+            dim = c.add(self.ts.table_sql(j["table"]))
             on = j.get("on")
-            if isinstance(on, str) and not on.replace("_", "").isalnum():
-                on = F.expr(on)  # "a = b" join condition
-            raw = raw.join(F.broadcast(dim), on=on, how=j.get("how", "inner"))
+            if on is None:
+                cond = "ON true"
+            elif isinstance(on, str) and not on.replace("_", "").isalnum():
+                cond = f"ON {on}"  # "a = b" join condition
+            else:
+                names = [on] if isinstance(on, str) else list(on)
+                cond = f"USING ({', '.join(_q(n) for n in names)})"
+            how = "LEFT" if j.get("how") == "left" else "INNER"
+            # the dim side is broadcast: a join adds zero shuffles
+            raw = c.add(
+                f"SELECT /*+ BROADCAST({dim}) */ * FROM {raw} {how} JOIN {dim} {cond}"
+            )
         if self.row.get("where"):
-            raw = raw.filter(F.expr(self.row["where"]))
+            raw = c.add(f"SELECT * FROM {raw} WHERE {self.row['where']}")
+        return raw
+
+    def _aggregate(self, c: Ctes, raw: str, only_cols=None) -> str:
+        """The 'partial view' query over the raw relation ``raw``:
+        [join dim] + [where] + bucket + group_by + aggs + [partial
+        states] + [window_fns], as CTEs appended to ``c``; returns the
+        output relation. ``only_cols`` restricts the build to the named
+        value columns — untouched families' partial builds (and their
+        1:1 joins) are never planned at all."""
+        raw = self._prepared(c, raw)
+        bucket, gb = self.row["bucket_alias"], list(self.row["group_by"])
+        keys = [bucket, *gb]
         exprs = [
-            F.expr(e).alias(n)
+            f"{e} AS {_q(n)}"
             for n, e in self.row["aggs"].items()
             if only_cols is None or n in only_cols
         ]
-        keys = [self.row["bucket_alias"], *self.row["group_by"]]
         parts = [
             p for p in partials(self.row) if only_cols is None or p[1] in only_cols
         ]
         agg = None
         if exprs or not parts:
-            agg = raw.groupBy(
-                self._bucket_expr(raw), *self.row["group_by"]
-            ).agg(*exprs)
+            bsql = self._bucket_sql()
+            agg = select(
+                c,
+                raw,
+                [f"{bsql} AS {_q(bucket)}", *map(_q, gb), *exprs],
+                group=[bsql, *map(_q, gb)],
+            )
         for fam, col, spec in parts:
             # every state is null-aware: it emits a row for EVERY (bucket,
             # group) of the raw rows, with a NULL state when the partial's
             # inputs are all NULL (strict PG aggregate semantics) — so this
             # join chain is always 1:1 and inner; AQE sees two
             # pre-aggregated (small) sides
-            sk = self._build_state(fam.for_spec(spec), raw, col, spec)
-            agg = sk if agg is None else _join(agg, sk, keys, "inner", [col])
+            sk = self._build_state(c, fam.for_spec(spec), raw, col, spec)
+            agg = sk if agg is None else join(c, agg, sk, keys, "INNER", [col])
         if only_cols is None:
             for col, expr in (self.row.get("window_fns") or {}).items():
-                agg = agg.withColumn(col, F.expr(expr))
+                agg = c.add(f"SELECT *, {expr} AS {_q(col)} FROM {agg}")
         return agg
 
-    def _build_state(self, fam, raw: DataFrame, col: str, spec: dict):
+    def _build_state(self, c: Ctes, fam, raw: str, col: str, spec: dict) -> str:
         """One family column's states per (bucket, group): built from the
         raw rows, or — for a hierarchical ``rollup_of`` child — the
         family's merge over the PARENT cagg's stored states written back
@@ -580,39 +610,120 @@ class ContinuousAggregate:
         merge input is ``(bucket, group…, _src, _st)`` with ``_src`` the
         parent bucket in internal µs; NULL parent states are kept, so an
         all-NULL child group still gets a row with a NULL state."""
-        src = spec.get("rollup_of")
-        if not src:
-            return fam.state(self, raw, col, spec)
-        gb = list(self.row["group_by"])
-        keys = [self.row["bucket_alias"], *gb]
-        d = raw.select(
-            self._bucket_expr(raw),
-            *gb,
-            self._raw_time_us(raw).alias("_src"),
-            F.col(src).alias("_st"),
+        if not spec.get("rollup_of"):
+            return fam.state(c, self, raw, col, spec)
+        d, keys, spec = self._parent_states(c, raw, spec)
+        return fam.pack(c, fam.merge(c, d, keys, spec), d, keys, col, spec)
+
+    def _parent_states(self, c: Ctes, raw: str, spec: dict):
+        """The merge input of a ``rollup_of`` child column: ``(d, keys,
+        spec)`` with ``d`` the parent's states ``(bucket, group…, _src,
+        _st)``."""
+        src = spec["rollup_of"]
+        keys = [self.row["bucket_alias"], *self.row["group_by"]]
+        d = select(
+            c,
+            raw,
+            [
+                f"{self._bucket_sql()} AS {_q(keys[0])}",
+                *map(_q, keys[1:]),
+                f"{self._raw_time_us_sql()} AS _src",
+                f"{_q(src)} AS _st",
+            ],
         )
-        return fam.pack(fam.merge(d, keys, spec), d, keys, col, spec)
+        return d, keys, {**spec, STORED_FIELDS: _stored_fields(self._source(), src)}
 
-    def _raw_time_us(self, raw: DataFrame):
-        """int64 internal units of the cagg's time column on ``raw``."""
-        tcol = self.row["time_column"]
-        if self.row.get("time_is_uuid"):
-            from .functions.uuid7 import uuid_timestamp_micros
-
-            return uuid_timestamp_micros(F.col(tcol))
-        if self.row["time_is_timestamp"]:
-            dt = dict(raw.dtypes).get(tcol, "timestamp")
-            if dt == "date":
-                return (
-                    F.datediff(
-                        F.col(tcol), F.lit("1970-01-01").cast("date")
-                    ).cast("long")
-                    * F.lit(86_400_000_000)
-                )
-            return F.unix_micros(F.col(tcol).cast("timestamp"))
-        return F.col(tcol).cast("long")
+    def _raw_time_us_sql(self) -> str:
+        """int64 internal units of the cagg's time column on a raw row —
+        the source hypertable's own conversion."""
+        src, tcol = self._source(), self.row["time_column"]
+        dtype = next(
+            (
+                f.dataType.simpleString()
+                for f in src._schema_or_empty().fields
+                if f.name == tcol
+            ),
+            "timestamp",
+        )
+        return src._internal_time_sql(dtype, _q(tcol))
 
     # ------------------------------------------------------------ serving
+    def _value_cols(self) -> list[str]:
+        """Every value column of the user view, in the mat table's
+        order."""
+        return [
+            *self.row["aggs"],
+            *[col for _, col, _ in partials(self.row)],
+            *(self.row.get("window_fns") or {}),
+        ]
+
+    def _sides(self, c: Ctes, cols, realtime=None, lo=None, hi=None, fam=None):
+        """The user view restricted to value columns ``cols`` and to
+        buckets in ``[lo, hi)`` (internal units), as CTEs appended to
+        ``c``: the relations whose ``UNION ALL`` is the view — the mat
+        side below the watermark and the raw-side aggregate above it
+        (``common.c:1745 build_union_query``), each ``(bucket, group…,
+        cols…)``. Both sides prune chunks by the bounds.
+
+        With a lossless ``fam`` (one with ``unpacked`` rows) the raw
+        tail of its single column is returned separately as
+        ``fam.unpacked`` rows instead of a raw-side aggregate:
+        ``(sides, tail)``."""
+        if realtime is None:
+            realtime = not self.row.get("materialized_only", False)
+        bucket = self.row["bucket_alias"]
+        proj = ", ".join(_q(x) for x in [bucket, *self.row["group_by"], *cols])
+        mat = self._mat()
+        has_mat = mat.row.get("schema_ddl") is not None
+        if not realtime:
+            if not has_mat:
+                raise ValueError(f"cagg {self.name!r} never refreshed")
+            m = c.scan(mat._scan(start=lo, end=hi))
+            return [c.add(f"SELECT {proj} FROM {m}")], None
+        wm = self.watermark()
+        sides = []
+        if has_mat and wm is not None:
+            # chunk-prune the mat side by the watermark too (normally a
+            # no-op — materialization stops at the watermark — but after
+            # a watermark rollback or retention on the raw table it
+            # excludes whole mat chunks); the row filter stays for the
+            # boundary chunk
+            m = c.scan(mat._scan(start=lo, end=wm if hi is None else min(hi, wm)))
+            sides.append(
+                c.add(f"SELECT {proj} FROM {m} WHERE {_q(bucket)} < {self._time_lit(wm)}")
+            )
+        # the raw side reads whole buckets only: [ceil(lo), ceil(hi))
+        starts = [x for x in (wm, None if lo is None else self._ceil_us(lo)) if x is not None]
+        raw = c.scan(
+            self._source()._scan(
+                start=max(starts) if starts else None,
+                end=None if hi is None else self._ceil_us(hi),
+            )
+        )
+        above = "" if wm is None else f" WHERE {_q(bucket)} >= {self._time_lit(wm)}"
+        if fam is not None and fam.unpacked is not None:
+            (col,) = cols
+            spec = self._resolve(fam, col)[1]
+            raw = self._prepared(c, raw)
+            if spec.get("rollup_of"):
+                # a child's merge of its parent's states is unpacked too
+                d, keys, spec = self._parent_states(c, raw, spec)
+                rows = fam.merge(c, d, keys, spec)
+            else:
+                rows = fam.unpacked(c, self, raw, col, spec)
+            return sides, c.add(f"SELECT * FROM {rows}{above}")
+        wfns = self.row.get("window_fns") or {}
+        # a window column needs its sibling aggregates: full build
+        build = None if any(x in wfns for x in cols) else cols
+        agg = self._aggregate(c, raw, build)
+        sides.append(c.add(f"SELECT {proj} FROM {agg}{above}"))
+        return sides, None
+
+    def _bind(self, c: Ctes, name: str, cols) -> None:
+        """Append the user view with value columns ``cols`` to ``c`` as
+        the CTE ``name`` — how ``ts.sql`` binds a cagg."""
+        union(c, self._sides(c, cols)[0], name=name)
+
     def _resolve(self, fam, col: Optional[str]):
         """``(column, spec)`` of a family column; ``col=None`` picks the
         cagg's only column of that family."""
@@ -636,20 +747,29 @@ class ContinuousAggregate:
     def _serve(
         self, fam, col, grain, group_by, realtime, start, end, finalize=None
     ) -> DataFrame:
-        """Every ``*_at_grain`` accessor: the :meth:`_partial_frame`
-        scaffold, then the family's merge of the parent partials inside
-        each target bucket (the same merge a ``rollup_of`` child stores),
-        then ``finalize`` (default: the family's) into output columns."""
+        """Every ``*_at_grain`` accessor, planned as one ``spark.sql``
+        call (:meth:`_serve_rel`)."""
+        c = Ctes()
+        out = self._serve_rel(c, fam, col, grain, group_by, realtime, start, end, finalize)
+        return c.plan(self.ts, f"SELECT * FROM {out}")
+
+    def _serve_rel(
+        self, c: Ctes, fam, col, grain, group_by, realtime, start, end, finalize=None
+    ) -> str:
+        """The :meth:`_partial_frame` scaffold, then the family's merge
+        of the parent partials inside each target bucket (the same
+        merge a ``rollup_of`` child stores), then ``finalize`` (default:
+        the family's) into output columns — CTEs appended to ``c``."""
         col, spec = self._resolve(fam, col)
         fam = fam.for_spec(spec)
         if fam.ordered:
             self._require_full_group_by(group_by, fam)
-        d, keys_gb, bucket, grain_all = self._partial_frame(
-            col, grain, group_by, realtime, start, end
+        d, keys, tail = self._partial_frame(
+            c, col, grain, group_by, realtime, start, end, fam
         )
-        keys = keys_gb if grain_all else ["_tgt", *keys_gb]
-        out = (finalize or fam.finalize)(fam.merge(d, keys, spec), keys, spec)
-        return out if grain_all else out.withColumnRenamed("_tgt", bucket)
+        spec = {**spec, STORED_FIELDS: _stored_fields(self._mat(), col)}
+        m = fam.merge(c, d, keys, spec, tail=tail) if tail else fam.merge(c, d, keys, spec)
+        return (finalize or fam.finalize)(c, m, keys, spec)
 
     def _require_full_group_by(self, group_by, fam) -> None:
         """Ordered partials (counter, gauge, time-weight, state-agg,
@@ -671,76 +791,52 @@ class ContinuousAggregate:
             )
 
     def _partial_frame(
-        self, col: str, grain, group_by, realtime, start, end
+        self, c: Ctes, col: str, grain, group_by, realtime, start, end, fam=None
     ):
-        """Shared serving scaffold: read the column (realtime union
-        included), apply bucket-aligned ``[start, end)`` bounds, compute
-        the target bucket, and return ``(frame(_tgt?, group…, _src,
-        _st), group_cols, bucket_alias, grain_is_all)``."""
-        from .functions.time import time_bucket
+        """Shared serving scaffold: the column's non-NULL states in
+        bucket-aligned ``[start, end)`` (realtime union included) keyed
+        by target bucket: ``(d, keys, tail)`` with ``d`` the relation
+        ``(bucket?, group…, _src, _st)`` — ``bucket`` holding the target
+        bucket, absent at grain ``"all"`` — and ``tail`` the re-keyed
+        unpacked raw tail of a lossless ``fam`` (see :meth:`_sides`).
 
+        Strict rollup semantics: a NULL state (a group whose partial
+        inputs were all NULL) is skipped at merge time, like the
+        toolkit's strict rollup() aggregate."""
         bucket = self.row["bucket_alias"]
         gb = list(self.row["group_by"] if group_by is None else group_by)
-        df = self.read(realtime=realtime, only_cols=[col])
-        if start is not None or end is not None:
-            bc = F.col(bucket)
-            if self.row["time_is_timestamp"]:
-                conv = lambda x: F.lit(x).cast("timestamp")  # noqa: E731
-            else:
-                conv = lambda x: F.lit(int(x))  # noqa: E731
-            if start is not None:
-                df = df.filter(bc >= conv(start))
-            if end is not None:
-                df = df.filter(bc < conv(end))
-        # strict rollup semantics: a NULL state (a group whose partial
-        # inputs were all NULL) is skipped at merge time, like the
-        # toolkit's strict rollup() aggregate. Filter AFTER the rename
-        # select — a filter on the raw state column between the mat
-        # read and the select trips Spark 4.1.2's RemoveRedundantAliases
-        # into an unresolved plan (same bug family as d42cb25).
+        sides, tail = self._sides(
+            c, [col], realtime, _to_internal(start), _to_internal(end), fam
+        )
         if grain == "all":
             # no constant target column: a literal group/partition key
             # trips Catalyst's RemoveRedundantAliases into an unresolved
             # plan (observed on the gauge accessor) and adds nothing
-            return (
-                df.select(
-                    *gb,
-                    F.col(bucket).alias("_src"),
-                    F.col(col).alias("_st"),
-                ).filter(F.col("_st").isNotNull()),
-                gb,
-                bucket,
-                True,
-            )
-        if grain is not None:
-            if not self.row["time_is_timestamp"]:
-                from .functions.time import time_bucket_int
-
-                tgt = time_bucket_int(int(grain), bucket)
-            else:
-                tgt = time_bucket(grain, bucket)
+            head = [_q(g) for g in gb]
+            keys = gb
         else:
-            tgt = F.col(bucket)
-        return (
-            df.select(
-                tgt.alias("_tgt"),
-                *gb,
-                F.col(bucket).alias("_src"),
-                F.col(col).alias("_st"),
-            ).filter(F.col("_st").isNotNull()),
-            gb,
-            bucket,
-            False,
-        )
+            if grain is None:
+                tgt = _q(bucket)
+            elif self.row["time_is_timestamp"]:
+                tgt = time_bucket_sql(grain, _q(bucket))
+            else:
+                tgt = time_bucket_int_sql(int(grain), _q(bucket))
+            head = [f"{tgt} AS {_q(bucket)}", *[_q(g) for g in gb]]
+            keys = [bucket, *gb]
+        cols = ", ".join([*head, f"{_q(bucket)} AS _src", f"{_q(col)} AS _st"])
+        d = union(c, sides, cols, f"{_q(col)} IS NOT NULL") if sides else None
+        if tail is not None:
+            tail = select(
+                c, tail, [*head, *fam.rows], where=f"{fam.rows[0]} IS NOT NULL"
+            )
+        return d, keys, tail
 
-    def _interp_frame(self, fam, col, grain, realtime, method: str):
+    def _interp_frame(self, c: Ctes, fam, col, grain, realtime, method: str):
         """Shared scaffold of the interpolated accessors: the column's
         non-NULL states ``(group…, _src, _st)`` at the cagg's own grain,
         ``_src`` in internal µs, plus the target width — a positive
         multiple of the cagg's fixed bucket width, so that every target
         edge is a parent edge."""
-        from .functions.time import parse_interval
-
         col, _spec = self._resolve(fam, col)
         if grain is None:
             raise ValueError(f"{method} needs an explicit grain")
@@ -762,25 +858,21 @@ class ContinuousAggregate:
                 "cagg's fixed bucket width (parent buckets must nest)"
             )
         gb = list(self.row["group_by"])
-        bucket = self.row["bucket_alias"]
-        df = self.read(realtime=realtime, only_cols=[col])
+        bucket = _q(self.row["bucket_alias"])
+        sides, _ = self._sides(c, [col], realtime)
         if self.row["time_is_timestamp"]:
-            src_us = F.unix_micros(F.col(bucket).cast("timestamp"))
+            src_us = f"unix_micros(CAST({bucket} AS TIMESTAMP))"
         else:
-            src_us = F.col(bucket).cast("long")
-        base = df.select(
-            *gb, src_us.alias("_src"), F.col(col).alias("_st")
-        ).filter(F.col("_st").isNotNull())
-        return base, gb, width
+            src_us = f"CAST({bucket} AS BIGINT)"
+        cols = ", ".join([*map(_q, gb), f"{src_us} AS _src", f"{_q(col)} AS _st"])
+        return union(c, sides, cols, f"{_q(col)} IS NOT NULL"), gb, width
 
-    def _target_buckets(self, df: DataFrame, gb, *cols) -> DataFrame:
+    def _target_buckets(self, c: Ctes, src: str, gb, *cols: str) -> DataFrame:
         """Interpolated output: the int64-µs target bucket ``_b`` back
-        as the cagg's bucket column."""
-        if self.row["time_is_timestamp"]:
-            bcol = F.timestamp_micros(F.col("_b"))
-        else:
-            bcol = F.col("_b")
-        return df.select(bcol.alias(self.row["bucket_alias"]), *gb, *cols)
+        as the cagg's bucket column, planned as one statement."""
+        b = "timestamp_micros(_b)" if self.row["time_is_timestamp"] else "_b"
+        sel = ", ".join([f"{b} AS {_q(self.row['bucket_alias'])}", *map(_q, gb), *cols])
+        return c.plan(self.ts, f"SELECT {sel} FROM {src}")
 
     def counter_at_grain(
         self,
@@ -928,8 +1020,6 @@ class ContinuousAggregate:
         Output: ``(bucket, group…, tw_avg)`` — one row per target
         bucket the step function overlaps, empty-gap buckets included.
         """
-        from pyspark.sql import Window
-
         _col, spec = self._resolve(TIME_WEIGHT, tw_col)
         if str(spec.get("method", "locf")).lower() != "locf":
             raise ValueError(
@@ -937,20 +1027,23 @@ class ContinuousAggregate:
                 "(linear interpolation across gaps is interpolated_delta "
                 "territory)"
             )
+        c = Ctes()
         base, gb, width = self._interp_frame(
-            TIME_WEIGHT, tw_col, grain, realtime, "interpolated_average_at_grain"
+            c, TIME_WEIGHT, tw_col, grain, realtime, "interpolated_average_at_grain"
         )
-        st = F.col("_st")
-        w = Window.partitionBy(*gb).orderBy(F.col("_src").asc())
-        prev_last_us = F.lag(st["last_us"]).over(w)
-        prev_last_val = F.lag(st["last_val"]).over(w)
-        seg = base.select(
-            *gb,
-            st.alias("_st"),
-            prev_last_us.alias("_pt"),
-            prev_last_val.alias("_pv"),
+        gbq = [_q(g) for g in gb]
+        wo = _over(gb, ["_src ASC"])
+        seg = select(
+            c,
+            base,
+            [
+                *gbq,
+                "_st",
+                f"lag(_st.last_us) OVER ({wo}) AS _pt",
+                f"lag(_st.last_val) OVER ({wo}) AS _pv",
+            ],
         )
-        wl = F.lit(width).cast("long")
+        wl = f"CAST({int(width)} AS BIGINT)"
         org = int(self.row.get("bucket_origin_us") or 0)
         # within-parent piece: the stored integral, covering
         # [first_us, last_us] — one target bucket (parents nest:
@@ -959,55 +1052,52 @@ class ContinuousAggregate:
         # a parent edge — origin-aligned floor, NOT epoch DIV, which
         # would mislabel e.g. weekly buckets Thursday-aligned and
         # truncate toward zero for pre-epoch timestamps)
-        within = seg.select(
-            *gb,
-            _grain_floor(st["first_us"], width, org).alias("_b"),
-            st["integral"].alias("_num"),
-            (st["last_us"] - st["first_us"]).cast("double").alias("_den"),
+        within = select(
+            c,
+            seg,
+            [
+                *gbq,
+                _grain_floor_sql("_st.first_us", width, org) + " AS _b",
+                "_st.integral AS _num",
+                "CAST((_st.last_us - _st.first_us) AS DOUBLE) AS _den",
+            ],
         )
         # boundary piece: LOCF segment [prev.last_us, first_us) at the
         # previous parent's last value, exploded over the target
         # buckets it overlaps (bounded by gap span / width)
-        bnd = seg.filter(
-            F.col("_pt").isNotNull() & (st["first_us"] > F.col("_pt"))
-        ).select(
-            *gb,
-            F.col("_pt").alias("_t1"),
-            st["first_us"].alias("_t2"),
-            F.col("_pv").alias("_v"),
+        b0 = _grain_floor_sql("_pt", width, org)
+        b1 = _grain_floor_sql("(_st.first_us - CAST(1 AS BIGINT))", width, org)
+        ex = select(
+            c,
+            seg,
+            [
+                *gbq,
+                "_pt AS _t1",
+                "_st.first_us AS _t2",
+                "_pv AS _v",
+                f"explode(sequence({b0}, {b1}, {wl})) AS _b",
+            ],
+            where="_pt IS NOT NULL AND _st.first_us > _pt",
         )
-        b0 = _grain_floor(F.col("_t1"), width, org)
-        b1 = _grain_floor(F.col("_t2") - F.lit(1).cast("long"), width, org)
-        ex = bnd.select(
-            *gb,
-            "_t1",
-            "_t2",
-            "_v",
-            F.explode(F.sequence(b0, b1, wl)).alias("_b"),
-        )
-        overlap = F.least(F.col("_t2"), F.col("_b") + wl) - F.greatest(
-            F.col("_t1"), F.col("_b")
-        )
-        pieces = within.unionByName(
-            ex.select(
-                *gb,
+        overlap = f"(least(_t2, _b + {wl}) - greatest(_t1, _b))"
+        bnd = select(
+            c,
+            ex,
+            [
+                *gbq,
                 "_b",
-                (F.col("_v") * overlap.cast("double")).alias("_num"),
-                overlap.cast("double").alias("_den"),
-            )
+                f"_v * CAST({overlap} AS DOUBLE) AS _num",
+                f"CAST({overlap} AS DOUBLE) AS _den",
+            ],
         )
-        out = (
-            pieces.groupBy(*gb, "_b")
-            .agg(
-                F.sum("_num").alias("_num"),
-                F.sum("_den").alias("_den"),
-            )
-            .filter(F.col("_den") > 0)
+        out = select(
+            c,
+            union(c, [within, bnd]),
+            [*gbq, "_b", "sum(_num) AS _num", "sum(_den) AS _den"],
+            group=[*gbq, "_b"],
         )
-
-        return self._target_buckets(
-            out, gb, (F.col("_num") / F.col("_den")).alias("tw_avg")
-        )
+        out = select(c, out, ["*"], where="_den > 0")
+        return self._target_buckets(c, out, gb, "_num / _den AS tw_avg")
 
     def interpolated_delta_at_grain(
         self,
@@ -1033,85 +1123,85 @@ class ContinuousAggregate:
         Target ``grain`` must be a multiple of the cagg's bucket width.
 
         Output: ``(bucket, group…, delta, rate)``."""
-        from pyspark.sql import Window
-
+        c = Ctes()
         base, gb, width = self._interp_frame(
-            COUNTER, counter_col, grain, realtime, "interpolated_delta_at_grain"
+            c, COUNTER, counter_col, grain, realtime, "interpolated_delta_at_grain"
         )
-        st = F.col("_st")
-        knots = counter_steps(base, gb)
-        wc = Window.partitionBy(*gb).orderBy(F.col("_src").asc())
-        cum_binc = F.sum("_binc").over(
-            wc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        cum_delta_before = F.sum(st["delta"]).over(
-            wc.rowsBetween(Window.unboundedPreceding, -1)
+        gbq = [_q(g) for g in gb]
+        steps = counter_steps(c, base, gb)
+        wc = _over(gb, ["_src ASC"])
+        upto = f"{wc} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+        cum_binc = f"sum(_binc) OVER ({upto})"
+        cum_delta_before = (
+            f"sum(_st.delta) OVER ({wc} ROWS BETWEEN UNBOUNDED PRECEDING "
+            f"AND 1 PRECEDING)"
         )
         # anchor at the group's first sample VALUE (raw va(sample 1) =
         # v1): differences would cancel the anchor mathematically, but
         # the float interpolation below rounds differently under a
         # constant shift — anchoring reproduces the raw path's adjusted
         # values exactly (bit-for-bit with integer-quantized inputs)
-        anchor = F.first(st["first_val"]).over(
-            wc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        anchor = f"first(_st.first_val) OVER ({upto})"
+        vf = f"({anchor} + {cum_binc} + coalesce({cum_delta_before}, 0.0D))"
+        knots = select(
+            c,
+            steps,
+            [
+                *gbq,
+                "_src",
+                "_st.first_us AS _fu",
+                "_st.last_us AS _lu",
+                f"{vf} AS _vf",
+                f"({vf} + _st.delta) AS _vl",
+            ],
         )
-        vf = anchor + cum_binc + F.coalesce(cum_delta_before, F.lit(0.0))
-        knots = knots.select(
-            *gb,
-            "_src",
-            st["first_us"].alias("_fu"),
-            st["last_us"].alias("_lu"),
-            vf.alias("_vf"),
-            (vf + st["delta"]).alias("_vl"),
+        within = select(
+            c, knots, [*gbq, "_fu AS _t1", "_vf AS _v1", "_lu AS _t2", "_vl AS _v2"]
         )
-        wk = Window.partitionBy(*gb).orderBy(F.col("_src").asc())
-        within = knots.select(
-            *gb,
-            F.col("_fu").alias("_t1"),
-            F.col("_vf").alias("_v1"),
-            F.col("_lu").alias("_t2"),
-            F.col("_vl").alias("_v2"),
+        boundary = select(
+            c,
+            knots,
+            [
+                *gbq,
+                f"lag(_lu) OVER ({wc}) AS _t1",
+                f"lag(_vl) OVER ({wc}) AS _v1",
+                "_fu AS _t2",
+                "_vf AS _v2",
+            ],
         )
-        boundary = knots.select(
-            *gb,
-            F.lag("_lu").over(wk).alias("_t1"),
-            F.lag("_vl").over(wk).alias("_v1"),
-            F.col("_fu").alias("_t2"),
-            F.col("_vf").alias("_v2"),
-        ).filter(F.col("_t1").isNotNull())
-        seg = within.unionByName(boundary).filter(
-            F.col("_t2") > F.col("_t1")
-        )
-        wl = F.lit(width).cast("long")
+        boundary = select(c, boundary, ["*"], where="_t1 IS NOT NULL")
+        seg = union(c, [within, boundary], where="_t2 > _t1")
+        wl = f"CAST({int(width)} AS BIGINT)"
         # origin-aligned target grid (same origin as the cagg's own
         # buckets, so target edges are parent edges — see
         # interpolated_average_at_grain)
         org = int(self.row.get("bucket_origin_us") or 0)
-        b0 = _grain_floor(F.col("_t1"), width, org)
-        b1 = _grain_floor(F.col("_t2") - F.lit(1).cast("long"), width, org)
-        ex = seg.select(
-            *gb,
-            "_t1",
-            "_v1",
-            "_t2",
-            "_v2",
-            F.explode(F.sequence(b0, b1, wl)).alias("_b"),
+        b0 = _grain_floor_sql("_t1", width, org)
+        b1 = _grain_floor_sql("(_t2 - CAST(1 AS BIGINT))", width, org)
+        ex = select(
+            c,
+            seg,
+            [*gbq, "_t1", "_v1", "_t2", "_v2", f"explode(sequence({b0}, {b1}, {wl})) AS _b"],
         )
-        lo = F.greatest(F.col("_t1"), F.col("_b"))
-        hi = F.least(F.col("_t2"), F.col("_b") + wl)
-        span = (F.col("_t2") - F.col("_t1")).cast("double")
-        dv = F.col("_v2") - F.col("_v1")
-        va_lo = F.col("_v1") + dv * (lo - F.col("_t1")).cast("double") / span
-        va_hi = F.col("_v1") + dv * (hi - F.col("_t1")).cast("double") / span
-        out = ex.groupBy(*gb, "_b").agg(
-            F.sum(va_hi - va_lo).alias("delta"),
-            (
-                F.sum(va_hi - va_lo)
-                / (F.sum((hi - lo).cast("double")) / F.lit(1e6))
-            ).alias("rate"),
+        lo = "greatest(_t1, _b)"
+        hi = f"least(_t2, _b + {wl})"
+        span = "CAST((_t2 - _t1) AS DOUBLE)"
+        dv = "(_v2 - _v1)"
+        va_lo = f"(_v1 + {dv} * CAST(({lo} - _t1) AS DOUBLE) / {span})"
+        va_hi = f"(_v1 + {dv} * CAST(({hi} - _t1) AS DOUBLE) / {span})"
+        out = select(
+            c,
+            ex,
+            [
+                *gbq,
+                "_b",
+                f"sum({va_hi} - {va_lo}) AS delta",
+                f"sum({va_hi} - {va_lo}) / (sum(CAST(({hi} - {lo}) AS DOUBLE)) "
+                f"/ 1000000.0D) AS rate",
+            ],
+            group=[*gbq, "_b"],
         )
-
-        return self._target_buckets(out, gb, "delta", "rate")
+        return self._target_buckets(c, out, gb, "delta", "rate")
 
     def time_weighted_at_grain(
         self,
@@ -1209,9 +1299,10 @@ class ContinuousAggregate:
         count desc, value asc.
 
         Output: ``(bucket?, group…, value, freq_lb)``."""
-        def finalize(m, keys, spec):
-            served = FREQ.finalize(m, keys, spec)
-            return _top(served, keys, ["freq_lb DESC", "value ASC"], n).drop("_rk")
+        def finalize(c, m, keys, spec):
+            served = FREQ.finalize(c, m, keys, spec)
+            best = top(c, served, keys, ["freq_lb DESC", "value ASC"], n)
+            return select(c, best, [*map(_q, keys), "value", "freq_lb"])
 
         return self._serve(FREQ, freq_col, grain, group_by, realtime, start, end, finalize)
 
@@ -1249,8 +1340,11 @@ class ContinuousAggregate:
             )
         order = _maxn_order(desc, has_by, "value", "data")
 
-        def finalize(m, keys, spec):
-            return _top(MAXN.finalize(m, keys, spec), keys, order, n).drop("_rk")
+        def finalize(c, m, keys, spec):
+            best = top(c, MAXN.finalize(c, m, keys, spec), keys, order, n)
+            return select(
+                c, best, [*map(_q, keys), "value", *(["data"] if has_by else [])]
+            )
 
         return self._serve(MAXN, maxn_col, grain, group_by, realtime, start, end, finalize)
 
@@ -1282,58 +1376,63 @@ class ContinuousAggregate:
         ``grain`` must be a multiple of the cagg's bucket width.
 
         Output: ``(bucket, group…, duration_us)``."""
+        c = Ctes()
         base, gb, width = self._interp_frame(
-            STATE_AGG, state_col, grain, realtime, "interpolated_duration_in_at_grain"
+            c, STATE_AGG, state_col, grain, realtime, "interpolated_duration_in_at_grain"
         )
-        # SQL-string expression build (round 17, see _over)
         gbq = [_q(g) for g in gb]
         wo = _over(gb, ["_src ASC"])
-        seg = base.selectExpr(
-            *gbq,
-            "_st",
-            f"lag(_st.last_us) OVER ({wo}) AS _pt",
-            f"lag(_st.last_state) OVER ({wo}) AS _ps",
+        seg = select(
+            c,
+            base,
+            [
+                *gbq,
+                "_st",
+                f"lag(_st.last_us) OVER ({wo}) AS _pt",
+                f"lag(_st.last_state) OVER ({wo}) AS _ps",
+            ],
         )
         org = int(self.row.get("bucket_origin_us") or 0)
+        wl = f"CAST({int(width)} AS BIGINT)"
         ssq = "'" + str(state).replace("'", "''") + "'"
         # within-parent piece: the stored per-state held time for the
         # requested state, entirely inside one target bucket
-        within = seg.selectExpr(
-            *gbq,
-            _grain_floor_sql("_st.first_us", width, org) + " AS _b",
-            f"coalesce(element_at(_st.durations, {ssq}).d, "
-            f"CAST(0 AS BIGINT)) AS _d",
-        ).filter(F.col("_d") > 0)
+        within = select(
+            c,
+            seg,
+            [
+                *gbq,
+                _grain_floor_sql("_st.first_us", width, org) + " AS _b",
+                f"coalesce(element_at(_st.durations, {ssq}).d, "
+                f"CAST(0 AS BIGINT)) AS _d",
+            ],
+        )
+        within = select(c, within, ["*"], where="_d > 0")
         # boundary piece: LOCF segment at the previous parent's last
         # state, exploded over the target buckets it overlaps
-        bnd = seg.filter(
-            F.expr(
-                f"_pt IS NOT NULL AND _st.first_us > _pt "
-                f"AND _ps <=> {ssq}"
-            )
-        ).selectExpr(*gbq, "_pt AS _t1", "_st.first_us AS _t2")
-        b0 = _grain_floor_sql("_t1", width, org)
-        b1 = _grain_floor_sql("(_t2 - CAST(1 AS BIGINT))", width, org)
-        ex = bnd.selectExpr(
-            *gbq,
-            "_t1",
-            "_t2",
-            f"explode(sequence({b0}, {b1}, "
-            f"CAST({int(width)} AS BIGINT))) AS _b",
-        )
-        pieces = within.unionByName(
-            ex.selectExpr(
+        b0 = _grain_floor_sql("_pt", width, org)
+        b1 = _grain_floor_sql("(_st.first_us - CAST(1 AS BIGINT))", width, org)
+        ex = select(
+            c,
+            seg,
+            [
                 *gbq,
-                "_b",
-                f"least(_t2, _b + CAST({int(width)} AS BIGINT)) - "
-                f"greatest(_t1, _b) AS _d",
-            )
+                "_pt AS _t1",
+                "_st.first_us AS _t2",
+                f"explode(sequence({b0}, {b1}, {wl})) AS _b",
+            ],
+            where=f"_pt IS NOT NULL AND _st.first_us > _pt AND _ps <=> {ssq}",
         )
-        out = pieces.groupBy(*gb, "_b").agg(
-            F.expr("sum(_d)").alias("duration_us")
+        bnd = select(
+            c, ex, [*gbq, "_b", f"least(_t2, _b + {wl}) - greatest(_t1, _b) AS _d"]
         )
-
-        return self._target_buckets(out, gb, "duration_us")
+        out = select(
+            c,
+            union(c, [within, bnd]),
+            [*gbq, "_b", "sum(_d) AS duration_us"],
+            group=[*gbq, "_b"],
+        )
+        return self._target_buckets(c, out, gb, "duration_us")
 
     def heartbeat_at_grain(
         self,
@@ -1402,9 +1501,6 @@ class ContinuousAggregate:
         emit no row, even when a previous tail reaches into them.
         Fixed-width grains only. One extra ``lag`` window over the
         per-bucket merged stats — O(buckets), not O(beats)."""
-        from .functions.time import parse_interval
-        from pyspark.sql import Window
-
         _col, spec = self._resolve(HEARTBEAT, hb_col)
         liv = int(spec["liveness_us"])
         if grain == "all":
@@ -1427,43 +1523,54 @@ class ContinuousAggregate:
                     "interpolated heartbeat needs a fixed-width grain"
                 )
             width = iv.us
-        base = self.heartbeat_at_grain(
-            hb_col, grain, group_by, realtime, start, end
+        c = Ctes()
+        base = self._serve_rel(
+            c, HEARTBEAT, hb_col, grain, group_by, realtime, start, end
         )
-        bucket = self.row["bucket_alias"]
-        gb = list(self.row["group_by"] if group_by is None else group_by)
+        bucket = _q(self.row["bucket_alias"])
+        gb = [_q(g) for g in (self.row["group_by"] if group_by is None else group_by)]
         if self.row["time_is_timestamp"]:
-            tgt_us = F.unix_micros(F.col(bucket))
+            tgt_us = f"unix_micros({bucket})"
         else:
-            tgt_us = F.col(bucket).cast("long")
-        w = Window.partitionBy(*gb).orderBy(F.col(bucket).asc())
-        prev_last = F.lag("last_us").over(w)
-        ll = F.lit(liv).cast("long")
-        wl = F.lit(width).cast("long")
-        tail_out = F.greatest(
-            F.lit(0).cast("long"),
-            F.col("last_us") + ll - (tgt_us + wl),
+            tgt_us = f"CAST({bucket} AS BIGINT)"
+        part = f"PARTITION BY {', '.join(gb)} " if gb else ""
+        prev = select(
+            c,
+            base,
+            [
+                "*",
+                f"lag(last_us) OVER ({part}ORDER BY {bucket} ASC) AS _pl",
+                f"{tgt_us} AS _tu",
+            ],
         )
-        reach = F.least(prev_last + ll, F.col("first_us"))
-        carry = F.when(
-            prev_last.isNotNull(),
-            F.greatest(F.lit(0).cast("long"), reach - tgt_us),
-        ).otherwise(F.lit(0).cast("long"))
-        live2 = F.col("live_us") - tail_out + carry
+        ll = f"CAST({liv} AS BIGINT)"
+        wl = f"CAST({int(width)} AS BIGINT)"
+        zero = "CAST(0 AS BIGINT)"
+        tail_out = f"greatest({zero}, last_us + {ll} - (_tu + {wl}))"
+        reach = f"least(_pl + {ll}, first_us)"
+        carry = (
+            f"CASE WHEN _pl IS NOT NULL THEN greatest({zero}, {reach} - _tu) "
+            f"ELSE {zero} END"
+        )
+        live2 = f"(live_us - {tail_out} + {carry})"
         # the carried tail is a separate range unless it touches the
         # first beat ([start, reach) meets [first_us, ...) iff
         # reach == first_us)
-        ranges2 = F.col("num_live_ranges") + F.when(
-            (carry > 0) & (reach < F.col("first_us")), F.lit(1)
-        ).otherwise(F.lit(0))
-        return base.select(
-            bucket,
-            *gb,
-            "n",
-            live2.alias("live_us"),
-            (wl - live2).alias("dead_us"),
-            ranges2.alias("num_live_ranges"),
+        ranges2 = (
+            f"num_live_ranges + CASE WHEN ({carry}) > 0 AND {reach} < first_us "
+            f"THEN 1 ELSE 0 END"
         )
+        sel = ", ".join(
+            [
+                bucket,
+                *gb,
+                "n",
+                f"{live2} AS live_us",
+                f"({wl} - {live2}) AS dead_us",
+                f"{ranges2} AS num_live_ranges",
+            ]
+        )
+        return c.plan(self.ts, f"SELECT {sel} FROM {prev}")
 
     def tdigest_quantiles_at_grain(
         self,
@@ -1485,10 +1592,10 @@ class ContinuousAggregate:
         contract; rank-error ≲ π/(2·delta) otherwise.
 
         Output: ``(bucket?, group…, n, min_val, max_val, p50, …)``."""
-        from .functions.tdigest import tdigest_quantiles
+        from .functions.tdigest import quantile_cols
 
-        def finalize(m, keys, spec):
-            return tdigest_quantiles(m, list(qs), by=keys, state_col="_td")
+        def finalize(c, m, keys, spec):
+            return select(c, m, [*map(_q, keys), *quantile_cols("_td", list(qs))])
 
         return self._serve(TDIGEST, td_col, grain, group_by, realtime, start, end, finalize)
 
@@ -1527,10 +1634,10 @@ class ContinuousAggregate:
         :meth:`tdigest_quantiles_at_grain`. Exact while the merged
         digest stays lossless (the oracle-gate contract); standard
         centroid-midpoint CDF interpolation otherwise."""
-        from .functions.tdigest import tdigest_rank
+        from .functions.tdigest import rank_col
 
-        def finalize(m, keys, spec):
-            return tdigest_rank(m, value, by=keys, state_col="_td", out=out)
+        def finalize(c, m, keys, spec):
+            return select(c, m, [*map(_q, keys), rank_col("_td", value, out)])
 
         return self._serve(TDIGEST, td_col, grain, group_by, realtime, start, end, finalize)
 
@@ -1555,16 +1662,15 @@ class ContinuousAggregate:
                 f"{hll_col!r} is not an aggs column of cagg {self.name!r}"
             )
         # the shared scaffold with the HLL aggs column as the partial payload
-        d, keys_gb, bucket, grain_all = self._partial_frame(
-            hll_col, grain, group_by, realtime, start, end
+        c = Ctes()
+        d, keys, _ = self._partial_frame(c, hll_col, grain, group_by, realtime, start, end)
+        out_rel = select(
+            c,
+            d,
+            [*map(_q, keys), f"hll_sketch_estimate(hll_union_agg(_st)) AS {_q(out)}"],
+            group=[_q(k) for k in keys],
         )
-        tcols = [] if grain_all else ["_tgt"]
-        out_df = d.groupBy(*tcols, *keys_gb).agg(
-            F.expr("hll_sketch_estimate(hll_union_agg(_st))").alias(out)
-        )
-        if grain_all:
-            return out_df
-        return out_df.withColumnRenamed("_tgt", bucket)
+        return c.plan(self.ts, f"SELECT * FROM {out_rel}")
 
     def set_materialized_only(self, flag: bool) -> None:
         """``ALTER MATERIALIZED VIEW .. SET (timescaledb.materialized_only
@@ -1632,7 +1738,10 @@ class ContinuousAggregate:
             # materialized buckets, tsl/src/continuous_aggs/refresh.c).
             chunks = src.chunks()
             if not chunks:
-                hi = 0
+                # an emptied hypertable: still cover what was materialized,
+                # so ranges its DML invalidated lose their stale rows
+                wm = self.watermark()
+                hi = wm if wm is not None else 0
             else:
                 newest = chunks[-1]
                 nframe = src.read(start=newest["range_start"])
@@ -1861,12 +1970,14 @@ class ContinuousAggregate:
             for a, b in merged:
                 # infinite sentinels become open bounds (no filter): they
                 # are not representable as timestamps
-                raw = src.read(
-                    start=a if a > INT64_MIN else None,
-                    end=b if b < INT64_MAX else None,
+                c = Ctes()
+                raw = c.scan(
+                    src._scan(
+                        start=a if a > INT64_MIN else None,
+                        end=b if b < INT64_MAX else None,
+                    )
                 )
-                agg = self._aggregate(raw)
-                mat_rows = agg
+                mat_rows = c.plan(self.ts, f"SELECT * FROM {self._aggregate(c, raw)}")
                 if verbose:
                     print(f"refresh {self.name}: range [{a}, {b}) ")
                 # DELETE + INSERT per range, chunk-local
@@ -1934,63 +2045,27 @@ class ContinuousAggregate:
         only_cols: Optional[Sequence[str]] = None,
     ) -> DataFrame:
         """User-view read. Realtime = materialized below the watermark,
-        raw aggregation at/after it (``common.c:1745 build_union_query``).
+        raw aggregation at/after it (``common.c:1745 build_union_query``),
+        planned as one ``spark.sql`` call over the mat and source scan
+        relations (:meth:`_sides`).
 
         ``only_cols`` restricts the projection to the named value
-        columns (keys always included) AND — the part Catalyst cannot
-        do itself — restricts the realtime raw-side partial build to
-        just those families: the full ``_aggregate`` is a 1:1 join
-        chain of every family's partial aggregate, and joins survive
-        column pruning, so without this a single-family serve over an
-        N-family cagg pays N partial builds on the tail. Serving
-        accessors pass their one column; ``None`` keeps the full view.
+        columns (keys always included) AND the realtime raw-side partial
+        build to just those families: the full ``_aggregate`` is a 1:1
+        join chain of every family's partial aggregate, and joins
+        survive column pruning, so without this a single-family serve
+        over an N-family cagg pays N partial builds on the tail.
         Columns computed by ``window_fns`` may depend on arbitrary
         sibling aggregates, so requesting one falls back to the full
         aggregate (still projected afterwards)."""
-        if realtime is None:
-            realtime = not self.row.get("materialized_only", False)
-        mat = self._mat()
-        wm = self.watermark()
-        bucket = self.row["bucket_alias"]
-        has_mat = mat.row.get("schema_ddl") is not None
-        keys = [bucket, *self.row["group_by"]]
-        build_cols = only_cols
-        if only_cols is not None and any(
-            c in (self.row.get("window_fns") or {}) for c in only_cols
-        ):
-            build_cols = None  # window col needs its sibling aggregates
-        proj = (
-            None
+        keys = [self.row["bucket_alias"], *self.row["group_by"]]
+        cols = (
+            self._value_cols()
             if only_cols is None
-            else [*keys, *[c for c in only_cols if c not in keys]]
+            else [x for x in only_cols if x not in keys]
         )
-        if not realtime:
-            if not has_mat:
-                raise ValueError(f"cagg {self.name!r} never refreshed")
-            out = mat.read()
-            return out if proj is None else out.select(*proj)
-
-        src = self._source()
-        wm_i = wm if wm is not None else INT64_MIN
-        raw = src.read(start=wm_i if wm is not None else None)
-        raw_agg = self._aggregate(raw, only_cols=build_cols)
-        if proj is not None:
-            raw_agg = raw_agg.select(*proj)
-        if not has_mat:
-            return raw_agg
-        if self.row["time_is_timestamp"]:
-            wm_lit = F.timestamp_micros(F.lit(wm_i))
-        else:
-            wm_lit = F.lit(wm_i)
-        # chunk-prune the mat side by the watermark too (normally a
-        # no-op — materialization stops at the watermark — but after a
-        # watermark rollback or retention on the raw table it excludes
-        # whole mat chunks); the row filter stays for the boundary chunk
-        mat_side = mat.read(end=wm_i).filter(F.col(bucket) < wm_lit)
-        if proj is not None:
-            mat_side = mat_side.select(*proj)
-        raw_side = raw_agg.filter(F.col(bucket) >= wm_lit)
-        return mat_side.unionByName(raw_side)
+        c = Ctes()
+        return c.plan(self.ts, f"SELECT * FROM {union(c, self._sides(c, cols, realtime)[0])}")
 
     # ------------------------------------------------- sketch accessors
     def quantiles(
@@ -2017,14 +2092,14 @@ class ContinuousAggregate:
         Output: ``(bucket?, group_by…, n, p50, p95, …)`` with the same
         naming/rounding as :func:`functions.ddsketch.ddsketch_quantiles`.
         """
-        from .functions.ddsketch import ddsketch_quantiles
+        from .functions.ddsketch import quantiles_sql
 
-        def extract(flat, by, alpha):
-            return ddsketch_quantiles(flat, list(qs), by=by, alpha=alpha)
+        def finalize(c, m, keys, spec):
+            alpha = float(spec.get("alpha", 0.01))
+            return quantiles_sql(c, m, keys, list(qs), alpha, "_sb", "_cnt")
 
         return self._serve(
-            SKETCH, sketch_col, grain, group_by, realtime, start, end,
-            self._sketch_finalize(extract),
+            SKETCH, sketch_col, grain, group_by, realtime, start, end, finalize
         )
 
     def rank(
@@ -2042,37 +2117,15 @@ class ContinuousAggregate:
         accessor: fraction of ingested values ≤ ``value`` per
         bucket/group, served from the stored states under the same
         merge/grain/realtime rules as :meth:`quantiles`."""
-        from .functions.ddsketch import ddsketch_rank
+        from .functions.ddsketch import rank_sql
 
-        def extract(flat, by, alpha):
-            return ddsketch_rank(flat, value, by=by, alpha=alpha, out=out)
+        def finalize(c, m, keys, spec):
+            alpha = float(spec.get("alpha", 0.01))
+            return rank_sql(c, m, keys, value, alpha, out, "_sb", "_cnt")
 
         return self._serve(
-            SKETCH, sketch_col, grain, group_by, realtime, start, end,
-            self._sketch_finalize(extract),
+            SKETCH, sketch_col, grain, group_by, realtime, start, end, finalize
         )
-
-    @staticmethod
-    def _sketch_finalize(extract):
-        """finalize of the DDSketch accessors over the merged ``(keys…,
-        _sb, _cnt)`` bucket counts — keys × ~2k rows, never raw-sized.
-        Keys travel renamed: the sketch frame contract reserves
-        "bucket"/"cnt", and the cagg's own bucket_alias defaults to
-        "bucket" too."""
-
-        def finalize(m, keys, spec):
-            tmp = [f"_qk{i}" for i in range(len(keys))]
-            flat = m.select(
-                *[F.col(k).alias(t) for k, t in zip(keys, tmp)],
-                F.col("_sb").alias("bucket"),
-                F.col("_cnt").alias("cnt"),
-            )
-            res = extract(flat, tmp, float(spec.get("alpha", 0.01)))
-            for k, t in zip(keys, tmp):
-                res = res.withColumnRenamed(t, k)
-            return res
-
-        return finalize
 
     def drop(self, keep_jobs: bool = False) -> None:
         """``DROP MATERIALIZED VIEW`` teardown. Refuses while a

@@ -36,7 +36,9 @@ from __future__ import annotations
 import math
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
+
+from ..scan import over_frame
 
 #: default relative-error target (1%)
 DEFAULT_ALPHA = 0.01
@@ -96,55 +98,104 @@ def ddsketch_rollup(
     return sketch.groupBy(*by, "bucket").agg(F.sum("cnt").alias("cnt"))
 
 
-def ddsketch_quantiles(
-    sketch: DataFrame,
+def _est_sql(b: str, g: float) -> str:
+    """Bucket-midpoint estimate ``2·gamma^b/(gamma+1)`` (0 for the zero
+    bucket), rounded to 6 decimals."""
+    return (
+        f"CASE WHEN {b} = {ZERO_BUCKET} THEN 0.0D ELSE round(2.0D * "
+        f"POWER({g!r}D, CAST({b} AS DOUBLE)) / {g + 1.0!r}D, 6) END"
+    )
+
+
+def _keys(by: Sequence[str]) -> tuple[str, str, str]:
+    """``(select prefix, PARTITION BY clause, GROUP BY clause)`` of the
+    sketch's group keys."""
+    ks = ", ".join(f"`{k}`" for k in by)
+    if not by:
+        return "", "", ""
+    return f"{ks}, ", f"PARTITION BY {ks} ", f" GROUP BY {ks}"
+
+
+def quantiles_sql(
+    c,
+    src: str,
+    by: Sequence[str],
     qs: Sequence[float],
-    by: Sequence[str] = (),
     alpha: float = DEFAULT_ALPHA,
-) -> DataFrame:
-    """Estimate quantiles from a sketch: ``(by…, n, p<q>…)``.
+    bucket: str = "bucket",
+    cnt: str = "cnt",
+) -> str:
+    """Quantile estimates ``(by…, n, p<q>…)`` from the sketch rows
+    ``(by…, bucket, cnt)`` of relation ``src``, as CTEs appended to
+    ``c`` (:class:`..scan.Ctes`); returns the result relation's name.
+    ``src`` may hold several rows per bucket (a merge's unsummed bag):
+    the RANGE frame counts every row of the buckets up to the current
+    one.
 
     Rank ``r_q = max(1, ceil(q·n))``; the answering bucket is the first
     (in bucket order) whose cumulative count reaches ``r_q``; the
     estimate is the bucket midpoint ``2·gamma^i/(gamma+1)`` (0 for the
     zero bucket), rounded to 6 decimals. One window cumsum over the
     (tiny) sketch + one conditional-min aggregation — never touches raw
-    data.
-    """
+    data."""
     g = _gamma(alpha)
     for q in qs:
         if not 0.0 < q <= 1.0:
             raise ValueError(f"quantile {q} must be in (0, 1]")
-    wspec = Window.partitionBy(*[F.col(c) for c in by]).orderBy("bucket")
-    w = wspec.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    keys, part, group = _keys(by)
+    wo = f"{part}ORDER BY `{bucket}`"
     # group total as a FULL frame of the same ordered spec — one sort,
-    # one WindowExec (round 14; a separate partition-only window cost a
-    # second pass)
-    wn = wspec.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
+    # one WindowExec (round 14)
+    cum = c.add(
+        f"SELECT {keys}`{bucket}` AS _b, "
+        f"sum(`{cnt}`) OVER ({wo} RANGE BETWEEN UNBOUNDED PRECEDING AND "
+        f"CURRENT ROW) AS _cum, "
+        f"sum(`{cnt}`) OVER ({wo} ROWS BETWEEN UNBOUNDED PRECEDING AND "
+        f"UNBOUNDED FOLLOWING) AS _n FROM {src}"
     )
-    cum = sketch.withColumn("cum", F.sum("cnt").over(w)).withColumn(
-        "n", F.sum("cnt").over(wn)
-    )
-
-    def _est(bucket_col: Column) -> Column:
-        return F.when(bucket_col == ZERO_BUCKET, F.lit(0.0)).otherwise(
-            F.round(
-                F.lit(2.0)
-                * F.pow(F.lit(g), bucket_col.cast("double"))
-                / F.lit(g + 1.0),
-                6,
-            )
-        )
-
-    aggs = [F.max("n").alias("n")]
+    cols = ["max(_n) AS n"]
     for q in qs:
-        rank = F.greatest(
-            F.lit(1), F.ceil(F.lit(float(q)) * F.col("n")).cast("long")
-        )
-        b_q = F.min(F.when(F.col("cum") >= rank, F.col("bucket")))
-        aggs.append(_est(b_q).alias(_qname(q)))
-    return cum.groupBy(*by).agg(*aggs)
+        rank = f"greatest(1, CAST(ceil({float(q)!r}D * _n) AS BIGINT))"
+        b_q = f"min(CASE WHEN _cum >= {rank} THEN _b END)"
+        cols.append(f"{_est_sql(b_q, g)} AS {_qname(q)}")
+    return c.add(f"SELECT {keys}{', '.join(cols)} FROM {cum}{group}")
+
+
+def rank_sql(
+    c,
+    src: str,
+    by: Sequence[str],
+    value: float,
+    alpha: float = DEFAULT_ALPHA,
+    out: str = "rank",
+    bucket: str = "bucket",
+    cnt: str = "cnt",
+) -> str:
+    """``approx_percentile_rank`` ``(by…, out)`` from the sketch rows of
+    ``src`` (see :func:`ddsketch_rank`), as a CTE appended to ``c``."""
+    b = _rank_bucket(float(value), _gamma(alpha))
+    frac = (
+        f"sum(CASE WHEN `{bucket}` <= {b} THEN `{cnt}` ELSE 0 END) "
+        f"/ sum(`{cnt}`)"
+    )
+    keys, _, group = _keys(by)
+    return c.add(
+        f"SELECT {keys}round(CAST({frac} AS DOUBLE), 6) AS `{out}` "
+        f"FROM {src}{group}"
+    )
+
+
+def ddsketch_quantiles(
+    sketch: DataFrame,
+    qs: Sequence[float],
+    by: Sequence[str] = (),
+    alpha: float = DEFAULT_ALPHA,
+) -> DataFrame:
+    """Estimate quantiles from a sketch ``(by…, bucket, cnt)``:
+    ``(by…, n, p<q>…)`` (see :func:`quantiles_sql`)."""
+    return over_frame(
+        sketch, lambda c, src: quantiles_sql(c, src, list(by), qs, alpha)
+    )
 
 
 def ddsketch_quantiles_sql(
@@ -216,10 +267,6 @@ def ddsketch_rank(
     rounded to 6 decimals. One grouped conditional sum over the (tiny)
     sketch; never touches raw data, exact given the bucket mapping so a
     DuckDB oracle replay matches bit-for-bit."""
-    b = _rank_bucket(float(value), _gamma(alpha))
-    frac = F.sum(
-        F.when(F.col("bucket") <= F.lit(b), F.col("cnt")).otherwise(F.lit(0))
-    ) / F.sum("cnt")
-    return sketch.groupBy(*by).agg(
-        F.round(frac.cast("double"), 6).alias(out)
+    return over_frame(
+        sketch, lambda c, src: rank_sql(c, src, list(by), value, alpha, out)
     )

@@ -48,6 +48,8 @@ from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..scan import over_frame
+
 #: default compression (max centroids), the toolkit example size
 DEFAULT_DELTA = 200
 
@@ -101,94 +103,79 @@ def _state_struct_sql(tn: str, tmn: str, tmx: str, ents: str) -> str:
     )
 
 
-def build_states(
-    df: DataFrame,
-    keys: Sequence[str],
-    value: Column,
-    delta: int,
-    out: str,
-) -> DataFrame:
-    """Per-``keys`` t-digest states from raw rows. Strict NULL
-    semantics: NULL values are skipped; a group whose values are all
-    NULL still gets a row, with a NULL state.
+def _list(*parts) -> str:
+    """Comma-joined non-empty SQL list items."""
+    return ", ".join(p for p in parts if p)
 
-    Expressions are built as SQL strings (one py4j parse each) — the
-    round-17 fixed-cost lever: the Column form cost ~600 py4j round
-    trips per call on the cagg serve path. The algebra is unchanged."""
+
+def _group(kq: Sequence[str], *more: str) -> str:
+    items = [*kq, *more]
+    return f" GROUP BY {', '.join(items)}" if items else ""
+
+
+def build_states_sql(c, src: str, keys: Sequence[str], value: str, delta: int, out: str) -> str:
+    """Per-``keys`` t-digest states from the raw rows of relation
+    ``src``, as CTEs appended to ``c`` (:class:`..scan.Ctes`); returns
+    the name of the ``(keys…, out)`` relation. ``value`` is a SQL
+    expression. Strict NULL semantics: NULL values are skipped; a group
+    whose values are all NULL still gets a row, with a NULL state."""
     delta = _check_delta(delta)
     kq = [f"`{k}`" for k in keys]
-    base = df.select(*keys, value.cast("double").alias("_v"))
+    ks = _list(*kq)
+    base = c.add(f"SELECT {_list(ks, f'CAST(({value}) AS DOUBLE) AS _v')} FROM {src}")
     # non-null count as a FULL frame of the same ordered spec (not a
     # separate partition-only window): both window functions share one
-    # sort and one WindowExec (round 14 — same trick as merge_states)
+    # sort and one WindowExec (round 14 — same trick as merge_states_sql)
     wo = f"{_part_clause(keys)}ORDER BY _v ASC NULLS LAST"
-    d = base.selectExpr(
-        *kq,
-        "_v",
-        f"count(_v) OVER ({wo} ROWS BETWEEN UNBOUNDED PRECEDING "
-        f"AND UNBOUNDED FOLLOWING) AS _n",
-        f"row_number() OVER ({wo}) AS _rk",
+    d = c.add(
+        f"SELECT {_list(ks, '_v')}, count(_v) OVER ({wo} ROWS BETWEEN "
+        f"UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS _n, "
+        f"row_number() OVER ({wo}) AS _rk FROM {base}"
     )
     cl = (
         "CASE WHEN _v IS NULL THEN CAST(NULL AS BIGINT) ELSE "
         + _cluster_sql("_rk", "_n", delta)
         + " END"
     )
-    per = d.groupBy(*[F.col(k) for k in keys], F.expr(cl).alias("_cl")).agg(
-        F.expr("count(_v)").alias("_w"),
-        F.expr("avg(_v)").alias("_m"),
-        F.expr("min(_v)").alias("_mn"),
-        F.expr("max(_v)").alias("_mx"),
+    per = c.add(
+        f"SELECT {_list(ks, f'{cl} AS _cl')}, count(_v) AS _w, avg(_v) AS _m, "
+        f"min(_v) AS _mn, max(_v) AS _mx FROM {d}{_group(kq, cl)}"
     )
-    flat = per.groupBy(*[F.col(k) for k in keys]).agg(
-        F.expr("sum(CASE WHEN _cl IS NOT NULL THEN _w END)").alias("_tn"),
-        F.expr("min(_mn)").alias("_tmn"),
-        F.expr("max(_mx)").alias("_tmx"),
-        F.expr(
-            "array_sort(collect_list(CASE WHEN _cl IS NOT NULL THEN "
-            "named_struct('mean', _m, 'weight', _w) END))"
-        ).alias("_te"),
+    flat = c.add(
+        f"SELECT {_list(ks, 'sum(CASE WHEN _cl IS NOT NULL THEN _w END) AS _tn')}, "
+        f"min(_mn) AS _tmn, max(_mx) AS _tmx, "
+        f"array_sort(collect_list(CASE WHEN _cl IS NOT NULL THEN "
+        f"named_struct('mean', _m, 'weight', _w) END)) AS _te FROM {per}{_group(kq)}"
     )
-    return flat.selectExpr(
-        *kq,
-        _state_struct_sql("_tn", "_tmn", "_tmx", "_te") + f" AS `{out}`",
-    )
+    state = _state_struct_sql("_tn", "_tmn", "_tmx", "_te")
+    return c.add(f"SELECT {_list(ks, f'{state} AS `{out}`')} FROM {flat}")
 
 
-def merge_states(
-    d: DataFrame,
-    keys: Sequence[str],
-    state_col: str,
-    delta: int,
-    out: str,
-) -> DataFrame:
-    """Merge one state per ``keys`` group from many input states —
-    ``rollup(tdigest)``. NULL input states are kept by contract (the
-    group survives with a NULL state when ALL inputs are NULL).
-    Order-independent: global re-sort by centroid mean, re-bin by
-    cumulative-weight midpoint, fold; the collect is ≤ ``delta``
-    entries per group (bins bound it when total weight > delta, total
-    centroid count ≤ total weight ≤ delta bounds it otherwise)."""
+def merge_states_sql(c, src: str, keys: Sequence[str], state_col: str, delta: int, out: str) -> str:
+    """Merge one state per ``keys`` group from the many input states in
+    column ``state_col`` of relation ``src`` — ``rollup(tdigest)`` — as
+    CTEs appended to ``c``; returns the ``(keys…, out)`` relation. NULL
+    input states are kept by contract (the group survives with a NULL
+    state when ALL inputs are NULL). Order-independent: global re-sort
+    by centroid mean, re-bin by cumulative-weight midpoint, fold; the
+    collect is ≤ ``delta`` entries per group (bins bound it when total
+    weight > delta, total centroid count ≤ total weight ≤ delta bounds
+    it otherwise)."""
     delta = _check_delta(delta)
     kq = [f"`{k}`" for k in keys]
+    ks = _list(*kq)
     st = f"`{state_col}`"
-    # ONE pipeline, ONE shuffle (round 14 — the r13 shape was the most
-    # expensive serve in the system at x100: 3 window expressions over
-    # 2 specs plus a separate totals aggregation joined back by sort-
-    # merge). Shape-preserving rewrites:
+    # ONE pipeline, ONE shuffle (round 14). Shape-preserving rewrites:
     # - NULL states explode to one dummy (NULL, NULL) entry, so every
-    #   input group keeps a row and the totals branch + left join
-    #   disappear (all-NULL group ⇔ _tn stays NULL);
+    #   input group keeps a row without a totals branch + left join
+    #   (all-NULL group ⇔ _tn stays NULL);
     # - group n / min / max ride the exploded rows (each state's
     #   scalars repeat on its centroids; n == Σweights for any valid
     #   digest) and fold in the same two aggregations as the bins;
     # - cumulative weight and total weight are two FRAMES of one
     #   window spec → a single sort, one WindowExec;
     # - the singleton-regime rank IS cumb+1 (total weight ≤ delta ⇒
-    #   every input centroid is a parent singleton of weight 1), so
-    #   row_number() goes away entirely.
-    # Expressions are SQL strings (round 17): the Column form cost
-    # ~1,300 py4j round trips per call on the cagg serve path.
+    #   every input centroid is a parent singleton of weight 1).
     ents = (
         f"CASE WHEN {st} IS NOT NULL THEN "
         f"zip_with({st}.means, {st}.weights, "
@@ -196,23 +183,20 @@ def merge_states(
         f"ELSE array(named_struct('_m', CAST(NULL AS DOUBLE), "
         f"'_w', CAST(NULL AS BIGINT))) END"
     )
-    rows = d.selectExpr(
-        *kq,
-        f"{st}.min AS _smn",
-        f"{st}.max AS _smx",
-        f"explode({ents}) AS _c",
-    ).selectExpr(*kq, "_smn", "_smx", "_c._m AS _m", "_c._w AS _w")
+    ex = c.add(
+        f"SELECT {_list(ks, f'{st}.min AS _smn')}, {st}.max AS _smx, "
+        f"explode({ents}) AS _c FROM {src}"
+    )
     wo = f"{_part_clause(keys)}ORDER BY _m ASC NULLS LAST, _w ASC"
-    rows = rows.selectExpr(
-        *kq,
-        "_smn",
-        "_smx",
-        "_m",
-        "_w",
+    rows = c.add(
+        f"SELECT {_list(ks, '_smn')}, _smx, _c._m AS _m, _c._w AS _w FROM {ex}"
+    )
+    rows = c.add(
+        f"SELECT {_list(ks, '_smn')}, _smx, _m, _w, "
         f"coalesce(sum(_w) OVER ({wo} ROWS BETWEEN UNBOUNDED PRECEDING "
-        f"AND 1 PRECEDING), CAST(0 AS BIGINT)) AS _cumb",
+        f"AND 1 PRECEDING), CAST(0 AS BIGINT)) AS _cumb, "
         f"sum(_w) OVER ({wo} ROWS BETWEEN UNBOUNDED PRECEDING "
-        f"AND UNBOUNDED FOLLOWING) AS _N",
+        f"AND UNBOUNDED FOLLOWING) AS _N FROM {rows}"
     )
     qmid = (
         "((CAST(_cumb AS DOUBLE) + CAST(_w AS DOUBLE) / 2.0D) "
@@ -227,32 +211,25 @@ def merge_states(
         f"WHEN _N <= {delta} THEN _cumb + 1 "
         f"ELSE CAST({binned} AS BIGINT) END"
     )
-    per = rows.groupBy(
-        *[F.col(k) for k in keys], F.expr(cl).alias("_cl")
-    ).agg(
-        F.expr("sum(_w)").alias("_w2"),
-        F.expr(
-            "sum(_m * CAST(_w AS DOUBLE)) / CAST(sum(_w) AS DOUBLE)"
-        ).alias("_m2"),
-        F.expr("min(_smn)").alias("_bmn"),
-        F.expr("max(_smx)").alias("_bmx"),
+    per = c.add(
+        f"SELECT {_list(ks, f'{cl} AS _cl')}, sum(_w) AS _w2, "
+        f"sum(_m * CAST(_w AS DOUBLE)) / CAST(sum(_w) AS DOUBLE) AS _m2, "
+        f"min(_smn) AS _bmn, max(_smx) AS _bmx FROM {rows}{_group(kq, cl)}"
     )
-    cents = per.groupBy(*[F.col(k) for k in keys]).agg(
-        F.expr("sum(CASE WHEN _cl IS NOT NULL THEN _w2 END)").alias("_tn"),
-        F.expr("min(_bmn)").alias("_tmn"),
-        F.expr("max(_bmx)").alias("_tmx"),
-        F.expr(
-            "array_sort(collect_list(CASE WHEN _cl IS NOT NULL THEN "
-            "named_struct('mean', _m2, 'weight', _w2) END))"
-        ).alias("_te"),
+    cents = c.add(
+        f"SELECT {_list(ks, 'sum(CASE WHEN _cl IS NOT NULL THEN _w2 END) AS _tn')}, "
+        f"min(_bmn) AS _tmn, max(_bmx) AS _tmx, "
+        f"array_sort(collect_list(CASE WHEN _cl IS NOT NULL THEN "
+        f"named_struct('mean', _m2, 'weight', _w2) END)) AS _te "
+        f"FROM {per}{_group(kq)}"
     )
     state = _state_struct_sql("_tn", "_tmn", "_tmx", "_te")
-    return cents.selectExpr(
-        *kq,
+    typed = (
         f"CASE WHEN _tn IS NOT NULL THEN CAST({state} AS "
         f"STRUCT<n: BIGINT, min: DOUBLE, max: DOUBLE, "
-        f"means: ARRAY<DOUBLE>, weights: ARRAY<BIGINT>>) END AS `{out}`",
+        f"means: ARRAY<DOUBLE>, weights: ARRAY<BIGINT>>) END AS `{out}`"
     )
+    return c.add(f"SELECT {_list(ks, typed)} FROM {cents}")
 
 
 def _quantile_sql(state: str, q: float) -> str:
@@ -412,7 +389,9 @@ def tdigest(
 ) -> DataFrame:
     """``tdigest(delta, value)`` — one mergeable digest state per
     ``by`` group (toolkit two-step aggregate form)."""
-    return build_states(df, list(by), F.col(value_col), delta, out)
+    return over_frame(
+        df, lambda c, src: build_states_sql(c, src, list(by), f"`{value_col}`", delta, out)
+    )
 
 
 def tdigest_rollup(
@@ -423,7 +402,12 @@ def tdigest_rollup(
     out: Optional[str] = None,
 ) -> DataFrame:
     """``rollup(tdigest)`` — merge many states to one per ``by``."""
-    return merge_states(df, list(by), state_col, delta, out or state_col)
+    return over_frame(
+        df,
+        lambda c, src: merge_states_sql(
+            c, src, list(by), state_col, delta, out or state_col
+        ),
+    )
 
 
 def _mean_sql(state: str) -> str:
@@ -443,6 +427,28 @@ def mean_expr(state: str) -> Column:
     return F.expr(_mean_sql(state))
 
 
+def quantile_cols(state_col: str, qs: Sequence[float]) -> list[str]:
+    """Select items extracting ``approx_percentile`` columns (plus exact
+    ``n`` / ``min_val`` / ``max_val`` / ``mean``) from the states in
+    column ``state_col``."""
+    st = f"`{state_col}`"
+    return [
+        f"{st}.n AS n",
+        f"{st}.min AS min_val",
+        f"{st}.max AS max_val",
+        _mean_sql(state_col) + " AS mean",
+        *[_quantile_sql(state_col, q) + f" AS {_qname(q)}" for q in qs],
+    ]
+
+
+def rank_col(state_col: str, value: float, out: str = "rank") -> str:
+    """Select item of ``approx_percentile_rank(value, state_col)``,
+    rounded to 6 decimals (the :func:`.ddsketch.ddsketch_rank`
+    convention so both percentile algebras serve identically-shaped
+    rank frames)."""
+    return f"round({_rank_sql(state_col, value)}, 6) AS `{out}`"
+
+
 def tdigest_quantiles(
     df: DataFrame,
     qs: Sequence[float],
@@ -452,17 +458,7 @@ def tdigest_quantiles(
     """Extract ``approx_percentile`` columns (plus exact ``n`` /
     ``min_val`` / ``max_val`` / ``mean``) from stored states — one
     output row per input state row."""
-    st = f"`{state_col}`"
-    cols = [
-        *[f"`{k}`" for k in by],
-        f"{st}.n AS n",
-        f"{st}.min AS min_val",
-        f"{st}.max AS max_val",
-        _mean_sql(state_col) + " AS mean",
-    ]
-    for q in qs:
-        cols.append(_quantile_sql(state_col, q) + f" AS {_qname(q)}")
-    return df.selectExpr(*cols)
+    return df.selectExpr(*[f"`{k}`" for k in by], *quantile_cols(state_col, qs))
 
 
 def tdigest_rank(
@@ -476,7 +472,4 @@ def tdigest_rank(
     one output row per input state row, rounded to 6 decimals (the
     :func:`.ddsketch.ddsketch_rank` convention so both percentile
     algebras serve identically-shaped rank frames)."""
-    return df.selectExpr(
-        *[f"`{k}`" for k in by],
-        f"round({_rank_sql(state_col, value)}, 6) AS `{out}`",
-    )
+    return df.selectExpr(*[f"`{k}`" for k in by], rank_col(state_col, value, out))

@@ -34,6 +34,7 @@ import time as _time
 from datetime import date, datetime, timezone as _tz
 from typing import Iterable, Optional, Sequence, Union
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
 
 from .functions.time import (
@@ -43,6 +44,12 @@ from .functions.time import (
 )
 
 from .scan import CHUNK_COL, SPACE_COL, Scan, in_list, list_partition, q, sql_literal
+
+#: storage level of every frame a DML statement pins for several
+#: actions (post-trigger rows, sources scanned more than once): spills
+#: to disk, never recomputes — trigger side effects fire once. Every
+#: pin is unpersisted on every exit path, raising triggers included.
+_DML_PIN = StorageLevel.MEMORY_AND_DISK_DESER
 
 #: sentinel emitted by raise_error inside the chunk-routing expression;
 #: translated to the user-facing NOT NULL ValueError at the call sites
@@ -951,7 +958,7 @@ class Hypertable:
                 lvl = pin.storageLevel
                 ours = not (lvl.useMemory or lvl.useDisk)
                 if ours:
-                    pin = pin.persist()
+                    pin = pin.persist(_DML_PIN)
                 try:
                     self._check_foreign_keys(pin)
                     return self._insert_prepared(pin, cluster=cluster)
@@ -974,7 +981,7 @@ class Hypertable:
                 lvl = pin.storageLevel
                 ours = not (lvl.useMemory or lvl.useDisk)
                 if ours:
-                    pin = pin.persist()
+                    pin = pin.persist(_DML_PIN)
                 try:
                     self._check_unique(pin)
                     if check_fk:
@@ -1170,7 +1177,7 @@ class Hypertable:
         # loss, the same guarantee Spark gives any cached lineage).
         pinned = bool(self._hooks("after_row", "insert"))
         if pinned:
-            df = df.persist()
+            df = df.persist(_DML_PIN)
         try:
             return self._insert_pinned(df, cluster, user_cols)
         finally:
@@ -1961,7 +1968,7 @@ class Hypertable:
             # collect, gating stats, writeback): pin it so side-effecting
             # before triggers fire ONCE, like _insert_prepared does, and
             # the after-row pass observes the exact written rows
-            df = df.persist()
+            df = df.persist(_DML_PIN)
         try:
             return self._upsert_pinned(df, keys)
         finally:
@@ -2121,7 +2128,7 @@ class Hypertable:
             # merge runs multiple actions over the source (distinct
             # chunks, gating stats, write): pin the post-trigger frame so
             # side-effecting before triggers fire once
-            src = src.persist()
+            src = src.persist(_DML_PIN)
         try:
             return self._merge_pinned(
                 src, keys, matched_update, insert_not_matched,
@@ -2696,9 +2703,15 @@ class Hypertable:
                 # cur = confirmed deletions; everything else survives
                 yield pdf.drop(index=cur.index).drop(columns=[_fl])
 
-        kept = flagged.mapInPandas(_apply, old.schema).persist()
-        total = old.count()
-        n_deleted = total - kept.count()
+        kept = flagged.mapInPandas(_apply, old.schema).persist(_DML_PIN)
+        try:
+            # the counts run the triggers: one that raises must not
+            # leave the frame cached (the caller only unpersists what it
+            # gets back)
+            n_deleted = old.count() - kept.count()
+        except BaseException:
+            kept.unpersist()
+            raise
         return kept, int(n_deleted)
 
     @_serialized_dml

@@ -112,6 +112,57 @@ class Scan:
         return f"SELECT {self.cols} FROM {q(view)} WHERE {self.where}"
 
 
+class Ctes:
+    """One statement composed as a chain of common table expressions:
+    each builder step appends ``name AS (body)`` and hands its name to
+    the next. A hypertable read is a :class:`Scan` item, rendered over
+    its relation's view when the statement is planned, so the whole
+    chain — scans included — is one ``spark.sql`` call
+    (:meth:`ScanRelations.plan`)."""
+
+    def __init__(self, prefix: str = "_ts_cte"):
+        self.prefix = prefix
+        self.items: list = []  # (name, body text | Scan)
+
+    def add(self, body: str, name: Optional[str] = None) -> str:
+        name = name or f"{self.prefix}_{len(self.items)}"
+        self.items.append((name, body))
+        return name
+
+    def scan(self, s: Scan, name: Optional[str] = None) -> str:
+        return self.add(s, name)  # type: ignore[arg-type]
+
+    @property
+    def scans(self) -> list:
+        return [b for _, b in self.items if isinstance(b, Scan)]
+
+    def render(self, views: list) -> str:
+        """``name AS (body), …`` with each scan over its view."""
+        it = iter(views)
+        return ", ".join(
+            f"{n} AS ({b.text(next(it)) if isinstance(b, Scan) else b})"
+            for n, b in self.items
+        )
+
+    def plan(self, ts, final: str) -> DataFrame:
+        """``WITH <chain> <final>`` in one ``spark.sql`` call."""
+        if not self.items:
+            return ts.spark.sql(final)
+        return ts.scans.plan(
+            self.scans, lambda views: f"WITH {self.render(views)} {final}"
+        )
+
+
+def over_frame(df: DataFrame, build: Callable) -> DataFrame:
+    """``build(ctes, relation) -> output relation`` over a DataFrame,
+    planned in one ``spark.sql`` call (``df`` bound as a statement
+    argument) — how the DataFrame-level sketch functions reuse the SQL
+    builders the cagg path composes."""
+    c = Ctes("_df")
+    out = build(c, "{_src}")
+    return df.sparkSession.sql(f"WITH {c.render([])} SELECT * FROM {out}", _src=df)
+
+
 @dataclass
 class _Relation:
     view: str

@@ -172,6 +172,11 @@ class TSSession:
         return path
 
     def read_table(self, name: str):
+        return self.spark.sql(self.table_sql(name))
+
+    def table_sql(self, name: str) -> str:
+        """A registered regular table as a SELECT — what a statement (or a
+        cagg's defining-query join) reads it with."""
         row = self.catalog.plain_table.find_one(name=name)
         if not row:
             raise KeyError(f"no table {name!r}")
@@ -182,8 +187,13 @@ class TSSession:
             from pyspark.sql import types as T
 
             schema = T.StructType.fromJson(_json.loads(row["schema_ddl"]))
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(row["path"])
+            cols = ", ".join(
+                f"CAST(NULL AS {f.dataType.simpleString()}) AS `{f.name}`"
+                for f in schema.fields
+            )
+            return f"SELECT {cols} WHERE false"
+        path = row["path"].replace("`", "``")
+        return f"SELECT * FROM parquet.`{path}`"
 
     # -- continuous aggregates (tsl/src/continuous_aggs/create.c:600) ------
     def create_cagg(self, name, hypertable, **kw):

@@ -8,8 +8,10 @@ module gives a user of the reference the same entry point on Spark:
 
 - each hypertable is bound as a leading CTE over its long-lived scan
   relation (``scan.py``), so the whole statement is planned in one
-  ``spark.sql`` call; plain tables and caggs are per-statement temp
-  views;
+  ``spark.sql`` call; so is each continuous aggregate, as the CTEs of
+  its user view over the mat and source scan relations, built with
+  only the value columns the statement names; plain tables are
+  per-statement temp views;
 - hyperfunction calls are **macro-expanded at parse time** into pure
   Spark-SQL expressions (the exact same formulas as the Column API in
   ``functions/`` — no UDFs, fully Catalyst-optimizable / codegen);
@@ -40,6 +42,7 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, functions as F
 
 from .cagg_families import FAMILIES, family_of
+from .scan import Ctes
 from .functions.time import (
     parse_interval,
     time_bucket_int_sql,
@@ -951,39 +954,37 @@ _QUERY_START = re.compile(_LEAD + r"(?:select|with|values|table|from|\()", re.I 
 
 @dataclass
 class _Bound:
-    """A statement with its engine tables bound. Hypertables become
-    leading CTEs ``_ts_sql_<n>_<table> AS (<scan>)`` over their scan
-    relations (``scan.py``); continuous aggregates and plain tables
-    are temp views under the same names, dropped by :meth:`close`."""
+    """A statement with its engine tables bound. Hypertables and
+    continuous aggregates become leading CTEs (``ctes``): a hypertable
+    ``_ts_sql_<n>_<table> AS (<scan>)`` over its scan relation
+    (``scan.py``), a cagg its user view (``ContinuousAggregate._bind``)
+    ending in the CTE ``_ts_sql_<n>_<cagg>``. Plain tables are temp
+    views under the same names, dropped by :meth:`close`."""
 
     ts: object
     sql: str
-    scans: list = field(default_factory=list)  # [(cte name, Scan)]
+    ctes: Ctes = field(default_factory=Ctes)
     views: list = field(default_factory=list)
 
     def df(self, body: Optional[str] = None) -> DataFrame:
         """``spark.sql`` of ``body`` (default: the bound statement) with
-        the hypertable CTEs in front, in one call."""
+        the table CTEs in front, in one call."""
         body = self.sql if body is None else body
-        if not self.scans:
+        if not self.ctes.items:
             return self.ts.spark.sql(body)
         if not _QUERY_START.match(body):
             raise ValueError(
-                "hypertables can only be read by queries "
-                "(SELECT / WITH / VALUES / TABLE)"
+                "hypertables and continuous aggregates can only be read "
+                "by queries (SELECT / WITH / VALUES / TABLE)"
             )
         m = _WITH_HEAD.match(body)
         head, rest, sep = (
             (body[: m.end()], body[m.end():], ", ") if m else ("WITH ", body, " ")
         )
-
-        def text(views: list) -> str:
-            ctes = ", ".join(
-                f"{name} AS ({s.text(v)})" for (name, s), v in zip(self.scans, views)
-            )
-            return f"{head}{ctes}{sep}{rest}"
-
-        return self.ts.scans.plan([s for _, s in self.scans], text)
+        return self.ts.scans.plan(
+            self.ctes.scans,
+            lambda views: f"{head}{self.ctes.render(views)}{sep}{rest}",
+        )
 
     def close(self) -> None:
         for v in self.views:
@@ -991,6 +992,21 @@ class _Bound:
                 self.ts.spark.catalog.dropTempView(v)
             except Exception:
                 pass
+
+
+#: a ``*`` select item (``SELECT *``, ``, *``, ``t.*``) — not ``count(*)``
+_STAR_ITEM = re.compile(r"(?:\bselect\s+(?:distinct\s+|all\s+)?|,\s*|\.\s*)\*", re.I)
+
+
+def _cagg_cols(sql: str, cagg) -> list:
+    """The value columns of ``cagg`` a statement can reference: every
+    one named anywhere in it (over-matching only builds a column the
+    statement does not use), all of them under a ``*`` item."""
+    cols = cagg._value_cols()
+    if _STAR_ITEM.search(_strip_strings(sql)):
+        return cols
+    words = {w.lower() for w in _IDENT.findall(sql)}
+    return [c for c in cols if c.lower() in words]
 
 
 def _bind_tables(ts, sql: str) -> _Bound:
@@ -1003,7 +1019,7 @@ def _bind_tables(ts, sql: str) -> _Bound:
     _VIEW_SEQ[0] += 1
     uid = _VIEW_SEQ[0]
     stripped_sql = _strip_strings(sql)
-    bound = _Bound(ts, sql)
+    bound = _Bound(ts, sql, Ctes(f"_ts_cte_{uid}"))
     hts = {r["name"]: r for r in ts.catalog.hypertable.read()}
     for name in hts:
         if not _referenced(sql, name):
@@ -1044,21 +1060,17 @@ def _bind_tables(ts, sql: str) -> _Bound:
                     where_stats = where_stats or {}
                     where_stats[sc] = (slo, shi)
         vname = f"_ts_sql_{uid}_{name}"
-        bound.scans.append(
-            (
-                vname,
-                ht._scan(
-                    start=lo, end=hi, space_key=space_key, where_stats=where_stats
-                ),
-            )
+        bound.ctes.scan(
+            ht._scan(start=lo, end=hi, space_key=space_key, where_stats=where_stats),
+            vname,
         )
         mapping[name] = vname
     for row in ts.catalog.continuous_agg.read():
         if row["name"] not in mapping and _referenced(sql, row["name"]):
             vname = f"_ts_sql_{uid}_{row['name']}"
-            ts.get_cagg(row["name"]).read().createOrReplaceTempView(vname)
+            cagg = ts.get_cagg(row["name"])
+            cagg._bind(bound.ctes, vname, _cagg_cols(sql, cagg))
             mapping[row["name"]] = vname
-            bound.views.append(vname)
     for row in ts.catalog.plain_table.read():
         if row["name"] not in mapping and _referenced(sql, row["name"]):
             vname = f"_ts_sql_{uid}_{row['name']}"

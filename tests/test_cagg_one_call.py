@@ -218,14 +218,43 @@ def test_sql_binding_forms(sqlenv):
     assert {r[0]: r[1] for r in got} == {"eu": 64, "us": 32}
 
 
+def test_sql_binding_all_column_forms(sqlenv):
+    """Forms that ask for every column without naming one bind the
+    cagg with all its value columns."""
+    ts, _ht, c = sqlenv
+    view = c.read().drop("sk")
+    want = _rows(view)
+    assert _rows(ts.sql("SELECT /* hint-free */ * FROM c").drop("sk")) == want
+    assert _rows(ts.sql("SELECT -- every column\n * FROM c").drop("sk")) == want
+    assert _rows(ts.sql("TABLE c").drop("sk")) == want
+    hosts = ts.read_table("hosts")
+    joined = ts.sql("SELECT /*+ BROADCAST(h) */ * FROM c JOIN hosts h ON c.host = h.host")
+    assert _rows(joined.drop("sk")) == _rows(view.join(hosts, view.host == hosts.host))
+    got = ts.sql("SELECT struct(*) AS r FROM c")
+    assert got.schema["r"].dataType.names == c.read().columns
+    assert _rows(got.select("r.*").drop("sk")) == want
+    # a NATURAL join's keys are the shared columns, value columns too
+    ts.create_table("hn", ts.spark.createDataFrame([("h0", 1), ("h1", 2)], "host string, n long"))
+    got = ts.sql("SELECT bucket, host FROM c NATURAL JOIN hn").collect()
+    assert len(got) == 32 and {r[1] for r in got} == {"h0"}
+
+
 def test_sql_binding_builds_only_named_columns(sqlenv):
     ts, _ht, _c = sqlenv
-    plan = ts.sql("SELECT bucket, host, mx FROM c")._jdf.queryExecution()
-    text = plan.optimizedPlan().toString()
+
+    def optimized(q):
+        return ts.sql(q)._jdf.queryExecution().optimizedPlan().toString()
+
     # the sketch family's realtime build is not planned
-    assert "map_from_entries" not in text
-    star = ts.sql("SELECT * FROM c")._jdf.queryExecution().optimizedPlan().toString()
-    assert "map_from_entries" in star
+    assert "map_from_entries" not in optimized("SELECT bucket, host, mx FROM c")
+    # count(*) and a * in a comment or string ask for no column
+    assert "map_from_entries" not in optimized(
+        "SELECT bucket, host, count(*) AS k, '*' AS t FROM c -- not c.*\n"
+        "GROUP BY bucket, host"
+    )
+    assert "map_from_entries" in optimized("SELECT * FROM c")
+    assert "map_from_entries" in optimized("SELECT /*+ BROADCAST(h) */ * FROM c JOIN hosts h USING (host)")
+    assert "map_from_entries" in optimized("TABLE c")
 
 
 def test_join_where_spec_and_udaf(sqlenv):

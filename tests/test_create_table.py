@@ -51,6 +51,19 @@ def test_pg_type_mapping(ts):
     assert ts.read_table("dims").count() == 0
 
 
+def test_declared_table_with_nested_struct_reads_empty(ts):
+    # no rows yet: read as typed NULL casts, nested field names quoted
+    ts.sql(
+        "CREATE TABLE nest (id INT, s struct<`x y`: int, "
+        "z: array<struct<`q r`: double>>>, m map<string, struct<`k-1`: int>>)"
+    )
+    want = "struct<id:int,s:struct<x y:int,z:array<struct<q r:double>>>,m:map<string,struct<k-1:int>>>"
+    assert ts.read_table("nest").schema.simpleString() == want
+    got = ts.sql("SELECT * FROM nest")
+    assert got.schema.simpleString() == want
+    assert got.count() == 0
+
+
 def test_if_not_exists_and_duplicate(ts):
     ts.sql("CREATE TABLE t1 (ts TIMESTAMP, v DOUBLE)")
     ts.sql("CREATE TABLE IF NOT EXISTS t1 (other INT)")  # no-op

@@ -41,6 +41,18 @@ def q(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def type_sql(t: T.DataType) -> str:
+    """A Spark type as SQL type text, nested field names quoted."""
+    if isinstance(t, T.StructType):
+        fields = ", ".join(f"{q(f.name)}: {type_sql(f.dataType)}" for f in t.fields)
+        return f"STRUCT<{fields}>"
+    if isinstance(t, T.ArrayType):
+        return f"ARRAY<{type_sql(t.elementType)}>"
+    if isinstance(t, T.MapType):
+        return f"MAP<{type_sql(t.keyType)}, {type_sql(t.valueType)}>"
+    return t.simpleString()
+
+
 def sql_literal(v) -> str:
     """A Python value as a Spark SQL literal of the type ``F.lit`` gives it."""
     if v is None:

@@ -186,9 +186,11 @@ class TSSession:
 
             from pyspark.sql import types as T
 
+            from .scan import q, type_sql
+
             schema = T.StructType.fromJson(_json.loads(row["schema_ddl"]))
             cols = ", ".join(
-                f"CAST(NULL AS {f.dataType.simpleString()}) AS `{f.name}`"
+                f"CAST(NULL AS {type_sql(f.dataType)}) AS {q(f.name)}"
                 for f in schema.fields
             )
             return f"SELECT {cols} WHERE false"

@@ -96,6 +96,30 @@ def _strip_strings(sql: str) -> str:
     return "".join(out)
 
 
+def _strip_comments(sql: str) -> str:
+    """:func:`_strip_strings` that also blanks ``--`` and ``/* */``
+    comments (optimizer hints included)."""
+    out = []
+    i = 0
+    while i < len(sql):
+        ch = sql[i]
+        if ch in "'\"`":
+            j = _skip_string(sql, i)
+        elif sql.startswith("--", i):
+            j = sql.find("\n", i)
+            j = len(sql) if j < 0 else j
+        elif sql.startswith("/*", i):
+            j = sql.find("*/", i + 2)
+            j = len(sql) if j < 0 else j + 2
+        else:
+            out.append(ch)
+            i += 1
+            continue
+        out.append(" " * (j - i))
+        i = j
+    return "".join(out)
+
+
 def _matching_paren(sql: str, i: int) -> int:
     """``i`` points at '('; return index of the matching ')'."""
     depth = 0
@@ -954,17 +978,16 @@ _QUERY_START = re.compile(_LEAD + r"(?:select|with|values|table|from|\()", re.I 
 
 @dataclass
 class _Bound:
-    """A statement with its engine tables bound. Hypertables and
-    continuous aggregates become leading CTEs (``ctes``): a hypertable
-    ``_ts_sql_<n>_<table> AS (<scan>)`` over its scan relation
-    (``scan.py``), a cagg its user view (``ContinuousAggregate._bind``)
-    ending in the CTE ``_ts_sql_<n>_<cagg>``. Plain tables are temp
-    views under the same names, dropped by :meth:`close`."""
+    """A statement with its engine tables bound as leading CTEs
+    (``ctes``): a hypertable ``_ts_sql_<n>_<table> AS (<scan>)`` over
+    its scan relation (``scan.py``), a cagg its user view
+    (``ContinuousAggregate._bind``) ending in the CTE
+    ``_ts_sql_<n>_<cagg>``, a plain table its
+    :meth:`TSSession.table_sql`."""
 
     ts: object
     sql: str
     ctes: Ctes = field(default_factory=Ctes)
-    views: list = field(default_factory=list)
 
     def df(self, body: Optional[str] = None) -> DataFrame:
         """``spark.sql`` of ``body`` (default: the bound statement) with
@@ -974,8 +997,8 @@ class _Bound:
             return self.ts.spark.sql(body)
         if not _QUERY_START.match(body):
             raise ValueError(
-                "hypertables and continuous aggregates can only be read "
-                "by queries (SELECT / WITH / VALUES / TABLE)"
+                "hypertables, continuous aggregates and tables can only "
+                "be read by queries (SELECT / WITH / VALUES / TABLE)"
             )
         m = _WITH_HEAD.match(body)
         head, rest, sep = (
@@ -986,24 +1009,22 @@ class _Bound:
             lambda views: f"{head}{self.ctes.render(views)}{sep}{rest}",
         )
 
-    def close(self) -> None:
-        for v in self.views:
-            try:
-                self.ts.spark.catalog.dropTempView(v)
-            except Exception:
-                pass
 
-
-#: a ``*`` select item (``SELECT *``, ``, *``, ``t.*``) — not ``count(*)``
-_STAR_ITEM = re.compile(r"(?:\bselect\s+(?:distinct\s+|all\s+)?|,\s*|\.\s*)\*", re.I)
+#: forms that ask for every column without naming one: a ``*`` other
+#: than ``count(*)`` (``SELECT *``, ``t.*``, ``struct(*)``), ``TABLE c``,
+#: a NATURAL join (its keys are the shared columns) and (UN)PIVOT (it
+#: groups by the columns it does not name)
+_ALL_COLS = re.compile(r"\*|\btable\b|\bnatural\b|\b(?:un)?pivot\b", re.I)
+_COUNT_STAR = re.compile(r"\bcount\s*\(\s*\*\s*\)", re.I)
 
 
 def _cagg_cols(sql: str, cagg) -> list:
     """The value columns of ``cagg`` a statement can reference: every
     one named anywhere in it (over-matching only builds a column the
-    statement does not use), all of them under a ``*`` item."""
+    statement does not use), all of them under a form that asks for
+    every column (``_ALL_COLS``, strings and comments aside)."""
     cols = cagg._value_cols()
-    if _STAR_ITEM.search(_strip_strings(sql)):
+    if _ALL_COLS.search(_COUNT_STAR.sub(" ", _strip_comments(sql))):
         return cols
     words = {w.lower() for w in _IDENT.findall(sql)}
     return [c for c in cols if c.lower() in words]
@@ -1074,9 +1095,8 @@ def _bind_tables(ts, sql: str) -> _Bound:
     for row in ts.catalog.plain_table.read():
         if row["name"] not in mapping and _referenced(sql, row["name"]):
             vname = f"_ts_sql_{uid}_{row['name']}"
-            ts.read_table(row["name"]).createOrReplaceTempView(vname)
+            bound.ctes.add(ts.table_sql(row["name"]), vname)
             mapping[row["name"]] = vname
-            bound.views.append(vname)
     if mapping:
         bound.sql = _sub_scoped(sql, mapping)
     return bound
@@ -1086,12 +1106,7 @@ def _query_tables(ts, sql: str) -> DataFrame:
     """``sql`` (a query over engine tables) as a DataFrame: bound,
     macro-expanded and planned in one ``spark.sql`` call."""
     bound = _bind_tables(ts, sql)
-    try:
-        return bound.df(rewrite_sql(bound.sql, ts))
-    finally:
-        # temp views resolve into the returned DataFrame's analyzed
-        # plan — dropping them here only bounds the session catalog
-        bound.close()
+    return bound.df(rewrite_sql(bound.sql, ts))
 
 
 _INFO_VIEWS = (
@@ -2031,9 +2046,5 @@ def ts_sql(ts, query: str) -> DataFrame:
     if re.search(r"\btime_bucket_gapfill\b", _strip_strings(q), re.I):
         from .sqlgapfill import run_gapfill_statement
 
-        bound = _bind_tables(ts, q)
-        try:
-            return run_gapfill_statement(ts, bound)
-        finally:
-            bound.close()
+        return run_gapfill_statement(ts, _bind_tables(ts, q))
     return _query_tables(ts, q)

@@ -15,8 +15,11 @@ then a summary line.
 DDSketch, refreshed, plus the warm-up appends and refresh-policy tick)
 and one more append above the watermark, then prints the same figures
 for its two reads — ``daily_max`` (``ts.sql`` over the cagg) and
-``daily_p95`` (``quantiles([0.95], grain="1 day")``) — plus
-``collect_jobs``.
+``daily_p95`` (``quantiles([0.95], grain="1 day")``) — and for the same
+p95 in SQL through the rollup route, ``sql_p95``
+(``approx_percentile(0.95, rollup(sk_user))`` by day and hostname) and
+``sql_p95_rank`` (plus ``approx_percentile_rank(50, rollup(sk_user))``),
+plus ``collect_jobs``.
 
 Usage:
     python scripts/plan_cost.py [--workload W] [--seed N] [--reps N]
@@ -140,9 +143,18 @@ def cagg_realtime(args) -> int:
     )
     w.setup()
     w.insert(w.ht, 1 + w.WARMUP, "append")
+    p95 = (
+        "SELECT time_bucket('1 day', bucket) AS day, hostname, "
+        "approx_percentile(0.95, rollup(sk_user)) AS p95{} "
+        "FROM cpu_hourly GROUP BY day, hostname"
+    )
     reads = {
         "daily_max": lambda: ts.sql(DAILY_MAX),
         "daily_p95": lambda: w.cagg.quantiles([0.95], grain="1 day", realtime=True),
+        "sql_p95": lambda: ts.sql(p95.format("")),
+        "sql_p95_rank": lambda: ts.sql(
+            p95.format(", approx_percentile_rank(50, rollup(sk_user)) AS r50")
+        ),
     }
     tracker = spark.sparkContext.statusTracker()
     rt = RoundTrips(spark)

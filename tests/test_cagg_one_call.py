@@ -12,12 +12,17 @@ above it. These tests pin what that path must keep:
 - ``ts.sql`` binds a cagg under every statement form, building only the
   value columns the statement names;
 - planning starts no Spark job, and EXPLAIN keeps its realtime header;
-- ``start``/``end`` bounds given as int µs, str and datetime agree.
+- ``start``/``end`` bounds given as int µs, str and datetime agree;
+- ``ts.sql`` of the toolkit idiom ``acc(rollup(col))`` — every form of
+  the rollup route — is one ``spark.sql`` call with no DataFrame step
+  and answers like the public accessors; an accessor's own error
+  reaches the caller, and ``GROUP BY ROLLUP`` is not the route's.
 """
 
 import datetime
 import re
 import tempfile
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -390,3 +395,143 @@ def test_integer_time_cagg(spark):
     st = _rows(c.stats_at_grain(grain=1000, start=500, end=2500))
     assert [r[0] for r in st] == [0] * 3 + [1000] * 3 + [2000] * 3
     assert sum(r[2] for r in st) == 2000
+
+
+def _by(df, *cols):
+    return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+
+def _rank_join(par):
+    """quantiles and rank served apart, joined per event_type."""
+    by = dict(grain="all", group_by=["event_type"])
+    med = dict(_by(par.quantiles([0.5], "sk", **by), "event_type", "p50"))
+    rk = par.rank(50, "sk", **by)
+    return sorted((et, med[et], r) for et, r in _by(rk, "event_type", "rank"))
+
+
+def _duration_and_total(par):
+    """duration_in('a') with the aggregate's TOTAL sample count."""
+    rows = par.state_durations_at_grain("sa", grain="all").collect()
+    total = {}
+    for r in rows:
+        total[r["event_type"]] = total.get(r["event_type"], 0) + r["n"]
+    return sorted(
+        (r["event_type"], r["duration_us"], total[r["event_type"]])
+        for r in rows
+        if r["state"] == "a"
+    )
+
+
+DAY = "SELECT time_bucket('1 day', bucket) AS day, event_type, {} FROM par GROUP BY 1, 2"
+ET = "SELECT event_type, {} FROM par GROUP BY event_type"
+#: every form of the rollup route: (statement, the public accessors' rows)
+ROUTE_FORMS = {
+    "percentile": (
+        DAY.format("approx_percentile(0.9, rollup(sk)) AS p90"),
+        lambda p: _by(p.quantiles([0.9], "sk", grain="1 day"), "bucket", "event_type", "p90"),
+    ),
+    "percentile_rank": (
+        ET.format(
+            "approx_percentile(0.5, rollup(sk)) AS med, "
+            "approx_percentile_rank(50, rollup(sk)) AS r"
+        ),
+        _rank_join,
+    ),
+    "rank_all": (
+        "SELECT approx_percentile_rank(20, rollup(sk)) AS r FROM par",
+        lambda p: _by(p.rank(20, "sk", grain="all", group_by=[]), "rank"),
+    ),
+    "percentile_array": (
+        DAY.format("approx_percentile_array(array[0.5, 0.9], rollup(td)) AS ps"),
+        lambda p: sorted(
+            (r["bucket"], r["event_type"], [r["p50"], r["p90"]])
+            for r in p.tdigest_quantiles_at_grain([0.5, 0.9], "td", grain="1 day").collect()
+        ),
+    ),
+    "tdigest_mix": (
+        ET.format("approx_percentile(0.5, rollup(td)) AS p, num_vals(rollup(td)) AS n"),
+        lambda p: _by(
+            p.tdigest_quantiles_at_grain([0.5], "td", grain="all", group_by=["event_type"]),
+            "event_type", "p50", "n",
+        ),
+    ),
+    "counter": (
+        DAY.format("delta(rollup(ctr)) AS d, num_resets(rollup(ctr)) AS r"),
+        lambda p: _by(
+            p.counter_at_grain("ctr", grain="1 day"), "bucket", "event_type", "delta", "num_resets"
+        ),
+    ),
+    "interpolated_delta": (
+        DAY.format("interpolated_delta(rollup(ctr)) AS d, interpolated_rate(rollup(ctr)) AS r"),
+        lambda p: _by(
+            p.interpolated_delta_at_grain("ctr", grain="1 day"),
+            "bucket", "event_type", "delta", "rate",
+        ),
+    ),
+    "duration_num_vals": (
+        ET.format("duration_in('a', rollup(sa)) AS d, num_vals(rollup(sa)) AS n"),
+        _duration_and_total,
+    ),
+    "topn": (
+        ET.format("topn(rollup(fq), 2) AS v"),
+        lambda p: _by(
+            p.topn_at_grain("fq", n=2, grain="all", group_by=["event_type"]),
+            "event_type", "value", "freq_lb",
+        ),
+    ),
+    "into_values": (
+        DAY.format("into_values(rollup(mx)) AS v"),
+        lambda p: _by(p.max_n_at_grain("mx", grain="1 day"), "bucket", "event_type", "value"),
+    ),
+}
+
+
+def _count_calls(monkeypatch, obj, name):
+    """This thread's calls of ``obj.name``, recorded from now on."""
+    calls, orig, me = [], getattr(obj, name), threading.get_ident()
+
+    def counted(*a, **kw):
+        if threading.get_ident() == me:
+            calls.append(a)
+        return orig(*a, **kw)
+
+    monkeypatch.setattr(obj, name, counted)
+    return calls
+
+
+@pytest.mark.parametrize("form", list(ROUTE_FORMS))
+def test_rollup_route_one_call(spark, env, monkeypatch, form):
+    """Each form of ``acc(rollup(col))`` is planned with ONE
+    ``spark.sql`` call and a handful of py4j round trips (no DataFrame
+    step) and starts no Spark job, and it answers like the public
+    accessors."""
+    ts, _ht, par = env
+    sql, want = ROUTE_FORMS[form]
+    ts.sql(sql)  # builds the scan relations a first statement needs
+    tracker = spark.sparkContext.statusTracker()
+    j0 = max(tracker.getJobIdsForGroup(None), default=-1)
+    calls = _count_calls(monkeypatch, ts.spark, "sql")
+    trips = _count_calls(monkeypatch, spark.sparkContext._gateway._gateway_client, "send_command")
+    df = ts.sql(sql)
+    monkeypatch.undo()
+    assert len(calls) == 1 and len(trips) <= 10, (len(calls), len(trips))
+    assert [j for j in tracker.getJobIdsForGroup(None) if j > j0] == []
+    got = sorted(tuple(r) for r in df.collect())
+    assert got and got == want(par)
+
+
+def test_rollup_route_raises_the_accessors_error(env):
+    ts, _ht, _par = env
+    # an ordered family served without the cagg's group column
+    with pytest.raises(ValueError, match="every group column"):
+        ts.sql("SELECT duration_in('a', rollup(sa)), num_vals(rollup(sa)) FROM par")
+
+
+def test_group_by_rollup_takes_the_normal_path(sqlenv):
+    from timescaledb_spark.sqlapi import _try_rollup_accessors
+
+    ts, _ht, _c = sqlenv
+    q = "SELECT host, sum(n) AS n FROM c GROUP BY ROLLUP(host)"
+    assert _try_rollup_accessors(ts, q) is None
+    got = ts.sql(q).collect()
+    assert {r["host"]: r["n"] for r in got} == {"h0": 32, "h1": 32, "h2": 32, None: 96}

@@ -301,15 +301,15 @@ class TestTDigestCagg:
             "AS SELECT time_bucket('1 hour', ts) AS bucket, dev, "
             "tdigest(256, v) AS td FROM m GROUP BY 1, 2"
         )
-        # scalar + percentile accessors can't mix across routes —
-        # refused loudly (eager analysis error in ts.sql)
-        with pytest.raises(Exception):
-            ts.sql(
-                "SELECT time_bucket('1 day', bucket) AS day, dev, "
-                "approx_percentile(0.5, rollup(td)) AS p50, "
-                "num_vals(rollup(td)) AS n2 "
-                "FROM sv GROUP BY 1, 2"
-            ).collect()
+        # scalar and percentile accessors share one statement
+        mix = ts.sql(
+            "SELECT time_bucket('1 day', bucket) AS day, dev, "
+            "approx_percentile(0.5, rollup(td)) AS p50, "
+            "num_vals(rollup(td)) AS n2 "
+            "FROM sv GROUP BY 1, 2"
+        ).collect()
+        assert len(mix) == 1 and mix[0]["n2"] == 10
+        assert mix[0]["p50"] == pytest.approx(4.5)
         r = ts.sql(
             "SELECT time_bucket('1 day', bucket) AS day, dev, "
             "approx_percentile(0.5, rollup(td)) AS p50 "

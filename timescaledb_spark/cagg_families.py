@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import math
 from dataclasses import dataclass, field
+from functools import partial
 from typing import Callable, Optional, Sequence
 
 from .scan import q as _q, sql_literal
@@ -295,12 +296,22 @@ class Family:
     serve: Optional[str] = None
     accessors: dict = field(default_factory=dict)
     interp: dict = field(default_factory=dict)
+    #: the ``ContinuousAggregate`` relation builder of the ``interp``
+    #: accessors
     interp_method: Optional[str] = None
     #: set-returning accessor: (toolkit fn, method, default alias,
-    #: served columns)
+    #: ``spec -> served columns``)
     srf: Optional[tuple] = None
+    #: its finalize when it takes a count: ``srf_finalize(c, m, keys,
+    #: spec, n)`` -> ``(keys…, served columns…)``; ``n=None`` is the
+    #: column's recorded default
+    srf_finalize: Optional[Callable] = None
     #: (quantiles method, rank method) of the percentile families
     percentile: Optional[tuple] = None
+    #: their finalize: ``percentiles(c, m, keys, spec, qs, ranks)`` ->
+    #: ``(keys…, <outputs of the quantiles qs>…, <out of each (value,
+    #: out) in ranks>…)``; ``qs=None`` selects no quantile outputs
+    percentiles: Optional[Callable] = None
     #: serves one row per state value (state_agg)
     per_state: bool = False
     view_column: str = "partial_columns"
@@ -394,6 +405,20 @@ def _sketch_pack(c, m, d, keys, col, spec):
     return _sketch_collect(c, summed, keys, col)
 
 
+def _sketch_percentiles(c, m, keys, spec, qs=None, ranks=()):
+    """Quantiles ``(keys…, n, p<q>…)`` and one rank aggregate per
+    ``(value, out)`` over the ONE merged bag ``m``, joined 1:1 on the
+    keys (each side aggregates the same merged rows per key)."""
+    from .functions.ddsketch import quantiles_sql, rank_sql
+
+    alpha = float(spec.get("alpha", 0.01))
+    rel = None if qs is None else quantiles_sql(c, m, keys, list(qs), alpha, "_sb", "_cnt")
+    for value, out in ranks:
+        r = rank_sql(c, m, keys, value, alpha, out, "_sb", "_cnt")
+        rel = r if rel is None else join(c, rel, r, keys, "INNER", [out])
+    return rel
+
+
 def _sketch_validate(col, spec):
     from .functions.ddsketch import _gamma
 
@@ -448,6 +473,7 @@ SKETCH = Family(
     inherit=_sketch_inherit,
     validate=_sketch_validate,
     percentile=("quantiles", "rank"),
+    percentiles=_sketch_percentiles,
     view_column="sketch_columns",
 )
 
@@ -598,7 +624,7 @@ COUNTER = Family(
         "last_time": "last_us",
     },
     interp={"interpolated_delta": "delta", "interpolated_rate": "rate"},
-    interp_method="interpolated_delta_at_grain",
+    interp_method="_interpolated_delta_rel",
 )
 
 
@@ -1070,7 +1096,7 @@ TIME_WEIGHT = Family(
     serve="time_weighted_at_grain",
     accessors={"average": "tw_avg", "num_vals": "n"},
     interp={"interpolated_average": "tw_avg"},
-    interp_method="interpolated_average_at_grain",
+    interp_method="_interpolated_average_rel",
 )
 
 
@@ -1361,8 +1387,13 @@ STATE_AGG = Family(
     # states before the duration_in state filter)
     accessors={"num_vals": "n", "duration_in": "duration_us"},
     interp={"interpolated_duration_in": "duration_us"},
-    interp_method="interpolated_duration_in_at_grain",
-    srf=("into_values", "state_durations_at_grain", "state", ("state", "duration_us")),
+    interp_method="_interpolated_duration_in_rel",
+    srf=(
+        "into_values",
+        "state_durations_at_grain",
+        "state",
+        lambda spec: ("state", "duration_us"),
+    ),
     per_state=True,
 )
 
@@ -1521,6 +1552,17 @@ def _freq_validate(col, spec):
     return spec
 
 
+_freq_finalize = _outputs([("value", "_v"), ("freq_lb", "_c")])
+
+
+def _freq_top(c, m, keys, spec, n=None):
+    """The ``n`` most frequent values per key (default: the recorded
+    ``topn_agg`` n, else 10) — count desc, value asc."""
+    n = int(spec.get("n", 10)) if n is None else n
+    best = top(c, _freq_finalize(c, m, keys, spec), keys, ["freq_lb DESC", "value ASC"], n)
+    return select(c, best, [*_qs(keys), "value", "freq_lb"])
+
+
 FREQ = Family(
     key="freq_aggs",
     kind="freq",
@@ -1534,11 +1576,12 @@ FREQ = Family(
     state=_freq_state,
     merge=_freq_merge,
     pack=_freq_pack,
-    finalize=_outputs([("value", "_v"), ("freq_lb", "_c")]),
+    finalize=_freq_finalize,
     ctors={"freq_agg": _freq_ctor("freq_agg"), "topn_agg": _freq_ctor("topn_agg")},
     inherit=_freq_inherit,
     validate=_freq_validate,
-    srf=("topn", "topn_at_grain", "value", ("value", "freq_lb")),
+    srf=("topn", "topn_at_grain", "value", lambda spec: ("value", "freq_lb")),
+    srf_finalize=_freq_top,
 )
 
 
@@ -1645,6 +1688,26 @@ def _maxn_finalize(c, m, keys, spec):
     )
 
 
+def _maxn_top(c, m, keys, spec, n=None):
+    """The ``n`` best values per key (default: the stored list length),
+    best-first, with the payload of a ``max_n_by`` column."""
+    keep, desc, has_by = _maxn_params(spec)
+    n = keep if n is None else n
+    if n > keep:
+        raise ValueError(
+            f"max_n_at_grain(n={n}) exceeds the stored candidate "
+            f"list length ({keep}) — recreate the cagg with a "
+            f"larger n"
+        )
+    order = _maxn_order(desc, has_by, "value", "data")
+    best = top(c, _maxn_finalize(c, m, keys, spec), keys, order, n)
+    return select(c, best, [*_qs(keys), *_maxn_cols(spec)])
+
+
+def _maxn_cols(spec):
+    return ("value", "data") if _maxn_params(spec)[2] else ("value",)
+
+
 def _maxn_ctor(fn):
     def parse(args, rw):
         if fn.endswith("_by"):
@@ -1713,7 +1776,8 @@ MAXN = Family(
     ctors={fn: _maxn_ctor(fn) for fn in ("max_n", "min_n", "max_n_by", "min_n_by")},
     inherit=_maxn_inherit,
     validate=_maxn_validate,
-    srf=("into_values", "max_n_at_grain", "value", ("value", "data")),
+    srf=("into_values", "max_n_at_grain", "value", _maxn_cols),
+    srf_finalize=_maxn_top,
 )
 
 
@@ -1871,7 +1935,7 @@ HEARTBEAT = Family(
         "interpolated_live_time": "live_us",
         "interpolated_dead_time": "dead_us",
     },
-    interp_method="heartbeat_interpolated_at_grain",
+    interp_method="_heartbeat_interpolated_rel",
 )
 
 
@@ -1896,6 +1960,16 @@ def _td_merge(c, d, keys, spec):
     from .functions.tdigest import merge_states_sql
 
     return merge_states_sql(c, d, keys, "_st", _td_delta(spec), "_td")
+
+
+def _td_percentiles(c, m, keys, spec, qs=None, ranks=()):
+    """The exact ``n``/``min_val``/``max_val``/``mean`` and the
+    quantiles ``qs`` (none when ``qs`` is None) plus each ``(value,
+    out)`` rank, in one projection of the merged digest."""
+    from .functions.tdigest import quantile_cols, rank_col
+
+    cols = [] if qs is None else quantile_cols("_td", list(qs))
+    return select(c, m, [*_qs(keys), *cols, *[rank_col("_td", v, out) for v, out in ranks]])
 
 
 def _td_pack(c, m, d, keys, col, spec):
@@ -1947,6 +2021,7 @@ TDIGEST = Family(
     state=_td_state,
     merge=_td_merge,
     pack=_td_pack,
+    finalize=partial(_td_percentiles, qs=[]),
     ctors={"tdigest": _td_ctor},
     inherit=_td_inherit,
     validate=_td_validate,
@@ -1958,6 +2033,7 @@ TDIGEST = Family(
         "mean": "mean",
     },
     percentile=("tdigest_quantiles_at_grain", "tdigest_rank_at_grain"),
+    percentiles=_td_percentiles,
 )
 
 

@@ -35,6 +35,7 @@ from __future__ import annotations
 import os
 import time as _time
 from datetime import datetime, timezone as _tz
+from functools import partial
 from typing import Optional, Sequence, Union
 
 from pyspark.sql import DataFrame, functions as F
@@ -54,8 +55,6 @@ from .cagg_families import (
     STORED_FIELDS,
     TDIGEST,
     TIME_WEIGHT,
-    _maxn_order,
-    _maxn_params,
     _over,
     _q,
     counter_steps,
@@ -63,7 +62,6 @@ from .cagg_families import (
     normalize,
     partials,
     select,
-    top,
     union,
 )
 from .functions.time import (
@@ -744,14 +742,21 @@ class ContinuousAggregate:
             raise KeyError(f"no {fam.kind} column {col!r}")
         return col, specs[col]
 
+    def _planned(self, build, *args) -> DataFrame:
+        """``build(c, *args) -> relation`` planned as one ``spark.sql``
+        call — every accessor is a relation builder planned this way,
+        and the SQL rollup route composes the same builders."""
+        c = Ctes()
+        return c.plan(self.ts, f"SELECT * FROM {build(c, *args)}")
+
     def _serve(
         self, fam, col, grain, group_by, realtime, start, end, finalize=None
     ) -> DataFrame:
-        """Every ``*_at_grain`` accessor, planned as one ``spark.sql``
-        call (:meth:`_serve_rel`)."""
-        c = Ctes()
-        out = self._serve_rel(c, fam, col, grain, group_by, realtime, start, end, finalize)
-        return c.plan(self.ts, f"SELECT * FROM {out}")
+        """Every ``*_at_grain`` accessor over the family merge
+        (:meth:`_serve_rel`)."""
+        return self._planned(
+            self._serve_rel, fam, col, grain, group_by, realtime, start, end, finalize
+        )
 
     def _serve_rel(
         self, c: Ctes, fam, col, grain, group_by, realtime, start, end, finalize=None
@@ -867,12 +872,35 @@ class ContinuousAggregate:
         cols = ", ".join([*map(_q, gb), f"{src_us} AS _src", f"{_q(col)} AS _st"])
         return union(c, sides, cols, f"{_q(col)} IS NOT NULL"), gb, width
 
-    def _target_buckets(self, c: Ctes, src: str, gb, *cols: str) -> DataFrame:
+    def _boundary_segments(self, c: Ctes, src: str, gbq, width: int, t1, t2, cols=(), where=None):
+        """The one boundary-segment operator of the interpolated
+        accessors: each row's segment ``[t1, t2)`` (int64 µs) exploded
+        over the origin-aligned target buckets ``_b`` of ``width`` it
+        overlaps (bounded by span / width), as ``(group…, _t1, _t2,
+        cols…, _b)``. The target grid shares the cagg's bucket origin,
+        so with ``width`` a multiple of the parent width every target
+        edge is a parent edge — origin-aligned floor, NOT epoch DIV,
+        which would mislabel e.g. weekly buckets Thursday-aligned and
+        truncate toward zero for pre-epoch timestamps. Returns the
+        relation and the overlap bounds ``(lo, hi)`` as SQL text."""
+        org = int(self.row.get("bucket_origin_us") or 0)
+        wl = f"CAST({int(width)} AS BIGINT)"
+        b0 = _grain_floor_sql(t1, width, org)
+        b1 = _grain_floor_sql(f"({t2} - CAST(1 AS BIGINT))", width, org)
+        ends = [t if t == n else f"{t} AS {n}" for t, n in ((t1, "_t1"), (t2, "_t2"))]
+        ex = select(
+            c,
+            src,
+            [*gbq, *ends, *cols, f"explode(sequence({b0}, {b1}, {wl})) AS _b"],
+            where=where,
+        )
+        return ex, "greatest(_t1, _b)", f"least(_t2, _b + {wl})"
+
+    def _target_buckets(self, c: Ctes, src: str, gb, *cols: str) -> str:
         """Interpolated output: the int64-µs target bucket ``_b`` back
-        as the cagg's bucket column, planned as one statement."""
+        as the cagg's bucket column."""
         b = "timestamp_micros(_b)" if self.row["time_is_timestamp"] else "_b"
-        sel = ", ".join([f"{b} AS {_q(self.row['bucket_alias'])}", *map(_q, gb), *cols])
-        return c.plan(self.ts, f"SELECT {sel} FROM {src}")
+        return select(c, src, [f"{b} AS {_q(self.row['bucket_alias'])}", *map(_q, gb), *cols])
 
     def counter_at_grain(
         self,
@@ -1020,6 +1048,9 @@ class ContinuousAggregate:
         Output: ``(bucket, group…, tw_avg)`` — one row per target
         bucket the step function overlaps, empty-gap buckets included.
         """
+        return self._planned(self._interpolated_average_rel, tw_col, grain, realtime)
+
+    def _interpolated_average_rel(self, c: Ctes, tw_col, grain, realtime=None) -> str:
         _col, spec = self._resolve(TIME_WEIGHT, tw_col)
         if str(spec.get("method", "locf")).lower() != "locf":
             raise ValueError(
@@ -1027,7 +1058,6 @@ class ContinuousAggregate:
                 "(linear interpolation across gaps is interpolated_delta "
                 "territory)"
             )
-        c = Ctes()
         base, gb, width = self._interp_frame(
             c, TIME_WEIGHT, tw_col, grain, realtime, "interpolated_average_at_grain"
         )
@@ -1043,15 +1073,10 @@ class ContinuousAggregate:
                 f"lag(_st.last_val) OVER ({wo}) AS _pv",
             ],
         )
-        wl = f"CAST({int(width)} AS BIGINT)"
         org = int(self.row.get("bucket_origin_us") or 0)
         # within-parent piece: the stored integral, covering
-        # [first_us, last_us] — one target bucket (parents nest:
-        # the target grid shares the cagg's bucket origin, so with
-        # width a multiple of the parent width every target edge is
-        # a parent edge — origin-aligned floor, NOT epoch DIV, which
-        # would mislabel e.g. weekly buckets Thursday-aligned and
-        # truncate toward zero for pre-epoch timestamps)
+        # [first_us, last_us] — one target bucket (parents nest on the
+        # origin-aligned grid, see _boundary_segments)
         within = select(
             c,
             seg,
@@ -1063,23 +1088,12 @@ class ContinuousAggregate:
             ],
         )
         # boundary piece: LOCF segment [prev.last_us, first_us) at the
-        # previous parent's last value, exploded over the target
-        # buckets it overlaps (bounded by gap span / width)
-        b0 = _grain_floor_sql("_pt", width, org)
-        b1 = _grain_floor_sql("(_st.first_us - CAST(1 AS BIGINT))", width, org)
-        ex = select(
-            c,
-            seg,
-            [
-                *gbq,
-                "_pt AS _t1",
-                "_st.first_us AS _t2",
-                "_pv AS _v",
-                f"explode(sequence({b0}, {b1}, {wl})) AS _b",
-            ],
+        # previous parent's last value
+        ex, lo, hi = self._boundary_segments(
+            c, seg, gbq, width, "_pt", "_st.first_us", ["_pv AS _v"],
             where="_pt IS NOT NULL AND _st.first_us > _pt",
         )
-        overlap = f"(least(_t2, _b + {wl}) - greatest(_t1, _b))"
+        overlap = f"({hi} - {lo})"
         bnd = select(
             c,
             ex,
@@ -1123,7 +1137,9 @@ class ContinuousAggregate:
         Target ``grain`` must be a multiple of the cagg's bucket width.
 
         Output: ``(bucket, group…, delta, rate)``."""
-        c = Ctes()
+        return self._planned(self._interpolated_delta_rel, counter_col, grain, realtime)
+
+    def _interpolated_delta_rel(self, c: Ctes, counter_col, grain, realtime=None) -> str:
         base, gb, width = self._interp_frame(
             c, COUNTER, counter_col, grain, realtime, "interpolated_delta_at_grain"
         )
@@ -1171,20 +1187,7 @@ class ContinuousAggregate:
         )
         boundary = select(c, boundary, ["*"], where="_t1 IS NOT NULL")
         seg = union(c, [within, boundary], where="_t2 > _t1")
-        wl = f"CAST({int(width)} AS BIGINT)"
-        # origin-aligned target grid (same origin as the cagg's own
-        # buckets, so target edges are parent edges — see
-        # interpolated_average_at_grain)
-        org = int(self.row.get("bucket_origin_us") or 0)
-        b0 = _grain_floor_sql("_t1", width, org)
-        b1 = _grain_floor_sql("(_t2 - CAST(1 AS BIGINT))", width, org)
-        ex = select(
-            c,
-            seg,
-            [*gbq, "_t1", "_v1", "_t2", "_v2", f"explode(sequence({b0}, {b1}, {wl})) AS _b"],
-        )
-        lo = "greatest(_t1, _b)"
-        hi = f"least(_t2, _b + {wl})"
+        ex, lo, hi = self._boundary_segments(c, seg, gbq, width, "_t1", "_t2", ["_v1", "_v2"])
         span = "CAST((_t2 - _t1) AS DOUBLE)"
         dv = "(_v2 - _v1)"
         va_lo = f"(_v1 + {dv} * CAST(({lo} - _t1) AS DOUBLE) / {span})"
@@ -1299,12 +1302,9 @@ class ContinuousAggregate:
         count desc, value asc.
 
         Output: ``(bucket?, group…, value, freq_lb)``."""
-        def finalize(c, m, keys, spec):
-            served = FREQ.finalize(c, m, keys, spec)
-            best = top(c, served, keys, ["freq_lb DESC", "value ASC"], n)
-            return select(c, best, [*map(_q, keys), "value", "freq_lb"])
-
-        return self._serve(FREQ, freq_col, grain, group_by, realtime, start, end, finalize)
+        return self._serve(
+            FREQ, freq_col, grain, group_by, realtime, start, end, partial(FREQ.srf_finalize, n=n)
+        )
 
     def max_n_at_grain(
         self,
@@ -1328,25 +1328,9 @@ class ContinuousAggregate:
         Output: ``(bucket?, group…, value)`` rows, best-first —
         ``(bucket?, group…, value, data)`` for a ``max_n_by`` column
         (value ties ordered by payload in the list's direction)."""
-        maxn_col, spec = self._resolve(MAXN, maxn_col)
-        keep, desc, has_by = _maxn_params(spec)
-        if n is None:
-            n = keep
-        if n > keep:
-            raise ValueError(
-                f"max_n_at_grain(n={n}) exceeds the stored candidate "
-                f"list length ({keep}) — recreate the cagg with a "
-                f"larger n"
-            )
-        order = _maxn_order(desc, has_by, "value", "data")
-
-        def finalize(c, m, keys, spec):
-            best = top(c, MAXN.finalize(c, m, keys, spec), keys, order, n)
-            return select(
-                c, best, [*map(_q, keys), "value", *(["data"] if has_by else [])]
-            )
-
-        return self._serve(MAXN, maxn_col, grain, group_by, realtime, start, end, finalize)
+        return self._serve(
+            MAXN, maxn_col, grain, group_by, realtime, start, end, partial(MAXN.srf_finalize, n=n)
+        )
 
     def interpolated_duration_in_at_grain(
         self,
@@ -1376,7 +1360,11 @@ class ContinuousAggregate:
         ``grain`` must be a multiple of the cagg's bucket width.
 
         Output: ``(bucket, group…, duration_us)``."""
-        c = Ctes()
+        return self._planned(
+            self._interpolated_duration_in_rel, state, state_col, grain, realtime
+        )
+
+    def _interpolated_duration_in_rel(self, c: Ctes, state, state_col, grain, realtime=None) -> str:
         base, gb, width = self._interp_frame(
             c, STATE_AGG, state_col, grain, realtime, "interpolated_duration_in_at_grain"
         )
@@ -1393,7 +1381,6 @@ class ContinuousAggregate:
             ],
         )
         org = int(self.row.get("bucket_origin_us") or 0)
-        wl = f"CAST({int(width)} AS BIGINT)"
         ssq = "'" + str(state).replace("'", "''") + "'"
         # within-parent piece: the stored per-state held time for the
         # requested state, entirely inside one target bucket
@@ -1409,23 +1396,12 @@ class ContinuousAggregate:
         )
         within = select(c, within, ["*"], where="_d > 0")
         # boundary piece: LOCF segment at the previous parent's last
-        # state, exploded over the target buckets it overlaps
-        b0 = _grain_floor_sql("_pt", width, org)
-        b1 = _grain_floor_sql("(_st.first_us - CAST(1 AS BIGINT))", width, org)
-        ex = select(
-            c,
-            seg,
-            [
-                *gbq,
-                "_pt AS _t1",
-                "_st.first_us AS _t2",
-                f"explode(sequence({b0}, {b1}, {wl})) AS _b",
-            ],
+        # state
+        ex, lo, hi = self._boundary_segments(
+            c, seg, gbq, width, "_pt", "_st.first_us",
             where=f"_pt IS NOT NULL AND _st.first_us > _pt AND _ps <=> {ssq}",
         )
-        bnd = select(
-            c, ex, [*gbq, "_b", f"least(_t2, _b + {wl}) - greatest(_t1, _b) AS _d"]
-        )
+        bnd = select(c, ex, [*gbq, "_b", f"{hi} - {lo} AS _d"])
         out = select(
             c,
             union(c, [within, bnd]),
@@ -1501,6 +1477,13 @@ class ContinuousAggregate:
         emit no row, even when a previous tail reaches into them.
         Fixed-width grains only. One extra ``lag`` window over the
         per-bucket merged stats — O(buckets), not O(beats)."""
+        return self._planned(
+            self._heartbeat_interpolated_rel, hb_col, grain, group_by, realtime, start, end
+        )
+
+    def _heartbeat_interpolated_rel(
+        self, c: Ctes, hb_col, grain, group_by=None, realtime=None, start=None, end=None
+    ) -> str:
         _col, spec = self._resolve(HEARTBEAT, hb_col)
         liv = int(spec["liveness_us"])
         if grain == "all":
@@ -1523,7 +1506,6 @@ class ContinuousAggregate:
                     "interpolated heartbeat needs a fixed-width grain"
                 )
             width = iv.us
-        c = Ctes()
         base = self._serve_rel(
             c, HEARTBEAT, hb_col, grain, group_by, realtime, start, end
         )
@@ -1560,7 +1542,9 @@ class ContinuousAggregate:
             f"num_live_ranges + CASE WHEN ({carry}) > 0 AND {reach} < first_us "
             f"THEN 1 ELSE 0 END"
         )
-        sel = ", ".join(
+        return select(
+            c,
+            prev,
             [
                 bucket,
                 *gb,
@@ -1568,9 +1552,8 @@ class ContinuousAggregate:
                 f"{live2} AS live_us",
                 f"({wl} - {live2}) AS dead_us",
                 f"{ranges2} AS num_live_ranges",
-            ]
+            ],
         )
-        return c.plan(self.ts, f"SELECT {sel} FROM {prev}")
 
     def tdigest_quantiles_at_grain(
         self,
@@ -1591,13 +1574,11 @@ class ContinuousAggregate:
         (total values per served group ≤ delta) — the oracle-gate
         contract; rank-error ≲ π/(2·delta) otherwise.
 
-        Output: ``(bucket?, group…, n, min_val, max_val, p50, …)``."""
-        from .functions.tdigest import quantile_cols
-
-        def finalize(c, m, keys, spec):
-            return select(c, m, [*map(_q, keys), *quantile_cols("_td", list(qs))])
-
-        return self._serve(TDIGEST, td_col, grain, group_by, realtime, start, end, finalize)
+        Output: ``(bucket?, group…, n, min_val, max_val, mean, p50, …)``."""
+        return self._serve(
+            TDIGEST, td_col, grain, group_by, realtime, start, end,
+            partial(TDIGEST.percentiles, qs=list(qs)),
+        )
 
     def tdigest_summary_at_grain(
         self,
@@ -1610,11 +1591,8 @@ class ContinuousAggregate:
     ) -> DataFrame:
         """The t-digest's EXACT scalar accessors (``num_vals`` /
         ``min_val`` / ``max_val``) served at any grain — the no-quantile
-        projection of :meth:`tdigest_quantiles_at_grain` (the SQL
-        accessor route's entry point)."""
-        return self.tdigest_quantiles_at_grain(
-            [], td_col, grain, group_by, realtime, start, end
-        )
+        projection of :meth:`tdigest_quantiles_at_grain`."""
+        return self._serve(TDIGEST, td_col, grain, group_by, realtime, start, end)
 
     def tdigest_rank_at_grain(
         self,
@@ -1634,12 +1612,10 @@ class ContinuousAggregate:
         :meth:`tdigest_quantiles_at_grain`. Exact while the merged
         digest stays lossless (the oracle-gate contract); standard
         centroid-midpoint CDF interpolation otherwise."""
-        from .functions.tdigest import rank_col
-
-        def finalize(c, m, keys, spec):
-            return select(c, m, [*map(_q, keys), rank_col("_td", value, out)])
-
-        return self._serve(TDIGEST, td_col, grain, group_by, realtime, start, end, finalize)
+        return self._serve(
+            TDIGEST, td_col, grain, group_by, realtime, start, end,
+            partial(TDIGEST.percentiles, ranks=[(value, out)]),
+        )
 
     def distinct_at_grain(
         self,
@@ -1657,20 +1633,23 @@ class ContinuousAggregate:
         ``distinct_count(rollup(hll(...)))`` idiom via Spark's native
         ``hll_union_agg`` + ``hll_sketch_estimate``. Same grain /
         bounds / realtime rules as the other partial accessors."""
+        return self._planned(
+            self._distinct_rel, hll_col, grain, group_by, realtime, start, end, out
+        )
+
+    def _distinct_rel(self, c: Ctes, hll_col, grain, group_by, realtime, start, end, out) -> str:
         if hll_col not in (self.row.get("aggs") or {}):
             raise KeyError(
                 f"{hll_col!r} is not an aggs column of cagg {self.name!r}"
             )
         # the shared scaffold with the HLL aggs column as the partial payload
-        c = Ctes()
         d, keys, _ = self._partial_frame(c, hll_col, grain, group_by, realtime, start, end)
-        out_rel = select(
+        return select(
             c,
             d,
             [*map(_q, keys), f"hll_sketch_estimate(hll_union_agg(_st)) AS {_q(out)}"],
             group=[_q(k) for k in keys],
         )
-        return c.plan(self.ts, f"SELECT * FROM {out_rel}")
 
     def set_materialized_only(self, flag: bool) -> None:
         """``ALTER MATERIALIZED VIEW .. SET (timescaledb.materialized_only
@@ -2092,14 +2071,9 @@ class ContinuousAggregate:
         Output: ``(bucket?, group_by…, n, p50, p95, …)`` with the same
         naming/rounding as :func:`functions.ddsketch.ddsketch_quantiles`.
         """
-        from .functions.ddsketch import quantiles_sql
-
-        def finalize(c, m, keys, spec):
-            alpha = float(spec.get("alpha", 0.01))
-            return quantiles_sql(c, m, keys, list(qs), alpha, "_sb", "_cnt")
-
         return self._serve(
-            SKETCH, sketch_col, grain, group_by, realtime, start, end, finalize
+            SKETCH, sketch_col, grain, group_by, realtime, start, end,
+            partial(SKETCH.percentiles, qs=list(qs)),
         )
 
     def rank(
@@ -2117,14 +2091,9 @@ class ContinuousAggregate:
         accessor: fraction of ingested values ≤ ``value`` per
         bucket/group, served from the stored states under the same
         merge/grain/realtime rules as :meth:`quantiles`."""
-        from .functions.ddsketch import rank_sql
-
-        def finalize(c, m, keys, spec):
-            alpha = float(spec.get("alpha", 0.01))
-            return rank_sql(c, m, keys, value, alpha, out, "_sb", "_cnt")
-
         return self._serve(
-            SKETCH, sketch_col, grain, group_by, realtime, start, end, finalize
+            SKETCH, sketch_col, grain, group_by, realtime, start, end,
+            partial(SKETCH.percentiles, ranks=[(value, out)]),
         )
 
     def drop(self, keep_jobs: bool = False) -> None:

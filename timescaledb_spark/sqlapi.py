@@ -12,6 +12,9 @@ module gives a user of the reference the same entry point on Spark:
   its user view over the mat and source scan relations, built with
   only the value columns the statement names; plain tables are
   per-statement temp views;
+- the toolkit ``acc(rollup(col))`` idiom over a continuous aggregate is
+  served from its stored partials (:func:`_try_rollup_accessors`): the
+  accessor's relation builder joins the same one-statement CTE chain;
 - hyperfunction calls are **macro-expanded at parse time** into pure
   Spark-SQL expressions (the exact same formulas as the Column API in
   ``functions/`` — no UDFs, fully Catalyst-optimizable / codegen);
@@ -37,12 +40,13 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 from datetime import datetime
+from functools import partial
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, functions as F
 
 from .cagg_families import FAMILIES, family_of
-from .scan import Ctes
+from .scan import Ctes, q as _q, sql_literal
 from .functions.time import (
     parse_interval,
     time_bucket_int_sql,
@@ -1366,7 +1370,7 @@ def _try_distinct_skipscan(ts, q: str):
 
 
 def _group_by_matches_select_keys(cl, sel, balias, grain) -> bool:
-    """Validate a partial-serving route's GROUP BY (ADVICE r10): the
+    """Validate the rollup route's GROUP BY (ADVICE r10): the
     clause must name exactly the bucket/group items of the SELECT list
     — by 1-based position, output alias, bare name, or the identical
     ``time_bucket`` call. Grouping inferred from SELECT alone silently
@@ -1441,217 +1445,45 @@ def _parse_float_array(s: str) -> Optional[list[float]]:
     return out or None
 
 
-def _try_sketch_quantiles(ts, q: str):
-    """The toolkit sketch-cagg serving idiom in SQL —
-    ``SELECT [time_bucket('1 day', bucket) | bucket,] group…,
-    approx_percentile(p, rollup(<sketch col>)) AS a… FROM <sketch cagg>
-    [GROUP BY …]`` — routed to :meth:`ContinuousAggregate.quantiles`:
-    stored DDSketch states merge to the requested grain (lossless,
-    Masson VLDB'19 §2.3) and the realtime union computes raw-side
-    states only above the watermark. Matches only columns of the
-    percentile families (DDSketch, t-digest — ``percentile`` in their
-    cagg_families entry); WHERE/HAVING/ORDER/LIMIT fall through (and the
-    normal path rejects rollup() over a sketch column with a clear
-    analysis error)."""
-    from .functions.ddsketch import _qname
-    from .sqlgapfill import (
-        _alias_of,
-        _clauses_of,
-        _head_call,
-        _split_select_items,
-    )
-
-    if not re.search(r"\brollup\s*\(", _strip_strings(q), re.I):
-        return None
-    try:
-        cl = _clauses_of(q)
-    except ValueError:
-        return None
-    if any(cl.get(k) for k in ("where", "having", "order by", "limit")):
-        return None
-    frm = (cl.get("from") or "").strip()
-    if not re.fullmatch(r"[A-Za-z_]\w*", frm):
-        return None
-    crow = ts.catalog.continuous_agg.find_one(name=frm)
-    if crow is None or not any(
-        f.percentile and crow.get(f.key) for f in FAMILIES
-    ):
-        return None
-    balias = crow["bucket_alias"]
-    groups = list(crow.get("group_by") or [])
-    sel: list = []  # ordered (kind, out_alias, payload)
-    qs_list: list[float] = []
-    ranks: list[float] = []
-    sketch_col = None
-    grain = None
-    has_bucket = False
-    for item in _split_select_items(cl["select"]):
-        expr, alias = _alias_of(item)
-        head = _head_call(
-            expr,
-            {
-                "approx_percentile",
-                "approx_percentile_rank",
-                "approx_percentile_array",
-                "time_bucket",
-            },
-        )
-        if head and head[0] in (
-            "approx_percentile",
-            "approx_percentile_rank",
-            "approx_percentile_array",
-        ):
-            args = head[1]
-            if len(args) != 2:
-                return None
-            if head[0] == "approx_percentile_array":
-                ps = _parse_float_array(args[0])
-                if ps is None:
-                    return None
-                p = None
-            else:
-                try:
-                    p = float(args[0])
-                except ValueError:
-                    return None
-            inner = _inner_call(args[1], "rollup")
-            if inner is None or len(inner) != 1:
-                return None
-            col = inner[0].strip()
-            fam = family_of(crow, col)
-            if fam is None or not fam.percentile or sketch_col not in (
-                None,
-                col,
-            ):
-                return None
-            sketch_col = col
-            if head[0] == "approx_percentile_array":
-                # toolkit approx_percentile_array(array[...], rollup):
-                # the listed percentiles serve like N approx_percentile
-                # items packed into one array column, in argument order
-                for q_ in ps:
-                    if q_ not in qs_list:
-                        qs_list.append(q_)
-                sel.append(("qa", alias or "approx_percentile_array", ps))
-                continue
-            if head[0] == "approx_percentile_rank":
-                if p not in ranks:
-                    ranks.append(p)
-                sel.append(("r", alias or f"rank_{len(ranks)}", p))
-                continue
-            if p not in qs_list:
-                qs_list.append(p)
-            sel.append(("q", alias or _qname(p), p))
-        elif head and head[0] == "time_bucket":
-            if len(head[1]) != 2 or has_bucket:
-                return None
-            wk, wv = _literal_of(head[1][0])
-            if head[1][1].strip().split(".")[-1].strip() != balias:
-                return None
-            grain = int(wv) if wk == "int" else str(wv)
-            has_bucket = True
-            sel.append(("b", alias or balias, None))
-        else:
-            name = expr.strip().split(".")[-1].strip()
-            if not re.fullmatch(r"[A-Za-z_]\w*", name):
-                return None
-            if name == balias and not has_bucket:
-                has_bucket = True
-                sel.append(("b", alias or name, None))
-            elif name in groups:
-                sel.append(("g", alias or name, name))
-            else:
-                return None
-    if not qs_list and not ranks:
-        return None
-    if not _group_by_matches_select_keys(cl, sel, balias, grain):
-        return None
-    want_groups = [p for k, _a, p in sel if k == "g"]
-    eff_grain = grain if has_bucket else "all"
-    keys_out = ([balias] if has_bucket else []) + want_groups
-    try:
-        cagg = ts.get_cagg(frm)
-        qd = None
-        # the family's (quantiles, rank) accessors share one signature
-        q_meth, r_meth = family_of(crow, sketch_col).percentile
-        if qs_list:
-            qd = getattr(cagg, q_meth)(
-                qs_list, sketch_col, grain=eff_grain, group_by=want_groups
-            )
-        for i, v in enumerate(ranks):
-            rdf = getattr(cagg, r_meth)(
-                v,
-                sketch_col,
-                grain=eff_grain,
-                group_by=want_groups,
-                out=f"_rk{i}",
-            )
-            if qd is None:
-                qd = rdf
-            elif not keys_out:
-                qd = qd.crossJoin(rdf)  # both sides are exactly one row
-            else:
-                # null-safe equi-join: both accessors aggregate the same
-                # states over the same keys, so this is 1:1
-                cond = None
-                for k in keys_out:
-                    c = qd[k].eqNullSafe(rdf[k])
-                    cond = c if cond is None else cond & c
-                qd = qd.join(rdf, cond)
-                for k in keys_out:
-                    qd = qd.drop(rdf[k])
-    except (KeyError, ValueError):
-        return None
-    cols = []
-    for kind, out_alias, payload in sel:
-        if kind == "b":
-            cols.append(F.col(balias).alias(out_alias))
-        elif kind == "g":
-            cols.append(F.col(payload).alias(out_alias))
-        elif kind == "r":
-            cols.append(
-                F.col(f"_rk{ranks.index(payload)}").alias(out_alias)
-            )
-        elif kind == "qa":
-            cols.append(
-                F.array(*[F.col(_qname(p)) for p in payload]).alias(
-                    out_alias
-                )
-            )
-        else:
-            cols.append(F.col(_qname(payload)).alias(out_alias))
-    return qd.select(*cols)
-
-
-#: set-returning accessors — one row PER VALUE per key, so they must be
-#: the only accessor in the SELECT (topn, into_values)
-_SRF_FNS = frozenset(f.srf[0] for f in FAMILIES if f.srf)
-#: every toolkit accessor name the partial route recognizes: each
-#: family's plain, 2-D, interpolated and set-returning accessors
-_ALL_ACCESSOR_FNS = frozenset(
+_PCT_FNS = ("approx_percentile", "approx_percentile_rank", "approx_percentile_array")
+#: every toolkit accessor name the rollup route recognizes: each
+#: family's plain, 2-D, interpolated, set-returning and percentile
+#: accessors
+_ROLLUP_FNS = frozenset(
     fn
     for f in FAMILIES
     for v in (f, f.variant[1] if f.variant else f)
-    for fn in (*v.accessors, *v.interp, *(v.srf[:1] if v.srf else ()))
+    for fn in (
+        *v.accessors,
+        *v.interp,
+        *(v.srf[:1] if v.srf else ()),
+        *(_PCT_FNS if v.percentile else ()),
+    )
 )
 
 
-def _try_partial_accessors(ts, q: str):
-    """The toolkit rollup-serving idiom in SQL for the non-sketch
-    partial families — ``SELECT [time_bucket(w, bucket) | bucket,]
-    group…, delta(rollup(cnt)) AS d, rate(rollup(cnt)) AS r … FROM
-    <partial cagg> GROUP BY …`` — routed to the matching
-    ``*_at_grain`` accessor (counter/gauge/stats/time-weight/
-    candlestick): stored partials merge to the requested grain, the
-    realtime union computes raw-side partials only above the
-    watermark. Same GROUP BY discipline as the sketch route; all
-    rollup() calls must target ONE partial column (one state-merge per
-    query); WHERE/HAVING/ORDER/LIMIT fall through, and the normal path
-    rejects rollup() over a struct column with a clear analysis
-    error. Round 12: ``interpolated_average/delta/rate(rollup(col))``
-    route to the interpolated accessors — explicit re-bucket grain and
-    the cagg's full group set required, no mixing with the plain
-    accessors (each family's ``interp`` entry)."""
+def _try_rollup_accessors(ts, q: str):
+    """The toolkit rollup-accessor idiom over a continuous aggregate —
+    ``SELECT [time_bucket(w, bucket) | bucket,] group…,
+    fn(…rollup(col)) AS a… FROM <cagg> [GROUP BY …]`` with ``fn`` any
+    accessor the family table lists for ``col``: plain (``delta``,
+    ``num_vals``…), interpolated, set-returning (``topn``,
+    ``into_values``) or percentile (``approx_percentile[_rank|_array]``).
+    Stored partials merge to the requested grain and the realtime union
+    builds raw-side partials only above the watermark: the accessor's
+    relation builder and the final projection are ONE CTE chain, planned
+    in one ``spark.sql`` call.
+
+    Refused (None — the normal path then fails loudly on ``rollup``):
+    WHERE/HAVING/ORDER/LIMIT, more than one rollup column, a GROUP BY
+    that is not exactly the selected keys
+    (:func:`_group_by_matches_select_keys`), a set-returning accessor
+    beside any other, plain beside interpolated accessors, and an
+    interpolated accessor without an explicit re-bucket or over a subset
+    of the cagg's groups (boundary segments are per-series). Once a
+    statement matches, the accessor's own errors propagate: the normal
+    path can never serve ``rollup``."""
+    from .functions.ddsketch import _qname
     from .sqlgapfill import (
         _alias_of,
         _clauses_of,
@@ -1676,83 +1508,14 @@ def _try_partial_accessors(ts, q: str):
     balias = crow["bucket_alias"]
     groups = list(crow.get("group_by") or [])
     sel: list = []  # ordered (kind, out_alias, payload)
-    family = None
-    part_col = None
-    grain = None
+    col = fam = grain = state = srf_n = None
     has_bucket = False
-    n_acc = 0
-    dur_state = None
-    interp_seen = None
-    srf = None
+    qs: list[float] = []
+    ranks: list[float] = []
     for item in _split_select_items(cl["select"]):
         expr, alias = _alias_of(item)
-        head = _head_call(expr, _ALL_ACCESSOR_FNS | {"time_bucket"})
-        if head and head[0] in _ALL_ACCESSOR_FNS:
-            fn, args = head
-            if fn in _SRF_FNS:
-                if srf is not None:
-                    return None  # one set-returning accessor per query
-                srf_n = None
-                if fn == "topn" and len(args) == 2:
-                    nk, nv = _literal_of(args[1])
-                    if nk != "int":
-                        return None
-                    srf_n = int(nv)
-                    args = args[:1]
-                if len(args) != 1:
-                    return None
-                inner = _inner_call(args[0], "rollup")
-                if inner is None or len(inner) != 1:
-                    return None
-                col = inner[0].strip().split(".")[-1].strip()
-                fam = family_of(crow, col)
-                if fam is None or not fam.srf or fam.srf[0] != fn:
-                    return None
-                srf = (fam, col, srf_n)
-                n_acc += 1
-                sel.append(("s", alias or fam.srf[2], fn))
-                continue
-            if fn in ("duration_in", "interpolated_duration_in"):
-                # duration_in('state', rollup(sa)): the state literal
-                # filters the per-state frame; one state per query
-                if len(args) != 2:
-                    return None
-                sk, sv = _literal_of(args[0])
-                if sk != "string" or (
-                    dur_state is not None and dur_state != sv
-                ):
-                    return None
-                dur_state = str(sv)
-                args = args[1:]
-            if len(args) != 1:
-                return None
-            inner = _inner_call(args[0], "rollup")
-            if inner is None or len(inner) != 1:
-                return None
-            col = inner[0].strip().split(".")[-1].strip()
-            fam = family_of(crow, col)
-            if fam is None:
-                return None
-            if family not in (None, fam) or part_col not in (None, col):
-                return None
-            acc_map = fam.for_spec(crow[fam.key][col]).accessors
-            interp_map = fam.interp
-            if fn in interp_map:
-                interp = True
-                acc_map = interp_map
-            elif fn in acc_map:
-                interp = False
-            else:
-                return None
-            if interp_seen is not None and interp_seen != interp:
-                # plain and interpolated accessors serve from different
-                # frames — mixing falls through to a loud error
-                return None
-            interp_seen = interp
-            family, part_col = fam, col
-            n_acc += 1
-            sel.append(("a", alias or fn, acc_map[fn]))
-        elif head and head[0] == "time_bucket":
+        head = _head_call(expr, _ROLLUP_FNS | {"time_bucket"})
+        if head and head[0] == "time_bucket":
             if len(head[1]) != 2 or has_bucket:
                 return None
             wk, wv = _literal_of(head[1][0])
@@ -1761,10 +1524,9 @@ def _try_partial_accessors(ts, q: str):
             grain = int(wv) if wk == "int" else str(wv)
             has_bucket = True
             sel.append(("b", alias or balias, None))
-        else:
+            continue
+        if head is None:
             name = expr.strip().split(".")[-1].strip()
-            if not re.fullmatch(r"[A-Za-z_]\w*", name):
-                return None
             if name == balias and not has_bucket:
                 has_bucket = True
                 sel.append(("b", alias or name, None))
@@ -1772,115 +1534,142 @@ def _try_partial_accessors(ts, q: str):
                 sel.append(("g", alias or name, name))
             else:
                 return None
-    if not n_acc:
+            continue
+        fn, args = head
+        # the one rollup(col) argument; the others are literals (the
+        # percentile, the duration_in state, topn's count)
+        inner = [_inner_call(a, "rollup") for a in args]
+        at = [i for i, a in enumerate(inner) if a is not None]
+        if len(at) != 1 or len(inner[at[0]]) != 1:
+            return None
+        lits = args[: at[0]] + args[at[0] + 1 :]
+        name = inner[at[0]][0].strip().split(".")[-1].strip()
+        f = family_of(crow, name)
+        if f is None or col not in (None, name):
+            return None
+        col, fam = name, f.for_spec(crow[f.key][name])
+        if fn in _PCT_FNS:
+            if not fam.percentile or len(lits) != 1:
+                return None
+            if fn == "approx_percentile_array":
+                # the listed percentiles serve like N approx_percentile
+                # items packed into one array column, in argument order
+                ps = _parse_float_array(lits[0])
+                if ps is None:
+                    return None
+                qs += [p for p in dict.fromkeys(ps) if p not in qs]
+                sel.append(("qa", alias or fn, ps))
+                continue
+            try:
+                p = float(lits[0])
+            except ValueError:
+                return None
+            if fn == "approx_percentile_rank":
+                if p not in ranks:
+                    ranks.append(p)
+                sel.append(("r", alias or f"rank_{len(ranks)}", p))
+            else:
+                if p not in qs:
+                    qs.append(p)
+                sel.append(("q", alias or _qname(p), p))
+        elif fam.srf and fn == fam.srf[0]:
+            if fn == "topn" and len(lits) == 1:
+                nk, nv = _literal_of(lits[0])
+                if nk != "int":
+                    return None
+                srf_n = int(nv)
+            elif lits:
+                return None
+            sel.append(("s", alias or fam.srf[2], None))
+        else:
+            kind = "i" if fn in fam.interp else "a"
+            out = (fam.interp if kind == "i" else fam.accessors).get(fn)
+            if out is None:
+                return None
+            if fn in ("duration_in", "interpolated_duration_in"):
+                # the state literal filters the per-state frame; one
+                # state per statement
+                sk, sv = _literal_of(lits[0]) if len(lits) == 1 else (None, None)
+                if sk != "string" or state not in (None, sv):
+                    return None
+                state = str(sv)
+            elif lits:
+                return None
+            sel.append((kind, alias or fn, out))
+    kinds = [k for k, _a, _p in sel if k not in ("b", "g")]
+    if not kinds or not _group_by_matches_select_keys(cl, sel, balias, grain):
         return None
-    if not _group_by_matches_select_keys(cl, sel, balias, grain):
+    # a set-returning accessor stands alone; plain and interpolated
+    # accessors serve from different frames
+    if kinds.count("s") > 1 or (("s" in kinds or "i" in kinds) and len(set(kinds)) > 1):
         return None
     want_groups = [p for k, _a, p in sel if k == "g"]
-    eff_grain = grain if has_bucket else "all"
-    if srf is not None and any(k == "a" for k, _a, _p in sel):
-        return None  # set-returning + scalar accessors don't mix
-    try:
-        cagg = ts.get_cagg(frm)
-        if srf is not None:
-            sfam, scol, srf_n = srf
-            spec = crow[sfam.key][scol]
-            n = srf_n if srf_n is not None else spec.get("n")
-            served = getattr(cagg, sfam.srf[1])(
-                scol,
-                **({} if n is None else {"n": n}),
-                grain=eff_grain,
-                group_by=want_groups,
-            )
-            # the served value columns: the first under the SELECT
-            # alias, the rest (freq_lb, a max_n_by payload, duration_us)
-            # riding along
-            vals = [c for c in sfam.srf[3] if c in served.columns]
-            cols = []
-            for kind, out_alias, payload in sel:
-                if kind == "b":
-                    cols.append(F.col(balias).alias(out_alias))
-                elif kind == "g":
-                    cols.append(F.col(payload).alias(out_alias))
-                else:
-                    cols.append(F.col(vals[0]).alias(out_alias))
-                    cols.extend(F.col(c) for c in vals[1:])
-            return served.select(*cols)
-        if interp_seen:
-            # interpolated accessors need an explicit target grain and
-            # serve the cagg's full group set (boundary segments are
-            # per-series); anything else falls through to a loud error
-            if not has_bucket or grain is None:
-                return None
-            if sorted(want_groups) != sorted(crow.get("group_by") or []):
-                return None
-            if family.per_state:
-                if dur_state is None:
-                    return None
-                served = cagg.interpolated_duration_in_at_grain(
-                    dur_state, part_col, grain=grain
-                )
-            else:
-                served = getattr(cagg, family.interp_method)(
-                    part_col, grain=grain
-                )
-            cols = []
-            for kind, out_alias, payload in sel:
-                if kind == "b":
-                    cols.append(F.col(balias).alias(out_alias))
-                else:
-                    cols.append(F.col(payload).alias(out_alias))
-            return served.select(*cols)
-        meth = family.for_spec(crow[family.key][part_col]).serve
-        served = getattr(cagg, meth)(
-            part_col, grain=eff_grain, group_by=want_groups
-        )
-        if family.per_state:
-            # toolkit num_vals(state_agg) counts ALL samples in the
-            # aggregate, not the duration_in state's — aggregate the
-            # per-state frame's n over every state BEFORE any state
-            # filter, then attach it per (bucket?, group…) key
-            bk = crow["bucket_alias"]
-            keys = ([bk] if has_bucket else []) + want_groups
-            wants_n = any(
-                k == "a" and p == "n" for k, _a, p in sel
-            )
-            total = served.groupBy(*keys).agg(
-                F.sum("n").alias("_nv_total")
-            )
-            if dur_state is None:
-                # num_vals-only query (no duration_in): serve totals
-                if any(k == "a" and p != "n" for k, _a, p in sel):
-                    return None
-                served = total.withColumnRenamed("_nv_total", "n")
-            else:
-                served = served.filter(
-                    F.col("state") == F.lit(dur_state)
-                ).drop("n")
-                if wants_n:
-                    if not keys:
-                        # both sides are exactly one row
-                        served = served.crossJoin(total)
-                    else:
-                        cond = None
-                        for k in keys:
-                            c = served[k].eqNullSafe(total[k])
-                            cond = c if cond is None else cond & c
-                        served = served.join(total, cond)
-                        for k in keys:
-                            served = served.drop(total[k])
-                    served = served.withColumnRenamed("_nv_total", "n")
-    except (KeyError, ValueError):
+    # interpolated accessors need an explicit target grain and the
+    # cagg's full group set (boundary segments are per-series)
+    if "i" in kinds and (grain is None or sorted(want_groups) != sorted(groups)):
         return None
+    cagg = ts.get_cagg(frm)
+    c = Ctes()
+    if "i" in kinds:
+        build = getattr(cagg, fam.interp_method)
+        rel = build(c, state, col, grain) if fam.per_state else build(c, col, grain)
+    else:
+        fin = None
+        if "s" in kinds and fam.srf_finalize:
+            fin = partial(fam.srf_finalize, n=srf_n)
+        elif qs or ranks:
+            # t-digest scalars ride on the quantile projection
+            fin = partial(
+                fam.percentiles,
+                qs=qs if qs or "a" in kinds else None,
+                ranks=[(v, f"_rk{i}") for i, v in enumerate(ranks)],
+            )
+        rel = cagg._serve_rel(
+            c, fam, col, grain if has_bucket else "all", want_groups, None, None, None, fin
+        )
+        if fam.per_state and "a" in kinds:
+            keys = ([balias] if has_bucket else []) + want_groups
+            wants_n = any(k == "a" and p == "n" for k, _a, p in sel)
+            rel = _state_totals(c, rel, keys, state, wants_n)
     cols = []
-    for kind, out_alias, payload in sel:
+    for kind, out, p in sel:
+        if kind == "s":
+            first, *rest = fam.srf[3](crow[fam.key][col])
+            cols += [f"{_q(first)} AS {_q(out)}", *map(_q, rest)]
+            continue
         if kind == "b":
-            cols.append(F.col(balias).alias(out_alias))
-        elif kind == "g":
-            cols.append(F.col(payload).alias(out_alias))
+            src = _q(balias)
+        elif kind == "q":
+            src = _q(_qname(p))
+        elif kind == "qa":
+            src = f"array({', '.join(_q(_qname(x)) for x in p)})"
+        elif kind == "r":
+            src = _q(f"_rk{ranks.index(p)}")
         else:
-            cols.append(F.col(payload).alias(out_alias))
-    return served.select(*cols)
+            src = _q(p)
+        cols.append(f"{src} AS {_q(out)}")
+    return c.plan(ts, f"SELECT {', '.join(cols)} FROM {rel}")
+
+
+def _state_totals(c: Ctes, rel: str, keys: list, state: Optional[str], wants_n: bool) -> str:
+    """The per-state frame ``(keys…, state, duration_us, n)`` of a
+    state-agg serve reduced to one row per key: ``duration_us`` of
+    ``state`` and ``n``. The toolkit ``num_vals(state_agg)`` counts ALL
+    samples of the aggregate, not the ``duration_in`` state's, so ``n``
+    is summed over every state BEFORE the state filter."""
+    ks = "".join(f"{_q(k)}, " for k in keys)
+    if state is None:
+        # num_vals alone
+        group = f" GROUP BY {ks[:-2]}" if keys else ""
+        return c.add(f"SELECT {ks}sum(n) AS n FROM {rel}{group}")
+    n = ""
+    if wants_n:
+        part = f"PARTITION BY {ks[:-2]}" if keys else ""
+        rel = c.add(f"SELECT *, sum(n) OVER ({part}) AS _nv FROM {rel}")
+        n = ", _nv AS n"
+    return c.add(
+        f"SELECT {ks}duration_us{n} FROM {rel} WHERE state = {sql_literal(state)}"
+    )
 
 
 def ts_sql(ts, query: str) -> DataFrame:
@@ -2037,12 +1826,9 @@ def ts_sql(ts, query: str) -> DataFrame:
     skipscan = _try_distinct_skipscan(ts, q)
     if skipscan is not None:
         return skipscan
-    sketchq = _try_sketch_quantiles(ts, q)
-    if sketchq is not None:
-        return sketchq
-    partialq = _try_partial_accessors(ts, q)
-    if partialq is not None:
-        return partialq
+    rolled = _try_rollup_accessors(ts, q)
+    if rolled is not None:
+        return rolled
     if re.search(r"\btime_bucket_gapfill\b", _strip_strings(q), re.I):
         from .sqlgapfill import run_gapfill_statement
 

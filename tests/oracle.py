@@ -56,9 +56,27 @@ def duck_rows(con, sql: str):
     return cols, cur.fetchall()
 
 
-def assert_match(df, con, sql: str, check_schema: bool = True):
+#: (connection, result) by (id(connection), SQL text) — the entry keeps
+#: the connection alive, so its id cannot be reused while cached
+_ORACLE_RESULTS: dict = {}
+
+
+def oracle_rows(con, sql: str):
+    """:func:`duck_rows` memoized by connection and SQL text — only for
+    statements over the session's read-only parquet views (conftest
+    ``duck``), whose answer cannot change within a run. The heavy gate
+    oracles (``q_curate``, ``q_dedup_keep_best``: ~50 s each at sf0.001)
+    are checked by their own test and by the entry mirror."""
+    key = (id(con), sql)
+    if key not in _ORACLE_RESULTS:
+        _ORACLE_RESULTS[key] = (con, duck_rows(con, sql))
+    cols, rows = _ORACLE_RESULTS[key][1]
+    return list(cols), list(rows)
+
+
+def assert_match(df, con, sql: str, check_schema: bool = True, fetch=duck_rows):
     scols, srows = spark_rows(df)
-    dcols, drows = duck_rows(con, sql)
+    dcols, drows = fetch(con, sql)
     assert sorted(scols) == sorted(dcols), (
         f"column mismatch: spark={sorted(scols)} duck={sorted(dcols)}"
     )

@@ -6,6 +6,8 @@ from pyspark.sql import functions as F
 
 from timescaledb_spark.pipeline.curate import curate_corpus, curate_corpus_sql
 
+from .oracle import oracle_rows
+
 GOOD = (
     "The quick brown fox jumps over the lazy dog and runs to the barn "
     "with great speed. It is said that every good sentence must have "
@@ -53,7 +55,7 @@ def test_gate_matches_oracle(spark, duck, sf_dir):
 
     qs, oracles = Q.queries(), Q.oracle_sql()
     got = {tuple(r) for r in qs["q_curate"](spark, sf_dir).collect()}
-    want = {tuple(r) for r in duck.execute(oracles["q_curate"]).fetchall()}
+    want = {tuple(r) for r in oracle_rows(duck, oracles["q_curate"])[1]}
     assert got == want
     verdicts = {v for _, v in got}
     # the gate corpus exercises every stage

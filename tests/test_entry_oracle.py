@@ -4,7 +4,7 @@ query and its DuckDB oracle side by side at the test SF and compare."""
 import pytest
 
 import __spark_entry__ as entry_mod
-from .oracle import assert_match
+from .oracle import assert_match, oracle_rows
 
 
 def _pairs():
@@ -19,7 +19,7 @@ def test_query_vs_oracle(tsdata, duck, sf_dir, name, fn, oracle):
     if oracle is None:
         assert df.count() >= 0  # rows-only check (non-SQL-expressible op)
         return
-    assert_match(df, duck, oracle)
+    assert_match(df, duck, oracle, fetch=oracle_rows)
 
 
 def test_entry_smoke(spark):

@@ -1,6 +1,7 @@
 """Quality-aware canonical selection — pipeline/dedup.py keep_best
 (round 16)."""
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 from timescaledb_spark.pipeline.dedup import (
@@ -11,6 +12,8 @@ from timescaledb_spark.pipeline.dedup import (
     minhash_lsh_pairs_sql,
 )
 from timescaledb_spark.sources import load_table
+
+from .oracle import oracle_rows
 
 
 def test_keep_best_matches_duckdb_oracle(spark, sf_dir, duck):
@@ -24,9 +27,9 @@ def test_keep_best_matches_duckdb_oracle(spark, sf_dir, duck):
         .sort_values("doc_id")
         .reset_index(drop=True)
     )
+    dcols, drows = oracle_rows(duck, keep_best_sql(minhash_lsh_pairs_sql()))
     want = (
-        duck.execute(keep_best_sql(minhash_lsh_pairs_sql()))
-        .df()[cols]
+        pd.DataFrame.from_records(drows, columns=dcols)[cols]
         .sort_values("doc_id")
         .reset_index(drop=True)
     )

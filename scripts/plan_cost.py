@@ -19,7 +19,12 @@ for its two reads — ``daily_max`` (``ts.sql`` over the cagg) and
 p95 in SQL through the rollup route, ``sql_p95``
 (``approx_percentile(0.95, rollup(sk_user))`` by day and hostname) and
 ``sql_p95_rank`` (plus ``approx_percentile_rank(50, rollup(sk_user))``),
-plus ``collect_jobs``.
+plus ``collect_jobs`` and Spark's own ``analysis_ms`` and
+``optimization_ms`` (``queryExecution().tracker()``, median over the
+reps). Then it runs the
+refresh-policy tick of the next iteration — a 2-range refresh (the
+hour just completed and the late batch) — and prints its Spark jobs, py4j
+round trips, ms and ranges as the ``refresh_tick`` row.
 
 Usage:
     python scripts/plan_cost.py [--workload W] [--seed N] [--reps N]
@@ -30,6 +35,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import sys
 import tempfile
 import threading
@@ -128,9 +134,22 @@ class _NoReference:
         return 0.0
 
 
+def _phase_ms(df, phase: str) -> float:
+    """Duration of one planning phase of ``df``'s query, from Spark's
+    ``QueryPlanningTracker``."""
+    got = df._jdf.queryExecution().tracker().phases().get(phase)
+    return float(got.get().durationMs()) if got.isDefined() else 0.0
+
+
 def cagg_realtime(args) -> int:
+    import time
+
     from harness import Harness
+    from queries import MIN_US
+    from tsbs import US
     from workloads import DAILY_MAX, CaggRealtime
+
+    from timescaledb_spark.caggs import ContinuousAggregate
 
     from timescaledb_spark import TSSession, build_spark
 
@@ -162,7 +181,7 @@ def cagg_realtime(args) -> int:
     def jobs_since(j0):
         return len([j for j in tracker.getJobIdsForGroup(None) if j > j0])
 
-    out = {}
+    out, phases = {}, {}
     for _ in range(args.reps):
         for name, plan in reads.items():
             j0 = max(tracker.getJobIdsForGroup(None), default=-1)
@@ -171,13 +190,36 @@ def cagg_realtime(args) -> int:
             trips, plan_jobs = rt.n - n0, jobs_since(j0)
             j1 = max(tracker.getJobIdsForGroup(None), default=-1)
             rows = len(df.collect())
+            for ph in ("analysis", "optimization"):
+                phases.setdefault((name, ph), []).append(_phase_ms(df, ph))
             out[name] = {
                 "query": name,
                 "py4j_round_trips": trips,
                 "plan_jobs": plan_jobs,
                 "collect_jobs": jobs_since(j1),
                 "rows": rows,
+                **{f"{ph}_ms": statistics.median(phases[name, ph]) for ph in ("analysis", "optimization")},
             }
+    ranges = []
+    refresh = ContinuousAggregate.refresh
+
+    def counted(self, *a, **kw):
+        done = refresh(self, *a, **kw)
+        ranges.append(len(done))
+        return done
+
+    ContinuousAggregate.refresh = counted
+    now = (w.t_end + (w.WARMUP + 1) * w.APPEND_MIN * MIN_US) / US
+    j0, n0, t0 = max(tracker.getJobIdsForGroup(None), default=-1), rt.n, time.perf_counter()
+    ts.jobs.run_pending(now=now)
+    out["refresh_tick"] = {
+        "query": "refresh_tick",
+        "spark_jobs": jobs_since(j0),
+        "py4j_round_trips": rt.n - n0,
+        "ms": round((time.perf_counter() - t0) * 1e3, 1),
+        "ranges": ranges,
+    }
+    ContinuousAggregate.refresh = refresh
     for row in out.values():
         print(json.dumps(row))
     spark.stop()

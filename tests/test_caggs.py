@@ -361,7 +361,7 @@ def test_refresh_restores_invalidations_on_failure(ts, spark, monkeypatch):
     full = {
         (str(r["bucket"]), r["n"]) for r in cagg.read(realtime=False).collect()
     }
-    # dirty one day, then make the materialize insert fail once
+    # dirty one day, then make the materialize write fail once
     ht.insert(
         spark.createDataFrame(
             [("2024-01-02 03:00:00", "office", 1.0, 2.0)],
@@ -369,7 +369,7 @@ def test_refresh_restores_invalidations_on_failure(ts, spark, monkeypatch):
             "humidity double",
         ).withColumn("timec", F.col("timec").cast("timestamp"))
     )
-    orig = Hypertable.insert
+    orig = Hypertable.replace_ranges
     calls = {"n": 0}
 
     def boom(self, *a, **k):
@@ -378,7 +378,7 @@ def test_refresh_restores_invalidations_on_failure(ts, spark, monkeypatch):
             raise RuntimeError("injected materialize failure")
         return orig(self, *a, **k)
 
-    monkeypatch.setattr(Hypertable, "insert", boom)
+    monkeypatch.setattr(Hypertable, "replace_ranges", boom)
     with pytest.raises(RuntimeError, match="injected"):
         cagg.refresh()
     # retry succeeds and converges to the full recompute

@@ -2,7 +2,6 @@
 operator, driven with file-source micro-batches."""
 
 import os
-import time
 
 import pytest
 from pyspark.sql import functions as F, types as T
@@ -58,20 +57,6 @@ def test_windowed_agg_stream(spark, tmp_path):
     assert rows["2024-01-01T00:00:00"]["n"] == 6
 
 
-def _await_data_batch(q, timeout_s):
-    """Wait (bounded) until a batch that read input has committed.
-    Processing-time state timeouts make every batch ask for a no-data
-    batch after it, so an ``availableNow`` query over ``gap_sessions``
-    never terminates by itself: waiting for termination would sit out
-    the whole timeout and leave the query looping after the test."""
-    deadline = time.monotonic() + timeout_s
-    while not any(p["numInputRows"] for p in q.recentProgress):
-        if q.exception() is not None:
-            raise q.exception()
-        assert time.monotonic() < deadline, "no data batch committed"
-        time.sleep(0.1)
-
-
 def test_gap_sessions_stream(spark, tmp_path):
     indir = str(tmp_path / "in")
     os.makedirs(indir)
@@ -90,7 +75,8 @@ def test_gap_sessions_stream(spark, tmp_path):
         .start()
     )
     try:
-        _await_data_batch(q, 120)
+        # event-time session timeouts: availableNow ends by itself
+        assert q.awaitTermination(120), "availableNow query did not terminate"
     finally:
         q.stop()
     rows = spark.sql("SELECT * FROM sessions ORDER BY session_start").collect()
@@ -130,7 +116,7 @@ def test_session_fn_late_event_forms_own_session():
         def remove(self):
             self._v = None
 
-        def setTimeoutDuration(self, ms):
+        def setTimeoutTimestamp(self, ms):
             pass
 
     h = 3_600_000_000  # 1h in us

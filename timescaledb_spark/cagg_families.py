@@ -39,7 +39,7 @@ from dataclasses import dataclass, field
 from functools import partial
 from typing import Callable, Optional, Sequence
 
-from .scan import q as _q, sql_literal
+from .scan import Scan, q as _q, sql_literal
 
 #: spec key carrying the field names of the STORED state struct a merge
 #: reads (set by the caller from the mat table's schema); states
@@ -68,9 +68,12 @@ def _over(partition: Sequence[str], order: Sequence[str]) -> str:
 _PRECEDING = "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING"
 
 
-def select(c, src: str, cols: Sequence[str], where=None, group=None) -> str:
+def select(c, src, cols: Sequence[str], where=None, group=None) -> str:
     """Append ``SELECT cols FROM src [WHERE] [GROUP BY]`` to ``c``;
-    ``group`` lists SQL group items (empty: a global aggregate)."""
+    ``group`` lists SQL group items (empty: a global aggregate). Over a
+    pending :class:`Scan` this is the scan's own block."""
+    if isinstance(src, Scan):
+        return c.scan(src.select(list(cols), where, group))
     body = f"SELECT {', '.join(cols)} FROM {src}"
     if where:
         body += f" WHERE {where}"
@@ -98,13 +101,11 @@ def join(c, left: str, right: str, keys, how: str, cols) -> str:
     return c.add(f"SELECT {sel} FROM {left} _jl {how} JOIN {right} _jr ON {on}")
 
 
-def union(c, rels: Sequence[str], cols: str = "*", where=None, name=None) -> str:
-    """``UNION ALL`` of ``SELECT cols FROM rel [WHERE where]`` over
+def union(c, rels: Sequence[str], where=None, name=None) -> str:
+    """``UNION ALL`` of ``SELECT * FROM rel [WHERE where]`` over
     relations with the same column order."""
     cond = f" WHERE {where}" if where else ""
-    return c.add(
-        " UNION ALL ".join(f"SELECT {cols} FROM {r}{cond}" for r in rels), name
-    )
+    return c.add(" UNION ALL ".join(f"SELECT * FROM {r}{cond}" for r in rels), name)
 
 
 # ------------------------------------------------------------ shared parts
@@ -279,12 +280,13 @@ class Family:
     pack: Callable
     finalize: Optional[Callable] = None
     #: a LOSSLESS family's state rows before the pack: ``unpacked(c,
-    #: cagg, raw, col, spec)`` -> ``(bucket, group…, *rows)``. A
-    #: realtime serve hands the raw tail to ``merge(…, tail=…)`` in
-    #: this form (re-keyed, rows with a NULL first row column dropped)
-    #: instead of packing it only to unpack it again
+    #: cagg, raw, col, spec[, head])`` -> ``(bucket, group…, rows…)``
+    #: (with ``head``: the realtime tail's rows, keyed to the target);
+    #: ``unpack(st)``: select items turning a stored state into the same
+    #: rows. Its merge is the bag of these rows, so a serve takes both
+    #: sides in this form instead of packing the tail only to unpack it
     unpacked: Optional[Callable] = None
-    rows: tuple = ()
+    unpack: Optional[Callable] = None
     required: str = "value"
     expr_fields: tuple = ("value",)
     ctors: dict = field(default_factory=dict)
@@ -325,11 +327,16 @@ class Family:
 
 
 # =========================================================== sketch
-def _sketch_unpacked(c, cagg, raw, col, spec):
+def _sketch_unpacked(c, cagg, raw, col, spec, head=None):
     """(bucket, group…, log-bucket ``_sb``, ``_cnt``) counts — a
     map-combined groupBy collapses rows to (keys, log-bucket) counts
     BEFORE the exchange (shuffle = keys x ~2k sketch buckets regardless
-    of row count, functions/ddsketch.py contract)."""
+    of row count, functions/ddsketch.py contract).
+
+    With ``head`` — ``head(b)``: the target key items over the cagg
+    bucket ``b`` — the realtime tail instead: one ``(_sb, 1)`` row per
+    non-NULL value, keyed straight to the target, in one block over
+    ``raw``; the merge's consumers sum per log-bucket themselves."""
     from .functions.ddsketch import ZERO_BUCKET, _gamma
 
     g = _gamma(float(spec.get("alpha", 0.01)))
@@ -348,6 +355,9 @@ def _sketch_unpacked(c, cagg, raw, col, spec):
         f"WHEN {v} = 0 THEN CAST({ZERO_BUCKET} AS INT) "
         f"ELSE CAST(ceil(ln({v}) / {math.log(g)!r}D) AS INT) END"
     )
+    if head is not None:
+        cols = [*head(cagg._bucket_sql()), f"{sb} AS _sb", "CAST(1 AS BIGINT) AS _cnt"]
+        return select(c, raw, cols, where=f"{v} IS NOT NULL")
     base, keys = _base(c, cagg, raw, f"{sb} AS _sb")
     return select(
         c, base, [*_qs(keys), "_sb", "count(1) AS _cnt"], group=[*_qs(keys), "_sb"]
@@ -362,23 +372,14 @@ def _sketch_state(c, cagg, raw, col, spec):
     return _sketch_collect(c, _sketch_unpacked(c, cagg, raw, col, spec), keys, col)
 
 
-def _sketch_merge(c, d, keys, spec, tail=None):
+def _sketch_merge(c, d, keys, spec):
     """Bucket counts ADD losslessly (Masson VLDB'19 §2.3), so the merge
-    is the BAG of ``(keys…, _sb, _cnt)`` rows — the exploded states
-    plus the unpacked realtime ``tail`` — and every consumer sums per
-    log-bucket itself: the quantile finalize with a RANGE window frame
-    (one exchange for the merge and the extraction), the pack with a
-    group-by. ``explode_outer`` keeps a NULL state's group as one NULL
-    log-bucket row."""
-    ks = ", ".join(_qs(keys))
-    parts = []
-    if d is not None:
-        parts.append(select(c, d, [*_qs(keys), "explode_outer(_st) AS (_sb, _cnt)"]))
-    if tail is not None:
-        parts.append(tail)
-    if len(parts) == 1:
-        return parts[0]
-    return union(c, parts, f"{ks + ', ' if ks else ''}_sb, _cnt")
+    is the BAG of ``(keys…, _sb, _cnt)`` rows — the exploded states —
+    and every consumer sums per log-bucket itself: the quantile finalize
+    with a RANGE window frame (one exchange for the merge and the
+    extraction), the pack with a group-by. ``explode_outer`` keeps a
+    NULL state's group as one NULL log-bucket row."""
+    return select(c, d, [*_qs(keys), *SKETCH.unpack("_st")])
 
 
 def _sketch_collect(c, rows, keys, col):
@@ -406,17 +407,12 @@ def _sketch_pack(c, m, d, keys, col, spec):
 
 
 def _sketch_percentiles(c, m, keys, spec, qs=None, ranks=()):
-    """Quantiles ``(keys…, n, p<q>…)`` and one rank aggregate per
-    ``(value, out)`` over the ONE merged bag ``m``, joined 1:1 on the
-    keys (each side aggregates the same merged rows per key)."""
-    from .functions.ddsketch import quantiles_sql, rank_sql
+    """Quantiles ``(keys…, n, p<q>…)`` and the ``(value, out)`` ranks
+    from ONE aggregate over the merged bag ``m``."""
+    from .functions.ddsketch import quantiles_sql
 
     alpha = float(spec.get("alpha", 0.01))
-    rel = None if qs is None else quantiles_sql(c, m, keys, list(qs), alpha, "_sb", "_cnt")
-    for value, out in ranks:
-        r = rank_sql(c, m, keys, value, alpha, out, "_sb", "_cnt")
-        rel = r if rel is None else join(c, rel, r, keys, "INNER", [out])
-    return rel
+    return quantiles_sql(c, m, keys, qs, alpha, "_sb", "_cnt", ranks)
 
 
 def _sketch_validate(col, spec):
@@ -465,7 +461,7 @@ SKETCH = Family(
     merge=_sketch_merge,
     pack=_sketch_pack,
     unpacked=_sketch_unpacked,
-    rows=("_sb", "_cnt"),
+    unpack=lambda st: [f"explode_outer({st}) AS (_sb, _cnt)"],
     ctors={
         "percentile_agg": _sketch_ctor_percentile_agg,
         "uddsketch": _sketch_ctor_uddsketch,

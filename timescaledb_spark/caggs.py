@@ -15,9 +15,10 @@ Reference: ``tsl/src/continuous_aggs/`` — protocol per its README:
   entries into every cagg's materialization log
   (``invalidation_process_hypertable_log``), cuts the refreshed cagg's log
   against the bucket-aligned window (``invalidation.c`` range algebra),
-  merges overlapping dirty ranges, and per range deletes + re-inserts the
-  materialized rows (``materialize.c:442-489``), then advances the
-  watermark.
+  merges overlapping dirty ranges, and deletes + re-inserts the
+  materialized rows of every range (``materialize.c:442-489``) — here in
+  one pass: one aggregate over the union of the ranges, one rewrite of
+  the mat chunks they touch — then advances the watermark.
 - Since v2.7 the mat table stores FINALIZED aggregate values
   (``sql/updates/2.24.0--2.25.0.sql:193-201`` removed partials), so
   refresh is plain re-aggregation of dirty ranges — which maps exactly to
@@ -72,7 +73,7 @@ from .functions.time import (
     time_bucket_sql,
 )
 from .hypertable import Hypertable, _to_internal
-from .scan import Ctes
+from .scan import Ctes, Scan
 
 INT64_MIN = -(2**63)
 INT64_MAX = 2**63 - 1
@@ -531,17 +532,14 @@ class ContinuousAggregate:
         f = self._floor_us(v)
         return f if f == v else self._next_us(f)
 
-    def _time_lit(self, v: int) -> str:
-        """Internal time ``v`` as a literal of the bucket column's type."""
-        if self.row["time_is_timestamp"]:
-            return f"timestamp_micros({int(v)})"
-        return str(int(v))
-
-    def _prepared(self, c: Ctes, raw: str) -> str:
-        """The raw rows of the defining query: ``raw`` [joined with the
-        dim table] [filtered by the cagg's WHERE]."""
+    def _prepared(self, c: Ctes, raw):
+        """The raw rows of the defining query: ``raw`` (a relation or a
+        pending :class:`Scan`) [joined with the dim table] [filtered by
+        the cagg's WHERE]."""
         j = self.row.get("join")
         if j:
+            if isinstance(raw, Scan):
+                raw = c.scan(raw)
             dim = c.add(self.ts.table_sql(j["table"]))
             on = j.get("on")
             if on is None:
@@ -557,6 +555,8 @@ class ContinuousAggregate:
                 f"SELECT /*+ BROADCAST({dim}) */ * FROM {raw} {how} JOIN {dim} {cond}"
             )
         if self.row.get("where"):
+            if isinstance(raw, Scan):
+                return raw.select(where=self.row["where"])
             raw = c.add(f"SELECT * FROM {raw} WHERE {self.row['where']}")
         return raw
 
@@ -655,72 +655,64 @@ class ContinuousAggregate:
             *(self.row.get("window_fns") or {}),
         ]
 
-    def _sides(self, c: Ctes, cols, realtime=None, lo=None, hi=None, fam=None):
-        """The user view restricted to value columns ``cols`` and to
-        buckets in ``[lo, hi)`` (internal units), as CTEs appended to
-        ``c``: the relations whose ``UNION ALL`` is the view — the mat
-        side below the watermark and the raw-side aggregate above it
-        (``common.c:1745 build_union_query``), each ``(bucket, group…,
-        cols…)``. Both sides prune chunks by the bounds.
-
-        With a lossless ``fam`` (one with ``unpacked`` rows) the raw
-        tail of its single column is returned separately as
-        ``fam.unpacked`` rows instead of a raw-side aggregate:
-        ``(sides, tail)``."""
+    def _scans(self, realtime=None, lo=None, hi=None):
+        """``(mat, raw)``: the pending scans of the two sides of the user
+        view restricted to buckets in ``[lo, hi)`` (internal units) —
+        the mat side below the watermark (None before any
+        materialization) and the raw side at and above it (None when not
+        realtime), ``common.c:1745 build_union_query``. Both prune chunks
+        and rows by the bounds; the raw side reads whole buckets only,
+        from ``ceil(max(wm, lo))`` to ``ceil(hi)``."""
         if realtime is None:
             realtime = not self.row.get("materialized_only", False)
-        bucket = self.row["bucket_alias"]
-        proj = ", ".join(_q(x) for x in [bucket, *self.row["group_by"], *cols])
         mat = self._mat()
         has_mat = mat.row.get("schema_ddl") is not None
         if not realtime:
             if not has_mat:
                 raise ValueError(f"cagg {self.name!r} never refreshed")
-            m = c.scan(mat._scan(start=lo, end=hi))
-            return [c.add(f"SELECT {proj} FROM {m}")], None
+            return mat._scan(start=lo, end=hi), None
         wm = self.watermark()
-        sides = []
+        m = None
         if has_mat and wm is not None:
             # chunk-prune the mat side by the watermark too (normally a
             # no-op — materialization stops at the watermark — but after
             # a watermark rollback or retention on the raw table it
-            # excludes whole mat chunks); the row filter stays for the
-            # boundary chunk
-            m = c.scan(mat._scan(start=lo, end=wm if hi is None else min(hi, wm)))
-            sides.append(
-                c.add(f"SELECT {proj} FROM {m} WHERE {_q(bucket)} < {self._time_lit(wm)}")
-            )
-        # the raw side reads whole buckets only: [ceil(lo), ceil(hi))
-        starts = [x for x in (wm, None if lo is None else self._ceil_us(lo)) if x is not None]
-        raw = c.scan(
-            self._source()._scan(
-                start=max(starts) if starts else None,
-                end=None if hi is None else self._ceil_us(hi),
-            )
+            # excludes whole mat chunks)
+            m = mat._scan(start=lo, end=wm if hi is None else min(hi, wm))
+        starts = [self._ceil_us(x) for x in (wm, lo) if x is not None]
+        raw = self._source()._scan(
+            start=max(starts) if starts else None,
+            end=None if hi is None else self._ceil_us(hi),
         )
-        above = "" if wm is None else f" WHERE {_q(bucket)} >= {self._time_lit(wm)}"
-        if fam is not None and fam.unpacked is not None:
-            (col,) = cols
-            spec = self._resolve(fam, col)[1]
-            raw = self._prepared(c, raw)
-            if spec.get("rollup_of"):
-                # a child's merge of its parent's states is unpacked too
-                d, keys, spec = self._parent_states(c, raw, spec)
-                rows = fam.merge(c, d, keys, spec)
-            else:
-                rows = fam.unpacked(c, self, raw, col, spec)
-            return sides, c.add(f"SELECT * FROM {rows}{above}")
-        wfns = self.row.get("window_fns") or {}
-        # a window column needs its sibling aggregates: full build
-        build = None if any(x in wfns for x in cols) else cols
-        agg = self._aggregate(c, raw, build)
-        sides.append(c.add(f"SELECT {proj} FROM {agg}{above}"))
-        return sides, None
+        return m, raw
+
+    def _sides(self, c: Ctes, cols, realtime=None, lo=None, hi=None, out=None):
+        """The user view restricted to value columns ``cols`` and to
+        buckets in ``[lo, hi)`` (:meth:`_scans`), as CTEs appended to
+        ``c``: the relations whose ``UNION ALL`` is the view, each
+        ``(bucket, group…, cols…)`` in :meth:`_value_cols` order, or
+        ``out(b)`` = ``(select items, filter)`` over a side's rows with
+        ``b`` its bucket. The mat side is one block over its scan; the
+        raw side is the defining aggregate (its first block over the
+        scan), plus a block for ``out``."""
+        cols = [x for x in self._value_cols() if x in set(cols)]
+        bucket = _q(self.row["bucket_alias"])
+        items, where = out(bucket) if out else ([bucket, *map(_q, self.row["group_by"]), *map(_q, cols)], None)
+        mat, raw = self._scans(realtime, lo, hi)
+        sides = [] if mat is None else [c.scan(mat.select(items, where))]
+        if raw is not None:
+            # a window column needs its sibling aggregates: full build
+            full = any(x in (self.row.get("window_fns") or {}) for x in cols)
+            agg = self._aggregate(c, raw, None if full else cols)
+            if out or (full and cols != self._value_cols()):
+                agg = select(c, agg, items, where)
+            sides.append(agg)
+        return sides
 
     def _bind(self, c: Ctes, name: str, cols) -> None:
         """Append the user view with value columns ``cols`` to ``c`` as
         the CTE ``name`` — how ``ts.sql`` binds a cagg."""
-        union(c, self._sides(c, cols)[0], name=name)
+        c.union(self._sides(c, cols), name)
 
     def _resolve(self, fam, col: Optional[str]):
         """``(column, spec)`` of a family column; ``col=None`` picks the
@@ -769,11 +761,11 @@ class ContinuousAggregate:
         fam = fam.for_spec(spec)
         if fam.ordered:
             self._require_full_group_by(group_by, fam)
-        d, keys, tail = self._partial_frame(
+        d, keys, bag = self._partial_frame(
             c, col, grain, group_by, realtime, start, end, fam
         )
         spec = {**spec, STORED_FIELDS: _stored_fields(self._mat(), col)}
-        m = fam.merge(c, d, keys, spec, tail=tail) if tail else fam.merge(c, d, keys, spec)
+        m = bag or fam.merge(c, d, keys, spec)
         return (finalize or fam.finalize)(c, m, keys, spec)
 
     def _require_full_group_by(self, group_by, fam) -> None:
@@ -800,41 +792,63 @@ class ContinuousAggregate:
     ):
         """Shared serving scaffold: the column's non-NULL states in
         bucket-aligned ``[start, end)`` (realtime union included) keyed
-        by target bucket: ``(d, keys, tail)`` with ``d`` the relation
+        by target bucket: ``(d, keys, bag)`` with ``d`` the relation
         ``(bucket?, group…, _src, _st)`` — ``bucket`` holding the target
-        bucket, absent at grain ``"all"`` — and ``tail`` the re-keyed
-        unpacked raw tail of a lossless ``fam`` (see :meth:`_sides`).
+        bucket, absent at grain ``"all"``. A lossless ``fam`` (one with
+        ``unpacked`` rows) is served as its merge instead: ``d`` is None
+        and ``bag`` is ``(bucket?, group…, rows…)`` from both sides, each
+        side one block — the mat side's states unpacked over its scan,
+        the raw side's rows bucketed straight to the target.
 
         Strict rollup semantics: a NULL state (a group whose partial
         inputs were all NULL) is skipped at merge time, like the
         toolkit's strict rollup() aggregate."""
         bucket = self.row["bucket_alias"]
         gb = list(self.row["group_by"] if group_by is None else group_by)
-        sides, tail = self._sides(
-            c, [col], realtime, _to_internal(start), _to_internal(end), fam
-        )
-        if grain == "all":
-            # no constant target column: a literal group/partition key
-            # trips Catalyst's RemoveRedundantAliases into an unresolved
-            # plan (observed on the gauge accessor) and adds nothing
-            head = [_q(g) for g in gb]
-            keys = gb
-        else:
+        keys = gb if grain == "all" else [bucket, *gb]
+
+        def head(b):
+            """The target keys over the cagg bucket ``b``. At grain
+            "all" no constant target column: a literal group/partition
+            key trips Catalyst's RemoveRedundantAliases into an
+            unresolved plan (observed on the gauge accessor)."""
+            if grain == "all":
+                return [_q(g) for g in gb]
             if grain is None:
-                tgt = _q(bucket)
+                tgt = b
             elif self.row["time_is_timestamp"]:
-                tgt = time_bucket_sql(grain, _q(bucket))
+                tgt = time_bucket_sql(grain, b)
             else:
-                tgt = time_bucket_int_sql(int(grain), _q(bucket))
-            head = [f"{tgt} AS {_q(bucket)}", *[_q(g) for g in gb]]
-            keys = [bucket, *gb]
-        cols = ", ".join([*head, f"{_q(bucket)} AS _src", f"{_q(col)} AS _st"])
-        d = union(c, sides, cols, f"{_q(col)} IS NOT NULL") if sides else None
-        if tail is not None:
-            tail = select(
-                c, tail, [*head, *fam.rows], where=f"{fam.rows[0]} IS NOT NULL"
+                tgt = time_bucket_int_sql(int(grain), b)
+            return [f"{tgt} AS {_q(bucket)}", *[_q(g) for g in gb]]
+
+        lo, hi = _to_internal(start), _to_internal(end)
+        nn = f"{_q(col)} IS NOT NULL"
+        if fam is None or fam.unpacked is None:
+            sides = self._sides(
+                c, [col], realtime, lo, hi,
+                lambda b: ([*head(b), f"{b} AS _src", f"{_q(col)} AS _st"], nn),
             )
-        return d, keys, tail
+            return (c.union(sides) if sides else None), keys, None
+        spec = self._resolve(fam, col)[1]
+        mat, raw = self._scans(realtime, lo, hi)
+        rows = []
+        if mat is not None:
+            rows.append(c.scan(mat.select([*head(_q(bucket)), *fam.unpack(_q(col))], nn)))
+        if raw is not None:
+            raw = self._prepared(c, raw)
+            src = spec.get("rollup_of")
+            if src:
+                # a child's tail: its parent's states, unpacked the same way
+                rows.append(
+                    select(
+                        c, raw, [*head(self._bucket_sql()), *fam.unpack(_q(src))],
+                        where=f"{_q(src)} IS NOT NULL",
+                    )
+                )
+            else:
+                rows.append(fam.unpacked(c, self, raw, col, spec, head))
+        return None, keys, c.union(rows)
 
     def _interp_frame(self, c: Ctes, fam, col, grain, realtime, method: str):
         """Shared scaffold of the interpolated accessors: the column's
@@ -863,14 +877,16 @@ class ContinuousAggregate:
                 "cagg's fixed bucket width (parent buckets must nest)"
             )
         gb = list(self.row["group_by"])
-        bucket = _q(self.row["bucket_alias"])
-        sides, _ = self._sides(c, [col], realtime)
-        if self.row["time_is_timestamp"]:
-            src_us = f"unix_micros(CAST({bucket} AS TIMESTAMP))"
-        else:
-            src_us = f"CAST({bucket} AS BIGINT)"
-        cols = ", ".join([*map(_q, gb), f"{src_us} AS _src", f"{_q(col)} AS _st"])
-        return union(c, sides, cols, f"{_q(col)} IS NOT NULL"), gb, width
+
+        def out(b):
+            if self.row["time_is_timestamp"]:
+                src_us = f"unix_micros(CAST({b} AS TIMESTAMP))"
+            else:
+                src_us = f"CAST({b} AS BIGINT)"
+            items = [*map(_q, gb), f"{src_us} AS _src", f"{_q(col)} AS _st"]
+            return items, f"{_q(col)} IS NOT NULL"
+
+        return c.union(self._sides(c, [col], realtime, out=out)), gb, width
 
     def _boundary_segments(self, c: Ctes, src: str, gbq, width: int, t1, t2, cols=(), where=None):
         """The one boundary-segment operator of the interpolated
@@ -1938,35 +1954,36 @@ class ContinuousAggregate:
                     ]
                 )
 
-        # ---- materialize each dirty range (materialize.c:442-489).
-        # The dirty entries were already cut from the log (txn 2b) — on a
-        # FAILED materialization the unprocessed ranges must be put back,
-        # or the hole is permanent: a retry would find no dirty entries
-        # and the watermark would advance over never-materialized buckets.
+        # ---- materialize the dirty ranges (materialize.c:442-489) in
+        # one pass — one batch per statement with buckets_per_batch: one
+        # aggregate over the union of the ranges, written with the
+        # touched mat chunks' rows outside them (Hypertable.
+        # replace_ranges). The dirty entries were already cut from the
+        # log (txn 2b) — on a FAILED materialization the unprocessed
+        # ranges must be put back, or the hole is permanent: a retry
+        # would find no dirty entries and the watermark would advance
+        # over never-materialized buckets.
         mat = self._mat()
+        if buckets_per_batch and int(buckets_per_batch) > 0:
+            batches = [[r] for r in merged]
+        else:
+            batches = [merged] if merged else []
         done_n = 0
         try:
-            for a, b in merged:
+            for batch in batches:
                 # infinite sentinels become open bounds (no filter): they
                 # are not representable as timestamps
+                ranges = [
+                    (a if a > INT64_MIN else None, b if b < INT64_MAX else None)
+                    for a, b in batch
+                ]
                 c = Ctes()
-                raw = c.scan(
-                    src._scan(
-                        start=a if a > INT64_MIN else None,
-                        end=b if b < INT64_MAX else None,
-                    )
-                )
-                mat_rows = c.plan(self.ts, f"SELECT * FROM {self._aggregate(c, raw)}")
+                agg = self._aggregate(c, src._scan(ranges=ranges))
                 if verbose:
-                    print(f"refresh {self.name}: range [{a}, {b}) ")
-                # DELETE + INSERT per range, chunk-local
-                if mat.row.get("schema_ddl"):
-                    mat.delete_range(
-                        a if a > INT64_MIN else None,
-                        b if b < INT64_MAX else None,
-                    )
-                mat.insert(mat_rows, cluster=True)
-                done_n += 1
+                    for a, b in batch:
+                        print(f"refresh {self.name}: range [{a}, {b}) ")
+                mat.replace_ranges(ranges, c.plan(self.ts, f"SELECT * FROM {agg}"))
+                done_n += len(batch)
         except BaseException:
             redo = [
                 {
@@ -2044,7 +2061,8 @@ class ContinuousAggregate:
             else [x for x in only_cols if x not in keys]
         )
         c = Ctes()
-        return c.plan(self.ts, f"SELECT * FROM {union(c, self._sides(c, cols, realtime)[0])}")
+        view = c.union(self._sides(c, cols, realtime))
+        return c.plan(self.ts, f"SELECT {', '.join(map(_q, [*keys, *cols]))} FROM {view}")
 
     # ------------------------------------------------- sketch accessors
     def quantiles(

@@ -124,13 +124,18 @@ def quantiles_sql(
     alpha: float = DEFAULT_ALPHA,
     bucket: str = "bucket",
     cnt: str = "cnt",
+    ranks: Sequence[tuple] = (),
 ) -> str:
     """Quantile estimates ``(by…, n, p<q>…)`` from the sketch rows
     ``(by…, bucket, cnt)`` of relation ``src``, as CTEs appended to
     ``c`` (:class:`..scan.Ctes`); returns the result relation's name.
     ``src`` may hold several rows per bucket (a merge's unsummed bag):
     the RANGE frame counts every row of the buckets up to the current
-    one.
+    one. Each ``(value, out)`` of ``ranks`` adds its
+    ``approx_percentile_rank`` column from the same aggregate: the
+    cumulative count at the last bucket ≤ the probe's over the total
+    (:func:`ddsketch_rank`); ``qs=None`` leaves out ``n`` and the
+    quantiles.
 
     Rank ``r_q = max(1, ceil(q·n))``; the answering bucket is the first
     (in bucket order) whose cumulative count reaches ``r_q``; the
@@ -139,7 +144,7 @@ def quantiles_sql(
     (tiny) sketch + one conditional-min aggregation — never touches raw
     data."""
     g = _gamma(alpha)
-    for q in qs:
+    for q in qs or ():
         if not 0.0 < q <= 1.0:
             raise ValueError(f"quantile {q} must be in (0, 1]")
     keys, part, group = _keys(by)
@@ -153,36 +158,16 @@ def quantiles_sql(
         f"sum(`{cnt}`) OVER ({wo} ROWS BETWEEN UNBOUNDED PRECEDING AND "
         f"UNBOUNDED FOLLOWING) AS _n FROM {src}"
     )
-    cols = ["max(_n) AS n"]
-    for q in qs:
+    cols = [] if qs is None else ["max(_n) AS n"]
+    for q in qs or ():
         rank = f"greatest(1, CAST(ceil({float(q)!r}D * _n) AS BIGINT))"
         b_q = f"min(CASE WHEN _cum >= {rank} THEN _b END)"
         cols.append(f"{_est_sql(b_q, g)} AS {_qname(q)}")
+    for value, out in ranks:
+        b = _rank_bucket(float(value), g)
+        frac = f"coalesce(max(CASE WHEN _b <= {b} THEN _cum END), 0) / max(_n)"
+        cols.append(f"round(CAST({frac} AS DOUBLE), 6) AS `{out}`")
     return c.add(f"SELECT {keys}{', '.join(cols)} FROM {cum}{group}")
-
-
-def rank_sql(
-    c,
-    src: str,
-    by: Sequence[str],
-    value: float,
-    alpha: float = DEFAULT_ALPHA,
-    out: str = "rank",
-    bucket: str = "bucket",
-    cnt: str = "cnt",
-) -> str:
-    """``approx_percentile_rank`` ``(by…, out)`` from the sketch rows of
-    ``src`` (see :func:`ddsketch_rank`), as a CTE appended to ``c``."""
-    b = _rank_bucket(float(value), _gamma(alpha))
-    frac = (
-        f"sum(CASE WHEN `{bucket}` <= {b} THEN `{cnt}` ELSE 0 END) "
-        f"/ sum(`{cnt}`)"
-    )
-    keys, _, group = _keys(by)
-    return c.add(
-        f"SELECT {keys}round(CAST({frac} AS DOUBLE), 6) AS `{out}` "
-        f"FROM {src}{group}"
-    )
 
 
 def ddsketch_quantiles(
@@ -264,9 +249,9 @@ def ddsketch_rank(
     """``approx_percentile_rank`` (toolkit inverse accessor): the
     fraction of ingested values ≤ ``value``, answered from the sketch —
     counts of buckets at or below the probe's bucket over the total,
-    rounded to 6 decimals. One grouped conditional sum over the (tiny)
-    sketch; never touches raw data, exact given the bucket mapping so a
-    DuckDB oracle replay matches bit-for-bit."""
+    rounded to 6 decimals, from the quantile extraction's cumulative
+    counts (:func:`quantiles_sql`); never touches raw data, exact given
+    the bucket mapping so a DuckDB oracle replay matches bit-for-bit."""
     return over_frame(
-        sketch, lambda c, src: rank_sql(c, src, list(by), value, alpha, out)
+        sketch, lambda c, src: quantiles_sql(c, src, list(by), None, alpha, ranks=[(value, out)])
     )

@@ -318,10 +318,6 @@ class Hypertable:
     def _refresh(self) -> None:
         self.row = self.ts.catalog.hypertable.find_one(name=self.name) or self.row
 
-    def _time_is_timestamp(self) -> bool:
-        t = self.row.get("time_type") or "timestamp"
-        return t in ("timestamp", "timestamp_ntz", "date")
-
     def _internal_time_expr(self, df: DataFrame, col: Optional[str] = None) -> Column:
         """time column -> int64 internal units (µs or verbatim int).
         ``col`` overrides the source column with a SQL reference (e.g. an
@@ -2778,24 +2774,34 @@ class Hypertable:
         with_partition_cols: bool = False,
         where_stats: Optional[dict] = None,
         space_key=None,
+        ranges: Optional[list] = None,
     ) -> Scan:
-        """This read as SQL text over the scan relation (see :meth:`read`)."""
+        """This read as SQL text over the scan relation (see :meth:`read`).
+        ``ranges`` — ``[(lo, hi), …]`` internal bounds, ``None`` open —
+        reads their union instead of ``[start, end)``: the chunks any of
+        them overlaps, and an OR over their bounds as the row filter."""
         all_chunks = self.chunks()
-        chunks = all_chunks
-        lo, hi = _to_internal(start), _to_internal(end)
-        if lo is not None or hi is not None:
-            chunks = [
-                c
-                for c in chunks
-                if (hi is None or c["range_start"] < hi)
+        if ranges is None:
+            ranges = [(_to_internal(start), _to_internal(end))]
+        chunks = [
+            c
+            for c in all_chunks
+            if any(
+                (hi is None or c["range_start"] < hi)
                 and (lo is None or c["range_end"] > lo)
-            ]
+                for lo, hi in ranges
+            )
+        ]
         if where_stats:
             chunks = self._skip_by_stats(chunks, where_stats)
         conds = [in_list(q(CHUNK_COL), (str(c["range_start"]) for c in chunks))]
         if space_key is not None:
             conds += self._space_conds(space_key, chunks)
-        conds += self._time_bound_sql(lo, hi)
+        bounds = [self._time_bound_sql(lo, hi) for lo, hi in ranges]
+        if len(bounds) == 1:
+            conds += bounds[0]
+        elif all(bounds):
+            conds.append("(" + " OR ".join(f"({' AND '.join(b)})" for b in bounds) + ")")
         fills = self._fill_sql(chunks)
         schema = self._data_schema()
         cols = [
@@ -2817,6 +2823,7 @@ class Hypertable:
             },
             cols=", ".join(cols) or "*",
             where=" AND ".join(conds),
+            filled=bool(fills),
         )
 
     def _skip_by_stats(self, chunks: list[dict], where_stats: dict) -> list[dict]:
@@ -3703,91 +3710,102 @@ class Hypertable:
         self.ts.catalog.chunk.delete_in("id", doomed_ids)
         return dropped
 
-    @_serialized_dml
     def delete_range(self, lo: Optional[int], hi: Optional[int]) -> int:
-        """Delete rows with ``lo <= internal_time < hi``.
+        """Delete rows with ``lo <= internal_time < hi``: a
+        :meth:`replace_ranges` with no new rows. As row-level DML it
+        invalidates watching caggs (``continuous_agg_dml_invalidate``),
+        unlike ``drop_chunks`` (the downsample-then-retain pattern)."""
+        return self.replace_ranges([(lo, hi)])
+
+    @_serialized_dml
+    def replace_ranges(self, ranges, rows: Optional[DataFrame] = None) -> int:
+        """Replace the rows in each disjoint ``[lo, hi)`` of ``ranges``
+        (internal units, ``None`` open) with ``rows`` (``None``: delete),
+        whose times lie inside the ranges — a cagg refresh's DELETE +
+        INSERT (``materialize.c:442-489``) for every range at once.
+        Returns the number of chunks touched.
 
         Chunk-wise, like compressed DML in the reference
-        (``tsl/src/compression/compression_dml.c``): chunks fully inside
-        the range are dropped as directories (O(1) per chunk); partially
-        overlapping chunks are rewritten with the complement predicate.
-        Never touches chunks outside the range.
+        (``tsl/src/compression/compression_dml.c``): ONE write stages
+        every chunk the ranges touch as its rows outside them plus its
+        new rows, one file per partition dir; each staged chunk swaps in
+        (:func:`compression._swap_dir`), a touched chunk left empty is
+        dropped, and no other chunk is read or written. Watching caggs
+        are invalidated over each range, clipped to the chunks it hit."""
+        from .compression import _swap_dir
 
-        As row-level DML, deletes invalidate watching caggs over the
-        deleted span (``continuous_agg_dml_invalidate``) — unlike
-        ``drop_chunks``, which deliberately preserves cagg contents (the
-        reference's downsample-then-retain pattern).
-        """
-        spark = self.ts.spark
-        n_dropped = 0
-        touched_lo: Optional[int] = None
-        touched_hi: Optional[int] = None
-        full_drop_ids: list = []
-        partial_starts: list = []
-        for c in self.chunks():
-            if hi is not None and c["range_start"] >= hi:
-                continue
-            if lo is not None and c["range_end"] <= lo:
-                continue
-            if c.get("frozen"):
-                raise PermissionError(
-                    f"chunk [{c['range_start']},{c['range_end']}) is frozen"
-                )
-            full = (lo is None or lo <= c["range_start"]) and (
-                hi is None or c["range_end"] <= hi
+        def hits(c, lo, hi):
+            return (hi is None or c["range_start"] < hi) and (lo is None or c["range_end"] > lo)
+
+        for lo, hi in ranges:
+            self._check_frozen(lo, None if hi is None else hi - 1)
+        touched = [c for c in self.chunks() if any(hits(c, *r) for r in ranges)]
+        # chunks a range only partly covers keep their other rows, with
+        # the partition values they were written with (space modulus)
+        partial = [
+            (c["range_start"], c["range_end"])
+            for c in touched
+            if not any(
+                (lo is None or lo <= c["range_start"]) and (hi is None or c["range_end"] <= hi)
+                for lo, hi in ranges
             )
-            c_lo = c["range_start"] if lo is None else max(lo, c["range_start"])
-            c_hi = c["range_end"] if hi is None else min(hi, c["range_end"])
-            touched_lo = c_lo if touched_lo is None else min(touched_lo, c_lo)
-            touched_hi = c_hi if touched_hi is None else max(touched_hi, c_hi)
-            path = self._chunk_glob(c)
-            if full:
+        ]
+        parts = []
+        if partial:
+            inside = " OR ".join(
+                f"({' AND '.join(self._time_bound_sql(*r)) or 'true'})" for r in ranges
+            )
+            sc = self._scan(ranges=partial, with_partition_cols=True).select(
+                where=f"NOT ({inside})"
+            )
+            parts.append(self.ts.scans.plan([sc], lambda views: sc.text(views[0])))
+        if rows is not None:
+            self._ensure_typed(rows)
+            rows = self._conform_input(rows)
+            want, have = {f.name for f in self._schema().fields}, set(rows.columns)
+            if want != have:
+                raise ValueError(f"schema mismatch: want {sorted(want)}, have {sorted(have)}")
+            parts.append(rows.select("*", *self._partition_exprs(rows)))
+        tmp = os.path.join(self.data_dir, ".tmp_rewrite")
+        shutil.rmtree(tmp, ignore_errors=True)
+        try:
+            if parts:
+                df = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+                pcols = self._partition_cols
+                self._null_guarded(
+                    lambda: df.repartition(*pcols).write.partitionBy(*pcols).parquet(tmp)
+                )
+            staged = {
+                int(d.split("=", 1)[1])
+                for d in (os.listdir(tmp) if os.path.isdir(tmp) else ())
+                if d.startswith(f"{CHUNK_COL}=")
+            }
+            # stale stats and columnstore status go before any data moves
+            self._mark_rewritten([c["range_start"] for c in touched])
+            for start in sorted(staged):
+                path = os.path.join(self.data_dir, f"{CHUNK_COL}={start}")
+                new = os.path.join(tmp, f"{CHUNK_COL}={start}")
                 if os.path.isdir(path):
-                    shutil.rmtree(path)
-                full_drop_ids.append(c["id"])
-                n_dropped += 1
-                continue
-            # partial overlap: rewrite the chunk keeping the complement
-            df = self._conform_chunk_df(c, self._chunk_reader().parquet(path))
-            keep = self._internal_time_expr(df)
-            cond = F.lit(False)
-            if lo is not None:
-                cond = cond | (keep < F.lit(lo))
-            if hi is not None:
-                cond = cond | (keep >= F.lit(hi))
-            kept = df.filter(cond)
-            writer = kept.write.mode("overwrite")
-            if self.row.get("space_column") and SPACE_COL in df.columns:
-                # preserve the _space= subdir layout — a flat rewrite
-                # makes the chunk invisible to space-pruned reads and
-                # mixes partition depths across chunks
-                writer = writer.partitionBy(SPACE_COL)
-            # dot-prefixed staging: a crashed rewrite must never leave a
-            # dir the _chunk= scan (run by every insert) chokes on
-            tmp = os.path.join(self.data_dir, f".tmp_rewrite_{c['range_start']}")
-            from .compression import _swap_dir
-
-            try:
-                writer.parquet(tmp)
-                _swap_dir(path, tmp)
-            except BaseException:
-                shutil.rmtree(tmp, ignore_errors=True)
-                raise
-            partial_starts.append(c["range_start"])
-            n_dropped += 1
-        # batched catalog transactions: per-chunk delete/update loops
-        # are O(touched · chunks) full-file rewrites — 5.6s of catalog
-        # I/O for a 35-chunk drop at 6,000 chunks in the r8 probe
-        self.ts.catalog.chunk.delete_in("id", full_drop_ids)
-        if partial_starts:
-            # invalidate catalog n_rows / skip stats / columnstore
-            # status like every other rewrite path — stale stats would
-            # keep answering the PRE-delete row count and range
-            self._mark_rewritten(partial_starts)
-            self._mark_fill_done(partial_starts)
-        if touched_lo is not None:
-            self._capture_invalidation(touched_lo, touched_hi - 1)
-        return n_dropped
+                    _swap_dir(path, new)
+                else:
+                    os.replace(new, path)
+            emptied = [c for c in touched if c["range_start"] not in staged]
+            for c in emptied:
+                shutil.rmtree(self._chunk_glob(c), ignore_errors=True)
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+        self.ts.catalog.chunk.delete_in("id", [c["id"] for c in emptied])
+        self._register_chunks_in_range(0, 0)
+        self._mark_fill_done([c["range_start"] for c in touched])
+        spans = touched + [c for c in self.chunks() if c["range_start"] in staged]
+        for lo, hi in ranges:
+            hit = [c for c in spans if hits(c, lo, hi)]
+            if hit:
+                a, b = min(c["range_start"] for c in hit), max(c["range_end"] for c in hit)
+                self._capture_invalidation(
+                    a if lo is None else max(a, lo), (b if hi is None else min(b, hi)) - 1
+                )
+        return len(touched)
 
     # ------------------------------------------------------------- stats
     def approximate_row_count(self, distributed_threshold: int = 256) -> int:

@@ -25,7 +25,7 @@ import itertools
 import math
 import os
 import threading
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from datetime import date, datetime
 from decimal import Decimal
 from typing import Callable, Optional
@@ -119,9 +119,38 @@ class Scan:
     files: dict
     cols: str
     where: str
+    #: ``cols`` fills added columns (CASE expressions over the raw ones)
+    filled: bool = False
+    #: a query block over the read's rows: ``(select items | None,
+    #: conjuncts, group items)`` (see :meth:`select`)
+    block: Optional[tuple] = None
+
+    def select(self, cols=None, where=None, group=None) -> "Scan":
+        """This read with a query block over its rows — projection
+        (``None``: the read's columns), filter and grouping in the
+        scan's own SELECT, so no CTE re-projects or re-filters the read.
+        Only a filter-only block takes another one."""
+        sel, conds, grp = self.block or (None, (), None)
+        assert sel is None and not grp, "a scan holds one projection"
+        return replace(self, block=(cols, (*conds, where) if where else conds, group))
 
     def text(self, view: str) -> str:
-        return f"SELECT {self.cols} FROM {q(view)} WHERE {self.where}"
+        base = f"SELECT {self.cols} FROM {q(view)} WHERE {self.where}"
+        if self.block is None:
+            return base
+        sel, conds, group = self.block
+        conds = [f"({x})" for x in conds]
+        if self.filled:
+            # the block reads the filled values, not the raw columns
+            src, cols = f"({base}) _s", "*"
+        else:
+            src, cols, conds = q(view), self.cols, [self.where, *conds]
+        body = f"SELECT {', '.join(sel) if sel else cols} FROM {src}"
+        if conds:
+            body += " WHERE " + " AND ".join(conds)
+        if group:
+            body += " GROUP BY " + ", ".join(group)
+        return body
 
 
 class Ctes:
@@ -134,35 +163,61 @@ class Ctes:
 
     def __init__(self, prefix: str = "_ts_cte"):
         self.prefix = prefix
-        self.items: list = []  # (name, body text | Scan)
+        self.items: list = []  # (name, body): text, Scan, or a list of them (UNION ALL)
+        self._n = itertools.count()
 
-    def add(self, body: str, name: Optional[str] = None) -> str:
-        name = name or f"{self.prefix}_{len(self.items)}"
+    def add(self, body, name: Optional[str] = None) -> str:
+        name = name or f"{self.prefix}_{next(self._n)}"
         self.items.append((name, body))
         return name
 
     def scan(self, s: Scan, name: Optional[str] = None) -> str:
-        return self.add(s, name)  # type: ignore[arg-type]
+        return self.add(s, name)
+
+    def union(self, rels: list, name: Optional[str] = None) -> str:
+        """``UNION ALL`` of ``rels``, relations of this chain that only
+        the union reads: their bodies move into its CTE, one nesting
+        level less for Spark's analyzer. One unnamed relation stays as
+        it is."""
+        if len(rels) == 1 and name is None:
+            return rels[0]
+        bodies = dict(self.items)
+        self.items = [it for it in self.items if it[0] not in rels]
+        return self.add([bodies[r] for r in rels], name)
 
     @property
     def scans(self) -> list:
-        return [b for _, b in self.items if isinstance(b, Scan)]
+        return [
+            b
+            for _, body in self.items
+            for b in (body if isinstance(body, list) else [body])
+            if isinstance(b, Scan)
+        ]
 
-    def render(self, views: list) -> str:
-        """``name AS (body), …`` with each scan over its view."""
+    def render(self, views: list, final: Optional[str] = None) -> str:
+        """``name AS (body), …`` with each scan over its view — or, with
+        ``final``, the statement ``WITH <chain> <final>``, where a
+        ``final`` that reads the chain's last CTE as it is becomes that
+        CTE's own body."""
         it = iter(views)
-        return ", ".join(
-            f"{n} AS ({b.text(next(it)) if isinstance(b, Scan) else b})"
+
+        def text(b) -> str:
+            return b.text(next(it)) if isinstance(b, Scan) else b
+
+        bodies = [
+            (n, " UNION ALL ".join(map(text, b)) if isinstance(b, list) else text(b))
             for n, b in self.items
-        )
+        ]
+        if final is not None and bodies and final == f"SELECT * FROM {bodies[-1][0]}":
+            final = bodies.pop()[1]
+        chain = ", ".join(f"{n} AS ({t})" for n, t in bodies)
+        if final is None:
+            return chain
+        return f"WITH {chain} {final}" if bodies else final
 
     def plan(self, ts, final: str) -> DataFrame:
-        """``WITH <chain> <final>`` in one ``spark.sql`` call."""
-        if not self.items:
-            return ts.spark.sql(final)
-        return ts.scans.plan(
-            self.scans, lambda views: f"WITH {self.render(views)} {final}"
-        )
+        """:meth:`render` in one ``spark.sql`` call."""
+        return ts.scans.plan(self.scans, lambda views: self.render(views, final))
 
 
 def over_frame(df: DataFrame, build: Callable) -> DataFrame:
@@ -172,7 +227,7 @@ def over_frame(df: DataFrame, build: Callable) -> DataFrame:
     builders the cagg path composes."""
     c = Ctes("_df")
     out = build(c, "{_src}")
-    return df.sparkSession.sql(f"WITH {c.render([])} SELECT * FROM {out}", _src=df)
+    return df.sparkSession.sql(c.render([], f"SELECT * FROM {out}"), _src=df)
 
 
 @dataclass

@@ -62,8 +62,8 @@ def _session_fn(key, pdf_iter, state: GroupState):
     """Session builder: walk the batch's timestamps in order, splitting
     wherever the inactivity gap is exceeded (also against carried state);
     every closed session is emitted, the trailing open one stays in
-    state. A processing-time timeout flushes a session that never sees
-    another event."""
+    state. An event-time timeout flushes a session that never sees
+    another event once the watermark passes its last event by the gap."""
     gap_us = 30 * 60 * 1_000_000  # 30 min
     if state.hasTimedOut:
         start, last, n = state.get
@@ -100,7 +100,7 @@ def _session_fn(key, pdf_iter, state: GroupState):
     closed, cur = (merged[:-1], merged[-1]) if merged else ([], None)
     if cur is not None:
         state.update(cur)
-        state.setTimeoutDuration(60 * 60 * 1000)  # 1h processing-time flush
+        state.setTimeoutTimestamp((cur[1] + gap_us) // 1000)
     if closed:
         yield pd.DataFrame(
             {
@@ -117,15 +117,22 @@ def gap_sessions(stream_df: DataFrame, key_col: str, time_col: str = "ts") -> Da
     windows with a 30-minute inactivity gap — an operator the reference
     cannot express at all (no session windows, SURVEY §2.8) and Spark's
     built-in ``session_window`` can, but this demonstrates the arbitrary-
-    state escape hatch for operators beyond the built-ins."""
+    state escape hatch for operators beyond the built-ins.
+
+    Sessions close on event time: the watermark trails the newest
+    ``time_col`` by the gap (later rows are dropped), and an open session
+    is emitted once the watermark passes its last event by the gap. An
+    ``availableNow`` query therefore ends by itself, leaving the sessions
+    its input has not closed in state."""
     return (
         stream_df.select(F.col(key_col).cast("string").alias("key"), F.col(time_col).alias("ts"))
+        .withWatermark("ts", "30 minutes")  # the session gap
         .groupBy("key")
         .applyInPandasWithState(
             _session_fn,
             outputStructType=_SESSION_SCHEMA,
             stateStructType=_STATE_SCHEMA,
             outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )

@@ -25,9 +25,6 @@ sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tests"))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-# data-derived oracle text (q_ann_pq inlines trained codebooks) must be
-# built from the SAME parquet the queries run against
-os.environ.setdefault("SPARK_GRAFT_ORACLE_SF_DIR", SF_DIR)
 TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings"

@@ -2,15 +2,19 @@ import os
 import sys
 
 import pytest
+from hypothesis import settings
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from timescaledb_spark.session import build_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-# data-derived oracles (q_ann_pq inlines trained codebooks) must build
-# against the SAME parquet the tests query
-os.environ.setdefault("SPARK_GRAFT_ORACLE_SF_DIR", SF_DIR)
+
+# property tests draw the same examples on every run, so a failure
+# reproduces and two runs of the suite are comparable
+settings.register_profile("reproducible", derandomize=True)
+settings.load_profile("reproducible")
+
 TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings"

@@ -64,9 +64,8 @@ _ORACLE_RESULTS: dict = {}
 def oracle_rows(con, sql: str):
     """:func:`duck_rows` memoized by connection and SQL text — only for
     statements over the session's read-only parquet views (conftest
-    ``duck``), whose answer cannot change within a run. The heavy gate
-    oracles (``q_curate``, ``q_dedup_keep_best``: ~50 s each at sf0.001)
-    are checked by their own test and by the entry mirror."""
+    ``duck``), whose answer cannot change within a run — so an oracle
+    that several tests check runs once per session."""
     key = (id(con), sql)
     if key not in _ORACLE_RESULTS:
         _ORACLE_RESULTS[key] = (con, duck_rows(con, sql))

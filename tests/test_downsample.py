@@ -6,7 +6,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from timescaledb_spark.pipeline.downsample import _lttb_numpy, lttb
+from timescaledb_spark.functions.downsample import _lttb_numpy, lttb
 
 
 def _reference(x, y, n_out):
@@ -138,7 +138,7 @@ def test_lttb_null_keys_form_one_series(spark):
 
     from pyspark.sql import functions as F
 
-    from timescaledb_spark.pipeline.downsample import lttb
+    from timescaledb_spark.functions.downsample import lttb
 
     n = 200
     pdf = pd.DataFrame(

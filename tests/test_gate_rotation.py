@@ -28,7 +28,13 @@ def test_rotated_out_queries_recently_green():
         assert not tail or len(order) <= GATE_WINDOW
         return
     last_round = max(r for r, _ in hist.values())
-    period = max(2, math.ceil(len(tail) / GATE_WINDOW))
+    # the recorded rounds rotated through the registry of their time, and
+    # gates removed since still took window slots in them: size the period
+    # by every gate the last recorded rotation cycled through (the same as
+    # the tail alone while the history names only registered gates)
+    cycle = math.ceil(len(set(order) | set(hist)) / GATE_WINDOW)
+    cycled = set(order) | {n for n, (r, _) in hist.items() if r > last_round - cycle}
+    period = max(2, math.ceil((len(cycled) - GATE_WINDOW) / GATE_WINDOW))
     stale = [
         n
         for n in tail

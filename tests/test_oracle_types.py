@@ -46,10 +46,9 @@ def test_no_lossy_oracle_result_types(duck):
 
 #: Nested result types the driver's canonicalizer cannot sort —
 #: pandas ``sort_values`` raises ``TypeError: unhashable type: 'list'``
-#: on LIST/STRUCT/MAP columns.  This errored q_bpe_encode /
-#: q_unigram_encode / q_tokenize_pack in round 16; the convention is to
-#: flatten per-position in the gate select (posexplode + LATERAL
-#: unnest), as q_quantize_embeddings does.
+#: on LIST/STRUCT/MAP columns (this errored three gates in round 16);
+#: the convention is to flatten per-position in the gate select
+#: (posexplode + LATERAL unnest).
 _UNSORTABLE = re.compile(r"(\[\]$|^(STRUCT|MAP|LIST|UNION))", re.I)
 
 

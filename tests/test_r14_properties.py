@@ -1,8 +1,8 @@
 """Round-14 property tests: COPY BINARY round-trip over arbitrary typed
-rows, chunk_documents coverage/partition invariants, temperature_rates
-algebra — pure-Python models, no Spark jobs in the hypothesis loops
-(the established property-test discipline: drive the deterministic
-kernel hard, gate the distributed shape once elsewhere)."""
+rows and sliding-window chunk-grid coverage/partition invariants —
+pure-Python models, no Spark jobs in the hypothesis loops (the
+established property-test discipline: drive the deterministic kernel
+hard, gate the distributed shape once elsewhere)."""
 
 import datetime
 import math
@@ -10,7 +10,6 @@ import math
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import types as T
 
-from timescaledb_spark.pipeline.sampling import temperature_rates
 from timescaledb_spark.sources.pgcopy import (
     iter_pgcopy_tuples,
     write_pgcopy,
@@ -45,7 +44,7 @@ def test_pgcopy_roundtrip_property(spark, rows):
     assert got == rows
 
 
-# ---- chunk_documents grid model ----------------------------------------
+# ---- sliding-window chunk grid model ----------------------------------------
 
 
 def _starts_model(n, window, stride):
@@ -84,67 +83,8 @@ def test_chunk_grid_invariants(n, window, data):
         assert total == n
 
 
-def test_chunk_grid_model_matches_engine(spark):
-    """The pure model above IS the engine's grid: compare on a spread
-    of (n, window, stride) through the real Spark operator once."""
-    from pyspark.sql import functions as F
-
-    from timescaledb_spark.pipeline.textproc import chunk_documents
-
-    cases = [(0, 4, 3), (1, 4, 3), (4, 4, 3), (5, 4, 3), (10, 4, 4),
-             (10, 4, 2), (9, 3, 2), (7, 7, 1)]
-    rows = [
-        (i, " ".join(f"t{k}" for k in range(n)))
-        for i, (n, _w, _s) in enumerate(cases)
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    for i, (n, w, s) in enumerate(cases):
-        got = sorted(
-            r["chunk_idx"]
-            for r in chunk_documents(
-                df.filter(F.col("doc_id") == i), window=w, stride=s
-            ).collect()
-        )
-        assert got == list(range(len(_starts_model(n, w, s)))), (n, w, s)
-
-
 # ---- temperature_rates algebra ------------------------------------------
 
 _COUNTS = st.dictionaries(
     st.text(min_size=1, max_size=6), st.integers(0, 10**9), max_size=8
 )
-
-
-@settings(max_examples=100, deadline=None)
-@given(_COUNTS, st.floats(0, 3, allow_subnormal=False), st.floats(0, 4, allow_subnormal=False))
-def test_temperature_rates_properties(counts, alpha, epochs):
-    rates = temperature_rates(counts, alpha, epochs)
-    kept = {s: n for s, n in counts.items() if n > 0}
-    assert set(rates) == set(kept)
-    if not kept:
-        return
-    n = sum(kept.values())
-    # expected emitted rows == epochs * N
-    assert math.isclose(
-        sum(rates[s] * kept[s] for s in kept),
-        epochs * n,
-        rel_tol=1e-9,
-        abs_tol=1e-12,
-    )
-    # alpha == 1 -> uniform epochs
-    if alpha == 1.0:
-        assert all(
-            math.isclose(v, epochs, rel_tol=1e-9) for v in rates.values()
-        )
-    # rates are non-negative and zero-count sources dropped
-    assert all(v >= 0 for v in rates.values())
-
-
-def test_chunk_rejects_gappy_stride(spark):
-    import pytest as _pt
-
-    from timescaledb_spark.pipeline.textproc import chunk_documents
-
-    df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    with _pt.raises(ValueError, match="stride"):
-        chunk_documents(df, window=2, stride=3)

@@ -5,11 +5,13 @@ with another schema."""
 from __future__ import annotations
 
 import os
+import shutil
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 
 from timescaledb_spark.sources.testdata import _file_schema
+from timescaledb_spark.streaming import replay
 from timescaledb_spark.streaming.replay import _read_replay_dir
 
 
@@ -37,3 +39,32 @@ def test_replay_schema_follows_rewrite(spark, tmp_path):
     assert _read_replay_dir(spark, str(d), "src").columns == ["ts", "x"]
     _write(part, pa.table({"ts": ts, "x": [1], "y": ["z"]}))
     assert _read_replay_dir(spark, str(d), "src").columns == ["ts", "x", "y"]
+
+
+def test_replay_restaged_dir_reads_new_schema(spark, tmp_path, monkeypatch):
+    """A staged replay dir that is removed and staged again at the same
+    path, from a source whose schema changed, streams the new schema."""
+    src = tmp_path / "src"
+    src.mkdir()
+    stage = str(tmp_path / "stage")
+
+    def same_path(prefix=""):
+        os.makedirs(stage)
+        return stage
+
+    monkeypatch.setattr(replay.tempfile, "mkdtemp", same_path)
+    monkeypatch.setattr(replay, "_REPLAY_DIRS", {})
+    ts = pa.array([1_704_067_200_000_000], pa.timestamp("us"))
+    pq.write_table(
+        pa.table({"ts": ts, "event_type": ["a"], "x": [1]}),
+        str(src / "ev.parquet"),
+    )
+    got = replay.heartbeat_stream(spark, str(src), "ev").columns
+    assert got == ["ts", "event_type", "x"]
+    shutil.rmtree(stage)
+    pq.write_table(
+        pa.table({"ts": ts, "event_type": ["a"], "x": [1], "y": ["z"]}),
+        str(src / "ev.parquet"),
+    )
+    got = replay.heartbeat_stream(spark, str(src), "ev").columns
+    assert got == ["ts", "event_type", "x", "y"]

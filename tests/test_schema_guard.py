@@ -54,10 +54,9 @@ def test_all_queries_analyze(spark, sf_dir):
 #: non-SQL-expressible ops: the driver runs a rows-only check for
 #: these, and their correctness lives in dedicated tests instead —
 #: keep this list deliberate and short, and document WHY per entry
-# empty since round 7: q_ann_pq gained an inlined-codebook ADC oracle
-# and q_lttb a recursive-CTE oracle — every registered query now has a
-# DuckDB oracle; keep the guard so a future oracle-less query must be
-# exempted HERE with a written justification
+# empty since round 7 (q_lttb gained a recursive-CTE oracle): every
+# registered query has a DuckDB oracle; keep the guard so a future
+# oracle-less query must be exempted HERE with a written justification
 ROWS_ONLY_EXEMPT: set = set()
 
 

@@ -1,71 +1,12 @@
-"""Skew utilities (salted agg/join) and space-dimension chunk exclusion.
-
-Probe conclusions these tests pin semantics for (scripts/scale_probe.py,
-50%-hot-key): AQE skew-join splitting matched or beat salted_join every
-round (r6: 2.56s vs 3.08s) — the documented guidance is AQE for joins,
-salting for aggregations whose partial state can't map-side compress
-(r6 measured 3.5x there); see pipeline/skew.py's module docstring."""
+"""Space-dimension chunk exclusion."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from timescaledb_spark.pipeline.skew import salted_agg, salted_join
 from timescaledb_spark.plans import scanned_paths
 from timescaledb_spark.session import TSSession
 
 T0_US = 1704067200000000
-
-
-def test_salted_agg_matches_plain(spark):
-    # 100k rows, 90% on one hot key
-    df = spark.range(100_000).select(
-        F.when(F.col("id") % 10 < 9, "hot").otherwise(
-            F.concat(F.lit("k"), F.col("id") % 50)
-        ).alias("k"),
-        (F.col("id") % 997).cast("double").alias("v"),
-    )
-    got = {
-        r["k"]: (r["n"], r["s"], r["mn"], r["mx"])
-        for r in salted_agg(
-            df, ["k"], {"n": ("count", "v"), "s": ("sum", "v"), "mn": ("min", "v"), "mx": ("max", "v")}
-        ).collect()
-    }
-    want = {
-        r["k"]: (r["n"], r["s"], r["mn"], r["mx"])
-        for r in df.groupBy("k")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("v").alias("s"),
-            F.min("v").alias("mn"),
-            F.max("v").alias("mx"),
-        )
-        .collect()
-    }
-    assert got == want
-    with pytest.raises(ValueError, match="non-mergeable"):
-        salted_agg(df, ["k"], {"a": ("avg", "v")})
-
-
-def test_salted_join_matches_plain(spark):
-    big = spark.range(50_000).select(
-        F.when(F.col("id") % 5 < 4, 0).otherwise(F.col("id") % 100).alias("k"),
-        F.col("id").alias("payload"),
-    )
-    small = spark.range(100).select(
-        F.col("id").alias("k"), (F.col("id") * 10).alias("dim")
-    )
-    got = salted_join(big, small, ["k"], salt_n=8)
-    want = big.join(small, ["k"])
-    assert got.count() == want.count() == 50_000
-    assert (
-        got.agg(F.sum(F.col("payload") + F.col("dim"))).collect()[0][0]
-        == want.agg(F.sum(F.col("payload") + F.col("dim"))).collect()[0][0]
-    )
-    # left join keeps unmatched rows exactly once
-    small2 = small.filter(F.col("k") < 50)
-    got_l = salted_join(big, small2, ["k"], salt_n=8, how="left")
-    want_l = big.join(small2, ["k"], "left")
-    assert got_l.count() == want_l.count()
 
 
 def test_space_dimension_exclusion(spark, tmp_path):

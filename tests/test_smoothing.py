@@ -1,4 +1,4 @@
-"""ASAP smoothing (pipeline/smoothing.py): numpy-reference exactness
+"""ASAP smoothing (functions/smoothing.py): numpy-reference exactness
 and the algorithm's own contracts (roughness minimized among
 kurtosis-preserving candidate windows)."""
 
@@ -6,7 +6,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from timescaledb_spark.pipeline.smoothing import asap_smooth
+from timescaledb_spark.functions.smoothing import asap_smooth
 
 
 def _ref_asap(ts_us, vals, resolution, candidates):

@@ -139,45 +139,3 @@ def test_session_fn_late_event_forms_own_session():
     out2, st2 = run([carried[0] - 600_000_000], st2)  # 10 min before start
     assert out2 == []
     assert st2.get == (carried[0] - 600_000_000, carried[1], 6)
-
-
-def test_stream_dedup_cross_batch(spark, tmp_path):
-    """Duplicate keys arriving in LATER micro-batches are suppressed
-    while their state is inside the watermark horizon; distinct keys
-    all emit exactly once (maxFilesPerTrigger=1 forces the two files
-    into separate micro-batches)."""
-    from timescaledb_spark.streaming.dedup import stream_dedup
-
-    indir = str(tmp_path / "in")
-    os.makedirs(indir)
-    b1 = _rows(spark, [0, 10], device=0).union(_rows(spark, [5], device=1))
-    b1.coalesce(1).write.parquet(str(tmp_path / "b1"))
-    b2 = _rows(spark, [20], device=0).union(
-        _rows(spark, [25], device=1)
-    ).union(_rows(spark, [30], device=2))
-    b2.coalesce(1).write.parquet(str(tmp_path / "b2"))
-    import glob, shutil
-    for i, src in enumerate(("b1", "b2")):
-        (f,) = glob.glob(str(tmp_path / src / "part-*.parquet"))
-        dst = os.path.join(indir, f"part-{i}.parquet")
-        shutil.copy(f, dst)
-        os.utime(dst, (1_000_000_000 + i * 100, 1_000_000_000 + i * 100))
-
-    stream = (
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(indir)
-    )
-    ded = stream_dedup(stream, ["device"], delay="7 days").select("device")
-    q = (
-        ded.writeStream.format("memory")
-        .queryName("sdedup1")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ck1"))
-        .start()
-    )
-    q.awaitTermination(120)
-    assert q.lastProgress is not None
-    got = sorted(r["device"] for r in spark.sql("SELECT * FROM sdedup1").collect())
-    assert got == [0, 1, 2]

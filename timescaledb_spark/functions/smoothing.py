@@ -36,8 +36,7 @@ float sums previously straddled the output rounding's half boundary on
 w=8 windows); Spark ``kurtosis`` == DuckDB ``kurtosis_pop``
 (population excess — ulp-identical, verified); float metrics are
 rounded to 6 decimals in BOTH engines before any comparison/ordering
-so residual ulp noise can't flip the argmin (q_bm25's rounded-rank
-trick).
+so residual ulp noise can't flip the argmin.
 """
 
 from __future__ import annotations

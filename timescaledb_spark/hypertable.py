@@ -426,6 +426,8 @@ class Hypertable:
                     f"chunk [{c['range_start']},{c['range_end']}) of "
                     f"{self.name!r} is frozen"
                 )
+        from .compression import _swap_dir
+
         for c in self.chunks():
             path = self._chunk_glob(c)
             if not os.path.isdir(path):
@@ -439,8 +441,7 @@ class Hypertable:
             tmp = os.path.join(self.data_dir, f".tmp_dim_{c['range_start']}")
             try:
                 out.write.mode("overwrite").partitionBy(SPACE_COL).parquet(tmp)
-                shutil.rmtree(path)
-                os.replace(tmp, path)
+                _swap_dir(path, tmp)
             except BaseException:
                 shutil.rmtree(tmp, ignore_errors=True)
                 raise
@@ -1666,6 +1667,8 @@ class Hypertable:
         applies, so rows APPENDED later keep their explicit NULLs."""
         if not chunks:
             return
+        from .compression import _swap_dir
+
         for c in chunks:
             path = self._chunk_glob(c)
             if not os.path.isdir(path):
@@ -1681,8 +1684,7 @@ class Hypertable:
             )
             try:
                 writer.parquet(tmp)
-                shutil.rmtree(path)
-                os.replace(tmp, path)
+                _swap_dir(path, tmp)
             except BaseException:
                 shutil.rmtree(tmp, ignore_errors=True)
                 raise

@@ -33,14 +33,14 @@ from .functions import (
     time_bucket_int,
     to_unix_microseconds,
 )
+from .functions.smoothing import asap_smooth_sql
 from .sources import load_table
 
 ORIGIN_US = 946_857_600_000_000
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 # value: SQL string, or a zero-arg callable returning one (resolved at
-# oracle_sql() time — for oracles whose text embeds data-derived
-# constants, e.g. PQ codebooks inlined as VALUES)
+# oracle_sql() time, so building the text costs nothing at import)
 ORACLES: dict[str, object] = {}
 
 
@@ -2698,29 +2698,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return _ordered(QUERIES)
 
 
-_ORACLE_MEMO: dict[str, dict[str, str]] = {}
-
-
 def oracle_sql() -> dict[str, str]:
     _load_extra_inventories()
-    # callable oracles can be expensive (q_ann_pq reads parquet and
-    # trains PQ codebooks to inline them as VALUES) and are invoked by
-    # the driver plus several test modules — memoize per oracle-data
-    # location, since that is the only input the callables consult
-    import os as _os
-
-    key = _os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "")
-    if key not in _ORACLE_MEMO:
-        _ORACLE_MEMO[key] = {
-            k: (v() if callable(v) else v) for k, v in ORACLES.items()
-        }
-    elif len(_ORACLE_MEMO[key]) != len(ORACLES):
-        # late registrations (another inventory module imported since)
-        memo = _ORACLE_MEMO[key]
-        for k, v in ORACLES.items():
-            if k not in memo:
-                memo[k] = v() if callable(v) else v
-    return _ordered(dict(_ORACLE_MEMO[key]))
+    return _ordered(
+        {k: (v() if callable(v) else v) for k, v in ORACLES.items()}
+    )
 
 
 def _load_extra_inventories() -> None:
@@ -2728,7 +2710,6 @@ def _load_extra_inventories() -> None:
     to avoid a circular import at module load)."""
     from . import (  # noqa: F401
         queries_lifecycle,
-        queries_pipeline,
         queries_relational,
         queries_sql,
     )
@@ -2959,3 +2940,121 @@ def q_max_n_by(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev, "value", ["ts", "event_id"], n=5, by=["event_type"],
         tiebreak=["event_id"],
     )
+
+
+# LTTB is deterministic, so the oracle replicates the ALGORITHM in a
+# recursive CTE: per series, bucket bounds are numpy's
+# linspace(1, n-1, n_out-1).astype(int64) (same float64 arithmetic:
+# i*((n-2)/22)+1 truncated), and each recursion step picks the
+# max-triangle-area point of bucket k against the previously kept point
+# and the NEXT bucket's average — ties broken by first index, matching
+# np.argmax. Buckets are 2-4 points here, where DuckDB's sequential avg
+# is bitwise-equal to numpy's mean, so the selection is exact.
+_LTTB_ORACLE = """
+WITH RECURSIVE
+pts AS (
+  SELECT user_id, ts, value,
+         row_number() OVER (PARTITION BY user_id ORDER BY ts) - 1 AS i,
+         CAST(epoch_us(ts) AS DOUBLE) AS x,
+         CAST(value AS DOUBLE) AS y
+  FROM events
+),
+ns AS (SELECT user_id, count(*) AS n FROM pts GROUP BY user_id),
+bounds AS (
+  SELECT ns.user_id, g.bi,
+         CAST(trunc(CASE WHEN g.bi = 22 THEN CAST(ns.n - 1 AS DOUBLE)
+              ELSE g.bi * ((ns.n - 2.0) / 22.0) + 1.0 END) AS BIGINT) AS b
+  FROM ns, (SELECT unnest(range(0, 23)) AS bi) g
+  WHERE ns.n > 24
+),
+buckets AS (
+  SELECT b0.user_id, b0.bi AS k, b0.b AS lo, b1.b AS hi,
+         b1.b AS nlo,
+         LEAST(COALESCE(b2.b, ns.n - 1), ns.n - 1) AS nhi,
+         ns.n AS n
+  FROM bounds b0
+  JOIN bounds b1 ON b1.user_id = b0.user_id AND b1.bi = b0.bi + 1
+  LEFT JOIN bounds b2 ON b2.user_id = b0.user_id AND b2.bi = b0.bi + 2
+  JOIN ns ON ns.user_id = b0.user_id
+  WHERE b0.bi <= 21
+),
+avgs AS (
+  SELECT bk.user_id, bk.k, avg(p.x) AS avx, avg(p.y) AS avy
+  FROM buckets bk JOIN pts p
+    ON p.user_id = bk.user_id AND p.i >= bk.nlo AND p.i < bk.nhi
+  GROUP BY bk.user_id, bk.k
+),
+avgs2 AS (
+  SELECT bk.user_id, bk.k,
+         COALESCE(a.avx, pl.x) AS avx, COALESCE(a.avy, pl.y) AS avy
+  FROM buckets bk
+  LEFT JOIN avgs a ON a.user_id = bk.user_id AND a.k = bk.k
+  JOIN pts pl ON pl.user_id = bk.user_id AND pl.i = bk.n - 1
+),
+rec AS (
+  SELECT user_id, 0 AS k, CAST(0 AS BIGINT) AS a FROM ns WHERE n > 24
+  UNION ALL
+  SELECT user_id, k + 1, j FROM (
+    SELECT r.user_id, r.k, p.i AS j,
+           row_number() OVER (
+             PARTITION BY r.user_id
+             ORDER BY abs((pa.x - av.avx) * (p.y - pa.y)
+                        - (pa.x - p.x) * (av.avy - pa.y)) DESC, p.i ASC
+           ) AS rn
+    FROM rec r
+    JOIN pts pa ON pa.user_id = r.user_id AND pa.i = r.a
+    JOIN buckets bk ON bk.user_id = r.user_id AND bk.k = r.k
+    JOIN avgs2 av ON av.user_id = r.user_id AND av.k = r.k
+    JOIN pts p ON p.user_id = r.user_id AND p.i >= bk.lo AND p.i < bk.hi
+    WHERE r.k <= 21
+  ) s WHERE s.rn = 1
+),
+kept AS (
+  SELECT user_id, a AS i FROM rec
+  UNION ALL
+  SELECT user_id, n - 1 AS i FROM ns WHERE n > 24
+  UNION ALL
+  SELECT p.user_id, p.i FROM pts p JOIN ns ON ns.user_id = p.user_id
+  WHERE ns.n <= 24
+)
+SELECT p.user_id, p.ts, p.value
+FROM pts p JOIN kept k ON k.user_id = p.user_id AND k.i = p.i
+"""
+
+
+@query("q_lttb", _LTTB_ORACLE)
+def q_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """largest_triangle_three_buckets downsample (toolkit lttb): each
+    user's series reduced to 24 representative points; first/last kept,
+    interior points maximize triangle area. Hash-gated against the
+    recursive-CTE oracle above (exact point selection), plus numpy
+    exactness tests in tests/test_downsample.py."""
+    from .functions.downsample import lttb
+
+    ev = load_table(spark, sf_dir, "events")
+    return lttb(ev, "ts", "value", n_out=24, by=["user_id"])
+
+
+@query(
+    "q_asap_smooth",
+    asap_smooth_sql(
+        table="events",
+        time_col="ts",
+        value_col="value",
+        id_cols="user_id",
+        resolution=24,
+    ),
+)
+def q_asap_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ASAP smoothing (round 9; toolkit asap_smooth, Rong & Bailis
+    VLDB'17): per-user series bucketed to 24 trailing points, then the
+    roughness-minimizing kurtosis-preserving moving-average window is
+    SEARCHED as part of the plan — candidate windows explode over the
+    downsampled points only, trailing averages via an rn-range join,
+    argmin on 6dp-rounded metrics so the oracle's selection can't drift.
+    The chosen window `w` is part of the output, so the hash gates the
+    search itself, not just the smoothing math."""
+    from .functions.smoothing import asap_smooth
+
+    ev = load_table(spark, sf_dir, "events")
+    return asap_smooth(ev, "ts", "value", resolution=24, by=["user_id"])

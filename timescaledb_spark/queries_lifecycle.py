@@ -603,37 +603,6 @@ def q_create_table_with(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q_stream_dedup",
-    """
-    SELECT DISTINCT user_id, event_type FROM events
-    """,
-)
-def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming first-arrival dedup (round 8): readStream ->
-    dropDuplicatesWithinWatermark on (user_id, event_type) -> memory
-    sink in APPEND mode under availableNow. State is one row per
-    in-horizon key and expires with the watermark — the scale-correct
-    streaming analog of exact_dedup (an unbounded dropDuplicates would
-    grow state forever at 100 TB/day). Only the key columns are
-    emitted, so replay order cannot leak into the compared values; the
-    oracle is the batch DISTINCT."""
-    import uuid as _uuid
-
-    from .streaming.dedup import stream_dedup
-    from .streaming.replay import SENTINEL, heartbeat_stream, run_to_memory_sink
-
-    sdf = heartbeat_stream(spark, sf_dir, "events")
-    ded = stream_dedup(
-        sdf.select("ts", "user_id", "event_type"),
-        ["user_id", "event_type"],
-        delay="365 days",
-    ).select("user_id", "event_type")
-    sink = f"stream_dedup_{_uuid.uuid4().hex[:8]}"
-    run_to_memory_sink(ded, sink)
-    return spark.table(sink).filter(F.col("event_type") != SENTINEL)
-
-
-@query(
     "q_copy_binary",
     """
     WITH src AS (
@@ -755,26 +724,3 @@ def q_uuid_hypertable(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.sum("value").alias("sum_v"),
     )
-
-
-@query(
-    "q_stream_near_dedup",
-    __import__("timescaledb_spark.streaming.neardedup", fromlist=["x"])
-    .stream_near_dedup_sql(max_hamming=3),
-)
-def q_stream_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming NEAR-duplicate dedup (round 16): the documents table
-    replayed as four id-ordered micro-batches through foreachBatch —
-    each batch is simhash-fingerprinted, batch-internal later
-    duplicates drop via the recursive-banded self-join, store matches
-    drop via a broadcast banded equi-join against the on-disk
-    fingerprint store of every earlier arrival, survivors append to
-    the sink and all fingerprints to the store. The oracle replays
-    fingerprints + the Hamming-pair closure and keeps every id that
-    never appears as a pair's LATER side — so the hash gates the
-    fingerprints, the banding completeness, and the arrival-order
-    drop rule across batch boundaries."""
-    from .streaming.neardedup import staged_id_stream, stream_near_dedup
-
-    sdf = staged_id_stream(spark, sf_dir, n_batches=4)
-    return stream_near_dedup(sdf, max_hamming=3)

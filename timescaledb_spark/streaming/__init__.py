@@ -1,5 +1,4 @@
 from .ingest import StreamIngest, stream_insert
-from .dedup import stream_dedup
 from .windows import gap_sessions, windowed_agg
 
 __all__ = [
@@ -7,5 +6,4 @@ __all__ = [
     "stream_insert",
     "windowed_agg",
     "gap_sessions",
-    "stream_dedup",
 ]

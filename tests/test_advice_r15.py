@@ -14,6 +14,9 @@
 4. INSERT .. RETURNING must return the rows actually inserted, pinned
    BEFORE the write — a self-referential source (INSERT INTO t
    SELECT .. FROM t) re-evaluated afterwards returns doubled rows.
+5. NB classification of NULL-text documents: F.size(NULL tokens) is -1,
+   which made the OOV count negative; NULL docs must score as
+   zero-token docs in both engines.
 """
 
 import datetime
@@ -162,6 +165,42 @@ def test_insert_returning_self_referential(ts, spark):
     got = sorted((r["v"] for r in ret.collect()))
     assert got == [11.0, 12.0]
     assert ts.get_hypertable("sr").read().count() == 4
+
+
+def test_nb_classify_null_text(spark):
+    import duckdb
+
+    from timescaledb_spark.pipeline.classify import (
+        nb_classify,
+        nb_classify_sql,
+    )
+
+    rows = [
+        (1, "the cat sat on the mat", "en"),
+        (2, "el gato se sentó", "es"),
+        (3, None, "en"),  # NULL text must score as a zero-token doc
+        (4, "the dog sat", "en"),
+        (5, "", "es"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id bigint, text string, lang string")
+    got = {
+        (r["doc_id"], r["pred"], round(r["score"], 6))
+        for r in nb_classify(df, vocab_cap=100).collect()
+    }
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE docs_null (doc_id BIGINT, text VARCHAR, lang VARCHAR)"
+    )
+    con.executemany("INSERT INTO docs_null VALUES (?, ?, ?)", rows)
+    want = {
+        (r[0], r[1], round(r[2], 6))
+        for r in con.execute(
+            nb_classify_sql(table="docs_null", vocab_cap=100)
+        ).fetchall()
+    }
+    assert got == want
+    # every doc classified, scores finite
+    assert {g[0] for g in got} == {1, 2, 3, 4, 5}
 
 
 def test_pgcopy_low_flag_bits_ignored(spark):

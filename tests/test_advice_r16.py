@@ -4,31 +4,19 @@
    count is derived as ``max_hamming + 1`` (a fixed 4-band layout is
    silently incomplete at radius >= 4 — pigeonhole only covers 3
    differing bits over 4 bands).
-2. ``registrable_domain`` must apply the "host IS a public suffix ->
-   NULL" rule BEFORE the multi-label tail patterns: with a nested-suffix
-   PSL (k12.ma.us and pvt.k12.ma.us) a host equal to the longer suffix
-   otherwise matches the shorter suffix's tail pattern.
-3. ``curate_corpus`` must not report NULL-text documents as 'kept':
+2. ``curate_corpus`` must not report NULL-text documents as 'kept':
    NULL stage flags skipped every verdict WHEN branch even though the
    survivor chain had already dropped the doc.
-4. ``shard_assign`` with a dict ``n_shards`` must raise on a split
-   outside the dict's key set instead of silently falling back to
-   ``pmod(key, min(n_shards))`` and mis-sharding the whole split.
 
 Plus the round-16 scale fix the advice motivated: recursive re-banding
 of oversized buckets keeps the candidate set complete while bounding
 bucket sizes (verified against brute force with max_bucket=1).
 """
 
-import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
 from timescaledb_spark.pipeline.dedup import banded_hamming_pairs
-from timescaledb_spark.pipeline.urlfilter import (
-    registrable_domain,
-    registrable_domain_sql,
-)
 
 
 def _brute_pairs(hashes, k):
@@ -96,34 +84,6 @@ def test_recursive_rebanding_matches_unbounded(spark):
     assert got == _brute_pairs(hashes, 2)
 
 
-NESTED_PSL = ("us", "k12.ma.us", "pvt.k12.ma.us", "com")
-
-
-def test_nested_suffix_null_rule_first(spark, duck):
-    cases = [
-        ("pvt.k12.ma.us", None),        # IS the longer suffix -> NULL
-        ("k12.ma.us", None),            # IS the shorter suffix -> NULL
-        ("x.pvt.k12.ma.us", "x.pvt.k12.ma.us"),
-        ("school.k12.ma.us", "school.k12.ma.us"),
-        ("a.school.k12.ma.us", "school.k12.ma.us"),
-        ("boston.ma.us", "ma.us"),      # PSL default rule under 'us'
-    ]
-    df = spark.createDataFrame([(h,) for h, _ in cases], "h string")
-    got = df.select(
-        "h", registrable_domain("h", NESTED_PSL).alias("d")
-    ).collect()
-    spark_map = {r["h"]: r["d"] for r in got}
-    sql = registrable_domain_sql("h", NESTED_PSL)
-    hosts = ", ".join(f"('{h}')" for h, _ in cases)
-    duck_rows = duck.execute(
-        f"SELECT h, {sql} AS d FROM (VALUES {hosts}) t(h)"
-    ).fetchall()
-    duck_map = dict(duck_rows)
-    for h, want in cases:
-        assert spark_map[h] == want, (h, spark_map[h], want)
-        assert duck_map[h] == want, (h, duck_map[h], want)
-
-
 def test_curate_null_text_not_kept(spark, duck):
     from timescaledb_spark.pipeline.curate import (
         curate_corpus,
@@ -157,32 +117,3 @@ def test_curate_null_text_not_kept(spark, duck):
     }
     assert oracle == got
     duck.execute("DROP TABLE _adv16")
-
-
-def test_shard_assign_rejects_unknown_split(spark):
-    from timescaledb_spark.pipeline.export import shard_assign, shard_assign_sql
-
-    # static domain (weights keys) validated eagerly
-    with pytest.raises(ValueError, match="no n_shards entry"):
-        shard_assign(
-            spark.range(10).withColumnRenamed("id", "doc_id"),
-            n_shards={"train": 4},
-            weights={"train": 0.9, "val": 0.1},
-        )
-    with pytest.raises(ValueError, match="no n_shards entry"):
-        shard_assign_sql(
-            n_shards={"train": 4}, weights={"train": 0.9, "val": 0.1}
-        )
-    # runtime domain (pre-existing split column): unknown split must
-    # abort the job, not silently fall back
-    df = spark.createDataFrame(
-        [(1, "train"), (2, "oops")], "doc_id bigint, split string"
-    )
-    out = shard_assign(df, n_shards={"train": 4})
-    with pytest.raises(Exception, match="split not in n_shards"):
-        out.collect()
-    # matching domains still assign deterministically
-    ok = shard_assign(
-        df.filter("split = 'train'"), n_shards={"train": 4}
-    ).collect()
-    assert all(0 <= r["shard"] < 4 for r in ok)

@@ -148,6 +148,37 @@ def test_uuidv7_ordering(spark):
     assert us == sorted(us)
 
 
+def test_decontaminate_small_fixture(spark):
+    """Decontamination flags exactly the docs sharing >= min_hits
+    distinct n-grams with the benchmark, and self-pairs count too when
+    the benchmark overlaps the corpus."""
+    from timescaledb_spark.pipeline.dedup import decontaminate
+
+    corpus = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog"),
+            (2, "quick brown fox jumps over something else entirely"),
+            (3, "completely unrelated text with no shared phrases here"),
+        ],
+        "doc_id long, text string",
+    )
+    bench = spark.createDataFrame(
+        [(100, "a quick brown fox jumps over the lazy dog today")],
+        "doc_id long, text string",
+    )
+    got = {
+        (r["doc_id"], r["bench_id"]): r["n_shared"]
+        for r in decontaminate(corpus, bench, ngram_k=3, min_hits=1).collect()
+    }
+    assert (1, 100) in got and (2, 100) in got
+    assert (3, 100) not in got
+    # doc 1 shares more trigrams with the benchmark than doc 2
+    assert got[(1, 100)] > got[(2, 100)]
+    # raising min_hits drops the weaker overlap
+    strict = decontaminate(corpus, bench, ngram_k=3, min_hits=got[(1, 100)])
+    assert {r["doc_id"] for r in strict.collect()} == {1}
+
+
 def test_interpolated_average_cross_bucket(spark):
     """A value carried across a bucket boundary must weight BOTH buckets
     (the toolkit interpolated_average contract) — the naive per-bucket

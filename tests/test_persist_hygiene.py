@@ -92,3 +92,21 @@ def test_gapfill_has_no_persist_at_all():
     window+explode formulation removed the need for the cache entirely."""
     src = open(os.path.join(PKG, "operators", "gapfill.py")).read()
     assert ".persist(" not in src
+
+
+def test_pipeline_has_no_cachemanager_pins():
+    """Pipeline operators return lazy frames, so no in-function release
+    point exists — any materialization they need must use
+    ``localCheckpoint`` (blocks freed by the ContextCleaner on GC), never
+    ``cache()``/``persist()`` (CacheManager holds a strong reference; a
+    scheduler driver running curation jobs for days would accumulate
+    pinned plans — the round-15 hygiene finding)."""
+    bad = [
+        f"pipeline/{rel}:{node.lineno} {node.name}"
+        for rel, node in _functions_with_persist()
+        if rel.startswith("pipeline") and not _has_finally_unpersist(node)
+    ]
+    assert not bad, (
+        "pipeline functions pinning without an in-function release "
+        f"(use localCheckpoint for frames returned lazily): {bad}"
+    )

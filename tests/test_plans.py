@@ -102,6 +102,15 @@ def test_insert_scans_source_once(spark, tmp_path):
     assert acc.value == 48, f"source evaluated {acc.value / 48:.1f}x"
 
 
+def test_embedding_lsh_no_cartesian(tsdata, sf_dir):
+    # the scale tier of embedding dedup must never cross-join the corpus
+    # (VERDICT r1 item 3); its O(n²) sibling is the verification baseline
+    df = queries()["q_dedup_embedding_lsh"](tsdata, sf_dir)
+    assert cartesian_count(df) == 0
+    baseline = queries()["q_dedup_embedding"](tsdata, sf_dir)
+    assert cartesian_count(baseline) >= 1  # sanity: the detector detects
+
+
 def test_broadcast_dims_no_extra_shuffle(tsdata, sf_dir):
     df = queries()["q_revenue_by_nation"](tsdata, sf_dir)
     assert broadcast_join_count(df) >= 2  # customer + nation broadcast
@@ -351,6 +360,45 @@ def test_cagg_refresh_scans_only_dirty_chunks(spark, tmp_path, monkeypatch):
     assert got.filter(
         (F.col("bucket") == "2024-01-03 05:00:00") & (F.col("n") == 2)
     ).count() == 1
+
+
+def test_quality_signals_zero_shuffle(tsdata, sf_dir):
+    """Repetition signals and PII redaction are pure projections — a
+    100 TB corpus must filter at scan speed with no exchange at all."""
+    for name in ("q_text_repetition", "q_pii_redact"):
+        df = queries()[name](tsdata, sf_dir)
+        assert shuffle_count(df) == 0, name
+        assert cartesian_count(df) == 0, name
+
+
+def test_line_dedup_shuffle_budget(tsdata, sf_dir):
+    """Corpus line dedup: spread + keeper agg + join + reassembly — at
+    most 4 linear exchanges and never a cartesian product."""
+    df = queries()["q_dedup_lines"](tsdata, sf_dir)
+    assert shuffle_count(df) <= 4
+    assert cartesian_count(df) == 0
+    assert "text" in read_schema_columns(df)
+
+
+def test_bm25_topk_plan(tsdata, sf_dir):
+    """BM25 is single-source-scan (r9): the stats pass materializes the
+    tokenized frame in the cache, so the scoring pass reads
+    InMemoryTableScan — never a second corpus scan — and stays a pure
+    projection + TakeOrderedAndProject (per-partition heaps, no global
+    sort). The returned top-k is a materialized local relation, so the
+    scoring plan is asserted via the module's debug hook."""
+    from timescaledb_spark.pipeline import search
+
+    df = queries()["q_bm25"](tsdata, sf_dir)
+    assert df.count() > 0
+    plan = search._LAST_SCORING_PLAN
+    assert "TakeOrderedAndProject" in plan
+    assert "InMemoryTableScan" in plan
+    # pass 2 must not re-scan the corpus from source: everything above
+    # the InMemoryRelation reads the cache (the relation's rendered
+    # CHILD plan below that line is the already-executed pass 1)
+    live = plan.split("InMemoryRelation")[0]
+    assert "FileScan" not in live and "Scan parquet" not in live
 
 
 def test_shuffle_count_excludes_reused_exchange(spark):

@@ -8,118 +8,6 @@ import re
 
 from hypothesis import given, settings, strategies as st
 
-from timescaledb_spark.pipeline.multimodal import (
-    _fallback_grid,
-    _grid_dhash,
-)
-
-# ---------------------------------------------------------------------------
-# registrable domain vs a reference PSL model
-# ---------------------------------------------------------------------------
-
-from timescaledb_spark.pipeline.urlfilter import PUBLIC_SUFFIXES
-
-_LABEL = st.text(
-    alphabet="abcdefghijklmnopqrstuvwxyz0123456789-", min_size=1, max_size=6
-).filter(lambda s: not s.startswith("-") and not s.endswith("-"))
-
-_HOSTS = st.one_of(
-    st.lists(_LABEL, min_size=1, max_size=4).map(".".join),
-    st.sampled_from(PUBLIC_SUFFIXES),
-    st.lists(_LABEL, min_size=1, max_size=2)
-    .map(".".join)
-    .flatmap(
-        lambda pre: st.sampled_from(PUBLIC_SUFFIXES).map(
-            lambda s: f"{pre}.{s}"
-        )
-    ),
-)
-
-
-def _model_domain(host: str) -> str | None:
-    """Independent reference implementation of the PSL-subset rule.
-    Longest-match first: a host that IS a public suffix (including a
-    multi-label one like 'github.io') has no registrable domain —
-    hypothesis caught a first draft of this model that matched the
-    shorter 'io' rule before the bare-suffix check."""
-    if host in PUBLIC_SUFFIXES:
-        return None
-    labels = host.split(".")
-    best = None
-    for s in PUBLIC_SUFFIXES:
-        k = s.count(".") + 1
-        if len(labels) >= k + 1 and ".".join(labels[-k:]) == s:
-            if best is None or k > best:
-                best = k
-    if best is not None:
-        return ".".join(labels[-(best + 1):])
-    if len(labels) >= 2:
-        return ".".join(labels[-2:])
-    return None
-
-
-@settings(max_examples=30, deadline=None)
-@given(st.lists(_HOSTS, min_size=1, max_size=40, unique=True))
-def test_registrable_domain_matches_model(spark, hosts):
-    from pyspark.sql import functions as F
-
-    from timescaledb_spark.pipeline.urlfilter import registrable_domain
-
-    df = spark.createDataFrame([(h,) for h in hosts], "host string")
-    got = {
-        r["host"]: r["d"]
-        for r in df.select(
-            "host", registrable_domain("host").alias("d")
-        ).collect()
-    }
-    for h in hosts:
-        assert got[h] == _model_domain(h), h
-
-
-# ---------------------------------------------------------------------------
-# dHash fallback grid: pure-Python invariants
-# ---------------------------------------------------------------------------
-
-
-@settings(max_examples=100, deadline=None)
-@given(st.binary(min_size=0, max_size=2000))
-def test_dhash_grid_invariants(payload):
-    g = _fallback_grid(payload)
-    assert len(g) == 72
-    assert all(0 <= v <= 255 for v in g)
-    h = _grid_dhash(g)
-    assert -(1 << 63) <= h < (1 << 63)
-    # scaling-ish invariance: the grid of a doubled payload (each byte
-    # repeated twice) has identical cell means when len % 72 == 0
-    if payload and len(payload) % 72 == 0:
-        doubled = bytes(b for b in payload for _ in range(2))
-        assert _fallback_grid(doubled) == g
-
-
-# ---------------------------------------------------------------------------
-# shard assignment: disjoint, exhaustive, bounded
-# ---------------------------------------------------------------------------
-
-
-@settings(max_examples=10, deadline=None)
-@given(
-    st.integers(min_value=1, max_value=16),
-    st.integers(min_value=1, max_value=9),
-)
-def test_shard_assign_partitioning(spark, n_train, n_val):
-    from timescaledb_spark.pipeline.export import shard_assign
-
-    df = spark.createDataFrame([(i,) for i in range(300)], "doc_id bigint")
-    out = shard_assign(
-        df,
-        {"train": n_train, "val": n_val},
-        weights={"train": 0.7, "val": 0.3},
-    ).collect()
-    assert len(out) == 300  # exhaustive, one row per input
-    for r in out:
-        lim = {"train": n_train, "val": n_val}[r["split"]]
-        assert 0 <= r["shard"] < lim
-
 
 # ---------------------------------------------------------------------------
 # line filter: character accounting and verdict consistency

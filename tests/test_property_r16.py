@@ -4,24 +4,12 @@ models, one batched Spark evaluation per example.
 
 - banded_hamming_pairs: exact Hamming closure for ANY radius 0..6 and
   ANY max_bucket (including 1, which forces recursion to the bottom),
-  vs a brute-force O(n²) model;
-- _banded_cross (the streaming near-dedup store join): complete at the
-  radius vs brute force;
-- the unigram Viterbi: score and segmentation vs the reference DP for
-  random words over random vocabularies (including unreachable words).
+  vs a brute-force O(n²) model.
 """
-
-import math
 
 from hypothesis import given, settings, strategies as st
 
 from timescaledb_spark.pipeline.dedup import banded_hamming_pairs
-from timescaledb_spark.pipeline.unigram import (
-    NEG,
-    NEG_HALF,
-    viterbi_segment,
-)
-from timescaledb_spark.streaming.neardedup import _banded_cross
 
 _SETTINGS = dict(max_examples=8, deadline=None)
 
@@ -79,93 +67,3 @@ def test_banded_pairs_any_radius_any_bucket(spark, hashes, k, max_bucket):
         ).collect()
     }
     assert got == _brute(hashes, k)
-
-
-@settings(**_SETTINGS)
-@given(
-    store=st.lists(
-        st.integers(min_value=0, max_value=(1 << 59) - 1),
-        min_size=1,
-        max_size=12,
-    ),
-    flips=st.lists(
-        st.tuples(st.integers(0, 11), st.lists(st.integers(0, 59), max_size=5)),
-        min_size=1,
-        max_size=12,
-    ),
-    k=st.integers(min_value=0, max_value=4),
-)
-def test_banded_cross_complete(spark, store, flips, k):
-    batch = [
-        store[i % len(store)] ^ sum(1 << b for b in set(bits))
-        for i, bits in flips
-    ]
-    sdf = spark.createDataFrame(
-        [(i, h) for i, h in enumerate(store)], "doc_id bigint, simhash bigint"
-    )
-    bdf = spark.createDataFrame(
-        [(1000 + i, h) for i, h in enumerate(batch)],
-        "doc_id bigint, simhash bigint",
-    )
-    got = {r["doc_id"] for r in _banded_cross(bdf, sdf, k).collect()}
-    want = {
-        1000 + i
-        for i, bh in enumerate(batch)
-        if any(bin(bh ^ sh).count("1") <= k for sh in store)
-    }
-    assert got == want
-
-
-_WORD = st.text(alphabet="abcd", min_size=1, max_size=10)
-
-
-@settings(**_SETTINGS)
-@given(
-    words=st.lists(_WORD, min_size=1, max_size=6, unique=True),
-    vocab=st.dictionaries(
-        st.text(alphabet="abcd", min_size=1, max_size=3),
-        st.integers(min_value=-2_000_000, max_value=-1),
-        min_size=1,
-        max_size=20,
-    ),
-)
-def test_viterbi_matches_reference(spark, words, vocab):
-    L = 4
-
-    def ref(w):
-        n = len(w)
-        alphas, bps = [0], [0]
-        for i in range(1, n + 1):
-            best = None
-            for j in range(max(0, i - L), i):
-                p = w[j:i]
-                if p in vocab and alphas[j] > NEG_HALF:
-                    c = (alphas[j] + vocab[p], j)
-                    if best is None or c > best:
-                        best = c
-            if best is None:
-                best = (NEG, i - 1)
-            alphas.append(best[0])
-            bps.append(best[1])
-        if alphas[n] <= NEG_HALF:
-            return alphas[n], None
-        cuts = [n]
-        while cuts[0] > 0:
-            cuts.insert(0, bps[cuts[0]])
-        return alphas[n], [
-            w[cuts[x] : cuts[x + 1]] for x in range(len(cuts) - 1)
-        ]
-
-    wf = spark.createDataFrame(
-        [(w, 1) for w in words], "word string, freq bigint"
-    )
-    lp = spark.createDataFrame(
-        list(vocab.items()), "piece string, lp bigint"
-    )
-    got = {
-        r["word"]: (r["score"], r["pieces"])
-        for r in viterbi_segment(wf, lp, max_piece_len=L).collect()
-    }
-    for w in words:
-        score, pieces = ref(w)
-        assert got[w] == (score, pieces), w

@@ -1,11 +1,9 @@
-"""Training-data pipeline operators: dedup, similarity search, text
-analysis, multimodal columns (BASELINE north-star items beyond the
-TimescaleDB reference surface)."""
+"""Training-data pipeline operators: text analysis, quality filters and
+dedup (BASELINE north-star items beyond the TimescaleDB reference
+surface)."""
 
-from .bpe import bpe_pair_counts, word_freq
 from .core import cosine, h60, minhash_signature, tokens, word_shingles
 from .curate import curate_corpus
-from .downsample import lttb
 from .dedup import (
     embedding_dup_pairs,
     exact_dedup,
@@ -14,26 +12,6 @@ from .dedup import (
     simhash64,
     simhash_pairs,
 )
-from .export import shard_assign, write_training_shards
-from .multimodal import (
-    ahash64,
-    decode_media,
-    dhash64,
-    media_dedup,
-    media_dup_pairs,
-    resize_media,
-    sample_frames,
-    with_payload,
-)
-from .sampling import hash_sample, split_assign, stratified_cap
-from .similarity import (
-    dequantize_cosine_topk,
-    hyperplane_bucket,
-    knn_bruteforce,
-    knn_ivf,
-    quantize_embeddings,
-)
-from .urlfilter import domain_filter, host_of, registrable_domain, synth_url
 from .textproc import (
     bpe_token_count,
     gopher_quality,
@@ -46,45 +24,24 @@ from .textproc import (
 )
 
 __all__ = [
-    "ahash64",
-    "bpe_pair_counts",
     "bpe_token_count",
     "cosine",
     "curate_corpus",
-    "decode_media",
-    "dequantize_cosine_topk",
-    "dhash64",
     "doc_fingerprint",
-    "domain_filter",
     "embedding_dup_pairs",
     "exact_dedup",
     "gopher_quality",
     "h60",
-    "host_of",
-    "hyperplane_bucket",
-    "knn_bruteforce",
-    "knn_ivf",
     "lang_id",
     "line_filter",
-    "lttb",
-    "media_dedup",
-    "media_dup_pairs",
     "minhash_lsh_pairs",
     "minhash_signature",
     "ngram_jaccard_pairs",
     "quality_score",
-    "quantize_embeddings",
-    "registrable_domain",
-    "sample_frames",
-    "shard_assign",
     "simhash64",
     "simhash_pairs",
-    "synth_url",
     "text_features",
     "token_count",
     "tokens",
-    "with_payload",
-    "word_freq",
     "word_shingles",
-    "write_training_shards",
 ]

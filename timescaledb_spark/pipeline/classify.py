@@ -436,7 +436,7 @@ def lr_train(
     update (one bounded collect per round, the bpe_train shape).
     Returns the learned ``dim + 2`` weights (bias first).
 
-    100 TB: train on a :func:`~.sampling.hash_sample` slice (the
+    100 TB: train on a hash-sampled slice (the
     design matrix is localCheckpoint-ed once; each round then scans
     only that bounded slice); the returned weights are 66 doubles —
     scoring the full corpus is a zero-shuffle projection.

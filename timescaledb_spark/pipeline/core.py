@@ -1,6 +1,6 @@
 """Cross-engine deterministic primitives for the training-data pipeline.
 
-Every pipeline operator (dedup, similarity, text analysis) is built on
+Every pipeline operator (dedup, search, text analysis) is built on
 hash functions whose output is *bit-identical* in Spark SQL and in the
 DuckDB oracle, so the driver's value-hash correctness gate can verify the
 full algorithm (not just row counts):

@@ -664,7 +664,7 @@ def embedding_dup_pairs(
     """Brute-force cosine near-dup pairs (verification baseline; O(n²)).
 
     At scale, prefilter with random-hyperplane LSH
-    (``similarity.hyperplane_bucket``) and verify only bucket collisions.
+    (:func:`embedding_dup_pairs_lsh`) and verify only bucket collisions.
 
     Per-row work (double cast + norm) is projected once per side before
     the join; each pair then costs a single dot-product fold instead of

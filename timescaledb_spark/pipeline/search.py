@@ -1,8 +1,7 @@
 """Full-text relevance scoring: distributed BM25 top-k retrieval.
 
 The classic Okapi BM25 (Robertson & Zaragoza 2009) over the shared
-pipeline tokenizer (``core.tokens``). Two-phase plan, mirroring the IVF
-pattern in ``similarity.py``:
+pipeline tokenizer (``core.tokens``). Two-phase plan:
 
 1. ONE corpus scan tokenizes and immediately reduces each document to
    the compact frame the formula needs — ``(id, dl, tf_t per query

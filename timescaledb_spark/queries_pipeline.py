@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .pipeline import dedup, multimodal, quality_lm, search, similarity, textproc
+from .pipeline import dedup, quality_lm, search, textproc
 from .queries import query
 from .sources import load_table
 
@@ -175,80 +175,6 @@ def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.embedding_dup_pairs_lsh(load_table(spark, sf_dir, "embeddings"))
 
 
-# ---------------------------------------------------------------------------
-# similarity search
-# ---------------------------------------------------------------------------
-
-@query("q_ann_bruteforce", similarity.knn_bruteforce_sql())
-def q_ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine top-5 for the first 5 vectors (broadcast queries,
-    single corpus scan)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.knn_bruteforce(emb, emb.filter(F.col("vec_id") < 5))
-
-
-@query("q_ann_ivf", similarity.knn_ivf_sql())
-def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN: nprobe=2 of 10 deterministic centroids — the scale path;
-    oracle replicates the algorithm (not the brute answer)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.knn_ivf(emb, emb.filter(F.col("vec_id") < 5))
-
-
-# ---------------------------------------------------------------------------
-# multimodal
-# ---------------------------------------------------------------------------
-
-@query("q_media_decode", multimodal.decode_media_sql())
-def q_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary payload decode via Arrow-batched mapInPandas (deterministic
-    fake decoder; real decoders slot into the same stage)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return multimodal.decode_media(multimodal.with_payload(docs))
-
-
-@query("q_media_frames", multimodal.sample_frames_sql())
-def q_media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame sampling over "video" payloads: per-256-byte frame rows with
-    md5 slice signatures, exploded inside the Pandas batch."""
-    docs = load_table(spark, sf_dir, "documents")
-    return multimodal.sample_frames(multimodal.with_payload(docs))
-
-
-# ---------------------------------------------------------------------------
-# training-sequence assembly (packing + context windows)
-# ---------------------------------------------------------------------------
-
-from .pipeline import packing  # noqa: E402
-
-
-@query(
-    "q_pack_sequences",
-    packing.pack_sequences_sql(budget_tokens=256, shard_by=("lang",)),
-)
-def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequential-fill sequence packing (concat-and-chunk) sharded by
-    language: each document is assigned the training sequence its
-    starting token offset falls in — pure window algebra, no UDFs;
-    sharding keeps the cumulative sum parallel at 100 TB."""
-    docs = load_table(spark, sf_dir, "documents")
-    return packing.pack_sequences(
-        docs, budget_tokens=256, shard_by=("lang",)
-    )
-
-
-@query(
-    "q_window_text",
-    packing.window_text_sql(width=120, stride=80),
-)
-def q_window_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Overlapping context windows (120 chars, stride 80): JVM-side
-    sequence + substring explode, one row per window; tails shorter
-    than the overlap still appear exactly once."""
-    docs = load_table(spark, sf_dir, "documents")
-    return packing.window_text(docs, width=120, stride=80)
-
-
 @query(
     "q_decontaminate",
     dedup.decontaminate_sql(
@@ -265,201 +191,6 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 97 == 0).select("doc_id", "text")
     return dedup.decontaminate(docs, bench, ngram_k=5, min_hits=2)
-
-
-def _ann_pq_oracle() -> str:
-    """PQ-ANN oracle: the codebooks are deterministic (seed=7, sample =
-    first 512 rows in file order), so train them HERE with the same
-    numpy body the gate uses (similarity._pq_train_numpy), inline them
-    as a VALUES table, and let DuckDB independently re-run the rest of
-    the pipeline — l2-normalize, per-subspace argmin encode, per-query
-    LUT, ADC distance sum, top-k rank. Selection margins measured on
-    this dataset: >=7e-6 between best and 2nd centroid, >=3e-3 between
-    adjacent ranked distances — float summation-order noise (~1e-16)
-    cannot flip any selection, and pq_dist itself passes the 10-digit
-    canon. Lazy (resolved at oracle_sql() time) because the SQL text
-    embeds data-derived constants."""
-    import os
-
-    import numpy as np
-    import pyarrow.parquet as papq
-
-    from .pipeline.similarity import _pq_train_numpy
-
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
-    t = papq.read_table(
-        os.path.join(sf_dir, "embeddings.parquet"), columns=["embedding"]
-    )
-    vecs = t["embedding"].to_pylist()[:512]
-    books = _pq_train_numpy(vecs, m=16, n_codes=32, iters=8, seed=7)
-    m, n_codes, sub = books.shape
-    vals = ",\n".join(
-        "(%d,%d,%s)" % (j, c, ",".join(repr(float(v)) for v in books[j, c]))
-        for j in range(m)
-        for c in range(n_codes)
-    )
-    dcols = ",".join(f"d{d}" for d in range(sub))
-
-    def sqdist(vec: str, nrm: str) -> str:
-        return " + ".join(
-            f"({vec}[j*{sub}+{d}+1]/{nrm} - d{d})*({vec}[j*{sub}+{d}+1]/{nrm} - d{d})"
-            for d in range(sub)
-        )
-
-    return f"""
-    WITH cb(j, c, {dcols}) AS (VALUES
-    {vals}
-    ),
-    cn AS (
-      SELECT vec_id, embedding::DOUBLE[] AS e,
-             CASE WHEN sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) = 0
-                  THEN 1.0
-                  ELSE sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
-             END AS nrm
-      FROM embeddings
-    ),
-    codes AS (
-      SELECT vec_id, j, c AS code FROM (
-        SELECT cn.vec_id, cb.j, cb.c,
-               row_number() OVER (
-                 PARTITION BY cn.vec_id, cb.j
-                 ORDER BY {sqdist('e', 'nrm')} ASC, cb.c ASC
-               ) AS rn
-        FROM cn CROSS JOIN cb
-      ) WHERE rn = 1
-    ),
-    lut AS (
-      SELECT cn.vec_id AS query_id, cb.j, cb.c,
-             {sqdist('e', 'nrm')} AS qd2
-      FROM cn CROSS JOIN cb
-      WHERE cn.vec_id < 5
-    ),
-    adc AS (
-      SELECT l.query_id, k.vec_id AS neighbor_id, sum(l.qd2) AS pq_dist
-      FROM codes k JOIN lut l ON l.j = k.j AND l.c = k.code
-      GROUP BY 1, 2
-    ),
-    ranked AS (
-      SELECT query_id, neighbor_id, pq_dist,
-             row_number() OVER (
-               PARTITION BY query_id ORDER BY pq_dist ASC, neighbor_id ASC
-             ) AS rank
-      FROM adc WHERE query_id != neighbor_id
-    )
-    SELECT query_id, neighbor_id, pq_dist, rank FROM ranked WHERE rank <= 5
-    """
-
-
-@query("q_ann_pq", _ann_pq_oracle)
-def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN (32x vector compression + ADC scan):
-    train codebooks on a bounded sample, encode the corpus to m small
-    codes, answer top-k from LUT sums over the codes — the corpus pass
-    never reads the raw vectors. Hash-gated against a DuckDB oracle that
-    re-runs encode+ADC from the same (deterministic, inlined) codebooks;
-    tests/test_pq.py additionally checks recall vs the exact baseline."""
-    from .pipeline.similarity import knn_pq, pq_encode, pq_train
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    books = pq_train(emb, m=16, n_codes=32, sample=512, iters=8)
-    codes = pq_encode(emb, books)
-    queries_df = emb.filter(F.col("vec_id") < 5)
-    return knn_pq(codes, queries_df, books, k=5)
-
-
-# LTTB is deterministic, so the oracle replicates the ALGORITHM in a
-# recursive CTE: per series, bucket bounds are numpy's
-# linspace(1, n-1, n_out-1).astype(int64) (same float64 arithmetic:
-# i*((n-2)/22)+1 truncated), and each recursion step picks the
-# max-triangle-area point of bucket k against the previously kept point
-# and the NEXT bucket's average — ties broken by first index, matching
-# np.argmax. Buckets are 2-4 points here, where DuckDB's sequential avg
-# is bitwise-equal to numpy's mean, so the selection is exact.
-_LTTB_ORACLE = """
-WITH RECURSIVE
-pts AS (
-  SELECT user_id, ts, value,
-         row_number() OVER (PARTITION BY user_id ORDER BY ts) - 1 AS i,
-         CAST(epoch_us(ts) AS DOUBLE) AS x,
-         CAST(value AS DOUBLE) AS y
-  FROM events
-),
-ns AS (SELECT user_id, count(*) AS n FROM pts GROUP BY user_id),
-bounds AS (
-  SELECT ns.user_id, g.bi,
-         CAST(trunc(CASE WHEN g.bi = 22 THEN CAST(ns.n - 1 AS DOUBLE)
-              ELSE g.bi * ((ns.n - 2.0) / 22.0) + 1.0 END) AS BIGINT) AS b
-  FROM ns, (SELECT unnest(range(0, 23)) AS bi) g
-  WHERE ns.n > 24
-),
-buckets AS (
-  SELECT b0.user_id, b0.bi AS k, b0.b AS lo, b1.b AS hi,
-         b1.b AS nlo,
-         LEAST(COALESCE(b2.b, ns.n - 1), ns.n - 1) AS nhi,
-         ns.n AS n
-  FROM bounds b0
-  JOIN bounds b1 ON b1.user_id = b0.user_id AND b1.bi = b0.bi + 1
-  LEFT JOIN bounds b2 ON b2.user_id = b0.user_id AND b2.bi = b0.bi + 2
-  JOIN ns ON ns.user_id = b0.user_id
-  WHERE b0.bi <= 21
-),
-avgs AS (
-  SELECT bk.user_id, bk.k, avg(p.x) AS avx, avg(p.y) AS avy
-  FROM buckets bk JOIN pts p
-    ON p.user_id = bk.user_id AND p.i >= bk.nlo AND p.i < bk.nhi
-  GROUP BY bk.user_id, bk.k
-),
-avgs2 AS (
-  SELECT bk.user_id, bk.k,
-         COALESCE(a.avx, pl.x) AS avx, COALESCE(a.avy, pl.y) AS avy
-  FROM buckets bk
-  LEFT JOIN avgs a ON a.user_id = bk.user_id AND a.k = bk.k
-  JOIN pts pl ON pl.user_id = bk.user_id AND pl.i = bk.n - 1
-),
-rec AS (
-  SELECT user_id, 0 AS k, CAST(0 AS BIGINT) AS a FROM ns WHERE n > 24
-  UNION ALL
-  SELECT user_id, k + 1, j FROM (
-    SELECT r.user_id, r.k, p.i AS j,
-           row_number() OVER (
-             PARTITION BY r.user_id
-             ORDER BY abs((pa.x - av.avx) * (p.y - pa.y)
-                        - (pa.x - p.x) * (av.avy - pa.y)) DESC, p.i ASC
-           ) AS rn
-    FROM rec r
-    JOIN pts pa ON pa.user_id = r.user_id AND pa.i = r.a
-    JOIN buckets bk ON bk.user_id = r.user_id AND bk.k = r.k
-    JOIN avgs2 av ON av.user_id = r.user_id AND av.k = r.k
-    JOIN pts p ON p.user_id = r.user_id AND p.i >= bk.lo AND p.i < bk.hi
-    WHERE r.k <= 21
-  ) s WHERE s.rn = 1
-),
-kept AS (
-  SELECT user_id, a AS i FROM rec
-  UNION ALL
-  SELECT user_id, n - 1 AS i FROM ns WHERE n > 24
-  UNION ALL
-  SELECT p.user_id, p.i FROM pts p JOIN ns ON ns.user_id = p.user_id
-  WHERE ns.n <= 24
-)
-SELECT p.user_id, p.ts, p.value
-FROM pts p JOIN kept k ON k.user_id = p.user_id AND k.i = p.i
-"""
-
-
-@query("q_lttb", _LTTB_ORACLE)
-def q_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """largest_triangle_three_buckets downsample (toolkit lttb): each
-    user's series reduced to 24 representative points; first/last kept,
-    interior points maximize triangle area. Hash-gated against the
-    recursive-CTE oracle above (exact point selection), plus numpy
-    exactness tests in tests/test_downsample.py."""
-    from .pipeline.downsample import lttb
-
-    ev = load_table(spark, sf_dir, "events")
-    return lttb(ev, "ts", "value", n_out=24, by=["user_id"])
 
 
 @query(
@@ -487,42 +218,6 @@ def q_text_hash_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs × FEAT_DIM."""
     docs = load_table(spark, sf_dir, "documents")
     return textproc.hash_features(docs)
-
-
-@query(
-    "q_sample_stratified",
-    __import__("timescaledb_spark.pipeline.sampling", fromlist=["x"])
-    .stratified_cap_sql(by=("lang", "source"), cap=7)
-    + " ORDER BY doc_id",
-)
-def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic stratified cap (round 8): at most 7 docs per
-    (lang, source) stratum, chosen by portable id-hash order — the
-    'cap per domain' rebalancing op; one window shuffle on the stratum
-    key."""
-    from .pipeline.sampling import stratified_cap
-
-    docs = load_table(spark, sf_dir, "documents")
-    return stratified_cap(docs, by=["lang", "source"], cap=7)
-
-
-@query(
-    "q_sample_split",
-    __import__("timescaledb_spark.pipeline.sampling", fromlist=["x"])
-    .split_assign_sql(
-        weights={"train": 0.8, "val": 0.1, "test": 0.1}, projection="doc_id"
-    ),
-)
-def q_sample_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic train/val/test assignment by id-hash (round 8):
-    stable across runs and engines, disjoint and exhaustive; pure
-    projection — zero shuffle."""
-    from .pipeline.sampling import split_assign
-
-    docs = load_table(spark, sf_dir, "documents")
-    return split_assign(
-        docs, {"train": 0.8, "val": 0.1, "test": 0.1}
-    ).select("doc_id", "split")
 
 
 _REP = textproc.repetition_signals_sql("text")
@@ -650,58 +345,6 @@ def q_text_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return chargram_logprob(docs, model)
 
 
-_MIX_RATES = {"src0": 2.5, "src1": 1.0, "src2": 0.4, "src3": 0.0}
-
-
-@query(
-    "q_source_mix",
-    __import__("timescaledb_spark.pipeline.sampling", fromlist=["x"])
-    .source_mix_sql(
-        source_expr="source",
-        rates=_MIX_RATES,
-        projection="doc_id, source, epoch",
-    ),
-)
-def q_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Epoch-weighted source mixing (round 9; the GPT-3/Llama training
-    recipe: each source seen `rate` epochs — full copies for floor(r)
-    plus a deterministic id-hash sample of the remainder, salted per
-    epoch). Projection + bounded explode + scan-speed filter: zero
-    shuffle, zero driver state."""
-    from .pipeline.sampling import source_mix
-
-    docs = load_table(spark, sf_dir, "documents")
-    return source_mix(docs, "source", _MIX_RATES).select(
-        "doc_id", "source", "epoch"
-    )
-
-
-@query(
-    "q_asap_smooth",
-    __import__("timescaledb_spark.pipeline.smoothing", fromlist=["x"])
-    .asap_smooth_sql(
-        table="events",
-        time_col="ts",
-        value_col="value",
-        id_cols="user_id",
-        resolution=24,
-    ),
-)
-def q_asap_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ASAP smoothing (round 9; toolkit asap_smooth, Rong & Bailis
-    VLDB'17): per-user series bucketed to 24 trailing points, then the
-    roughness-minimizing kurtosis-preserving moving-average window is
-    SEARCHED as part of the plan — candidate windows explode over the
-    downsampled points only, trailing averages via an rn-range join,
-    argmin on 6dp-rounded metrics so the oracle's selection can't drift.
-    The chosen window `w` is part of the output, so the hash gates the
-    search itself, not just the smoothing math."""
-    from .pipeline.smoothing import asap_smooth
-
-    ev = load_table(spark, sf_dir, "events")
-    return asap_smooth(ev, "ts", "value", resolution=24, by=["user_id"])
-
-
 @query(
     "q_semantic_dedup",
     dedup.semantic_dedup_sql(threshold=0.45, centroid_stride=50),
@@ -715,67 +358,6 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (id, centroid, is_kept) output)."""
     emb = load_table(spark, sf_dir, "embeddings")
     return dedup.semantic_dedup(emb, threshold=0.45, centroid_stride=50)
-
-
-def _temperature_mix_oracle() -> str:
-    """Data-derived oracle for q_temperature_mix: read the per-lang
-    counts straight from parquet, derive the SAME rates with the SAME
-    pure function the operator uses (integer counts -> identical float
-    math), and let DuckDB independently replay the salted-hash emit
-    decisions via source_mix_sql. Lazy (resolved at oracle_sql() time)
-    because the SQL text embeds the data-derived rates."""
-    import os
-
-    import pyarrow.parquet as papq
-
-    from .pipeline.sampling import source_mix_sql, temperature_rates
-
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
-    t = papq.read_table(
-        os.path.join(sf_dir, "documents.parquet"), columns=["lang"]
-    )
-    counts: dict = {}
-    for v in t["lang"].to_pylist():
-        counts[v] = counts.get(v, 0) + 1
-    rates = temperature_rates(counts, alpha=0.5, epochs_total=1.5)
-    inner = source_mix_sql(
-        table="documents",
-        source_expr="lang",
-        rates=rates,
-        salt="tmix",
-        projection="doc_id, lang, epoch, n_chars",
-    )
-    return (
-        "SELECT lang, epoch, CAST(count(*) AS BIGINT) AS n, "
-        "CAST(sum(n_chars) AS BIGINT) AS chars "
-        f"FROM ({inner}) GROUP BY 1, 2"
-    )
-
-
-@query("q_temperature_mix", _temperature_mix_oracle)
-def q_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-based source mixing (round 14; the multilingual
-    pretraining recipe — mBERT exponent-smoothed sampling / XLM
-    alpha=0.5: sample sources proportional to p^alpha so low-resource
-    languages are upweighted): per-lang rates derived from the corpus
-    in ONE bounded aggregation (driver state = the source list), then
-    the epoch-weighted deterministic mix — full copies for floor(r)
-    plus a salted id-hash sample of the remainder. Zero shuffle after
-    the stats pass. The oracle re-derives the rates from the same
-    counts and replays every hash decision in DuckDB, so the hash
-    gates the rate math AND the sampler."""
-    from .pipeline.sampling import temperature_mix
-
-    docs = load_table(spark, sf_dir, "documents")
-    out = temperature_mix(
-        docs, "lang", alpha=0.5, epochs_total=1.5, salt="tmix"
-    )
-    return out.groupBy("lang", "epoch").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("n_chars").alias("chars"),
-    )
 
 
 @query(
@@ -817,125 +399,6 @@ def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return chunk_documents(docs, window=64, stride=48)
-
-
-# corpus with controlled duplicates for the perceptual-dedup gate: the
-# base documents plus exact re-uploads (doc_id % 10 == 0) and
-# lightly-edited near copies (doc_id % 7 == 0, first character
-# uppercased) — deterministic and identically derivable in both engines
-_MEDIA_CORPUS_SQL = """
-    SELECT doc_id, text FROM documents
-    UNION ALL
-    SELECT doc_id + 100000 AS doc_id, text
-    FROM documents WHERE doc_id % 10 = 0
-    UNION ALL
-    SELECT doc_id + 200000 AS doc_id,
-           upper(substring(text, 1, 1)) || substring(text, 2) AS text
-    FROM documents WHERE doc_id % 7 = 0
-"""
-
-
-def _media_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    exact = docs.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 100000).alias("doc_id"), "text"
-    )
-    near = docs.filter(F.col("doc_id") % 7 == 0).select(
-        (F.col("doc_id") + 200000).alias("doc_id"),
-        F.concat(
-            F.upper(F.substring("text", 1, 1)),
-            F.expr("substring(text, 2)"),
-        ).alias("text"),
-    )
-    return docs.union(exact).union(near)
-
-
-@query(
-    "q_media_dedup",
-    multimodal.media_dedup_sql(table=f"({_MEDIA_CORPUS_SQL})"),
-)
-def q_media_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual-hash media dedup (round 15; bounded banding round 16):
-    64-bit dHash per payload (PIL decode when importable, deterministic
-    mean-byte grid otherwise), pigeonhole-banded into radius+1 keys with
-    recursive re-banding of oversized buckets (candidate volume stays
-    ~linear past 1e7 distinct fingerprints), verified with
-    bit_count(xor), resolved to connected components, keep-first
-    (component minimum id). The corpus injects exact re-uploads and
-    lightly-edited near copies so the gate exercises candidate
-    generation, verification, and cluster resolution end to end; the
-    oracle replays the hash, a complete one-level banding, and the
-    transitive closure."""
-    corpus = _media_corpus(spark, sf_dir)
-    return multimodal.media_dedup(multimodal.with_payload(corpus))
-
-
-@query(
-    "q_domain_filter",
-    __import__("timescaledb_spark.pipeline.urlfilter", fromlist=["x"])
-    .domain_filter_sql(block=("spam.net",), cap_per_domain=25)
-    .replace("\n", " "),
-)
-def q_domain_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL/domain-level curation filter (round 15; RefinedWeb §3.1 /
-    C4 §2.2): registrable-domain (eTLD+1) extraction as pure string
-    expressions (zero shuffle, no UDF), blocklist drop, and a
-    deterministic 25-docs-per-domain cap (one window shuffle). URLs are
-    doc_id-derived and exercise subdomain, mixed-case, multi-label
-    suffix, userinfo, port, unknown-TLD, and bare-suffix edges; the
-    oracle replays the whole chain."""
-    from .pipeline.urlfilter import domain_filter, synth_url
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", synth_url("doc_id").alias("url")
-    )
-    return domain_filter(
-        docs, block=["spam.net"], cap_per_domain=25
-    ).select("doc_id", "url", "domain")
-
-
-#: PSL-semantics gate fixtures: nested plain rules, wildcards, and
-#: exceptions, over hosts that exercise every precedence edge
-_PSL_GATE_RULES = (
-    "us", "ck", "jp", "com", "ma.us", "co.jp",
-    "k12.ma.us", "pvt.k12.ma.us",
-    "*.kawasaki.jp", "!city.kawasaki.jp", "*.ck", "!www.ck",
-)
-_PSL_GATE_HOSTS = (
-    "example.com", "kawasaki.jp", "foo.kawasaki.jp",
-    "a.foo.kawasaki.jp", "city.kawasaki.jp", "x.city.kawasaki.jp",
-    "www.ck", "sub.www.ck", "other.ck", "x.other.ck",
-    "pvt.k12.ma.us", "school.k12.ma.us", "a.school.k12.ma.us",
-    "boston.ma.us", "a.co.jp", "weird.internal",
-)
-
-
-@query(
-    "q_domain_filter_psl",
-    __import__("timescaledb_spark.pipeline.urlfilter", fromlist=["x"])
-    .domain_filter_sql(
-        url_expr=__import__(
-            "timescaledb_spark.pipeline.urlfilter", fromlist=["x"]
-        ).synth_url_sql(hosts=_PSL_GATE_HOSTS),
-        suffixes=_PSL_GATE_RULES,
-    )
-    .replace("\n", " "),
-)
-def q_domain_filter_psl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full-PSL registrable-domain semantics (round 16): wildcard rules
-    (any label + base is a public suffix), exception rules (the
-    exception IS the registrable domain and beats every other match),
-    nested plain rules, and the implicit * default — all as the same
-    scan-speed WHEN chain (one branch per label count). Zero shuffle;
-    the oracle replays the identical precedence chain."""
-    from .pipeline.urlfilter import domain_filter, synth_url
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", synth_url("doc_id", hosts=_PSL_GATE_HOSTS).alias("url")
-    )
-    return domain_filter(docs, suffixes=_PSL_GATE_RULES).select(
-        "doc_id", "url", "domain"
-    )
 
 
 _GQ = textproc.gopher_quality_sql("text")
@@ -1002,182 +465,6 @@ def q_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         lf["n_lines_removed"].alias("n_lines_removed"),
         lf["removed_char_frac"].alias("removed_char_frac"),
         lf["keep"].alias("keep"),
-    )
-
-
-@query("q_media_ahash", multimodal.ahash64_sql())
-def q_media_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """64-bit average perceptual hash per payload (round 15; the aHash
-    companion to q_media_dedup's dHash — absolute brightness vs the
-    grid mean instead of gradients). Single-scan mapInPandas, zero
-    shuffle; the oracle replays the grid, the integer mean threshold,
-    and the signed fold."""
-    docs = load_table(spark, sf_dir, "documents")
-    return multimodal.ahash64(multimodal.with_payload(docs))
-
-
-@query(
-    "q_shard_assign",
-    __import__("timescaledb_spark.pipeline.export", fromlist=["x"])
-    .shard_assign_sql(
-        n_shards={"train": 8, "val": 2, "test": 2},
-        weights={"train": 0.9, "val": 0.05, "test": 0.05},
-    ),
-)
-def q_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Training-shard export assignment (round 15; the materialize-the-
-    mixture stage): deterministic (split, shard) per document — split by
-    hash thresholds, shard by a salted hash mod the split's shard
-    count. Pure projection, zero shuffle; write_training_shards turns
-    this into one file per shard."""
-    from .pipeline.export import shard_assign
-
-    docs = load_table(spark, sf_dir, "documents")
-    return shard_assign(
-        docs,
-        n_shards={"train": 8, "val": 2, "test": 2},
-        weights={"train": 0.9, "val": 0.05, "test": 0.05},
-    ).select("doc_id", "split", "shard")
-
-
-@query(
-    "q_bpe_pairs",
-    __import__("timescaledb_spark.pipeline.bpe", fromlist=["x"])
-    .bpe_pair_counts_sql(top_k=100),
-)
-def q_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE-training pair counting (round 15; Sennrich et al. 2016
-    Algorithm 1, the first merge iteration): distinct-word frequency
-    table first (all later work bounded by vocabulary, not corpus),
-    then adjacent-symbol pairs with end-of-word markers, weighted by
-    word frequency — two map-combined shuffles total. Top-100 pairs
-    under the deterministic (count desc, pair asc) merge order."""
-    from .pipeline.bpe import bpe_pair_counts
-
-    docs = load_table(spark, sf_dir, "documents")
-    return bpe_pair_counts(docs, top_k=100)
-
-
-@query(
-    "q_bpe_train",
-    __import__("timescaledb_spark.pipeline.bpe", fromlist=["x"])
-    .bpe_train_sql(n_merges=50),
-)
-def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full iterative BPE training (round 16; Sennrich et al. 2016
-    Algorithm 1): 50 rounds of count-pairs → deterministic argmax →
-    apply-merge over the distinct-word table. Every round is
-    vocab-bounded (the corpus is scanned once, by the word-frequency
-    groupBy); the merge application is a single codegen string replace
-    under the doubled-separator symbol encoding. The oracle unrolls the
-    SAME 50 iterations as a materialized CTE chain, so the hash gates
-    the whole learned merge sequence — counts, tie-breaks, and the
-    greedy left-to-right merge application at every step."""
-    from .pipeline.bpe import bpe_train_df
-
-    docs = load_table(spark, sf_dir, "documents")
-    return bpe_train_df(docs, n_merges=50)
-
-
-#: fixed merge list for the segmentation gate (chained merges included:
-#: 'th' + 'e·' only fires after both component merges have applied)
-_SEG_MERGES = (
-    ("e", "·"),
-    ("t", "h"),
-    ("th", "e·"),
-    ("i", "n"),
-    ("a", "n"),
-    ("an", "d·"),
-    ("s", "·"),
-    ("e", "r"),
-    ("in", "g"),
-    ("o", "n"),
-)
-
-
-@query(
-    "q_bpe_segment",
-    __import__("timescaledb_spark.pipeline.bpe", fromlist=["x"])
-    .bpe_segment_sql(_SEG_MERGES),
-)
-def q_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE segmentation under a learned merge list (round 16): the
-    vocabulary table segmented by a 10-merge chain (including two-level
-    merges that only fire after their components) — one codegen replace
-    per merge, work bounded by the vocabulary. The oracle replays the
-    identical replace chain over the identical encoding."""
-    from .pipeline.bpe import bpe_segment
-
-    docs = load_table(spark, sf_dir, "documents")
-    return bpe_segment(docs, _SEG_MERGES)
-
-
-def _flatten_ids_sql(inner: str, keep: tuple, arr: str, val: str) -> str:
-    """Flatten an ``array<int>`` oracle column per-position for the hash
-    gate (the driver's canonicalizer cannot sort raw list columns —
-    same convention as q_quantize_embeddings). Outer semantics: a row
-    with an empty array survives with NULL (pos, val), matching Spark's
-    ``posexplode_outer``."""
-    keep_cols = ", ".join(f"_t.{c}" for c in keep)
-    return f"""
-    SELECT {keep_cols},
-           CAST(_u.p - 1 AS INT) AS pos,
-           _t.{arr}[_u.p] AS {val}
-    FROM ({inner}) _t
-    LEFT JOIN LATERAL (
-      SELECT unnest(range(1, len(_t.{arr}) + 1)) AS p
-    ) _u ON true
-    """
-
-
-@query(
-    "q_bpe_encode",
-    _flatten_ids_sql(
-        __import__("timescaledb_spark.pipeline.bpe", fromlist=["x"])
-        .bpe_encode_sql(_SEG_MERGES),
-        ("doc_id", "n_words", "n_subtok"),
-        "sym_ids",
-        "sym_id",
-    ),
-)
-def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus → subword-id encoding under a merge list (round 16; the
-    tokenizer APPLICATION stage): segmentation and lexicographic id
-    assignment over the distinct-word table, broadcast word→ids map
-    probed by the exploded corpus, per-document ordered reassembly.
-    The oracle replays the chain including the full id sequences —
-    flattened per-position for the hash gate (the driver cannot
-    canonicalize list columns), so subword order inside every document
-    is still gated."""
-    from .pipeline.bpe import bpe_encode
-
-    docs = load_table(spark, sf_dir, "documents")
-    return bpe_encode(docs, _SEG_MERGES).select(
-        "doc_id",
-        "n_words",
-        "n_subtok",
-        F.posexplode_outer("sym_ids").alias("pos", "sym_id"),
-    )
-
-
-@query(
-    "q_quantize_embeddings",
-    __import__("timescaledb_spark.pipeline.similarity", fromlist=["x"])
-    .quantize_embeddings_sql(),
-)
-def q_quantize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-vector int8 scalar quantization of the embedding column
-    (round 15; the FAISS QT_8bit storage discipline): codes =
-    floor((x - vmin)/scale + 0.5), scale = (max-min)/255, explicit
-    half-up rounding so both engines share the double arithmetic.
-    Pure array expressions, zero shuffle; flattened per-dimension for
-    the hash gate."""
-    from .pipeline.similarity import quantize_embeddings
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = quantize_embeddings(emb)
-    return q.select(
-        "vec_id", "vmin", "scale", F.posexplode("codes").alias("dim", "code")
     )
 
 
@@ -1340,160 +627,3 @@ def q_corpus_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer ratio."""
     docs = load_table(spark, sf_dir, "documents")
     return textproc.corpus_card(docs, min_required_stops=1)
-
-
-#: deterministic "next release" of the documents table for the diff
-#: gate: drop ids % 11 == 0, edit text of ids % 7 == 3, add re-keyed
-#: copies of ids % 13 == 5
-_DIFF_NEW_SQL = (
-    "SELECT doc_id, CASE WHEN doc_id % 7 = 3 THEN text || ' [v2]' "
-    "ELSE text END AS text FROM documents WHERE doc_id % 11 <> 0 "
-    "UNION ALL SELECT doc_id + 1000000 AS doc_id, text || ' [new]' "
-    "AS text FROM documents WHERE doc_id % 13 = 5"
-)
-
-
-@query(
-    "q_corpus_diff",
-    __import__("timescaledb_spark.pipeline.export", fromlist=["x"])
-    .corpus_diff_sql("documents", f"({_DIFF_NEW_SQL})"),
-)
-def q_corpus_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Release-to-release corpus diff (round 16): added/removed/
-    changed/unchanged per id by content hash between the corpus and a
-    deterministically edited next release — each side reduces to
-    (id, md5) at scan time, the full-outer join never moves text. The
-    oracle rebuilds the same synthetic release and replays the
-    classification."""
-    from .pipeline.export import corpus_diff
-
-    docs = load_table(spark, sf_dir, "documents")
-    new = (
-        docs.filter(F.col("doc_id") % 11 != 0)
-        .select(
-            "doc_id",
-            F.when(
-                F.col("doc_id") % 7 == 3,
-                F.concat(F.col("text"), F.lit(" [v2]")),
-            )
-            .otherwise(F.col("text"))
-            .alias("text"),
-        )
-        .unionByName(
-            docs.filter(F.col("doc_id") % 13 == 5).select(
-                (F.col("doc_id") + 1_000_000).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(" [new]")).alias("text"),
-            )
-        )
-    )
-    return corpus_diff(docs, new)
-
-
-# ---------------------------------------------------------------------------
-# unigram-LM tokenizer (round 16 continuation)
-# ---------------------------------------------------------------------------
-
-
-@query(
-    "q_unigram_segment",
-    __import__("timescaledb_spark.pipeline.unigram", fromlist=["x"])
-    .unigram_segment_sql(top_multi=64),
-)
-def q_unigram_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unigram-LM Viterbi segmentation (Kudo 2018): seed vocabulary
-    from weighted substring counts (all single chars + top-64 multis),
-    1e-6-quantized integer log-probs, then the max-likelihood
-    segmentation of every distinct word as ONE JVM-side expression
-    chain (lattice edges via broadcast join, ``aggregate`` forward DP,
-    bounded backtrace). The oracle replays the DP as a recursive CTE
-    carrying the alpha/backpointer lists, so the hash gates every
-    word's exact integer score, tie-breaks, and piece sequence."""
-    from .pipeline.unigram import unigram_segment
-
-    docs = load_table(spark, sf_dir, "documents")
-    return unigram_segment(docs, top_multi=64)
-
-
-@query(
-    "q_unigram_train",
-    __import__("timescaledb_spark.pipeline.unigram", fromlist=["x"])
-    .unigram_train_sql(top_multi=64, rounds=3),
-)
-def q_unigram_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hard-EM (Viterbi-EM) unigram training (Kudo 2018 §3.2): three
-    rounds of segment → usage re-count → prune over the distinct-word
-    table, single-char pieces kept alive add-one style. The oracle
-    unrolls the SAME three rounds as a materialized CTE chain, each
-    with its own recursive Viterbi — the hash gates the whole learned
-    vocabulary: counts, prune survivors, and final quantized
-    log-probs."""
-    from .pipeline.unigram import unigram_train
-
-    docs = load_table(spark, sf_dir, "documents")
-    return unigram_train(docs, top_multi=64, rounds=3)
-
-
-@query(
-    "q_unigram_encode",
-    _flatten_ids_sql(
-        __import__("timescaledb_spark.pipeline.unigram", fromlist=["x"])
-        .unigram_encode_sql(top_multi=64),
-        ("doc_id", "n_words", "n_subtok"),
-        "piece_ids",
-        "piece_id",
-    ),
-)
-def q_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus → unigram piece-id encoding (round 16; the application
-    stage of the unigram family): seeded-vocabulary Viterbi over the
-    distinct-word table, lexicographic piece ids, broadcast word→ids
-    probe, per-document ordered reassembly as the only corpus-scale
-    shuffle. The oracle replays the recursive-CTE Viterbi and the full
-    id sequences — flattened per-position for the hash gate — so
-    subword order inside every document is still gated."""
-    from .pipeline.unigram import unigram_encode
-
-    docs = load_table(spark, sf_dir, "documents")
-    return unigram_encode(docs, top_multi=64).select(
-        "doc_id",
-        "n_words",
-        "n_subtok",
-        F.posexplode_outer("piece_ids").alias("pos", "piece_id"),
-    )
-
-
-@query(
-    "q_tokenize_pack",
-    _flatten_ids_sql(
-        __import__("timescaledb_spark.pipeline.packing", fromlist=["x"])
-        .pack_token_ids_sql(
-            __import__("timescaledb_spark.pipeline.unigram", fromlist=["x"])
-            .unigram_encode_sql(top_multi=64),
-            budget=128,
-        ),
-        ("seq_id", "n_docs", "n_tok"),
-        "ids",
-        "token_id",
-    ),
-)
-def q_tokenize_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end tokenize → pack (round 16 continuation; the training
-    loader's actual input): unigram-encode the corpus, then cut the
-    concatenated id stream into exact 128-token training sequences —
-    slices per spanned sequence (bounded by n_tok/budget + 1 per doc,
-    no per-token rows), one groupBy on the sequence id reassembling in
-    stream order. The oracle nests the full encode replay inside the
-    identical window/slice algebra — flattened per-position for the
-    hash gate — so every sequence's exact id content and boundaries
-    are still gated."""
-    from .pipeline.packing import pack_token_ids
-    from .pipeline.unigram import unigram_encode
-
-    docs = load_table(spark, sf_dir, "documents")
-    packed = pack_token_ids(unigram_encode(docs, top_multi=64), budget=128)
-    return packed.select(
-        "seq_id",
-        "n_docs",
-        "n_tok",
-        F.posexplode_outer("ids").alias("pos", "token_id"),
-    )

@@ -1,7 +1,7 @@
 """Chunk rewrites that replace a chunk dir (``add_dimension``, the
-fill materialization of an insert after ``add_column``) keep an intact
-copy when the swap-in fails: the chunk still reads every row, and a
-retry of the same operation succeeds."""
+fill materialization of an insert after ``add_column``, ``split_chunk``)
+keep an intact copy when the swap-in fails: the chunk still reads every
+row, and a retry of the same operation succeeds."""
 
 import os
 from datetime import datetime
@@ -9,6 +9,7 @@ from datetime import datetime
 import pytest
 from pyspark.sql import functions as F
 
+from timescaledb_spark.chunkops import split_chunk
 from timescaledb_spark.session import TSSession
 
 T0_US = 1704067200000000
@@ -79,3 +80,22 @@ def test_fill_materialization_survives_failed_swap_in(ts, spark, monkeypatch):
     ht.insert(late)
     rows = {r["value"]: r["site"] for r in ht.df().collect()}
     assert rows == {0.0: "eu", 1.0: "eu", 2.0: "eu", 3.0: "eu", 9.0: None}
+
+
+def test_split_survives_failed_swap_in(ts, spark, monkeypatch):
+    ht = ts.create_hypertable("splitswap", "ts", chunk_interval="1 day")
+    ht.insert(_batch(spark, 48))  # one daily chunk
+    (chunk,) = ht.chunks()
+    at = chunk["range_start"] + 12 * 3600 * 1_000_000
+    failed = _fail_swap_in_once(monkeypatch, ".tmp_split_lo_")
+    with pytest.raises(OSError, match="injected"):
+        split_chunk(ht, chunk, at)
+    assert failed
+    assert ht.df().count() == 48
+    assert ht.chunks() == [chunk]
+    halves = split_chunk(ht, chunk, at)
+    assert [(c["range_start"], c["range_end"]) for c in halves] == [
+        (chunk["range_start"], at),
+        (at, chunk["range_end"]),
+    ]
+    assert ht.df().count() == 48

@@ -43,7 +43,9 @@ def test_replay_schema_follows_rewrite(spark, tmp_path):
 
 def test_replay_restaged_dir_reads_new_schema(spark, tmp_path, monkeypatch):
     """A staged replay dir that is removed and staged again at the same
-    path, from a source whose schema changed, streams the new schema."""
+    path, from a source whose schema changed but whose byte size did
+    not, streams the new schema (staging pins the file's mtime, so a
+    (mtime, size) stamp could not tell the two apart)."""
     src = tmp_path / "src"
     src.mkdir()
     stage = str(tmp_path / "stage")
@@ -55,16 +57,14 @@ def test_replay_restaged_dir_reads_new_schema(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(replay.tempfile, "mkdtemp", same_path)
     monkeypatch.setattr(replay, "_REPLAY_DIRS", {})
     ts = pa.array([1_704_067_200_000_000], pa.timestamp("us"))
-    pq.write_table(
-        pa.table({"ts": ts, "event_type": ["a"], "x": [1]}),
-        str(src / "ev.parquet"),
-    )
-    got = replay.heartbeat_stream(spark, str(src), "ev").columns
-    assert got == ["ts", "event_type", "x"]
-    shutil.rmtree(stage)
-    pq.write_table(
-        pa.table({"ts": ts, "event_type": ["a"], "x": [1], "y": ["z"]}),
-        str(src / "ev.parquet"),
-    )
-    got = replay.heartbeat_stream(spark, str(src), "ev").columns
-    assert got == ["ts", "event_type", "x", "y"]
+    sizes = []
+    for col in ("xa", "xb"):
+        pq.write_table(
+            pa.table({"ts": ts, "event_type": ["a"], col: [1]}),
+            str(src / "ev.parquet"),
+        )
+        sizes.append(os.path.getsize(src / "ev.parquet"))
+        shutil.rmtree(stage, ignore_errors=True)
+        got = replay.heartbeat_stream(spark, str(src), "ev").columns
+        assert got == ["ts", "event_type", col]
+    assert sizes[0] == sizes[1]

@@ -21,6 +21,8 @@ from typing import Sequence, Union
 
 from pyspark.sql import functions as F
 
+from . import storage
+from .compression import _swap_dir
 from .hypertable import CHUNK_COL, SPACE_COL, Hypertable, _to_internal
 
 
@@ -102,10 +104,8 @@ def _merge_rewrite(ht: Hypertable, chunks: list[dict], tmp: str):
     for p_ in parts[1:]:
         merged = merged.unionByName(p_)
     merged, space_n = _space_rewrite(ht, merged)
-    writer = merged.write.mode("overwrite")
-    if space_n is not None:
-        writer = writer.partitionBy(SPACE_COL)
-    writer.parquet(tmp)
+    space = [SPACE_COL] if space_n is not None else []
+    storage.writer(merged, partition_by=space).parquet(tmp)
     return True, space_n
 
 
@@ -294,22 +294,19 @@ def _split_locked(ht, chunk, at) -> list[dict]:
         df = ht._conform_chunk_df(c, ht._chunk_reader().parquet(path))
         df, space_n = _space_rewrite(ht, df)
         internal = ht._internal_time_expr(df)
+        space = [SPACE_COL] if space_n is not None else []
         try:
             for flt, tmp in (
                 (internal < at_i, lo_tmp),
                 (internal >= at_i, hi_tmp),
             ):
-                writer = df.filter(flt).write.mode("overwrite")
-                if space_n is not None:
-                    writer = writer.partitionBy(SPACE_COL)
-                writer.parquet(tmp)
+                storage.writer(df.filter(flt), partition_by=space).parquet(tmp)
+            hi_path = os.path.join(ht.data_dir, f"{CHUNK_COL}={at_i}")
+            _swap_dir(path, lo_tmp, also=[(hi_tmp, hi_path)])
         except BaseException:
             shutil.rmtree(lo_tmp, ignore_errors=True)
             shutil.rmtree(hi_tmp, ignore_errors=True)
             raise
-        shutil.rmtree(path)
-        os.replace(lo_tmp, path)
-        os.replace(hi_tmp, os.path.join(ht.data_dir, f"{CHUNK_COL}={at_i}"))
     with cat.write_lock:
         rows = [
             {

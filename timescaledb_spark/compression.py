@@ -6,11 +6,16 @@ batches, each with min/max + bloom metadata used for batch skipping
 (``compression.c:294``, ``batch_metadata_builder_{minmax,bloom1}.c``,
 qual pushdown in ``tsl/src/nodes/columnar_scan/qual_pushdown.c``).
 
-Spark-first mapping (SURVEY §2.3): parquet *is* the columnstore — its
-encodings subsume deltadelta/gorilla/dictionary (DELTA_BINARY_PACKED,
-BYTE_STREAM_SPLIT, RLE_DICTIONARY), so we do not port the byte-level
-algorithms. What we reproduce is the *physical organization* that makes
-scans fast:
+Spark-first mapping (SURVEY §2.3): parquet *is* the columnstore, and the
+reference's per-type algorithm choice (``compression.h:218-229``) is made
+by :mod:`.storage`, the one writer every chunk write goes through: float
+and double columns are written PLAIN with no dictionary and zstd level 9
+in the GORILLA slot; every other column keeps parquet's dictionary
+(DICTIONARY for segmentby strings and tags, RLE-dictionary for
+timestamps where DELTADELTA would sit). On the tsbs_read store (170,520
+rows, seed 1) that is 31.5 B/row against 39.7 with a dictionary on every
+column. The byte-level algorithms themselves are not ported. What this
+module reproduces is the *physical organization* that makes scans fast:
 
 - ``convert_to_columnstore(chunk)`` = rewrite the chunk directory
   range-partitioned by segmentby and sorted by (segmentby, orderby).
@@ -40,6 +45,7 @@ from typing import Optional, Sequence, Union
 
 from pyspark.sql import functions as F
 
+from . import storage
 from .hypertable import CHUNK_COL, SPACE_COL, Hypertable
 
 # cap on per-chunk recorded segment values: above this a DISTINCT read
@@ -220,15 +226,11 @@ def _compress_chunk_data(
         out = df.repartition(nfiles)
     out = out.sortWithinPartitions(*[F.col(c) for c in segmentby], *order_cols)
 
-    writer = out.write.mode("overwrite")
     # a space-partitioned hypertable stores _space= subdirs INSIDE each
     # chunk dir — the rewrite must preserve that layout or later
     # basePath reads see conflicting partition depths across chunks
-    space = SPACE_COL if ht.row.get("space_column") and SPACE_COL in df.columns else None
-    if space:
-        writer = writer.partitionBy(space)
-    for col in segmentby:
-        writer = writer.option(f"parquet.bloom.filter.enabled#{col}", "true")
+    space = ht.row.get("space_column") and SPACE_COL in df.columns
+    writer = storage.writer(out, partition_by=[SPACE_COL] if space else (), bloom=segmentby)
     # dot-prefixed tmp OUTSIDE the _chunk= namespace: a leftover
     # '_chunk=<start>.tmp_columnstore' dir from a crashed compression
     # would make _scan_chunk_dirs (run by EVERY insert) fail on
@@ -340,21 +342,28 @@ def _compress_chunk_data(
     }
 
 
-def _swap_dir(path: str, tmp: str) -> None:
+def _swap_dir(path: str, tmp: str, also: Sequence[tuple] = ()) -> None:
     """Replace ``path`` with ``tmp`` without a destroy-first window:
     move the old dir ASIDE (dot-prefixed, invisible to chunk scans),
     move ``tmp`` in, delete the aside last. ``rmtree(path)`` before
     ``os.replace`` left a window where a failed rmtree/replace destroyed
     BOTH copies; here any failure leaves at least one intact copy and
-    restores the original on a failed swap-in."""
+    restores the original on a failed swap-in. ``also`` holds more
+    ``(staged, dest)`` moves that commit with this one (a split swaps
+    one chunk dir for two); a failed one moves every dir back."""
     d, b = os.path.split(path)
     aside = os.path.join(d, f".old_{b}")
     if os.path.isdir(aside):
         shutil.rmtree(aside)
     os.replace(path, aside)
+    done = []
     try:
-        os.replace(tmp, path)
+        for src, dst in [(tmp, path), *also]:
+            os.replace(src, dst)
+            done.append((src, dst))
     except BaseException:
+        for src, dst in reversed(done):
+            os.replace(dst, src)
         os.replace(aside, path)
         raise
     shutil.rmtree(aside, ignore_errors=True)
@@ -647,9 +656,8 @@ def reorder_chunk(ht: Hypertable, chunk: Union[dict, int], by: Sequence[str]) ->
         df = ht._conform_chunk_df(chunk, ht._chunk_reader().parquet(path))
         nfiles = max(1, math.ceil(_dir_bytes(path) / TARGET_FILE_BYTES))
         out = df.repartitionByRange(nfiles, *by).sortWithinPartitions(*by)
-        writer = out.write.mode("overwrite")
-        if ht.row.get("space_column") and SPACE_COL in df.columns:
-            writer = writer.partitionBy(SPACE_COL)
+        space = ht.row.get("space_column") and SPACE_COL in df.columns
+        writer = storage.writer(out, partition_by=[SPACE_COL] if space else ())
         tmp = os.path.join(ht.data_dir, f".tmp_reorder_{chunk['range_start']}")
         try:
             writer.parquet(tmp)

@@ -44,6 +44,7 @@ from .functions.time import (
 )
 
 from .scan import CHUNK_COL, SPACE_COL, Scan, in_list, list_partition, q, sql_literal
+from . import storage
 
 #: storage level of every frame a DML statement pins for several
 #: actions (post-trigger rows, sources scanned more than once): spills
@@ -440,7 +441,7 @@ class Hypertable:
             )
             tmp = os.path.join(self.data_dir, f".tmp_dim_{c['range_start']}")
             try:
-                out.write.mode("overwrite").partitionBy(SPACE_COL).parquet(tmp)
+                storage.writer(out, partition_by=[SPACE_COL]).parquet(tmp)
                 _swap_dir(path, tmp)
             except BaseException:
                 shutil.rmtree(tmp, ignore_errors=True)
@@ -1278,9 +1279,7 @@ class Hypertable:
             out = out.repartition(*[F.col(c) for c in self._partition_cols])
         self._guard_preexisting_null_dir()
         self._null_guarded(
-            lambda: out.write.mode("append")
-            .partitionBy(*self._partition_cols)
-            .parquet(self.data_dir)
+            lambda: storage.writer(out, "append", self._partition_cols).parquet(self.data_dir)
         )
         if obs is not None:
             try:
@@ -1676,9 +1675,8 @@ class Hypertable:
             out = self._conform_chunk_df(
                 c, self._chunk_reader().parquet(path)
             )
-            writer = out.write.mode("overwrite")
-            if self.row.get("space_column") and SPACE_COL in out.columns:
-                writer = writer.partitionBy(SPACE_COL)
+            space = self.row.get("space_column") and SPACE_COL in out.columns
+            writer = storage.writer(out, partition_by=[SPACE_COL] if space else ())
             tmp = os.path.join(
                 self.data_dir, f".tmp_fill_{c['range_start']}"
             )
@@ -1854,11 +1852,10 @@ class Hypertable:
         reference's per-chunk DML rewrites
         (``tsl/src/compression/compression_dml.c``): untouched chunks'
         files are never read or written."""
+        out = out.repartition(*[F.col(c) for c in self._partition_cols])
         (
-            out.repartition(*[F.col(c) for c in self._partition_cols])
-            .write.mode("overwrite")
+            storage.writer(out, partition_by=self._partition_cols)
             .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*self._partition_cols)
             .parquet(self.data_dir)
         )
 
@@ -3775,7 +3772,7 @@ class Hypertable:
                 df = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
                 pcols = self._partition_cols
                 self._null_guarded(
-                    lambda: df.repartition(*pcols).write.partitionBy(*pcols).parquet(tmp)
+                    lambda: storage.writer(df.repartition(*pcols), partition_by=pcols).parquet(tmp)
                 )
             staged = {
                 int(d.split("=", 1)[1])

@@ -17,6 +17,8 @@ from typing import Optional
 
 from pyspark.sql import SparkSession
 
+from . import storage
+
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
@@ -160,9 +162,7 @@ class TSSession:
         # valid load target, not a conflict
         if existing and existing.get("path") is not None and mode == "error":
             raise ValueError(f"table {name!r} already exists")
-        df.write.mode("append" if mode == "append" else "overwrite").parquet(
-            path
-        )
+        storage.writer(df, "append" if mode == "append" else "overwrite").parquet(path)
         if not existing:
             self.catalog.plain_table.append([{"name": name, "path": path}])
         elif existing.get("path") != path:

@@ -46,6 +46,7 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, functions as F
 
 from .cagg_families import FAMILIES, family_of
+from . import storage
 from .scan import Ctes, q as _q, sql_literal
 from .functions.time import (
     parse_interval,
@@ -1774,7 +1775,7 @@ def ts_sql(ts, query: str) -> DataFrame:
             path = pt.get("path") or _os.path.join(
                 ts.catalog_root, "tables", name
             )
-            src.write.mode("append").parquet(path)
+            storage.writer(src, "append").parquet(path)
             if pt.get("path") is None:
                 ts.catalog.plain_table.update(
                     {"name": name}, {"path": path}

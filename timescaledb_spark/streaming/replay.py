@@ -44,19 +44,22 @@ atexit.register(_cleanup_replay_dirs)
 
 #: inferred staged-file schema per replay dir — inference is a
 #: footer-sampling Spark job (~0.1s), so one inference serves every
-#: later gate run; stamped with the staged file's (mtime_ns, size) so a
-#: dir re-staged at the same path is re-inferred
+#: later gate run; stamped with the staged file's own parquet schema
+#: (a local footer read), so a dir re-staged at the same path from
+#: another schema is re-inferred — staging pins the file's mtime and
+#: a restage may keep its size, so neither can stamp it
 _REPLAY_SCHEMAS: dict = {}
 
 
 def _read_replay_dir(spark: SparkSession, tmp: str, src: str) -> DataFrame:
     """Build the streaming frame over an already-staged replay dir."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    import pyarrow.parquet as papq
+
     part = os.path.join(tmp, "part-000.parquet")
-    st = os.stat(part)
-    stamp = (st.st_mtime_ns, st.st_size)
+    stamp = papq.read_schema(part)
     hit = _REPLAY_SCHEMAS.get(tmp)
-    if hit is None or hit[0] != stamp:
+    if hit is None or not hit[0].equals(stamp, check_metadata=True):
         hit = (stamp, spark.read.parquet(part).schema)
         _REPLAY_SCHEMAS[tmp] = hit
     schema = hit[1]

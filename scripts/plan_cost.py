@@ -26,8 +26,18 @@ refresh-policy tick of the next iteration — a 2-range refresh (the
 hour just completed and the late batch) — and prints its Spark jobs, py4j
 round trips, ms and ranges as the ``refresh_tick`` row.
 
+``--workload many_chunks`` is the write-then-read case: a hypertable of
+48 one-hour chunks, then per rep a 1-row append followed by one
+``ts.sql`` statement (``after_append``) and the same statement again
+(``warm``). Each row prints the median plan ms, and the plan-time Spark
+jobs and py4j round trips of the last rep. Past
+``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32) chunk
+dirs, the relation rebuilt after a write lists them in a Spark job.
+
 Usage:
     python scripts/plan_cost.py [--workload W] [--seed N] [--reps N]
+
+    W is tsbs_read (default), cagg_realtime or many_chunks.
 """
 
 from __future__ import annotations
@@ -68,11 +78,15 @@ def main(argv) -> int:
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument(
-        "--workload", choices=("tsbs_read", "cagg_realtime"), default="tsbs_read"
+        "--workload",
+        choices=("tsbs_read", "cagg_realtime", "many_chunks"),
+        default="tsbs_read",
     )
     args = ap.parse_args(argv)
     if args.workload == "cagg_realtime":
         return cagg_realtime(args)
+    if args.workload == "many_chunks":
+        return many_chunks(args)
 
     import numpy as np
     import pyarrow.parquet as pq
@@ -222,6 +236,56 @@ def cagg_realtime(args) -> int:
     ContinuousAggregate.refresh = refresh
     for row in out.values():
         print(json.dumps(row))
+    spark.stop()
+    return 0
+
+
+def many_chunks(args) -> int:
+    import time
+
+    from pyspark.sql import functions as F
+
+    from timescaledb_spark import TSSession, build_spark
+
+    spark = build_spark(app_name="ts_plan_cost")
+    spark.sparkContext.setLogLevel("ERROR")
+    ts = TSSession(spark, tempfile.mkdtemp(prefix="ts_plan_cost_"))
+    t0_us, hour_us = 1704067200000000, 3600 * 1_000_000
+    ht = ts.create_hypertable("m", "ts", chunk_interval="1 hour")
+
+    def rows(n, start_us, step_us):
+        return spark.range(n).select(
+            F.timestamp_micros(F.lit(start_us) + F.col("id") * step_us).alias("ts"),
+            (F.col("id") % 8).cast("int").alias("device"),
+            F.col("id").cast("double").alias("value"),
+        )
+
+    ht.insert(rows(48 * 12, t0_us, hour_us // 12))  # 48 one-hour chunks
+    sql = (
+        "SELECT device, max(value) AS mx FROM m "
+        "WHERE ts >= '2024-01-01 06:00:00' GROUP BY device"
+    )
+    ts.sql(sql).collect()
+    tracker = spark.sparkContext.statusTracker()
+    rt = RoundTrips(spark)
+    out: dict = {}
+    for i in range(args.reps):
+        ht.insert(rows(1, t0_us + 47 * hour_us + i + 1, 1))
+        for name in ("after_append", "warm"):
+            j0, n0 = max(tracker.getJobIdsForGroup(None), default=-1), rt.n
+            t = time.perf_counter()
+            df = ts.sql(sql)
+            ms = (time.perf_counter() - t) * 1e3
+            row = out.setdefault(name, {"query": name, "ms": []})
+            row["ms"].append(ms)
+            row["py4j_round_trips"] = rt.n - n0
+            row["plan_jobs"] = len(
+                [j for j in tracker.getJobIdsForGroup(None) if j > j0]
+            )
+            df.collect()
+    for row in out.values():
+        row["plan_ms"] = round(statistics.median(row.pop("ms")), 1)
+        print(json.dumps({"chunks": len(ht.chunks()), **row}))
     spark.stop()
     return 0
 

@@ -257,9 +257,27 @@ def test_sql_binding_builds_only_named_columns(sqlenv):
         "SELECT bucket, host, count(*) AS k, '*' AS t FROM c -- not c.*\n"
         "GROUP BY bucket, host"
     )
+    assert "map_from_entries" not in optimized(
+        "SELECT bucket, host /* c.* */, mx FROM c WHERE host <> '*'"
+    )
     assert "map_from_entries" in optimized("SELECT * FROM c")
     assert "map_from_entries" in optimized("SELECT /*+ BROADCAST(h) */ * FROM c JOIN hosts h USING (host)")
     assert "map_from_entries" in optimized("TABLE c")
+    # the column sets themselves: a * in a comment or string names
+    # nothing; a hinted *, struct(*), TABLE and a NATURAL join read all
+    from timescaledb_spark.sqltree import Statement
+
+    cols = _c._value_cols()
+    assert Statement(
+        ts, "SELECT bucket /* c.* */, mx FROM c WHERE host <> '*' -- *"
+    ).columns(cols) == ["mx"]
+    for q in (
+        "SELECT /*+ BROADCAST(h) */ * FROM c JOIN hosts h USING (host)",
+        "SELECT struct(*) AS r FROM c",
+        "TABLE c",
+        "SELECT bucket, region FROM c NATURAL JOIN hosts",
+    ):
+        assert Statement(ts, q).columns(cols) == cols, q
 
 
 def test_join_where_spec_and_udaf(sqlenv):

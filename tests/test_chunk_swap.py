@@ -1,6 +1,6 @@
 """Chunk rewrites that replace a chunk dir (``add_dimension``, the
-fill materialization of an insert after ``add_column``, ``split_chunk``)
-keep an intact copy when the swap-in fails: the chunk still reads every
+fill materialization of an insert after ``add_column``, ``split_chunk``,
+``merge_chunks``) keep an intact copy when the swap-in fails: the chunk still reads every
 row, and a retry of the same operation succeeds."""
 
 import os
@@ -9,7 +9,7 @@ from datetime import datetime
 import pytest
 from pyspark.sql import functions as F
 
-from timescaledb_spark.chunkops import split_chunk
+from timescaledb_spark.chunkops import merge_chunks, split_chunk
 from timescaledb_spark.session import TSSession
 
 T0_US = 1704067200000000
@@ -99,3 +99,22 @@ def test_split_survives_failed_swap_in(ts, spark, monkeypatch):
         (at, chunk["range_end"]),
     ]
     assert ht.df().count() == 48
+
+
+def test_merge_survives_failed_swap_in(ts, spark, monkeypatch):
+    ht = ts.create_hypertable("mergeswap", "ts", chunk_interval="1 day")
+    ht.insert(_batch(spark, 96))  # two daily chunks
+    chunks = ht.chunks()
+    assert len(chunks) == 2
+    failed = _fail_swap_in_once(monkeypatch, ".tmp_merge_")
+    with pytest.raises(OSError, match="injected"):
+        merge_chunks(ht, chunks)
+    assert failed
+    assert ht.df().count() == 96
+    assert ht.chunks() == chunks
+    merged = merge_chunks(ht, chunks)
+    assert (merged["range_start"], merged["range_end"]) == (
+        chunks[0]["range_start"],
+        chunks[1]["range_end"],
+    )
+    assert len(ht.chunks()) == 1 and ht.df().count() == 96

@@ -16,7 +16,8 @@ from timescaledb_spark.functions.time import (
 )
 from timescaledb_spark.session import TSSession
 from timescaledb_spark.sources import load_table
-from timescaledb_spark.sqlapi import extract_time_bounds, rewrite_sql
+from timescaledb_spark.sqlapi import rewrite_sql
+from timescaledb_spark.sqltree import Statement, where_quals
 
 from .oracle import assert_match, canon_rows, spark_rows
 
@@ -100,108 +101,178 @@ def test_locf_outside_gapfill_raises():
 
 
 # ---------------------------------------------------------------------------
-# bounds extraction (drives chunk pruning)
+# bounds from the parse tree (drive chunk pruning)
 # ---------------------------------------------------------------------------
 
 US = 1_000_000
 
 
-def test_bounds_simple():
-    lo, hi = extract_time_bounds(
-        "SELECT * FROM events WHERE ts >= '2024-01-10' AND ts < '2024-01-20'",
-        "events", "ts", set())
+def _quals(ts, sql, table="events"):
+    return Statement(ts, sql).quals(table)
+
+
+def test_bounds_simple(ts):
+    lo, hi = _quals(
+        ts, "SELECT * FROM events WHERE ts >= '2024-01-10' AND ts < '2024-01-20'"
+    ).time_bounds("ts")
     assert lo == 1704844800 * US and hi == 1705708800 * US
 
 
-def test_bounds_or_disables():
-    lo, hi = extract_time_bounds(
-        "SELECT * FROM events WHERE ts >= '2024-01-10' OR user_id = 3",
-        "events", "ts", set())
+def test_bounds_or_disables(ts):
+    lo, hi = _quals(
+        ts, "SELECT * FROM events WHERE ts >= '2024-01-10' OR user_id = 3"
+    ).time_bounds("ts")
     assert lo is None and hi is None
 
 
-def test_bounds_other_alias_ignored():
-    lo, hi = extract_time_bounds(
+def test_bounds_other_alias_ignored(ts):
+    lo, hi = _quals(
+        ts,
         "SELECT * FROM events e JOIN clicks c ON e.id=c.id WHERE c.ts >= '2024-01-10'",
-        "events", "ts", {"e"})
+    ).time_bounds("ts")
     assert lo is None and hi is None
 
 
-def test_bounds_between_and_qualified():
-    lo, hi = extract_time_bounds(
-        "SELECT * FROM events e WHERE e.ts BETWEEN '2024-01-10' AND '2024-01-20'",
-        "events", "ts", {"e"})
+def test_bounds_between_and_qualified(ts):
+    lo, hi = _quals(
+        ts, "SELECT * FROM events e WHERE e.ts BETWEEN '2024-01-10' AND '2024-01-20'"
+    ).time_bounds("ts")
     assert lo == 1704844800 * US and hi == 1705708800 * US + 1
 
 
-def test_bounds_not_disables():
-    """NOT (ts > x) inverts the range — extraction must bail, a
-    pruned-superset claim only holds for un-negated conjuncts."""
-    lo, hi = extract_time_bounds(
-        "SELECT * FROM events WHERE NOT (ts > '2024-01-10')",
-        "events", "ts", set())
+def test_bounds_not_disables(ts):
+    """NOT (ts > x) inverts the range — a pruned-superset claim only
+    holds for un-negated conjuncts."""
+    lo, hi = _quals(
+        ts, "SELECT * FROM events WHERE NOT (ts > '2024-01-10')"
+    ).time_bounds("ts")
     assert lo is None and hi is None
 
 
-def test_bounds_case_projection_disables():
+def test_bounds_case_projection_disables(ts):
     """A comparison inside a SELECT-list CASE is not a filter."""
-    from timescaledb_spark.sqlapi import extract_numeric_bounds
-
-    lo, hi = extract_numeric_bounds(
-        "SELECT sum(CASE WHEN value > 100 THEN 1 END) FROM events",
-        "events", "value", set())
+    lo, hi = _quals(
+        ts, "SELECT sum(CASE WHEN value > 100 THEN 1 END) FROM events"
+    ).numeric_bounds("value")
     assert lo is None and hi is None
 
 
-def test_bounds_boolean_projection_disables():
-    from timescaledb_spark.sqlapi import extract_numeric_bounds
-
-    lo, hi = extract_numeric_bounds(
-        "SELECT value > 100 AS flag FROM events", "events", "value", set())
+def test_bounds_boolean_projection_disables(ts):
+    lo, hi = _quals(
+        ts, "SELECT value > 100 AS flag FROM events"
+    ).numeric_bounds("value")
     assert lo is None and hi is None
 
 
-def test_bounds_no_where_disables():
-    from timescaledb_spark.sqlapi import extract_numeric_bounds
-
-    lo, hi = extract_numeric_bounds(
-        "SELECT value FROM events", "events", "value", set())
+def test_bounds_no_where_disables(ts):
+    lo, hi = _quals(ts, "SELECT value FROM events").numeric_bounds("value")
     assert lo is None and hi is None
 
 
-def test_bounds_is_not_null_still_extracts():
-    """IS NOT NULL never wraps a comparison — must not trip the NOT
-    guard."""
-    lo, hi = extract_time_bounds(
-        "SELECT * FROM events WHERE value IS NOT NULL AND ts >= '2024-01-10'",
-        "events", "ts", set())
+def test_bounds_is_not_null_still_extracts(ts):
+    """IS NOT NULL is a conjunct of no exclusion shape: it contributes
+    nothing and the time conjunct still bounds."""
+    lo, hi = _quals(
+        ts, "SELECT * FROM events WHERE value IS NOT NULL AND ts >= '2024-01-10'"
+    ).time_bounds("ts")
     assert lo == 1704844800 * US
 
 
-def test_bounds_having_disables():
-    from timescaledb_spark.sqlapi import extract_numeric_bounds
-
-    lo, hi = extract_numeric_bounds(
+def test_bounds_having_disables(ts):
+    lo, hi = _quals(
+        ts,
         "SELECT k, count(*) FROM events WHERE k > 0 GROUP BY k "
         "HAVING max(value) > 100",
-        "events", "value", set())
+    ).numeric_bounds("value")
     assert lo is None and hi is None
 
 
-def test_bounds_where_fragment_mode():
+def test_bounds_where_fragment_mode(ts):
     """Gapfill/DML pass bare WHERE fragments (no SELECT/WHERE keyword)."""
-    lo, hi = extract_time_bounds(
-        "ts >= '2024-01-10' AND ts < '2024-01-20'", "", "ts", set())
+    lo, hi = where_quals(
+        ts, "ts >= '2024-01-10' AND ts < '2024-01-20'"
+    ).time_bounds("ts")
     assert lo == 1704844800 * US and hi == 1705708800 * US
 
 
-def test_space_keys_case_disables():
-    from timescaledb_spark.sqlapi import extract_space_keys
-
-    keys = extract_space_keys(
-        "SELECT sum(CASE WHEN device = 'a' THEN 1 END) FROM events",
-        "events", "device", set())
+def test_space_keys_case_disables(ts):
+    keys = _quals(
+        ts, "SELECT sum(CASE WHEN device = 'a' THEN 1 END) FROM events"
+    ).space_keys("device")
     assert keys is None
+
+
+def test_bounds_shapes_and_literals(ts):
+    """Each exclusion shape, typed literals read as ``_to_internal``
+    reads their text, and the conjuncts of no shape beside them."""
+    from timescaledb_spark.hypertable import _to_internal
+
+    q = _quals(
+        ts,
+        "SELECT * FROM events WHERE ts >= TIMESTAMP '2024-01-10 05:00:00' "
+        "AND ts <= DATE '2024-01-20' AND ts < now() AND value IN (3, 1.5) "
+        "AND user_id = 7 AND (user_id = 8 OR ts > '2024-01-15') "
+        "AND event_type IN ('a', 'b') AND event_type = 'b'",
+    )
+    assert q.time_bounds("ts") == (
+        _to_internal("2024-01-10 05:00:00"),
+        _to_internal("2024-01-20") + 1,
+    )
+    assert q.numeric_bounds("value") == (1.5, 3.0)
+    assert q.space_keys("user_id") == [7]
+    assert q.space_keys("event_type") == ["b"]
+
+
+def _pruned(ts, sql) -> tuple:
+    from timescaledb_spark.plans.inspect import scanned_paths
+
+    df = ts.sql(sql)
+    return df, scanned_paths(df) < scanned_paths(ts.sql("SELECT * FROM events"))
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "SELECT count(*) AS n FROM events WHERE ts >= '2024-01-20' "
+        "AND (user_id = 3 OR value > 50)",
+        "SELECT event_type, sum(CASE WHEN value > 50 THEN 1 ELSE 0 END) AS hi "
+        "FROM events WHERE ts >= '2024-01-20' GROUP BY event_type",
+        "WITH late AS (SELECT * FROM events WHERE ts >= '2024-01-20') "
+        "SELECT event_type, count(*) AS n FROM late GROUP BY event_type",
+        "SELECT d.event_type, count(*) AS n FROM (SELECT * FROM events "
+        "WHERE ts >= '2024-01-20') d GROUP BY d.event_type",
+    ],
+    ids=["and_or", "case_in_select", "user_cte", "derived_table"],
+)
+def test_sql_prunes_beside_other_conjuncts(ts, duck, sql):
+    """The bound is a WHERE conjunct of the relation's own block: an OR
+    conjunct beside it, a CASE in the select list, a user CTE or a
+    derived table around the block leave it pruning."""
+    df, pruned = _pruned(ts, sql)
+    assert pruned
+    assert_match(df, duck, sql)
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "SELECT count(*) AS n FROM events WHERE ts >= '2024-01-20' "
+        "OR ts < '2024-01-05'",
+        "SELECT user_id, max(ts) AS m FROM events GROUP BY user_id "
+        "HAVING max(ts) >= '2024-01-20'",
+        "SELECT count(*) AS n FROM events e JOIN (SELECT ts FROM "
+        "(SELECT TIMESTAMP '2024-01-25 00:00:00' AS ts) s "
+        "WHERE ts >= '2024-01-20') d ON e.ts <= d.ts",
+    ],
+    ids=["or", "having", "derived_table_filter"],
+)
+def test_sql_keeps_every_chunk(ts, duck, sql):
+    """A bound that is no WHERE conjunct of the relation's own block
+    (a disjunct, a HAVING, another relation's derived-table filter)
+    scans every chunk."""
+    df, pruned = _pruned(ts, sql)
+    assert not pruned
+    assert_match(df, duck, sql)
 
 
 # ---------------------------------------------------------------------------

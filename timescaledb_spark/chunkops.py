@@ -122,11 +122,7 @@ def _merge_commit(
     target = chunks[0]
     merged_dir = _chunk_dir(ht, target)
     if have_data:
-        for c in chunks:
-            d = _chunk_dir(ht, c)
-            if os.path.isdir(d):
-                shutil.rmtree(d)
-        os.replace(tmp, merged_dir)
+        _swap_dir(merged_dir, tmp, gone=[_chunk_dir(ht, c) for c in chunks[1:]])
     with cat.write_lock:
         new_row = {
             "id": cat.next_id("chunk"),

@@ -342,7 +342,9 @@ def _compress_chunk_data(
     }
 
 
-def _swap_dir(path: str, tmp: str, also: Sequence[tuple] = ()) -> None:
+def _swap_dir(
+    path: str, tmp: str, also: Sequence[tuple] = (), gone: Sequence[str] = ()
+) -> None:
     """Replace ``path`` with ``tmp`` without a destroy-first window:
     move the old dir ASIDE (dot-prefixed, invisible to chunk scans),
     move ``tmp`` in, delete the aside last. ``rmtree(path)`` before
@@ -350,23 +352,32 @@ def _swap_dir(path: str, tmp: str, also: Sequence[tuple] = ()) -> None:
     BOTH copies; here any failure leaves at least one intact copy and
     restores the original on a failed swap-in. ``also`` holds more
     ``(staged, dest)`` moves that commit with this one (a split swaps
-    one chunk dir for two); a failed one moves every dir back."""
-    d, b = os.path.split(path)
-    aside = os.path.join(d, f".old_{b}")
-    if os.path.isdir(aside):
-        shutil.rmtree(aside)
-    os.replace(path, aside)
-    done = []
+    one chunk dir for two); ``gone`` more dirs that ``tmp`` replaces
+    with ``path`` (a merge swaps several chunk dirs for one), moved
+    aside before it goes in (a missing one has nothing to move). A
+    failed move puts every dir back."""
+    asides, done = [], []
     try:
+        for p in (path, *gone):
+            if not os.path.isdir(p):
+                continue
+            d, b = os.path.split(p)
+            aside = os.path.join(d, f".old_{b}")
+            if os.path.isdir(aside):
+                shutil.rmtree(aside)
+            os.replace(p, aside)
+            asides.append((p, aside))
         for src, dst in [(tmp, path), *also]:
             os.replace(src, dst)
             done.append((src, dst))
     except BaseException:
         for src, dst in reversed(done):
             os.replace(dst, src)
-        os.replace(aside, path)
+        for p, aside in reversed(asides):
+            os.replace(aside, p)
         raise
-    shutil.rmtree(aside, ignore_errors=True)
+    for _, aside in asides:
+        shutil.rmtree(aside, ignore_errors=True)
 
 
 def _stats_rows(ht: Hypertable, chunk: dict, data: dict) -> list[dict]:

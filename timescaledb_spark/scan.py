@@ -262,7 +262,9 @@ class ScanRelations:
         """``spark.sql(sql(view names of scans))`` with every scan's
         relation valid for its key."""
         with self.lock:
-            return self.spark.sql(sql([self._view(s) for s in scans]))
+            # args={}: without it pyspark spends 4 py4j round trips on
+            # an empty positional-parameter array per statement
+            return self.spark.sql(sql([self._view(s) for s in scans]), args={})
 
     def _view(self, s: Scan) -> str:
         rel = self._rels.get(s.name)

@@ -13,6 +13,7 @@ that inject pruning/union logic; Catalyst does the rest.
 from __future__ import annotations
 
 import os
+from functools import cached_property
 from typing import Optional
 
 from pyspark.sql import SparkSession
@@ -255,6 +256,12 @@ class TSSession:
         return udf
 
     # -- SQL surface (sql/*.sql hyperfunction API) --------------------------
+    @cached_property
+    def sql_parser(self):
+        """The SparkSession's own SQL parser (one py4j proxy, reused by
+        every statement's analysis in ``sqltree.py``)."""
+        return self.spark._jsparkSession.sessionState().sqlParser()
+
     def sql(self, query: str):
         """TimescaleDB-flavored SQL over this session's tables.
 

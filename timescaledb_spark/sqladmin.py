@@ -1599,7 +1599,8 @@ def run_dml(ts, kind: str, table: str, body, where) -> DataFrame:
     routed through the chunk-pruned rewrite DML (hypertable.py
     update_where/delete_where); time predicates in WHERE prune the chunk
     set exactly like reads."""
-    from .sqlapi import extract_time_bounds, rewrite_sql
+    from .sqlapi import rewrite_sql
+    from .sqltree import where_quals
 
     ht = ts.get_hypertable(table)
     if kind == "truncate":
@@ -1614,9 +1615,7 @@ def run_dml(ts, kind: str, table: str, body, where) -> DataFrame:
         n = ht.analyze()
         return _df(ts, [(n,)], "stats_rows bigint")
     cond_sql = rewrite_sql(where, ts) if where else "true"
-    lo = hi = None
-    if where:
-        lo, hi = extract_time_bounds(where, table, ht.time_column, set())
+    lo, hi = where_quals(ts, where, {table.lower()}).time_bounds(ht.time_column)
     if kind == "delete":
         n = ht.delete_where(cond_sql, start=lo, end=hi)
         return _df(ts, [(n,)], "rows_deleted bigint")

@@ -22,10 +22,13 @@ module gives a user of the reference the same entry point on Spark:
   **chunk exclusion** (the SQL-path analog of plan-time ChunkAppend
   pruning, reference ``src/planner/hypertable_restrict_info.c``): the
   hypertable's CTE carries ``_chunk`` / ``_space`` partition predicates
-  that Catalyst prunes the relation's file index with. Extraction is
-  conservative — when in doubt (OR terms, ambiguous columns) every
-  chunk is kept and correctness falls back to Catalyst's own filter
-  pushdown + parquet row-group skipping;
+  that Catalyst prunes the relation's file index with. The statement's
+  structure comes from Spark's own parse tree (``sqltree.py``): a
+  relation's bounds are the ``col OP literal``, ``col BETWEEN literal
+  AND literal`` and ``col IN (literals)`` AND conjuncts of the WHERE of
+  its own query block, reached through joins and aliases only; any
+  other conjunct (OR, NOT, arithmetic, ``now()``) adds no bound while
+  the rest still prune, and a table scanned twice is not pruned;
 - ``time_bucket_gapfill`` statements are recognized as a (constrained)
   statement shape and routed through the gapfill operator
   (``operators/gapfill.py``), the analog of the reference's GapFill plan
@@ -48,13 +51,14 @@ from pyspark.sql import DataFrame, functions as F
 from .cagg_families import FAMILIES, family_of
 from . import storage
 from .scan import Ctes, q as _q, sql_literal
+from .sqltree import Statement
 from .functions.time import (
     parse_interval,
     time_bucket_int_sql,
     time_bucket_sql,
 )
 
-__all__ = ["ts_sql", "rewrite_sql", "extract_time_bounds"]
+__all__ = ["ts_sql", "rewrite_sql"]
 
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
@@ -98,30 +102,6 @@ def _strip_strings(sql: str) -> str:
         else:
             out.append(ch)
             i += 1
-    return "".join(out)
-
-
-def _strip_comments(sql: str) -> str:
-    """:func:`_strip_strings` that also blanks ``--`` and ``/* */``
-    comments (optimizer hints included)."""
-    out = []
-    i = 0
-    while i < len(sql):
-        ch = sql[i]
-        if ch in "'\"`":
-            j = _skip_string(sql, i)
-        elif sql.startswith("--", i):
-            j = sql.find("\n", i)
-            j = len(sql) if j < 0 else j
-        elif sql.startswith("/*", i):
-            j = sql.find("*/", i + 2)
-            j = len(sql) if j < 0 else j + 2
-        else:
-            out.append(ch)
-            i += 1
-            continue
-        out.append(" " * (j - i))
-        i = j
     return "".join(out)
 
 
@@ -582,324 +562,8 @@ def rewrite_sql(sql: str, ctx=None) -> str:
 
 
 # ---------------------------------------------------------------------------
-# chunk pruning from WHERE-clause time predicates
-# ---------------------------------------------------------------------------
-
-_US = 1
-
-
-def _parse_time_literal(kind: str, val) -> Optional[int]:
-    from .hypertable import _to_internal
-
-    try:
-        return _to_internal(val)
-    except Exception:
-        return None
-
-
-def _prunable_region(sql: str) -> Optional[str]:
-    """The slice of ``sql`` in which a ``col OP literal`` occurrence is
-    provably a top-level AND conjunct of the WHERE clause — or None when
-    no such guarantee holds. Bails on OR (disjunct bounds don't
-    intersect), NOT (negated comparison inverts the range), CASE (a
-    projection like ``sum(CASE WHEN value > 100 …)`` is not a filter)
-    and HAVING (post-aggregate predicate). ``IS NOT NULL`` is whitelisted
-    before the NOT check — it never wraps a comparison. For a full query
-    (text contains SELECT) matching is restricted to WHERE-onwards so
-    SELECT-list expressions — e.g. a boolean projection ``value > 100 AS
-    flag`` — can never contribute bounds; a SELECT with no WHERE has no
-    extractable bounds. Callers that pass a bare WHERE-clause fragment
-    (gapfill, DML) get the whole fragment back."""
-    stripped = _strip_strings(sql)
-    cleaned = re.sub(r"\bis\s+not\s+null\b", " ", stripped, flags=re.I)
-    if re.search(r"\b(?:or|not|case|having)\b", cleaned, re.I):
-        return None
-    if re.match(r"\s*(?:select|with)\b", stripped, re.I):
-        # full query: a SUBQUERY anywhere (scalar select-list subquery,
-        # derived table, IN (...)) carries its own WHERE whose
-        # predicates belong to a DIFFERENT table and may sit before OR
-        # after the outer WHERE — any second SELECT means the first
-        # WHERE found is not provably the outer one, so bail
-        if len(re.findall(r"\bselect\b", stripped, re.I)) > 1:
-            return None
-        m = re.search(r"\bwhere\b", stripped, re.I)
-        if not m:
-            return None
-        return sql[m.start():]
-    if re.search(r"\bselect\b", stripped, re.I):
-        # WHERE-clause fragment (gapfill/DML callers) containing a
-        # subquery: same cross-table contamination risk — bail
-        return None
-    return sql
-
-
-def _blank_string_contents(sql: str) -> str:
-    """Length-preserving: blank the INSIDES of quoted literals but keep
-    the quote characters, so a pattern's literal alternative still
-    matches while predicate-looking text inside a literal cannot."""
-    out = []
-    i = 0
-    while i < len(sql):
-        ch = sql[i]
-        if ch in "'\"`":
-            j = _skip_string(sql, i)
-            if j - i >= 2:
-                out.append(ch)
-                out.append(" " * (j - i - 2))
-                out.append(sql[j - 1] if sql[j - 1] == ch else " ")
-            else:
-                out.append(" " * (j - i))
-            i = j
-        else:
-            out.append(ch)
-            i += 1
-    return "".join(out)
-
-
-def _finditer_stripped(pat, sql: str):
-    """finditer with match POSITIONS located on the content-blanked form
-    (length-preserving, quotes kept) and groups re-extracted from the
-    raw text — a predicate-looking phrase INSIDE a string literal must
-    never drive chunk pruning, while literal VALUES in real predicates
-    still need the raw text."""
-    blanked = _blank_string_contents(sql)
-    for m in pat.finditer(blanked):
-        m2 = pat.match(sql, m.start(), m.end())
-        if m2:
-            yield m2
-
-
-def _search_stripped(pat, sql: str):
-    for m in _finditer_stripped(pat, sql):
-        return m
-    return None
-
-
-def extract_time_bounds(sql: str, table: str, col: str, aliases: set[str]):
-    """Conservative (lo_us, hi_us) extraction for ``col`` of ``table``
-    from the query text. Returns (None, None) unless the predicates are
-    provably AND-conjoined top-level comparisons against literals.
-
-    Pruning with a **superset** range is always safe because the original
-    predicates stay in the query; this only narrows the scan's file list.
-    """
-    sql = _prunable_region(sql)
-    if sql is None:
-        return None, None
-    names = [a for a in aliases | {table} if a]
-    # Either a known qualifier ("tbl." / "alias.") or an unqualified ref
-    # (not preceded by any word char or dot — an unknown alias's column
-    # must NOT match).
-    if names:
-        quals = "|".join(re.escape(a) for a in names)
-        ref = rf"(?:\b(?:{quals})\s*\.\s*|(?<![\w.])){re.escape(col)}\b"
-    else:
-        ref = rf"(?<![\w.]){re.escape(col)}\b"
-    pat = re.compile(
-        ref + r"\s*(>=|<=|<|>|=)\s*"
-        r"((?:timestamptz|timestamp|date)\s+'(?:[^']|'')*'|'(?:[^']|'')*')",
-        re.I,
-    )
-    def _arith_continues(end: int) -> bool:
-        """True when the matched literal is NOT the complete right-hand
-        side — e.g. ``ts >= timestamp '..' - interval '5 days'``: pruning
-        on the bare literal would over-tighten the bound and silently
-        drop rows."""
-        rest = sql[end:].lstrip()
-        return bool(rest) and rest[0] in "+-*/%"
-
-    lo = hi = None
-    for m in _finditer_stripped(pat, sql):
-        if _arith_continues(m.end()):
-            return None, None
-        op, lit = m.group(1), m.group(2)
-        k, v = _literal_of(lit)
-        if k not in ("timestamp", "string"):
-            continue
-        t = _parse_time_literal(k, v)
-        if t is None:
-            return None, None
-        if op in (">", ">="):
-            lo = t if lo is None else max(lo, t)
-        elif op == "<":
-            hi = t if hi is None else min(hi, t)
-        elif op == "<=":
-            hi = t + _US if hi is None else min(hi, t + _US)
-        elif op == "=":
-            lo = t if lo is None else max(lo, t)
-            hi = t + _US if hi is None else min(hi, t + _US)
-    # BETWEEN 'a' AND 'b'
-    bet = re.compile(
-        ref + r"\s+between\s+"
-        r"('(?:[^']|'')*'|(?:timestamptz|timestamp|date)\s+'(?:[^']|'')*')\s+and\s+"
-        r"('(?:[^']|'')*'|(?:timestamptz|timestamp|date)\s+'(?:[^']|'')*')",
-        re.I,
-    )
-    for m in _finditer_stripped(bet, sql):
-        if _arith_continues(m.end()):
-            return None, None
-        ka, va = _literal_of(m.group(1))
-        kb, vb = _literal_of(m.group(2))
-        ta = _parse_time_literal(ka, va) if ka else None
-        tb = _parse_time_literal(kb, vb) if kb else None
-        if ta is None or tb is None:
-            return None, None
-        lo = ta if lo is None else max(lo, ta)
-        hi = tb + _US if hi is None else min(hi, tb + _US)
-    return lo, hi
-
-
-def extract_numeric_bounds(sql: str, table: str, col: str, aliases: set[str]):
-    """Conservative (lo, hi) extraction for a NUMERIC stat-tracked
-    column (``enable_chunk_skipping``) from AND-only predicates against
-    numeric literals — drives chunk exclusion via the recorded per-chunk
-    min/max (``chunk_column_stats``, the SQL-path analog of the
-    reference's chunk-skipping ranges). Bounds here are INCLUSIVE on
-    both ends (``where_stats`` overlap test), so a superset range is
-    always safe: the raw predicate stays in the query."""
-    sql = _prunable_region(sql)
-    if sql is None:
-        return None, None
-    names = [a for a in aliases | {table} if a]
-    if names:
-        quals = "|".join(re.escape(a) for a in names)
-        ref = rf"(?:\b(?:{quals})\s*\.\s*|(?<![\w.])){re.escape(col)}\b"
-    else:
-        ref = rf"(?<![\w.]){re.escape(col)}\b"
-    num = r"([+-]?\d+(?:\.\d+)?)"
-
-    def _arith_continues(end: int) -> bool:
-        rest = sql[end:].lstrip()
-        return bool(rest) and rest[0] in "+-*/%"
-
-    lo = hi = None
-    for m in _finditer_stripped(
-        re.compile(ref + rf"\s*(>=|<=|<|>|=)\s*{num}", re.I), sql
-    ):
-        if _arith_continues(m.end()):
-            return None, None
-        op, v = m.group(1), float(m.group(2))
-        if op in (">", ">="):
-            lo = v if lo is None else max(lo, v)
-        elif op in ("<", "<="):
-            hi = v if hi is None else min(hi, v)
-        else:  # =
-            lo = v if lo is None else max(lo, v)
-            hi = v if hi is None else min(hi, v)
-    for m in _finditer_stripped(
-        re.compile(ref + rf"\s+between\s+{num}\s+and\s+{num}", re.I), sql
-    ):
-        if _arith_continues(m.end()):
-            return None, None
-        a, b = float(m.group(1)), float(m.group(2))
-        lo = a if lo is None else max(lo, a)
-        hi = b if hi is None else min(hi, b)
-    return lo, hi
-
-
-def extract_space_keys(sql: str, table: str, col: str, aliases: set[str]):
-    """Conservative space-key extraction: ``col = lit`` or ``col IN
-    (lits)`` in an AND-only query → the literal list; else None. Drives
-    hash-partition (``_space=k``) exclusion, the SQL-path analog of
-    ``src/planner/space_constraint.c``."""
-    sql = _prunable_region(sql)
-    if sql is None:
-        return None
-    names = [a for a in aliases | {table} if a]
-    if names:
-        quals = "|".join(re.escape(a) for a in names)
-        ref = rf"(?:\b(?:{quals})\s*\.\s*|(?<![\w.])){re.escape(col)}\b"
-    else:
-        ref = rf"(?<![\w.]){re.escape(col)}\b"
-    # no trailing \b after the quoted alternative: quote→space is not a
-    # word boundary, which silently disabled exclusion for STRING keys
-    m = _search_stripped(
-        re.compile(
-            ref + r"\s*=\s*('(?:[^']|'')*'|[+-]?\d+\b)", re.I
-        ),
-        sql,
-    )
-    if m:
-        k, v = _literal_of(m.group(1))
-        return [v] if k is not None else None
-    m = _search_stripped(
-        re.compile(ref + r"\s+in\s*\(([^()]*)\)", re.I), sql
-    )
-    if m:
-        vals = []
-        for piece in _split_args(m.group(1)):
-            k, v = _literal_of(piece)
-            if k is None:
-                return None
-            vals.append(v)
-        return vals or None
-    return None
-
-
-_NOT_ALIAS = frozenset(
-    "on where group order join inner left right full cross limit having "
-    "using union lateral intersect except qualify window from select as "
-    "and or not asc desc".split()
-)
-
-_FROM_END_RE = re.compile(
-    r"\b(?:where|group|order|having|limit|union|intersect|except|"
-    r"qualify|window)\b",
-    re.I,
-)
-
-
-def _from_spans(stripped: str) -> list[tuple[int, int]]:
-    """Character spans of FROM lists (each ``FROM`` to the next clause
-    keyword). The comma form of a table reference (``FROM t a, t b``)
-    only counts inside one of these — a comma in a select list must not
-    look like a relation reference."""
-    spans = []
-    for m in re.finditer(r"\bfrom\b", stripped, re.I):
-        e = _FROM_END_RE.search(stripped, m.end())
-        spans.append((m.start(), e.start() if e else len(stripped)))
-    return spans
-
-
-def _relation_refs(stripped: str, table: str):
-    """Matches of ``table`` used as a relation: after FROM/JOIN anywhere,
-    or after a comma INSIDE a FROM list. Yields (match, alias_group)."""
-    spans = _from_spans(stripped)
-    pat_fj = re.compile(
-        rf"\b(?:from|join)\s+{re.escape(table)}\b(?!\s*\.)"
-        rf"(?:\s+as)?\s*([A-Za-z_]\w*)?",
-        re.I,
-    )
-    pat_comma = re.compile(
-        rf",\s*{re.escape(table)}\b(?!\s*\.)(?:\s+as)?\s*([A-Za-z_]\w*)?",
-        re.I,
-    )
-    for m in pat_fj.finditer(stripped):
-        yield m
-    for m in pat_comma.finditer(stripped):
-        if any(a <= m.start() < b for a, b in spans):
-            yield m
-
-
-def _table_aliases(sql: str, table: str) -> set[str]:
-    """Aliases under which ``table`` appears as a relation (FROM/JOIN or
-    a FROM-list comma join)."""
-    stripped = _strip_strings(sql)
-    out = set()
-    for m in _relation_refs(stripped, table):
-        a = m.group(1)
-        if a and a.lower() not in _NOT_ALIAS:
-            out.add(a)
-    return out
-
-
-# ---------------------------------------------------------------------------
 # statement-level entry
 # ---------------------------------------------------------------------------
-
-def _referenced(sql: str, name: str) -> bool:
-    return re.search(rf"\b{re.escape(name)}\b", _strip_strings(sql), re.I) is not None
-
 
 _VIEW_SEQ = [0]
 
@@ -1015,76 +679,41 @@ class _Bound:
         )
 
 
-#: forms that ask for every column without naming one: a ``*`` other
-#: than ``count(*)`` (``SELECT *``, ``t.*``, ``struct(*)``), ``TABLE c``,
-#: a NATURAL join (its keys are the shared columns) and (UN)PIVOT (it
-#: groups by the columns it does not name)
-_ALL_COLS = re.compile(r"\*|\btable\b|\bnatural\b|\b(?:un)?pivot\b", re.I)
-_COUNT_STAR = re.compile(r"\bcount\s*\(\s*\*\s*\)", re.I)
-
-
-def _cagg_cols(sql: str, cagg) -> list:
-    """The value columns of ``cagg`` a statement can reference: every
-    one named anywhere in it (over-matching only builds a column the
-    statement does not use), all of them under a form that asks for
-    every column (``_ALL_COLS``, strings and comments aside)."""
-    cols = cagg._value_cols()
-    if _ALL_COLS.search(_COUNT_STAR.sub(" ", _strip_comments(sql))):
-        return cols
-    words = {w.lower() for w in _IDENT.findall(sql)}
-    return [c for c in cols if c.lower() in words]
-
-
-def _bind_tables(ts, sql: str) -> _Bound:
-    """Bind every engine table referenced in ``sql`` under a
+def _bind_tables(ts, sql: str, stmt: Statement) -> _Bound:
+    """Bind every engine table ``sql`` reads as a relation under a
     statement-unique name ``_ts_sql_<n>_<table>`` (never clobbering
     same-named session views the caller may own) and rewrite the
     references. Hypertables get chunk-, space- and stats-pruned scans
-    when the WHERE clause bounds them."""
+    when the WHERE clause of their query block bounds them
+    (``sqltree.py``); ``stmt`` is ``sql``'s parsed structure."""
     mapping: dict[str, str] = {}
     _VIEW_SEQ[0] += 1
     uid = _VIEW_SEQ[0]
-    stripped_sql = _strip_strings(sql)
     bound = _Bound(ts, sql, Ctes(f"_ts_cte_{uid}"))
-    hts = {r["name"]: r for r in ts.catalog.hypertable.read()}
-    for name in hts:
-        if not _referenced(sql, name):
+    for row in ts.catalog.hypertable.read():
+        name = row["name"]
+        if not stmt.scans(name):
             continue
         ht = ts.get_hypertable(name)
-        aliases = _table_aliases(sql, name)
-        # a table appearing MORE THAN ONCE as a relation (self-join,
-        # including the comma-list spelling `FROM t a, t b`) shares this
-        # single binding across all its aliases — a bound extracted from
-        # one alias must not prune what another alias scans in full.
-        # _relation_refs restricts the comma form to FROM lists, so a
-        # select-list column named like the table cannot falsely
-        # disable pruning; inside a FROM list overcounting only
-        # disables pruning (conservative), undercounting would
-        # silently drop chunks.
-        n_refs = sum(1 for _ in _relation_refs(stripped_sql, name))
-        if n_refs > 1:
-            lo = hi = space_key = where_stats = None
-        else:
-            lo, hi = extract_time_bounds(sql, name, ht.time_column, aliases)
-            space_key = None
-            if ht.row.get("space_column"):
-                space_key = extract_space_keys(
-                    sql, name, ht.row["space_column"], aliases
-                )
+        quals = stmt.quals(name)
+        lo, hi = quals.time_bounds(ht.time_column)
+        space_key = where_stats = None
+        if ht.row.get("space_column"):
+            space_key = quals.space_keys(ht.row["space_column"])
+        if quals.conjuncts:
             # stat-tracked columns (enable_chunk_skipping / compress
             # stats): numeric WHERE bounds additionally exclude chunks
             # whose recorded min/max cannot overlap — SQL users get the
             # same skipping the where_stats API argument provides
-            where_stats = None
             stat_cols = {
                 s["column"]
                 for s in ts.catalog.chunk_column_stats.find(hypertable_id=ht.id)
             } - {ht.time_column}
-            for sc in sorted(stat_cols):
-                slo, shi = extract_numeric_bounds(sql, name, sc, aliases)
-                if slo is not None or shi is not None:
-                    where_stats = where_stats or {}
-                    where_stats[sc] = (slo, shi)
+            where_stats = {
+                sc: b
+                for sc in sorted(stat_cols)
+                if (b := quals.numeric_bounds(sc)) != (None, None)
+            } or None
         vname = f"_ts_sql_{uid}_{name}"
         bound.ctes.scan(
             ht._scan(start=lo, end=hi, space_key=space_key, where_stats=where_stats),
@@ -1092,13 +721,13 @@ def _bind_tables(ts, sql: str) -> _Bound:
         )
         mapping[name] = vname
     for row in ts.catalog.continuous_agg.read():
-        if row["name"] not in mapping and _referenced(sql, row["name"]):
+        if row["name"] not in mapping and stmt.scans(row["name"]):
             vname = f"_ts_sql_{uid}_{row['name']}"
             cagg = ts.get_cagg(row["name"])
-            cagg._bind(bound.ctes, vname, _cagg_cols(sql, cagg))
+            cagg._bind(bound.ctes, vname, stmt.columns(cagg._value_cols()))
             mapping[row["name"]] = vname
     for row in ts.catalog.plain_table.read():
-        if row["name"] not in mapping and _referenced(sql, row["name"]):
+        if row["name"] not in mapping and stmt.scans(row["name"]):
             vname = f"_ts_sql_{uid}_{row['name']}"
             bound.ctes.add(ts.table_sql(row["name"]), vname)
             mapping[row["name"]] = vname
@@ -1107,10 +736,10 @@ def _bind_tables(ts, sql: str) -> _Bound:
     return bound
 
 
-def _query_tables(ts, sql: str) -> DataFrame:
+def _query_tables(ts, sql: str, stmt: Optional[Statement] = None) -> DataFrame:
     """``sql`` (a query over engine tables) as a DataFrame: bound,
     macro-expanded and planned in one ``spark.sql`` call."""
-    bound = _bind_tables(ts, sql)
+    bound = _bind_tables(ts, sql, stmt or Statement(ts, sql))
     return bound.df(rewrite_sql(bound.sql, ts))
 
 
@@ -1130,9 +759,12 @@ def _register_info_views(ts, sql: str) -> str:
     DataFrame (views.py) is registered under that name."""
     from . import views as _views
 
+    if "timescaledb_information" not in sql.lower():
+        return sql
+    stripped = _strip_strings(sql)
     for v in _INFO_VIEWS:
         pat = re.compile(rf"\btimescaledb_information\s*\.\s*{v}\b", re.I)
-        if pat.search(_strip_strings(sql)):
+        if pat.search(stripped):
             name = f"timescaledb_information_{v}"
             getattr(_views, v)(ts).createOrReplaceTempView(name)
             sql = pat.sub(name, sql)
@@ -1174,7 +806,9 @@ def _run_explain(ts, inner: str) -> DataFrame:
             "EXPLAIN supports SELECT/WITH statements only "
             "(DML/admin statements execute eagerly in this engine)"
         )
-    df = ts_sql(ts, inner)
+    q = _register_info_views(ts, inner)
+    stmt = Statement(ts, q)
+    df = _select(ts, q, stmt)
     plan = df._jdf.queryExecution().executedPlan().toString()
     header: list[str] = []
     scanned = _scanned_chunk_dirs(df)
@@ -1204,7 +838,7 @@ def _run_explain(ts, inner: str) -> DataFrame:
     # exclusion reported on BOTH sides
     for row in ts.catalog.continuous_agg.read():
         name = row.get("name")
-        if not _referenced(inner, name):
+        if not stmt.scans(name):
             continue
         try:
             cg = ts.get_cagg(name)
@@ -1291,7 +925,7 @@ _ORDERED_SCAN_RE = re.compile(
 )
 
 
-def _try_ordered_scan(ts, q: str):
+def _try_ordered_scan(ts, q: str, stmt: Statement):
     """Ordered-append detection for SQL (`should_chunk_append`,
     src/planner/planner.c:1018; golden test/sql/plan_ordered_append.sql):
     an unbounded ``SELECT cols FROM <hypertable> [WHERE ...] ORDER BY
@@ -1324,8 +958,7 @@ def _try_ordered_scan(ts, q: str):
     lo = hi = None
     wtext = None
     if where is not None:
-        aliases = _table_aliases(q, name) | ({alias} if alias else set())
-        lo, hi = extract_time_bounds(q, name, ht.time_column, aliases)
+        lo, hi = stmt.quals(name).time_bounds(ht.time_column)
         wtext = _strip_qualifiers(where, {alias, name} - {None})
     df = ht.read_ordered(start=lo, end=hi, desc=desc)
     try:
@@ -1821,7 +1454,15 @@ def ts_sql(ts, query: str) -> DataFrame:
         return ts.spark.createDataFrame(
             [(int(stats["rows"]),)], "rows_inserted bigint"
         )
-    ordered = _try_ordered_scan(ts, q)
+    return _select(ts, q, Statement(ts, q))
+
+
+def _select(ts, q: str, stmt: Statement) -> DataFrame:
+    """A query statement through the first route that takes it: ordered
+    append, DISTINCT skip scan, rollup accessors, gapfill, or the plain
+    bound statement. ``stmt`` is ``q``'s structure, parsed at most once
+    across the routes."""
+    ordered = _try_ordered_scan(ts, q, stmt)
     if ordered is not None:
         return ordered
     skipscan = _try_distinct_skipscan(ts, q)
@@ -1833,5 +1474,5 @@ def ts_sql(ts, query: str) -> DataFrame:
     if re.search(r"\btime_bucket_gapfill\b", _strip_strings(q), re.I):
         from .sqlgapfill import run_gapfill_statement
 
-        return run_gapfill_statement(ts, _bind_tables(ts, q))
-    return _query_tables(ts, q)
+        return run_gapfill_statement(ts, _bind_tables(ts, q, stmt))
+    return _query_tables(ts, q, stmt)

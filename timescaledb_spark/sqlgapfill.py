@@ -42,9 +42,9 @@ from .sqlapi import (
     _skip_string,
     _split_args,
     _strip_strings,
-    extract_time_bounds,
     rewrite_sql,
 )
+from .sqltree import where_quals
 
 _CLAUSES = ["select", "from", "where", "group by", "having", "order by", "limit"]
 
@@ -286,16 +286,9 @@ def run_gapfill_statement(ts, bound) -> DataFrame:
     time_col = m.group(1)
 
     if start is None or finish is None:
-        # the fragment extractor matches only unqualified refs; strip
-        # alias qualifiers from the time column (r.ts -> ts) so the
-        # reference-accepted `WHERE r.ts >= .. AND r.ts < ..` derives
-        # bounds too
-        frag = re.sub(
-            rf"\b\w+\s*\.\s*(?={re.escape(time_col)}\b)",
-            "",
-            cl.get("where", ""),
-        )
-        lo, hi = extract_time_bounds(frag, "", time_col, set())
+        # the time column under any qualifier (the reference accepts
+        # `WHERE r.ts >= .. AND r.ts < ..`)
+        lo, hi = where_quals(ts, cl.get("where")).time_bounds(time_col)
         start = start if start is not None else lo
         finish = finish if finish is not None else hi
         if start is None or finish is None:

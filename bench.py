@@ -29,15 +29,6 @@ def main() -> None:
     m = re.search(r"sf([\d.]+)", SF_DIR)
     sf = float(m.group(1).rstrip(".")) if m else None
 
-    # O(n²) verification baselines (each has a documented bucketed scale-path
-    # sibling): never let them dominate the headline number above sf0.1.
-    BASELINE_TIER = {"q_dedup_ngram_jaccard", "q_dedup_embedding"}
-    BASELINE_TIER_MAX_SF = 0.1
-    skipped = sorted(
-        n for n in BASELINE_TIER
-        if n in qs and sf is not None and sf > BASELINE_TIER_MAX_SF
-    )
-
     # warm the JVM + parquet footers with a cheap, stable query (pinned:
     # registry order drifts as queries are added)
     warm = qs.get("q_bucket_hourly") or next(iter(qs.values()))
@@ -69,14 +60,12 @@ def main() -> None:
 
     times: dict[str, float] = {}
     for name, fn in sorted(qs.items()):
-        if name in skipped:
-            continue
         t0 = time.perf_counter()
         df = fn(spark, SF_DIR)
         df.collect()
         times[name] = round(time.perf_counter() - t0, 4)
-        # queries that cache intermediates (LSH bands, shingle sets) must
-        # not bleed memory pressure into the next measurement
+        # a query that caches intermediates must not bleed memory
+        # pressure into the next measurement
         spark.catalog.clearCache()
 
     out = {
@@ -85,7 +74,6 @@ def main() -> None:
         "unit": "sec",
         "queries": times,
         "sf": sf,
-        "baseline_tier_skipped": skipped,
     }
     # stdout line is the driver contract, but long runs can get their
     # stdout tail-truncated in round artifacts — persist the complete

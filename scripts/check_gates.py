@@ -16,7 +16,7 @@ sys.path.insert(0, os.path.join(REPO, "tests"))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 TABLES = (
     "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
+    "documents"
 ).split()
 
 

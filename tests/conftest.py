@@ -17,7 +17,7 @@ settings.load_profile("reproducible")
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
+    "documents"
 ).split()
 
 

@@ -427,3 +427,30 @@ def test_gapfill_null_time_raises(spark):
     )
     with pytest.raises(Exception, match="ts cannot be NULL"):
         gf.collect()
+
+
+def test_sql_gapfill_parses_statement_once(spark, tmp_path, monkeypatch):
+    """A gapfill statement bounded only by its WHERE is parsed once: the
+    default start/finish come from the statement's own tree, not from a
+    second parse of the WHERE text."""
+    from timescaledb_spark import sqltree
+    from timescaledb_spark.session import TSSession
+
+    ts = TSSession(spark, str(tmp_path))
+    ht = ts.create_hypertable("g", "ts", chunk_interval="1 day")
+    ht.insert(spark.createDataFrame(
+        [(datetime(2024, 1, 1, 0, 30), 1.0), (datetime(2024, 1, 1, 3, 10), 4.0)],
+        "ts timestamp, v double",
+    ))
+    parses = []
+    parse = sqltree._parse
+    monkeypatch.setattr(
+        sqltree, "_parse", lambda *a, **k: parses.append(a[1]) or parse(*a, **k)
+    )
+    rows = ts.sql(
+        "SELECT time_bucket_gapfill('1 hour', ts) AS b, locf(avg(v)) AS v "
+        "FROM g WHERE ts >= '2024-01-01 00:00:00' AND ts < '2024-01-01 05:00:00' "
+        "GROUP BY b ORDER BY b"
+    ).collect()
+    assert len(parses) == 1
+    assert [r["v"] for r in rows] == [1.0, 1.0, 1.0, 4.0, 4.0]

@@ -1,5 +1,5 @@
 """Round-14 property tests: COPY BINARY round-trip over arbitrary typed
-rows and chunk_documents coverage/partition invariants — pure-Python
+rows and window/stride grid coverage/partition invariants — pure-Python
 models, no Spark jobs in the hypothesis loops (the established
 property-test discipline: drive the deterministic kernel hard, gate the
 distributed shape once elsewhere)."""
@@ -44,7 +44,7 @@ def test_pgcopy_roundtrip_property(spark, rows):
     assert got == rows
 
 
-# ---- chunk_documents grid model ----------------------------------------
+# ---- window/stride grid model ------------------------------------------
 
 
 def _starts_model(n, window, stride):
@@ -67,8 +67,8 @@ def _starts_model(n, window, stride):
 def test_chunk_grid_invariants(n, window, data):
     """Every token is covered at least once; chunks partition exactly
     when stride == window; chunk count is bounded by ceil(n/stride)+1;
-    no start begins past the end. (stride <= window — the operator
-    rejects gappy grids, a rule this test discovered.)"""
+    no start begins past the end (stride <= window: a gappy grid would
+    leave tokens uncovered)."""
     stride = data.draw(st.integers(1, window))
     starts = _starts_model(n, window, stride)
     covered = set()
@@ -81,37 +81,3 @@ def test_chunk_grid_invariants(n, window, data):
         # exact partition: chunk lengths sum to n with no overlap
         total = sum(min(s + window, n) - s for s in starts)
         assert total == n
-
-
-def test_chunk_grid_model_matches_engine(spark):
-    """The pure model above IS the engine's grid: compare on a spread
-    of (n, window, stride) through the real Spark operator once."""
-    from pyspark.sql import functions as F
-
-    from timescaledb_spark.pipeline.textproc import chunk_documents
-
-    cases = [(0, 4, 3), (1, 4, 3), (4, 4, 3), (5, 4, 3), (10, 4, 4),
-             (10, 4, 2), (9, 3, 2), (7, 7, 1)]
-    rows = [
-        (i, " ".join(f"t{k}" for k in range(n)))
-        for i, (n, _w, _s) in enumerate(cases)
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    for i, (n, w, s) in enumerate(cases):
-        got = sorted(
-            r["chunk_idx"]
-            for r in chunk_documents(
-                df.filter(F.col("doc_id") == i), window=w, stride=s
-            ).collect()
-        )
-        assert got == list(range(len(_starts_model(n, w, s)))), (n, w, s)
-
-
-def test_chunk_rejects_gappy_stride(spark):
-    import pytest as _pt
-
-    from timescaledb_spark.pipeline.textproc import chunk_documents
-
-    df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    with _pt.raises(ValueError, match="stride"):
-        chunk_documents(df, window=2, stride=3)

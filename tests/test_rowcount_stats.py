@@ -74,3 +74,22 @@ def test_compress_records_count_and_dml_clears(ts, spark):
     ht.delete_where("k = 3")
     assert ht.chunks()[0].get("n_rows") is None
     assert ht.approximate_row_count() == 23
+
+
+def test_distributed_footer_count_matches_driver_count(ts, spark, monkeypatch):
+    """Beyond FOOTER_DRIVER_FILES the footer counts run as a Spark job;
+    per chunk they must equal the driver-side footer reads."""
+    from timescaledb_spark import hypertable
+
+    driver = ts.create_hypertable("t_drv", "ts", chunk_interval="1 day")
+    dist = ts.create_hypertable("t_dist", "ts", chunk_interval="1 day")
+    for ht in (driver, dist):
+        ht.insert(_batch(spark, n=60))
+    assert driver.approximate_row_count() == 60
+    monkeypatch.setattr(hypertable, "FOOTER_DRIVER_FILES", 0)
+    assert dist.approximate_row_count() == 60
+
+    def counts(ht):
+        return {c["range_start"]: c["n_rows"] for c in ht.chunks()}
+
+    assert len(counts(dist)) == 3 and counts(dist) == counts(driver)

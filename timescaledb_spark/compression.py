@@ -58,6 +58,8 @@ SEGMENT_VALUES_CAP = 1024
 SEGMENT_TUPLES_KEY = "__segment_tuples__"
 
 TARGET_FILE_BYTES = 128 * 1024 * 1024  # one spark input split per file
+# chunk rewrites compress_chunks submits to Spark at once
+PARALLELISM = 8
 
 
 def get_segmentby_defaults(
@@ -418,46 +420,10 @@ def _stats_rows(ht: Hypertable, chunk: dict, data: dict) -> list[dict]:
     return rows
 
 
-def _compress_chunk_commit(ht: Hypertable, chunk: dict, data: dict) -> dict:
-    """Catalog side of a chunk compression (single-threaded)."""
-    cat = ht.ts.catalog
-    cat.chunk.update(
-        {"id": chunk["id"]},
-        {
-            "status": "columnstore",
-            "n_rows": data.get("n_rows"),
-            "unordered": False,
-        },
-    )
-    ht._mark_fill_done([chunk["range_start"]])
-    cat.chunk_column_stats.delete({"chunk_id": chunk["id"]})
-    if data["stats"]:
-        cat.chunk_column_stats.append(_stats_rows(ht, chunk, data))
-    cat.table("metadata").append(
-        [
-            {
-                "key": f"compression_chunk_size_{chunk['id']}",
-                "value": {
-                    "before": data["before"],
-                    "after": data["after"],
-                    "at": _time.time(),
-                },
-            }
-        ]
-    )
-    return {
-        "chunk": chunk["range_start"],
-        "before_bytes": data["before"],
-        "after_bytes": data["after"],
-    }
-
-
 def _compress_commit_batch(ht: Hypertable, items) -> list[dict]:
-    """Batched catalog commit for many compressed chunks — the
-    per-chunk :func:`_compress_chunk_commit` costs ~5 full catalog-file
-    rewrites per chunk, O(k · chunks) for a k-chunk policy backlog. One
-    pass per catalog table instead, holding the write lock across the
-    compound transaction. ``items``: list of (chunk_row, data) pairs."""
+    """Catalog commit for compressed chunks: one pass per catalog table,
+    holding the write lock across the compound transaction. ``items``:
+    list of (chunk_row, data) pairs."""
     if not items:
         return []
     cat = ht.ts.catalog
@@ -522,7 +488,7 @@ def compress_chunk(
     # other rewrite path (insert/_recompute_stats/merge all hold it)
     with ht.ts.catalog.ht_lock(ht.name):
         data = _compress_chunk_data(ht, chunk, stats_columns, target_file_bytes)
-        return _compress_chunk_commit(ht, chunk, data)
+        return _compress_commit_batch(ht, [(chunk, data)])[0]
 
 
 def decompress_chunk(ht: Hypertable, chunk: Union[dict, int]) -> None:
@@ -610,7 +576,6 @@ def compress_chunks(
     newer_than=None,
     recompress: bool = False,
     recompress_unordered: bool = True,
-    parallelism: int = 8,
 ) -> list[dict]:
     """Compress every (still-rowstore) chunk in the window — the payload of
     ``add_compression_policy`` (tsl/src/bgw_policy/compression_api.c).
@@ -624,9 +589,9 @@ def compress_chunks(
     still rewrites every chunk regardless.
 
     Chunk rewrites are independent (each touches only its own directory),
-    so the Spark work runs ``parallelism``-wide — concurrent job
+    so the Spark work runs :data:`PARALLELISM`-wide — concurrent job
     submission keeps the cluster saturated instead of draining between
-    per-chunk jobs; catalog commits are applied serially afterwards."""
+    per-chunk jobs; the catalog commit follows in one batch."""
     cands = [
         c
         for c in ht.show_chunks(older_than=older_than, newer_than=newer_than)
@@ -636,8 +601,6 @@ def compress_chunks(
     ]
     if not cands:
         return []
-    if parallelism <= 1 or len(cands) == 1:
-        return [compress_chunk(ht, c) for c in cands]
     from concurrent.futures import ThreadPoolExecutor
 
     # same DML serialization compress_chunk takes per chunk: without it
@@ -645,7 +608,7 @@ def compress_chunks(
     # between a worker's read and its dir swap would be silently deleted
     # (the policy job + streaming-ingest combination hits exactly this)
     with ht.ts.catalog.ht_lock(ht.name):
-        with ThreadPoolExecutor(max_workers=min(parallelism, len(cands))) as ex:
+        with ThreadPoolExecutor(max_workers=min(PARALLELISM, len(cands))) as ex:
             datas = list(
                 ex.map(
                     lambda c: _compress_chunk_data(ht, c, (), TARGET_FILE_BYTES),

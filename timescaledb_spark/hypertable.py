@@ -56,6 +56,10 @@ _DML_PIN = StorageLevel.MEMORY_AND_DISK_DESER
 #: translated to the user-facing NOT NULL ValueError at the call sites
 _NULL_TIME_MARKER = "TS_NULL_TIME_DIMENSION"
 
+#: parquet footers :meth:`Hypertable.approximate_row_count` reads on the
+#: driver; beyond this many files it reads them in a narrow Spark job
+FOOTER_DRIVER_FILES = 256
+
 DEFAULT_CHUNK_INTERVAL_US = 7 * USECS_PER_DAY  # src/dimension.h:115
 INTEGER_DEFAULT_INTERVALS = {  # src/dimension.h:118-120
     "smallint": 10_000,
@@ -3807,7 +3811,7 @@ class Hypertable:
         return len(touched)
 
     # ------------------------------------------------------------- stats
-    def approximate_row_count(self, distributed_threshold: int = 256) -> int:
+    def approximate_row_count(self) -> int:
         """``approximate_row_count`` (sql/size_utils.sql:311): the
         reference answers instantly from pg statistics; here the analog
         is a per-chunk ``n_rows`` on the chunk catalog row, recorded by
@@ -3820,19 +3824,16 @@ class Hypertable:
         ANALYZE) fall back to THEIR footers only, and the result is
         written back, so repeated calls self-heal to catalog-only.
         Footer reads are random I/O, one per file: beyond
-        ``distributed_threshold`` files they run as a narrow Spark job
+        :data:`FOOTER_DRIVER_FILES` files they run as a narrow Spark job
         on executors (at 100 TB / ~1M files a driver-side loop would
         serialize ~1M round-trips)."""
         chunks = self.chunks()
         if not chunks:
             # unregistered layout (external writer): raw footer walk
-            return self._footer_row_count(
-                glob.glob(
-                    os.path.join(self.data_dir, "**", "*.parquet"),
-                    recursive=True,
-                ),
-                distributed_threshold,
+            files = glob.glob(
+                os.path.join(self.data_dir, "**", "*.parquet"), recursive=True
             )
+            return self._footer_counts_by_key({0: files})[0]
         cat = self.ts.catalog
         total = sum(
             int(c["n_rows"]) for c in chunks if c.get("n_rows") is not None
@@ -3855,7 +3856,7 @@ class Hypertable:
             )
             for c in unknown
         }
-        counts = self._footer_counts_by_key(files_by_chunk, distributed_threshold)
+        counts = self._footer_counts_by_key(files_by_chunk)
         with cat.write_lock:
             rows = cat.chunk.read()
             for r in rows:
@@ -3869,19 +3870,15 @@ class Hypertable:
             cat.chunk.replace(rows)
         return total + sum(counts.values())
 
-    def _footer_counts_by_key(
-        self, files_by_key: dict, distributed_threshold: int = 256
-    ) -> dict:
-        """Per-key parquet footer row counts; distributed beyond the
-        threshold (total files) so a cold start over many chunks fans
-        the random footer I/O across executors."""
+    def _footer_counts_by_key(self, files_by_key: dict) -> dict:
+        """Per-key parquet footer row counts; distributed beyond
+        :data:`FOOTER_DRIVER_FILES` (total files) so a cold start over
+        many chunks fans the random footer I/O across executors."""
         import pyarrow.parquet as pq
 
         pairs = [(k, f) for k, fs in files_by_key.items() for f in fs]
-        if not pairs:
-            return {k: 0 for k in files_by_key}
         out = {k: 0 for k in files_by_key}
-        if len(pairs) <= distributed_threshold:
+        if len(pairs) <= FOOTER_DRIVER_FILES:
             for k, f in pairs:
                 out[k] += pq.ParquetFile(f).metadata.num_rows
             return out
@@ -3918,46 +3915,6 @@ class Hypertable:
         for r in rows:
             out[r["key"]] = int(r["n"])
         return out
-
-    def _footer_row_count(
-        self, files: list, distributed_threshold: int = 256
-    ) -> int:
-        """Sum parquet footer row counts; distributed beyond the
-        threshold so a million-file walk doesn't serialize on the
-        driver."""
-        import pyarrow.parquet as pq
-
-        if not files:
-            return 0
-        if len(files) <= distributed_threshold:
-            return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-
-        def _footer_counts(batches):
-            import pandas as pd
-            import pyarrow.parquet as pq  # noqa: F811 — executor-side import
-
-            for pdf in batches:
-                yield pd.DataFrame(
-                    {
-                        "n": [
-                            sum(
-                                pq.ParquetFile(p).metadata.num_rows
-                                for p in pdf["path"]
-                            )
-                        ]
-                    }
-                )
-
-        spark = self.ts.spark
-        paths = spark.createDataFrame([(p,) for p in files], "path string")
-        slices = min(len(files) // 32 + 1, 512)
-        row = (
-            paths.repartition(slices)
-            .mapInPandas(_footer_counts, "n long")
-            .agg(F.sum("n").alias("total"))
-            .collect()[0]
-        )
-        return int(row["total"])
 
     def hypertable_size(self) -> int:
         """``hypertable_size`` (sql/size_utils.sql:119): bytes on disk."""

@@ -2710,7 +2710,6 @@ def _load_extra_inventories() -> None:
     to avoid a circular import at module load)."""
     from . import (  # noqa: F401
         queries_lifecycle,
-        queries_pipeline,
         queries_relational,
         queries_sql,
     )

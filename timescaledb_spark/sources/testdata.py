@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
+    "documents"
 ).split()
 
 

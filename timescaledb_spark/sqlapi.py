@@ -1474,5 +1474,5 @@ def _select(ts, q: str, stmt: Statement) -> DataFrame:
     if re.search(r"\btime_bucket_gapfill\b", _strip_strings(q), re.I):
         from .sqlgapfill import run_gapfill_statement
 
-        return run_gapfill_statement(ts, _bind_tables(ts, q, stmt))
+        return run_gapfill_statement(ts, _bind_tables(ts, q, stmt), stmt)
     return _query_tables(ts, q, stmt)

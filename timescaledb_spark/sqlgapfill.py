@@ -44,7 +44,6 @@ from .sqlapi import (
     _strip_strings,
     rewrite_sql,
 )
-from .sqltree import where_quals
 
 _CLAUSES = ["select", "from", "where", "group by", "having", "order by", "limit"]
 
@@ -198,10 +197,11 @@ def _parse_fill(name: str, args: list[str]):
     return agg, spec
 
 
-def run_gapfill_statement(ts, bound) -> DataFrame:
+def run_gapfill_statement(ts, bound, stmt) -> DataFrame:
     """Execute a gapfill-shaped statement whose engine tables are bound
     (``sqlapi._bind_tables``): the base query carries the bound
-    hypertable CTEs."""
+    hypertable CTEs. ``stmt`` is the statement's parsed structure
+    (``sqltree.Statement``)."""
     cl = _clauses_of(bound.sql)
     if "having" in cl:
         raise ValueError("HAVING is not supported with time_bucket_gapfill")
@@ -288,7 +288,7 @@ def run_gapfill_statement(ts, bound) -> DataFrame:
     if start is None or finish is None:
         # the time column under any qualifier (the reference accepts
         # `WHERE r.ts >= .. AND r.ts < ..`)
-        lo, hi = where_quals(ts, cl.get("where")).time_bounds(time_col)
+        lo, hi = stmt.where().time_bounds(time_col)
         start = start if start is not None else lo
         finish = finish if finish is not None else hi
         if start is None or finish is None:

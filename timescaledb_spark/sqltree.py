@@ -53,6 +53,9 @@ _ALL_COLS = frozenset((
     "WithWindowDefinition", "ExpressionWithUnresolvedIdentifier",
     "PlanWithUnresolvedIdentifier",
 ))
+#: nodes above the outermost query block: the main query of a WITH,
+#: ORDER BY and the limits
+_ABOVE_BLOCK = ("UnresolvedWith", "Sort", "GlobalLimit", "LocalLimit", "Offset")
 _NUMERIC = ("integer", "long", "short", "byte", "float", "double")
 _INTEGRAL = ("integer", "long", "short", "byte")
 
@@ -217,8 +220,8 @@ class Quals:
 
 
 def where_quals(ts, where: Optional[str], names: Optional[set] = None) -> Quals:
-    """:class:`Quals` of a bare WHERE-clause fragment (gapfill, UPDATE
-    and DELETE), parsed as an expression."""
+    """:class:`Quals` of a bare WHERE-clause fragment (UPDATE and
+    DELETE), parsed as an expression."""
     if not where or not where.strip():
         return Quals([], names)
     return Quals(_conjuncts(_parse(ts, where, expr=True)), names)
@@ -239,10 +242,26 @@ class Statement:
         self.sql = sql
 
     @cached_property
+    def _root(self) -> Node:
+        return _parse(self.ts, self.sql)
+
+    @cached_property
     def _facts(self) -> _Facts:
         f = _Facts({}, set(), False)
-        _walk(_parse(self.ts, self.sql), (), frozenset(), f)
+        _walk(self._root, (), frozenset(), f)
         return f
+
+    def where(self) -> Quals:
+        """The conjuncts of the outermost query block's WHERE, under any
+        qualifier (gapfill's default start/finish): the ``Filter`` under
+        the block's ``Aggregate``/``Project``, reached from the root
+        through :data:`_ABOVE_BLOCK` only."""
+        n = self._root
+        while n.cls in _ABOVE_BLOCK:
+            n = n.children[0]
+        if n.cls in ("Aggregate", "Project") and n.children[0].cls == "Filter":
+            return Quals(_conjuncts(_tree(n.children[0].fields["condition"])[0]))
+        return Quals([])
 
     def scans(self, table: str) -> bool:
         """Whether ``table`` is read as a relation (a CTE of the same
